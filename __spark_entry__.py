@@ -5,8 +5,9 @@ The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 ``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
 value-hash → CORRECTNESS_r{N}.json).
 
-The real implementations live in ``fink_science_spark.queries``; this
-module is the thin registration layer.
+The real implementations live in the ``fink_science_spark.queries*``
+modules and register themselves in ``fink_science_spark.registry``; this
+module only reads that registry.
 """
 
 from __future__ import annotations
@@ -25,84 +26,13 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from fink_science_spark.queries import QUERIES
-    from fink_science_spark.queries_ext import QUERIES_EXT
-    from fink_science_spark.queries_ext2 import QUERIES_EXT2
-    from fink_science_spark.queries_ext3 import QUERIES_EXT3
-    from fink_science_spark.queries_ext4 import QUERIES_EXT4
-    from fink_science_spark.queries_ext5 import QUERIES_EXT5
-    from fink_science_spark.queries_ext6 import QUERIES_EXT6
-    from fink_science_spark.queries_ext7 import QUERIES_EXT7
-    from fink_science_spark.queries_ext8 import QUERIES_EXT8
-    from fink_science_spark.queries_ext9 import QUERIES_EXT9
-    from fink_science_spark.queries_ext10 import QUERIES_EXT10
-    from fink_science_spark.queries_ext11 import QUERIES_EXT11
-    from fink_science_spark.queries_ext12 import QUERIES_EXT12
-    from fink_science_spark.queries_ext13 import QUERIES_EXT13
-    from fink_science_spark.queries_ext14 import QUERIES_EXT14
-    from fink_science_spark.queries_ext15 import QUERIES_EXT15
-    from fink_science_spark.queries_ext16 import QUERIES_EXT16
-    from fink_science_spark.queries_ext17 import QUERIES_EXT17
+    from fink_science_spark.registry import entries
 
-    return {
-        **QUERIES,
-        **QUERIES_EXT,
-        **QUERIES_EXT2,
-        **QUERIES_EXT3,
-        **QUERIES_EXT4,
-        **QUERIES_EXT5,
-        **QUERIES_EXT6,
-        **QUERIES_EXT7,
-        **QUERIES_EXT8,
-        **QUERIES_EXT9,
-        **QUERIES_EXT10,
-        **QUERIES_EXT11,
-        **QUERIES_EXT12,
-        **QUERIES_EXT13,
-        **QUERIES_EXT14,
-        **QUERIES_EXT15,
-        **QUERIES_EXT16,
-        **QUERIES_EXT17,
-    }
+    return {name: e.builder for name, e in entries().items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    from fink_science_spark.queries import ORACLES
-    from fink_science_spark.queries_ext import ORACLES_EXT
-    from fink_science_spark.queries_ext2 import ORACLES_EXT2
-    from fink_science_spark.queries_ext3 import ORACLES_EXT3
-    from fink_science_spark.queries_ext4 import ORACLES_EXT4
-    from fink_science_spark.queries_ext5 import ORACLES_EXT5
-    from fink_science_spark.queries_ext6 import ORACLES_EXT6
-    from fink_science_spark.queries_ext7 import ORACLES_EXT7
-    from fink_science_spark.queries_ext8 import ORACLES_EXT8
-    from fink_science_spark.queries_ext9 import ORACLES_EXT9
-    from fink_science_spark.queries_ext10 import ORACLES_EXT10
-    from fink_science_spark.queries_ext11 import ORACLES_EXT11
-    from fink_science_spark.queries_ext12 import ORACLES_EXT12
-    from fink_science_spark.queries_ext13 import ORACLES_EXT13
-    from fink_science_spark.queries_ext14 import ORACLES_EXT14
-    from fink_science_spark.queries_ext15 import ORACLES_EXT15
-    from fink_science_spark.queries_ext16 import ORACLES_EXT16
-    from fink_science_spark.queries_ext17 import ORACLES_EXT17
+    from fink_science_spark.registry import entries
 
-    return {
-        **ORACLES,
-        **ORACLES_EXT,
-        **ORACLES_EXT2,
-        **ORACLES_EXT3,
-        **ORACLES_EXT4,
-        **ORACLES_EXT5,
-        **ORACLES_EXT6,
-        **ORACLES_EXT7,
-        **ORACLES_EXT8,
-        **ORACLES_EXT9,
-        **ORACLES_EXT10,
-        **ORACLES_EXT11,
-        **ORACLES_EXT12,
-        **ORACLES_EXT13,
-        **ORACLES_EXT14,
-        **ORACLES_EXT15,
-        **ORACLES_EXT16,
-        **ORACLES_EXT17,
-    }
+    return {name: e.oracle_sql() for name, e in entries().items()
+            if e.oracle is not None}

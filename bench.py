@@ -15,238 +15,17 @@ import os
 import sys
 import time
 
+from fink_science_spark.registry import entries
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-HEADLINE = [
-    "pricing_summary",
-    "top_revenue_orders",
-    "region_revenue",
-    "cheapest_order_per_customer",
-    "user_history_stats",
-    "event_type_stats",
-    "trailing_mean",
-    "weekly_counts",
-    "dedup_ngram_jaccard",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "text_quality",
-    "ann_cosine_topk",
-    "ann_lsh_topk",
-    "spatial_nn",
-    "enrich_score",
-    "stream_weekly_counts",
-    "crossmatch_sky",
-    "group_features",
-    "trapezoid_fluence",
-    "dedup_embedding_cosine",
-    "dedup_embedding_cosine_capped",
-    "stream_sliding_counts",
-    "stream_stateful_user_stats",
-    "ann_ivf_topk",
-    "stream_session_windows",
-    "alert_rule_flags",
-    "doc_winnowing",
-    "dedup_clusters",
-    "asof_click_before_purchase",
-    "remote_xmatch",
-    "alert_pipeline",
-    "bpe_token_count",
-    "promo_revenue",
-    "band_features",
-    "image_stats",
-    "stream_foreachbatch_enrich",
-    # round 2
-    "model_score",
-    "ssoft_hg_fit",
-    "dedup_ngram_jaccard_capped",
-    "mc_rate",
-    "model_score_forest",
-    "pii_redact",
-    "doc_repetition",
-    "blob_gzip_roundtrip",
-    "dedup_incremental",
-    "stream_dedup",
-    "photometry_conversion",
-    # round 2, wave 6: training-data curation stages
-    "decontaminate",
-    "train_shard_assign",
-    "sequence_packing",
-    "tfidf_topk",
-    "domain_mix_sample",
-    "color_features",
-    "stream_sequence_packing",
-    "stream_interval_join",
-    "ssoft_hg1g2_fit",
-    "dedup_spans",
-    "quality_classifier",
-    "host_curation",
-    "corpus_datacard",
-    "embedding_centroids",
-    "audio_frame_energy",
-    "scd2_history",
-    "curated_corpus",
-    # round 2, wave 8: remaining §2.8 kernel shapes
-    "crossmatch_mangrove",
-    "anomaly_score",
-    "ks_source_drift",
-    "power_spectrum",
-    # round 2, wave 9: classifier-module shapes + spin-grid scan
-    "period_scan",
-    "kn_score",
-    "cats_broad_scores",
-    "superluminous_sentinel",
-    # round 2, wave 10: microlensing/orphan modules + equal-area pixel rollup
-    "mulens_score",
-    "orphan_score",
-    "sky_pixel_rollup",
-    "snn_ia_score",
-    "ann_rerank",
-    "host_pagerank",
-    "sky_pixel_multires",
-    "zorder_cells",
-    "incremental_agg",
-    "bpe_train",
-    "evolved_scan",
-    "stream_mv_maintenance",
-    "trimmed_mean",
-    "udtf_sessions",
-    "variant_stats",
-    "recursive_reach",
-    "arrow_byte_profile",
-    "temporal_dim_join",
-    "cube_counts",
-    "unpivot_metrics",
-    "bpe_encode_stats",
-    "knn_graph_stats",
-    "eval_split",
-    "doc_chunks",
-    "avro_scan",
-    "stream_avro_counts",
-    "fits_catalog_join",
-    "stream_avro_alert_pipeline",
-    # round 3, sketch family
-    "bloom_prune_join",
-    "sketch_quantiles",
-    "heavy_hitters",
-    "lm_quality_buckets",
-    "pq_compression",
-    "stream_heavy_hitters",
-    "pq_adc_topk",
-    "resample_ffill",
-    "feature_drift_psi",
-    "weighted_sample",
-    "user_trend",
-    "quantile_transform",
-    "pmi_collocations",
-    "decontaminate_bloom",
-    "dedup_jaccard_ppjoin",
-    "dup_span_profile",
-    "image_phash_dedup",
-    "semantic_dedup",
-    "hll_distinct_portable",
-    "shard_manifest",
-    "stream_dedup_lsh",
-    "temperature_mix_sample",
-    "hard_negatives",
-    # round-3 ninth wave: selection / analytics / profiling
-    "dsir_select",
-    "funnel_steps",
-    "retention_cohorts",
-    "rolling_range_window",
-    "table_profile",
-    "event_transitions",
-    "contingency_chi2",
-    "triangle_count",
-    "sessions_native",
-    "cusum_changepoints",
-    "correlated_subquery",
-    "grouping_sets_id",
-    "set_ops_multiplicity",
-    "cogroup_reconcile",
-    "cdc_apply",
-    "interval_overlap_join",
-    "part_affinity",
-    "sliding_distinct_users",
-    "last_touch_attribution",
-    "ewma_user_value",
-    "robust_outliers",
-    "phrase_match",
-    "containment_pairs",
-    "winsorized_stats",
-    "session_paths",
-    # round 3, wave 13: skyline / overlap / diversity
-    "skyline_frontier",
-    "segment_overlap",
-    "mmr_diverse_topk",
-    "hll_rollup",
-    "median_bracket",
-    "image_thumbnail",
-    # round 4, wave 14: retrieval / ER / sampling / time-series / diffing
-    "bm25_topk",
-    "fuzzy_match_names",
-    "stratified_sample",
-    "acf_lags",
-    "seasonal_decompose",
-    "length_bucket_batches",
-    "snapshot_diff",
-    # round 4, wave 15: fusion / AB stats / integrity / calibration
-    "rrf_fusion",
-    "ab_welch_ttest",
-    "fk_integrity_audit",
-    "calibration_bins",
-    "gap_islands",
-    # wave 16: decision-support decorrelation suite
-    "min_cost_supplier",
-    "market_share",
-    "product_profit",
-    "important_parts",
-    "custorder_distribution",
-    "top_supplier",
-    "supplier_part_counts",
-    "small_qty_revenue",
-    "large_volume_customers",
-    "disjunctive_revenue",
-    "sole_late_supplier",
-    "dormant_customers",
-    # wave 17: scale-ops planning family
-    "partition_skew_report",
-    "zipf_skew_fit",
-    "compaction_plan",
-    "balanced_ranges",
-    # wave 18: multimodal sequence analysis
-    "video_scene_cuts",
-    "audio_silence_map",
-    # wave 19: REAL extracted model weights (round 6)
-    "snn_ia_real",
-    "mulens_real",
-    "orphan_real",
-    "kn_rf_real",
-    "anomaly_real",
-    # wave 20: real features into real heads (round 7)
-    "anomaly_real_lc",
-    "mulens_real_lia",
-    "superluminous_real",
-    "kn_legacy_real",
-    "t2_real",
-]
-
+# every registered query not marked ``@query(bench=False)``, in registry order
+HEADLINE = [name for name, e in entries().items() if e.bench]
 
 # scan-bound queries → their dominant input table, for the rows/s metric
 # (wall time on these is scan + narrow codegen'd maps, so rows/s is the
 # comparable throughput number across scale factors and hosts)
-SCAN_BOUND = {
-    "pricing_summary": "lineitem",
-    "text_quality": "documents",
-    "pii_redact": "documents",
-    "doc_repetition": "documents",
-    "bpe_token_count": "documents",
-    "alert_rule_flags": "events",
-    "mc_rate": "events",
-    "photometry_conversion": "events",
-    "weekly_counts": "events",
-    "domain_mix_sample": "documents",
-    "bm25_topk": "documents",
-}
+SCAN_BOUND = {name: e.scan_table for name, e in entries().items() if e.scan_table}
 
 
 def _table_rows(sf_dir: str, table: str) -> int:

@@ -21,7 +21,7 @@ duckdb oracle reproduces signatures bit-for-bit.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -31,6 +31,20 @@ from fink_science_spark.functions.hashing import (
     hash64,
     minhash_perm_coeffs,
 )
+
+
+def _minhash_aggs(num_hashes: int) -> list[Column]:
+    """MinHash signature aggregates over ``__h``: ``__m{i}`` is
+    ``min((a_i * __h + b_i) % MINHASH_PRIME)``. One F.expr per permutation:
+    the SQL text parses to the same Catalyst expression as the Column form
+    but costs 1 py4j round trip instead of ~7 (the plan-build finding, see
+    simhash_pairs)."""
+    return [
+        F.expr("min((%d * __h + %d) %% %d)" % (a, b, MINHASH_PRIME)).alias(
+            f"__m{i}"
+        )
+        for i, (a, b) in enumerate(minhash_perm_coeffs(num_hashes))
+    ]
 
 
 def _exploded_hashes(df: DataFrame, id_col: str, tokens_col: str, hash_fn) -> DataFrame:
@@ -142,17 +156,7 @@ def minhash_lsh_pairs(
     # (native expression), then num_hashes affine permutations folded by
     # partial-aggregating MIN — no interpreted lambdas anywhere.
     ex = _exploded_hashes(reps, id_col, tokens_col, hash28)
-    # one F.expr per permutation (SQL text parses to the identical
-    # Catalyst expression as the Column form but costs 1 py4j round trip
-    # instead of ~7 — the plan-build finding, see simhash_pairs)
-    sig = ex.groupBy("__id").agg(
-        *[
-            F.expr(
-                "min((%d * __h + %d) %% %d)" % (a, b, MINHASH_PRIME)
-            ).alias(f"__m{i}")
-            for i, (a, b) in enumerate(minhash_perm_coeffs(num_hashes))
-        ]
-    )
+    sig = ex.groupBy("__id").agg(*_minhash_aggs(num_hashes))
     # materialize once: the band self-join evaluates its child on BOTH
     # sides (no exchange reuse under a broadcast join), which would run
     # the tokenize→hash→aggregate pipeline twice. The cached table is
@@ -268,15 +272,7 @@ def minhash_band_index(
     rows_per_band = num_hashes // bands
     assert rows_per_band * bands == num_hashes
     ex = _exploded_hashes(df, id_col, tokens_col, hash28)
-    # SQL-text permutations: see minhash_lsh_pairs (1 py4j call each)
-    sig = ex.groupBy("__id").agg(
-        *[
-            F.expr(
-                "min((%d * __h + %d) %% %d)" % (a, b, MINHASH_PRIME)
-            ).alias(f"__m{i}")
-            for i, (a, b) in enumerate(minhash_perm_coeffs(num_hashes))
-        ]
-    )
+    sig = ex.groupBy("__id").agg(*_minhash_aggs(num_hashes))
     return sig.select(
         F.col("__id").alias(id_col),
         F.posexplode(

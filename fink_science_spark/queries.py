@@ -1,4 +1,4 @@
-"""Query registry: every operator family from SURVEY.md §2, expressed as a
+"""Queries: every operator family from SURVEY.md §2, expressed as a
 (spark_query, duckdb_oracle_sql) pair over the synthetic test tables.
 
 Each Spark query and its oracle are written against the SAME semantics:
@@ -16,7 +16,6 @@ oracle engine's timestamp type (``epoch_us(ts)``).
 from __future__ import annotations
 
 import os
-from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,6 +34,7 @@ from fink_science_spark.operators.aggregates import (
     weighted_quantile,
 )
 from fink_science_spark.operators.dedup import argmin_dedup
+from fink_science_spark.registry import query
 
 WEEK_US = 7 * 24 * 3600 * 1_000_000
 DAY_US = 24 * 3600 * 1_000_000
@@ -169,6 +169,23 @@ def _events_us(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
+ORACLE_PRICING_SUMMARY = """
+SELECT l_returnflag, l_linestatus,
+       round(sum(l_quantity), 2)                                        AS sum_qty,
+       round(sum(l_extendedprice), 2)                                   AS sum_base_price,
+       round(sum(l_extendedprice * (1 - l_discount)), 2)                AS sum_disc_price,
+       round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2)  AS sum_charge,
+       round(avg(l_quantity), 6)                                        AS avg_qty,
+       round(avg(l_extendedprice), 6)                                   AS avg_price,
+       round(avg(l_discount), 6)                                        AS avg_disc,
+       count(*)                                                         AS count_order
+FROM lineitem
+WHERE l_shipdate <= TIMESTAMP '1998-09-02'
+GROUP BY l_returnflag, l_linestatus
+"""
+
+
+@query(oracle=ORACLE_PRICING_SUMMARY, scan_table="lineitem")
 def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H-Q1-shaped pricing summary: predicate pushdown + column pruning
     + partial aggregation (SURVEY §2.2 row filters, §2.4 group-agg)."""
@@ -191,22 +208,19 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_PRICING_SUMMARY = """
-SELECT l_returnflag, l_linestatus,
-       round(sum(l_quantity), 2)                                        AS sum_qty,
-       round(sum(l_extendedprice), 2)                                   AS sum_base_price,
-       round(sum(l_extendedprice * (1 - l_discount)), 2)                AS sum_disc_price,
-       round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2)  AS sum_charge,
-       round(avg(l_quantity), 6)                                        AS avg_qty,
-       round(avg(l_extendedprice), 6)                                   AS avg_price,
-       round(avg(l_discount), 6)                                        AS avg_disc,
-       count(*)                                                         AS count_order
+ORACLE_TOP_REVENUE_ORDERS = """
+SELECT o_orderkey, round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
 FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-GROUP BY l_returnflag, l_linestatus
+JOIN orders   ON l_orderkey = o_orderkey
+JOIN customer ON o_custkey = c_custkey
+WHERE c_mktsegment = 'BUILDING'
+GROUP BY o_orderkey
+ORDER BY revenue DESC, o_orderkey ASC
+LIMIT 10
 """
 
 
+@query(oracle=ORACLE_TOP_REVENUE_ORDERS)
 def q_top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q3-shaped shipping-priority: 3-way join + group-agg + top-k with
     deterministic tie-break (SURVEY §2.3 joins, §2.5 sort/limit)."""
@@ -224,18 +238,17 @@ def q_top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_TOP_REVENUE_ORDERS = """
-SELECT o_orderkey, round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-FROM lineitem
-JOIN orders   ON l_orderkey = o_orderkey
+ORACLE_REGION_REVENUE = """
+SELECT r_name, round(sum(o_totalprice), 2) AS revenue, count(*) AS n_orders
+FROM orders
 JOIN customer ON o_custkey = c_custkey
-WHERE c_mktsegment = 'BUILDING'
-GROUP BY o_orderkey
-ORDER BY revenue DESC, o_orderkey ASC
-LIMIT 10
+JOIN nation   ON c_nationkey = n_nationkey
+JOIN region   ON n_regionkey = r_regionkey
+GROUP BY r_name
 """
 
 
+@query(oracle=ORACLE_REGION_REVENUE)
 def q_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q5-shaped multi-way star join; small dims broadcast so the fact
     table never shuffles for them (SURVEY §2.3 broadcast catalog join)."""
@@ -255,16 +268,21 @@ def q_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_REGION_REVENUE = """
-SELECT r_name, round(sum(o_totalprice), 2) AS revenue, count(*) AS n_orders
+ORACLE_ORDER_FLAGS = """
+SELECT o_orderkey,
+       CASE WHEN o_totalprice > 300000 THEN 'high'
+            WHEN o_totalprice > 100000 THEN 'mid'
+            ELSE 'low' END                                   AS price_band,
+       (o_orderpriority IN ('1-URGENT', '2-HIGH')
+        AND o_orderstatus != 'F')                            AS is_urgent,
+       coalesce(CASE WHEN o_orderstatus != 'P'
+                     THEN o_orderstatus END, 'UNKNOWN')      AS status_clean,
+       round(least(o_totalprice, 250000.0), 2)               AS capped_price
 FROM orders
-JOIN customer ON o_custkey = c_custkey
-JOIN nation   ON c_nationkey = n_nationkey
-JOIN region   ON n_regionkey = r_regionkey
-GROUP BY r_name
 """
 
 
+@query(oracle=ORACLE_ORDER_FLAGS, bench=False)
 def q_order_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Predicate/flag derivation: banded CASE, n-ary least, coalesce of a
     sentinel remap — the transient_features pattern (SURVEY §2.2;
@@ -293,20 +311,18 @@ def q_order_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_ORDER_FLAGS = """
-SELECT o_orderkey,
-       CASE WHEN o_totalprice > 300000 THEN 'high'
-            WHEN o_totalprice > 100000 THEN 'mid'
-            ELSE 'low' END                                   AS price_band,
-       (o_orderpriority IN ('1-URGENT', '2-HIGH')
-        AND o_orderstatus != 'F')                            AS is_urgent,
-       coalesce(CASE WHEN o_orderstatus != 'P'
-                     THEN o_orderstatus END, 'UNKNOWN')      AS status_clean,
-       round(least(o_totalprice, 250000.0), 2)               AS capped_price
-FROM orders
+ORACLE_CHEAPEST_ORDER = """
+SELECT o_custkey, o_orderkey AS cheapest_orderkey,
+       round(o_totalprice, 2) AS cheapest_price
+FROM (
+  SELECT *, row_number() OVER (PARTITION BY o_custkey
+                               ORDER BY o_totalprice ASC, o_orderkey ASC) AS rn
+  FROM orders
+) WHERE rn = 1
 """
 
 
+@query(oracle=ORACLE_CHEAPEST_ORDER)
 def q_cheapest_order_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arg-min dedup per group — keep the single best match per key
     (SURVEY §2.3/2.4; reference shape: min-angDist-per-objectId,
@@ -324,28 +340,6 @@ def q_cheapest_order_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-ORACLE_CHEAPEST_ORDER = """
-SELECT o_custkey, o_orderkey AS cheapest_orderkey,
-       round(o_totalprice, 2) AS cheapest_price
-FROM (
-  SELECT *, row_number() OVER (PARTITION BY o_custkey
-                               ORDER BY o_totalprice ASC, o_orderkey ASC) AS rn
-  FROM orders
-) WHERE rn = 1
-"""
-
-
-def q_customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Anti-join (SURVEY §2.3 anti-join upsert half): customers with no
-    large order (>250k)."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 250000)
-    return (
-        cust.join(orders, cust.c_custkey == orders.o_custkey, "left_anti")
-        .select("c_custkey", "c_mktsegment")
-    )
-
-
 ORACLE_CUSTOMERS_WITHOUT_ORDERS = """
 SELECT c_custkey, c_mktsegment
 FROM customer
@@ -354,15 +348,15 @@ WHERE NOT EXISTS (SELECT 1 FROM orders
 """
 
 
-def q_returned_orders_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi-join (EXISTS): orders having ≥1 returned lineitem, counted per
-    priority (SURVEY §2.2 EXISTS quantifier at table level)."""
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+@query(oracle=ORACLE_CUSTOMERS_WITHOUT_ORDERS, bench=False)
+def q_customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Anti-join (SURVEY §2.3 anti-join upsert half): customers with no
+    large order (>250k)."""
+    cust = _t(spark, sf_dir, "customer")
+    orders = _t(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 250000)
     return (
-        orders.join(li, orders.o_orderkey == li.l_orderkey, "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(F.count("*").alias("n_returned_orders"))
+        cust.join(orders, cust.c_custkey == orders.o_custkey, "left_anti")
+        .select("c_custkey", "c_mktsegment")
     )
 
 
@@ -375,6 +369,28 @@ GROUP BY o_orderpriority
 """
 
 
+@query(oracle=ORACLE_RETURNED_ORDERS, bench=False)
+def q_returned_orders_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Semi-join (EXISTS): orders having ≥1 returned lineitem, counted per
+    priority (SURVEY §2.2 EXISTS quantifier at table level)."""
+    orders = _t(spark, sf_dir, "orders")
+    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    return (
+        orders.join(li, orders.o_orderkey == li.l_orderkey, "left_semi")
+        .groupBy("o_orderpriority")
+        .agg(F.count("*").alias("n_returned_orders"))
+    )
+
+
+ORACLE_LINEITEM_TOPK = """
+SELECT l_orderkey, l_linenumber, round(l_extendedprice, 2) AS price
+FROM lineitem
+ORDER BY l_extendedprice DESC, l_orderkey ASC, l_linenumber ASC
+LIMIT 15
+"""
+
+
+@query(oracle=ORACLE_LINEITEM_TOPK, bench=False)
 def q_lineitem_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k scan with deterministic tie-break (SURVEY §2.5 take/limit)."""
     li = _t(spark, sf_dir, "lineitem")
@@ -393,14 +409,18 @@ def q_lineitem_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_LINEITEM_TOPK = """
-SELECT l_orderkey, l_linenumber, round(l_extendedprice, 2) AS price
-FROM lineitem
-ORDER BY l_extendedprice DESC, l_orderkey ASC, l_linenumber ASC
-LIMIT 15
+ORACLE_SUPPLIER_UPSERT = """
+WITH old AS (SELECT s_suppkey, round(s_acctbal, 2) AS acctbal, 'old' AS src
+             FROM supplier),
+     new AS (SELECT s_suppkey, round(s_acctbal + 100.0, 2) AS acctbal, 'new' AS src
+             FROM supplier WHERE s_acctbal > 5000)
+SELECT * FROM old WHERE s_suppkey NOT IN (SELECT s_suppkey FROM new)
+UNION ALL
+SELECT * FROM new
 """
 
 
+@query(oracle=ORACLE_SUPPLIER_UPSERT, bench=False)
 def q_supplier_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Catalog-refresh upsert: anti-join + unionByName (SURVEY §2.6;
     reference shape: blazar_catalog_production.py:139-169)."""
@@ -420,17 +440,17 @@ def q_supplier_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kept.unionByName(new)
 
 
-ORACLE_SUPPLIER_UPSERT = """
-WITH old AS (SELECT s_suppkey, round(s_acctbal, 2) AS acctbal, 'old' AS src
-             FROM supplier),
-     new AS (SELECT s_suppkey, round(s_acctbal + 100.0, 2) AS acctbal, 'new' AS src
-             FROM supplier WHERE s_acctbal > 5000)
-SELECT * FROM old WHERE s_suppkey NOT IN (SELECT s_suppkey FROM new)
-UNION ALL
-SELECT * FROM new
+ORACLE_EVENTS_JSON_STATS = """
+SELECT event_type, count(*) AS n,
+       round(avg(json_extract_string(props, '$.k')::INT), 6) AS avg_k,
+       min(json_extract_string(props, '$.k')::INT)           AS min_k,
+       max(json_extract_string(props, '$.k')::INT)           AS max_k
+FROM events
+GROUP BY event_type
 """
 
 
+@query(oracle=ORACLE_EVENTS_JSON_STATS, bench=False)
 def q_events_json_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON extraction + group stats (SURVEY §2.7 JSON: from_json /
     get_json_object replaces the reference's driver-side eval)."""
@@ -448,16 +468,6 @@ def q_events_json_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_EVENTS_JSON_STATS = """
-SELECT event_type, count(*) AS n,
-       round(avg(json_extract_string(props, '$.k')::INT), 6) AS avg_k,
-       min(json_extract_string(props, '$.k')::INT)           AS min_k,
-       max(json_extract_string(props, '$.k')::INT)           AS max_k
-FROM events
-GROUP BY event_type
-"""
-
-
 # --------------------------------------------------------------------------
 # §1.2/§2.5 — history-array kernel (per-key light curves over events)
 # --------------------------------------------------------------------------
@@ -469,20 +479,6 @@ def _user_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _events_us(spark, sf_dir)
     return collect_history(
         ev, key="user_id", order="ts_us", values=["value", "event_type"]
-    )
-
-
-def q_user_history_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """History materialization + array kernel: size / element_at / delta of
-    last two (deltamaglatest, SURVEY §2.8 first row; reference shape:
-    tutorial/utilities.py:18-35)."""
-    h = _user_history(spark, sf_dir)
-    return h.select(
-        "user_id",
-        F.size("cvalue").alias("n_events"),
-        F.round(F.element_at("cvalue", -1), 6).alias("last_value"),
-        F.round(delta_last("cvalue"), 6).alias("delta_last"),
-        (F.element_at("cts_us", -1) - F.element_at("cts_us", 1)).alias("span_us"),
     )
 
 
@@ -502,6 +498,32 @@ FROM h
 """
 
 
+@query(oracle=ORACLE_USER_HISTORY_STATS)
+def q_user_history_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """History materialization + array kernel: size / element_at / delta of
+    last two (deltamaglatest, SURVEY §2.8 first row; reference shape:
+    tutorial/utilities.py:18-35)."""
+    h = _user_history(spark, sf_dir)
+    return h.select(
+        "user_id",
+        F.size("cvalue").alias("n_events"),
+        F.round(F.element_at("cvalue", -1), 6).alias("last_value"),
+        F.round(delta_last("cvalue"), 6).alias("delta_last"),
+        (F.element_at("cts_us", -1) - F.element_at("cts_us", 1)).alias("span_us"),
+    )
+
+
+ORACLE_HISTORY_LOOKBACK = """
+SELECT user_id,
+       round(max_by(value, epoch_us(ts)) FILTER (event_type = 'click'), 6)
+           AS last_click_value,
+       min(epoch_us(ts)) FILTER (value > 400.0) AS first_above_400_us
+FROM events
+GROUP BY user_id
+"""
+
+
+@query(oracle=ORACLE_HISTORY_LOOKBACK, bench=False)
 def q_history_lookback(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Last-in-band + first-above lookbacks over history arrays
     (get_last_alert / jdstarthist semantics, SURVEY §2.5; reference shape:
@@ -516,16 +538,20 @@ def q_history_lookback(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_HISTORY_LOOKBACK = """
+ORACLE_HISTORY_WINDOW_COUNTS = """
+WITH x AS (
+  SELECT user_id, value, epoch_us(ts) AS t,
+         max(epoch_us(ts)) OVER (PARTITION BY user_id) AS last_t
+  FROM events
+)
 SELECT user_id,
-       round(max_by(value, epoch_us(ts)) FILTER (event_type = 'click'), 6)
-           AS last_click_value,
-       min(epoch_us(ts)) FILTER (value > 400.0) AS first_above_400_us
-FROM events
-GROUP BY user_id
+       count(*) FILTER (value >= 10.0)            AS n_valid,
+       count(*) FILTER (t >= last_t - 604800000000) AS n_recent_7d
+FROM x GROUP BY user_id
 """
 
 
+@query(oracle=ORACLE_HISTORY_WINDOW_COUNTS, bench=False)
 def q_history_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Higher-order filter + size over history arrays: count of valid
     measurements (nalerthist) and count within a trailing window of the
@@ -545,19 +571,16 @@ def q_history_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_HISTORY_WINDOW_COUNTS = """
-WITH x AS (
-  SELECT user_id, value, epoch_us(ts) AS t,
-         max(epoch_us(ts)) OVER (PARTITION BY user_id) AS last_t
-  FROM events
-)
+ORACLE_EXISTS_FLAG = """
 SELECT user_id,
-       count(*) FILTER (value >= 10.0)            AS n_valid,
-       count(*) FILTER (t >= last_t - 604800000000) AS n_recent_7d
-FROM x GROUP BY user_id
+       coalesce(bool_or(event_type = 'purchase' AND value > 450.0), FALSE)
+           AS has_big_purchase
+FROM events
+GROUP BY user_id
 """
 
 
+@query(oracle=ORACLE_EXISTS_FLAG, bench=False)
 def q_exists_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Null-safe EXISTS over history arrays (SURVEY §2.2 EXISTS
     quantifier; reference shape: ztf/transient_features/processor.py:383-403)."""
@@ -571,15 +594,16 @@ def q_exists_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     return h.select("user_id", has_big_purchase.alias("has_big_purchase"))
 
 
-ORACLE_EXISTS_FLAG = """
+ORACLE_BAND_PEAKS = """
 SELECT user_id,
-       coalesce(bool_or(event_type = 'purchase' AND value > 450.0), FALSE)
-           AS has_big_purchase
+       round(max(value) FILTER (event_type = 'error'), 6)    AS peak_error,
+       round(max(value) FILTER (event_type = 'purchase'), 6) AS peak_purchase
 FROM events
 GROUP BY user_id
 """
 
 
+@query(oracle=ORACLE_BAND_PEAKS, bench=False)
 def q_band_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-band peak via transform+filter+array_min/max (SURVEY §2.2
     higher-order transform + array_min; reference shape:
@@ -600,25 +624,9 @@ def q_band_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_BAND_PEAKS = """
-SELECT user_id,
-       round(max(value) FILTER (event_type = 'error'), 6)    AS peak_error,
-       round(max(value) FILTER (event_type = 'purchase'), 6) AS peak_purchase
-FROM events
-GROUP BY user_id
-"""
-
-
 # --------------------------------------------------------------------------
 # §2.4/2.5 — aggregation layer: order stats, weighted CDF, trailing window
 # --------------------------------------------------------------------------
-
-
-def q_event_type_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-group order statistics with explicit moments (SURVEY §2.4
-    per-group order stats; reference shape: ztf/ssoft/processor.py:643-668)."""
-    ev = _t(spark, sf_dir, "events")
-    return order_stats(ev, ["event_type"], "value", percentiles=(0.5,), round_to=4)
 
 
 ORACLE_EVENT_TYPE_STATS = """
@@ -646,13 +654,12 @@ FROM r
 """
 
 
-def q_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted empirical-CDF quantile (SURVEY §2.4 weighted CDF +
-    interpolation; reference shape: ztf/blazar_extreme_state/utils.py:392-424)."""
-    ev = _t(spark, sf_dir, "events").withColumn(
-        "w", F.get_json_object("props", "$.k").cast("double") + 1.0
-    )
-    return weighted_quantile(ev, ["event_type"], "value", "w", q=0.5, round_to=4)
+@query(oracle=ORACLE_EVENT_TYPE_STATS)
+def q_event_type_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-group order statistics with explicit moments (SURVEY §2.4
+    per-group order stats; reference shape: ztf/ssoft/processor.py:643-668)."""
+    ev = _t(spark, sf_dir, "events")
+    return order_stats(ev, ["event_type"], "value", percentiles=(0.5,), round_to=4)
 
 
 ORACLE_WEIGHTED_MEDIAN = """
@@ -671,20 +678,14 @@ GROUP BY event_type
 """
 
 
-def q_trailing_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trailing 7-day range-frame mean per user over purchases, reduced to
-    the per-user max (SURVEY §2.4 trapezoidal/trailing fluence; reference
-    shape: ztf/blazar_extreme_state/utils.py:122-146)."""
-    ev = _events_us(spark, sf_dir).filter(F.col("event_type") == "purchase")
-    with_trail = trailing_window_mean(
-        ev, ["user_id"], ts="ts_us", val="value", window_seconds=7 * DAY_US,
-        round_to=4, quantize=2,
+@query(oracle=ORACLE_WEIGHTED_MEDIAN, bench=False)
+def q_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Weighted empirical-CDF quantile (SURVEY §2.4 weighted CDF +
+    interpolation; reference shape: ztf/blazar_extreme_state/utils.py:392-424)."""
+    ev = _t(spark, sf_dir, "events").withColumn(
+        "w", F.get_json_object("props", "$.k").cast("double") + 1.0
     )
-    # NB: ts_us is already epoch-µs (bigint), so cast("long") in the
-    # operator is an identity — the window frame is ±µs exactly.
-    return with_trail.groupBy("user_id").agg(
-        F.max("trail_mean").alias("max_trail_mean_7d")
-    )
+    return weighted_quantile(ev, ["event_type"], "value", "w", q=0.5, round_to=4)
 
 
 ORACLE_TRAILING_MEAN = """
@@ -702,6 +703,32 @@ SELECT user_id, max(trail) AS max_trail_mean_7d FROM (
 """
 
 
+@query(oracle=ORACLE_TRAILING_MEAN)
+def q_trailing_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Trailing 7-day range-frame mean per user over purchases, reduced to
+    the per-user max (SURVEY §2.4 trapezoidal/trailing fluence; reference
+    shape: ztf/blazar_extreme_state/utils.py:122-146)."""
+    ev = _events_us(spark, sf_dir).filter(F.col("event_type") == "purchase")
+    with_trail = trailing_window_mean(
+        ev, ["user_id"], ts="ts_us", val="value", window_seconds=7 * DAY_US,
+        round_to=4, quantize=2,
+    )
+    # NB: ts_us is already epoch-µs (bigint), so cast("long") in the
+    # operator is an identity — the window frame is ±µs exactly.
+    return with_trail.groupBy("user_id").agg(
+        F.max("trail_mean").alias("max_trail_mean_7d")
+    )
+
+
+ORACLE_WEEKLY_COUNTS = """
+SELECT (epoch_us(ts) // 604800000000) * 604800000000 AS week_us,
+       event_type, count(*) AS n, round(sum(value), 2) AS sum_value
+FROM events
+GROUP BY 1, 2
+"""
+
+
+@query(oracle=ORACLE_WEEKLY_COUNTS, scan_table="events")
 def q_weekly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling calendar-week rollup (SURVEY §2.9 / M6 batch form)."""
     ev = _events_us(spark, sf_dir)
@@ -715,56 +742,3 @@ def q_weekly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("value"), 2).alias("sum_value"),
         )
     )
-
-
-ORACLE_WEEKLY_COUNTS = """
-SELECT (epoch_us(ts) // 604800000000) * 604800000000 AS week_us,
-       event_type, count(*) AS n, round(sum(value), 2) AS sum_value
-FROM events
-GROUP BY 1, 2
-"""
-
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "pricing_summary": q_pricing_summary,
-    "top_revenue_orders": q_top_revenue_orders,
-    "region_revenue": q_region_revenue,
-    "order_flags": q_order_flags,
-    "cheapest_order_per_customer": q_cheapest_order_per_customer,
-    "customers_without_orders": q_customers_without_orders,
-    "returned_orders_by_priority": q_returned_orders_by_priority,
-    "lineitem_topk": q_lineitem_topk,
-    "supplier_upsert": q_supplier_upsert,
-    "events_json_stats": q_events_json_stats,
-    "user_history_stats": q_user_history_stats,
-    "history_lookback": q_history_lookback,
-    "history_window_counts": q_history_window_counts,
-    "exists_flag": q_exists_flag,
-    "band_peaks": q_band_peaks,
-    "event_type_stats": q_event_type_stats,
-    "weighted_median": q_weighted_median,
-    "trailing_mean": q_trailing_mean,
-    "weekly_counts": q_weekly_counts,
-}
-
-ORACLES: dict[str, str] = {
-    "pricing_summary": ORACLE_PRICING_SUMMARY,
-    "top_revenue_orders": ORACLE_TOP_REVENUE_ORDERS,
-    "region_revenue": ORACLE_REGION_REVENUE,
-    "order_flags": ORACLE_ORDER_FLAGS,
-    "cheapest_order_per_customer": ORACLE_CHEAPEST_ORDER,
-    "customers_without_orders": ORACLE_CUSTOMERS_WITHOUT_ORDERS,
-    "returned_orders_by_priority": ORACLE_RETURNED_ORDERS,
-    "lineitem_topk": ORACLE_LINEITEM_TOPK,
-    "supplier_upsert": ORACLE_SUPPLIER_UPSERT,
-    "events_json_stats": ORACLE_EVENTS_JSON_STATS,
-    "user_history_stats": ORACLE_USER_HISTORY_STATS,
-    "history_lookback": ORACLE_HISTORY_LOOKBACK,
-    "history_window_counts": ORACLE_HISTORY_WINDOW_COUNTS,
-    "exists_flag": ORACLE_EXISTS_FLAG,
-    "band_peaks": ORACLE_BAND_PEAKS,
-    "event_type_stats": ORACLE_EVENT_TYPE_STATS,
-    "weighted_median": ORACLE_WEIGHTED_MEDIAN,
-    "trailing_mean": ORACLE_TRAILING_MEAN,
-    "weekly_counts": ORACLE_WEEKLY_COUNTS,
-}

@@ -1,4 +1,4 @@
-"""Query registry, wave 2: dedup / text-analysis / similarity-search /
+"""Queries, wave 2: dedup / text-analysis / similarity-search /
 spatial-join / multimodal / enrichment / streaming operators — the
 LLM-training-data-pipeline surface plus the crossmatch family, each with a
 bit-portable duckdb oracle (or an explicit rows-only entry where the
@@ -8,7 +8,6 @@ kernel is genuinely non-SQL, e.g. seeded Monte-Carlo).
 from __future__ import annotations
 
 import uuid
-from typing import Callable
 
 import pandas as pd
 
@@ -51,6 +50,7 @@ from fink_science_spark.operators.spatial import (
     range_count_join_1d,
 )
 from fink_science_spark.queries import _events_us, _fan_out, _t, _ts_event_col
+from fink_science_spark.registry import query
 
 # Shared oracle CTE: tokenized + 3-gram-shingled documents
 _DOCS_TOK_CTE = f"""
@@ -88,15 +88,6 @@ def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup on normalized text (hash-groupBy on a 60-bit content
-    hash; SURVEY §2.4 distinct/dedup)."""
-    docs = _doc_tokens(spark, sf_dir).withColumn(
-        "norm", F.concat_ws(" ", "toks")
-    )
-    return exact_dedup(docs, "doc_id", "norm")
-
-
 ORACLE_DEDUP_EXACT = f"""
 WITH {_DOCS_TOK_CTE}
 SELECT min(doc_id) AS doc_id, count(*) AS n_dups
@@ -105,16 +96,14 @@ GROUP BY h
 """
 
 
-def q_dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Prefix-fingerprint clustering: 60-bit hash of the first 8 tokens —
-    cheap head-dedup for near-identical document heads."""
-    docs = _doc_tokens(spark, sf_dir)
-    fp = hash64(F.concat_ws(" ", F.slice("toks", 1, 8)))
-    return (
-        docs.select("doc_id", fp.alias("fingerprint"))
-        .groupBy("fingerprint")
-        .agg(F.min("doc_id").alias("doc_id"), F.count("*").alias("n_same_head"))
+@query(oracle=ORACLE_DEDUP_EXACT, bench=False)
+def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact dedup on normalized text (hash-groupBy on a 60-bit content
+    hash; SURVEY §2.4 distinct/dedup)."""
+    docs = _doc_tokens(spark, sf_dir).withColumn(
+        "norm", F.concat_ws(" ", "toks")
     )
+    return exact_dedup(docs, "doc_id", "norm")
 
 
 ORACLE_DEDUP_FINGERPRINT = f"""
@@ -126,11 +115,16 @@ GROUP BY 1
 """
 
 
-def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT 3-gram Jaccard near-dup pairs (threshold 0.5) via the
-    inverted-index self-join — no probabilistic step (SURVEY M7)."""
-    return ngram_jaccard_pairs(
-        _doc_shingles(spark, sf_dir), "doc_id", "shingles", threshold=0.5
+@query(oracle=ORACLE_DEDUP_FINGERPRINT, bench=False)
+def q_dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Prefix-fingerprint clustering: 60-bit hash of the first 8 tokens —
+    cheap head-dedup for near-identical document heads."""
+    docs = _doc_tokens(spark, sf_dir)
+    fp = hash64(F.concat_ws(" ", F.slice("toks", 1, 8)))
+    return (
+        docs.select("doc_id", fp.alias("fingerprint"))
+        .groupBy("fingerprint")
+        .agg(F.min("doc_id").alias("doc_id"), F.count("*").alias("n_same_head"))
     )
 
 
@@ -148,22 +142,17 @@ FROM pairs
 WHERE inter * 1.0 / (na + nb - inter) >= 0.5
 """
 
-_MH_NUM, _MH_BANDS = 16, 8  # 8 bands × 2 rows
 
-
-def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Banded MinHash-LSH candidates + exact-Jaccard verification
-    (threshold 0.5). Signatures are md5-derived → the oracle reproduces
-    the exact candidate set (SURVEY M7 scale path)."""
-    return minhash_lsh_pairs(
-        _doc_shingles(spark, sf_dir),
-        "doc_id",
-        tokens_col="shingles",
-        num_hashes=_MH_NUM,
-        bands=_MH_BANDS,
-        jaccard_threshold=0.5,
-        shingles_col="shingles",
+@query(oracle=ORACLE_DEDUP_NGRAM_JACCARD)
+def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """EXACT 3-gram Jaccard near-dup pairs (threshold 0.5) via the
+    inverted-index self-join — no probabilistic step (SURVEY M7)."""
+    return ngram_jaccard_pairs(
+        _doc_shingles(spark, sf_dir), "doc_id", "shingles", threshold=0.5
     )
+
+
+_MH_NUM, _MH_BANDS = 16, 8  # 8 bands × 2 rows
 
 
 def _minhash_band_eq_sql() -> str:
@@ -203,28 +192,38 @@ WHERE len(list_intersect(sa, sb)) * 1.0 /
       (len(sa) + len(sb) - len(list_intersect(sa, sb))) >= 0.5
 """
 
-_SH_BITS, _SH_CHUNKS, _SH_MAXHAM = 60, 4, 10
 
-
-def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs (Hamming ≤ 10 over 60 bits) via the
-    pigeonhole chunk join (SURVEY M7). Signatures are over 3-gram
-    shingles: unique-token SimHash degenerates on template-generated
-    corpora (same vocabulary ⇒ thousands of colliding signatures ⇒
-    quadratic pair blowup), while shingle SimHash keeps word order."""
-    return simhash_pairs(
-        _doc_shingles(spark, sf_dir), "doc_id", "shingles",
-        max_hamming=_SH_MAXHAM, bits=_SH_BITS, chunks=_SH_CHUNKS,
+@query(oracle=ORACLE_DEDUP_MINHASH_LSH)
+def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Banded MinHash-LSH candidates + exact-Jaccard verification
+    (threshold 0.5). Signatures are md5-derived → the oracle reproduces
+    the exact candidate set (SURVEY M7 scale path)."""
+    return minhash_lsh_pairs(
+        _doc_shingles(spark, sf_dir),
+        "doc_id",
+        tokens_col="shingles",
+        num_hashes=_MH_NUM,
+        bands=_MH_BANDS,
+        jaccard_threshold=0.5,
+        shingles_col="shingles",
     )
 
 
+_SH_BITS, _SH_CHUNKS, _SH_MAXHAM = 60, 4, 10
+
+
 _CHUNK_BITS = _SH_BITS // _SH_CHUNKS
+
+
 _CHUNK_MASK = (1 << _CHUNK_BITS) - 1
+
+
 _SH_CHUNK_EQ = " OR ".join(
     f"(((a.sim >> {c * _CHUNK_BITS}) & {_CHUNK_MASK}) = "
     f"((b.sim >> {c * _CHUNK_BITS}) & {_CHUNK_MASK}))"
     for c in range(_SH_CHUNKS)
 )
+
 
 ORACLE_DEDUP_SIMHASH = f"""
 WITH {_DOCS_TOK_CTE},
@@ -243,6 +242,37 @@ WHERE ({_SH_CHUNK_EQ}) AND bit_count(xor(a.sim, b.sim)) <= {_SH_MAXHAM}
 """
 
 
+@query(oracle=ORACLE_DEDUP_SIMHASH)
+def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SimHash near-dup pairs (Hamming ≤ 10 over 60 bits) via the
+    pigeonhole chunk join (SURVEY M7). Signatures are over 3-gram
+    shingles: unique-token SimHash degenerates on template-generated
+    corpora (same vocabulary ⇒ thousands of colliding signatures ⇒
+    quadratic pair blowup), while shingle SimHash keeps word order."""
+    return simhash_pairs(
+        _doc_shingles(spark, sf_dir), "doc_id", "shingles",
+        max_hamming=_SH_MAXHAM, bits=_SH_BITS, chunks=_SH_CHUNKS,
+    )
+
+
+def _oracle_dedup_clusters() -> str:
+    inner = ORACLE_DEDUP_MINHASH_LSH.strip()
+    return f"""
+WITH RECURSIVE
+pairs AS (SELECT id_a, id_b FROM ({inner})),
+sym AS (SELECT id_a AS a, id_b AS b FROM pairs
+        UNION SELECT id_b, id_a FROM pairs),
+reach(node, r) AS (
+  SELECT a, a FROM (SELECT DISTINCT a FROM sym)
+  UNION
+  SELECT reach.node, sym.b FROM reach JOIN sym ON reach.r = sym.a
+)
+SELECT node AS doc_id, min(r) AS cluster
+FROM reach GROUP BY node
+"""
+
+
+@query(oracle=_oracle_dedup_clusters, slow_oracle=True)
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup CLUSTERS: MinHash-LSH pairs → connected components
     (iterative min-label propagation) → (doc_id, cluster=min id). The
@@ -266,45 +296,13 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_dedup_clusters() -> str:
-    inner = ORACLE_DEDUP_MINHASH_LSH.strip()
-    return f"""
-WITH RECURSIVE
-pairs AS (SELECT id_a, id_b FROM ({inner})),
-sym AS (SELECT id_a AS a, id_b AS b FROM pairs
-        UNION SELECT id_b, id_a FROM pairs),
-reach(node, r) AS (
-  SELECT a, a FROM (SELECT DISTINCT a FROM sym)
-  UNION
-  SELECT reach.node, sym.b FROM reach JOIN sym ON reach.r = sym.a
-)
-SELECT node AS doc_id, min(r) AS cluster
-FROM reach GROUP BY node
-"""
-
-
 # --------------------------------------------------------------------------
 # Text analysis (M7)
 # --------------------------------------------------------------------------
 
 
-def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc quality features: token count, char length, punctuation
-    ratio, stopword ratio, and a quality flag (SURVEY M7 text ops)."""
-    docs = _doc_tokens(spark, sf_dir)
-    n_tok = F.size("toks")
-    sw = stopword_ratio("toks")
-    return docs.select(
-        "doc_id",
-        n_tok.alias("n_tokens"),
-        F.length("text").alias("n_chars"),
-        F.round(punct_ratio("text"), 6).alias("punct_ratio"),
-        F.round(sw, 6).alias("stopword_ratio"),
-        ((n_tok >= 20) & (sw < 0.5)).alias("quality_ok"),
-    )
-
-
 _SW_LIST = ", ".join(f"'{w}'" for w in STOPWORDS)
+
 
 ORACLE_TEXT_QUALITY = f"""
 WITH {_DOCS_TOK_CTE},
@@ -330,18 +328,20 @@ FROM q
 """
 
 
-def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Marker-stopword language ID with deterministic argmax tie-break
-    (SURVEY M7 language-ID heuristic); compared against the table's lang
-    column."""
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", "lang", tokens("text").alias("toks")
-    )
-    pred = lang_id("toks")
+@query(oracle=ORACLE_TEXT_QUALITY, scan_table="documents")
+def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-doc quality features: token count, char length, punctuation
+    ratio, stopword ratio, and a quality flag (SURVEY M7 text ops)."""
+    docs = _doc_tokens(spark, sf_dir)
+    n_tok = F.size("toks")
+    sw = stopword_ratio("toks")
     return docs.select(
         "doc_id",
-        pred.alias("pred_lang"),
-        (pred == F.col("lang")).alias("lang_match"),
+        n_tok.alias("n_tokens"),
+        F.length("text").alias("n_chars"),
+        F.round(punct_ratio("text"), 6).alias("punct_ratio"),
+        F.round(sw, 6).alias("stopword_ratio"),
+        ((n_tok >= 20) & (sw < 0.5)).alias("quality_ok"),
     )
 
 
@@ -376,23 +376,27 @@ FROM scored JOIN documents d USING (doc_id)
 """
 
 
+@query(oracle=ORACLE_LANG_ID, bench=False)
+def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Marker-stopword language ID with deterministic argmax tie-break
+    (SURVEY M7 language-ID heuristic); compared against the table's lang
+    column."""
+    docs = _t(spark, sf_dir, "documents").select(
+        "doc_id", "lang", tokens("text").alias("toks")
+    )
+    pred = lang_id("toks")
+    return docs.select(
+        "doc_id",
+        pred.alias("pred_lang"),
+        (pred == F.col("lang")).alias("lang_match"),
+    )
+
+
 # --------------------------------------------------------------------------
 # Similarity search (M7) — embeddings
 # --------------------------------------------------------------------------
 
 _EMB_DIM = 64
-
-
-def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact brute-force cosine top-5 for query vectors (vec_id % 20 == 0)
-    over the full corpus; JVM-side fold dot products, broadcast queries
-    (SURVEY M7 similarity search, baseline path)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 20 == 0).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
-    )
-    corpus = emb.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cv"))
-    return cosine_topk_blocked(corpus, queries, "cid", "cv", "qid", "qv", k=5)
 
 
 ORACLE_ANN_COSINE_TOPK = """
@@ -415,22 +419,21 @@ SELECT qid, cid, rank, round(cosr, 6) AS cos
 FROM ranked WHERE rank <= 5
 """
 
-_LSH_BITS = 6
 
-
-def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate top-3 within sign-random-projection LSH buckets
-    (6 hash-derived hyperplanes → 64 buckets) — the scale path that
-    replaces the full corpus scan with a bucket equi-join (SURVEY M7)."""
+@query(oracle=ORACLE_ANN_COSINE_TOPK)
+def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact brute-force cosine top-5 for query vectors (vec_id % 20 == 0)
+    over the full corpus; JVM-side fold dot products, broadcast queries
+    (SURVEY M7 similarity search, baseline path)."""
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 20 == 0).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
     )
     corpus = emb.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cv"))
-    return cosine_topk_blocked(
-        corpus, queries, "cid", "cv", "qid", "qv", k=3,
-        nbits=_LSH_BITS, dim=_EMB_DIM,
-    )
+    return cosine_topk_blocked(corpus, queries, "cid", "cv", "qid", "qv", k=5)
+
+
+_LSH_BITS = 6
 
 
 def _lsh_bucket_sql(vec: str) -> str:
@@ -466,22 +469,25 @@ FROM ranked WHERE rank <= 3
 """
 
 
+@query(oracle=ORACLE_ANN_LSH_TOPK)
+def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Approximate top-3 within sign-random-projection LSH buckets
+    (6 hash-derived hyperplanes → 64 buckets) — the scale path that
+    replaces the full corpus scan with a bucket equi-join (SURVEY M7)."""
+    emb = _t(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") % 20 == 0).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
+    )
+    corpus = emb.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cv"))
+    return cosine_topk_blocked(
+        corpus, queries, "cid", "cv", "qid", "qv", k=3,
+        nbits=_LSH_BITS, dim=_EMB_DIM,
+    )
+
+
 # --------------------------------------------------------------------------
 # Spatial (crossmatch-shaped) joins — M3
 # --------------------------------------------------------------------------
-
-
-def q_spatial_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bucketed 1-NN join: each customer's nearest supplier by account
-    balance within radius 10 (the crossmatch shape: bucket equi-join +
-    distance refine + arg-min; SURVEY §2.3 flagship join)."""
-    cust = _t(spark, sf_dir, "customer")
-    sup = _t(spark, sf_dir, "supplier")
-    nn = nearest_join_1d(
-        cust, sup, "c_custkey", "c_acctbal", "s_suppkey", "s_acctbal",
-        radius=10.0,
-    )
-    return nn.select("c_custkey", "s_suppkey", F.round("dist", 6).alias("dist"))
 
 
 ORACLE_SPATIAL_NN = """
@@ -500,14 +506,18 @@ FROM ranked WHERE rn = 1
 """
 
 
-def q_spatial_range_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bucketed range (band) join: customers within ±50 acctbal of each
-    supplier (SURVEY §2.3 dec-band prune generalized)."""
+@query(oracle=ORACLE_SPATIAL_NN)
+def q_spatial_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bucketed 1-NN join: each customer's nearest supplier by account
+    balance within radius 10 (the crossmatch shape: bucket equi-join +
+    distance refine + arg-min; SURVEY §2.3 flagship join)."""
     cust = _t(spark, sf_dir, "customer")
     sup = _t(spark, sf_dir, "supplier")
-    return range_count_join_1d(
-        sup, cust, "s_suppkey", "s_acctbal", "c_acctbal", radius=50.0
+    nn = nearest_join_1d(
+        cust, sup, "c_custkey", "c_acctbal", "s_suppkey", "s_acctbal",
+        radius=10.0,
     )
+    return nn.select("c_custkey", "s_suppkey", F.round("dist", 6).alias("dist"))
 
 
 ORACLE_SPATIAL_RANGE_COUNT = """
@@ -518,19 +528,20 @@ FROM supplier
 """
 
 
+@query(oracle=ORACLE_SPATIAL_RANGE_COUNT, bench=False)
+def q_spatial_range_count(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bucketed range (band) join: customers within ±50 acctbal of each
+    supplier (SURVEY §2.3 dec-band prune generalized)."""
+    cust = _t(spark, sf_dir, "customer")
+    sup = _t(spark, sf_dir, "supplier")
+    return range_count_join_1d(
+        sup, cust, "s_suppkey", "s_acctbal", "c_acctbal", radius=50.0
+    )
+
+
 # --------------------------------------------------------------------------
 # Multimodal plumbing (M7) — binary columns through Arrow batches
 # --------------------------------------------------------------------------
-
-
-def q_blob_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary-column feature extraction via mapInPandas (the cutout-stamp
-    decode shape, with the deterministic fake codec): doc text → 16-byte
-    blob (md5) → per-blob byte features (SURVEY M7 multimodal)."""
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", F.unhex(F.md5("text")).alias("blob")
-    )
-    return extract_blob_features(docs, "doc_id", "blob", codec="fake")
 
 
 ORACLE_BLOB_FEATURES = """
@@ -543,6 +554,26 @@ FROM documents
 """
 
 
+@query(oracle=ORACLE_BLOB_FEATURES, bench=False)
+def q_blob_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Binary-column feature extraction via mapInPandas (the cutout-stamp
+    decode shape, with the deterministic fake codec): doc text → 16-byte
+    blob (md5) → per-blob byte features (SURVEY M7 multimodal)."""
+    docs = _t(spark, sf_dir, "documents").select(
+        "doc_id", F.unhex(F.md5("text")).alias("blob")
+    )
+    return extract_blob_features(docs, "doc_id", "blob", codec="fake")
+
+
+# md5(text) in duckdb hashes the string's UTF-8 bytes — identical input
+# to hashlib.md5 over the gunzipped payload
+ORACLE_BLOB_GZIP_ROUNDTRIP = """
+SELECT doc_id, strlen(text) AS payload_len, md5(text) AS payload_md5
+FROM documents
+"""
+
+
+@query(oracle=ORACLE_BLOB_GZIP_ROUNDTRIP)
 def q_blob_gzip_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL codec path (no fake): gzip-compress each doc's UTF-8 bytes
     (mtime=0 → deterministic), then decode through the registered 'gzip'
@@ -566,31 +597,6 @@ def q_blob_gzip_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return extract_blob_features(blobs, "doc_id", "blob", codec="gzip")
 
 
-# md5(text) in duckdb hashes the string's UTF-8 bytes — identical input
-# to hashlib.md5 over the gunzipped payload
-ORACLE_BLOB_GZIP_ROUNDTRIP = """
-SELECT doc_id, strlen(text) AS payload_len, md5(text) AS payload_md5
-FROM documents
-"""
-
-
-def q_frame_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame/chunk sampling of binary payloads (video/audio shape): text
-    bytes → up to 8 windows of 32 bytes, stride 64; per-doc frame count +
-    sampled byte total — pure JVM byte slicing, no Python."""
-    from fink_science_spark.operators.multimodal import sample_frames
-
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", F.col("text").cast("binary").alias("blob")
-    )
-    frames = sample_frames(docs, "doc_id", "blob", frame_size=32, stride=64,
-                           max_frames=8)
-    return frames.groupBy("doc_id").agg(
-        F.count("*").alias("n_frames"),
-        F.sum(F.length("frame_bytes")).alias("sampled_bytes"),
-    )
-
-
 # strlen (BYTES), not length (characters): the engine slices the UTF-8
 # payload as binary, so the oracle must count bytes — on non-ASCII text
 # length(text) < strlen(text) and the two silently diverge (the round-1
@@ -608,11 +614,39 @@ FROM f GROUP BY doc_id
 """
 
 
+@query(oracle=ORACLE_FRAME_SAMPLES, bench=False)
+def q_frame_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Frame/chunk sampling of binary payloads (video/audio shape): text
+    bytes → up to 8 windows of 32 bytes, stride 64; per-doc frame count +
+    sampled byte total — pure JVM byte slicing, no Python."""
+    from fink_science_spark.operators.multimodal import sample_frames
+
+    docs = _t(spark, sf_dir, "documents").select(
+        "doc_id", F.col("text").cast("binary").alias("blob")
+    )
+    frames = sample_frames(docs, "doc_id", "blob", frame_size=32, stride=64,
+                           max_frames=8)
+    return frames.groupBy("doc_id").agg(
+        F.count("*").alias("n_frames"),
+        F.sum(F.length("frame_bytes")).alias("sampled_bytes"),
+    )
+
+
 # --------------------------------------------------------------------------
 # Enrichment framework (M5) — masked Arrow kernel with default fill
 # --------------------------------------------------------------------------
 
 
+ORACLE_ENRICH_SCORE = """
+SELECT event_id,
+       CASE WHEN event_type = 'purchase'
+            THEN round(1.0 / (1.0 + exp(-(value - 250.0) / 50.0)), 6)
+            ELSE 0.0 END AS score
+FROM events
+"""
+
+
+@query(oracle=ORACLE_ENRICH_SCORE)
 def q_enrich_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The canonical module template: native pre-filter (purchases only) →
     Arrow sigmoid kernel → default 0.0 for masked rows (SURVEY §2.8
@@ -637,19 +671,51 @@ def q_enrich_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scored.select("event_id", F.round("score", 6).alias("score"))
 
 
-ORACLE_ENRICH_SCORE = """
-SELECT event_id,
-       CASE WHEN event_type = 'purchase'
-            THEN round(1.0 / (1.0 + exp(-(value - 250.0) / 50.0)), 6)
-            ELSE 0.0 END AS score
-FROM events
-"""
-
-
 _MC_DRAWS = 100
 _MC_SCALE = float(2**60)  # hash64 range; exactly representable
 
 
+ORACLE_MC_RATE = f"""
+WITH ev AS (
+  SELECT event_id, value FROM events WHERE event_type = 'purchase'
+),
+d AS (
+  SELECT event_id, value, unnest(generate_series(0, {_MC_DRAWS // 2 - 1})) AS j
+  FROM ev
+),
+h AS (
+  SELECT event_id, value,
+         md5(event_id::VARCHAR || ':' || j::VARCHAR) AS hx
+  FROM d
+),
+u AS (
+  SELECT event_id, value,
+         (('0x' || substr(hx, 1, 15))::BIGINT + 1) / {_MC_SCALE!r} AS u1,
+         (('0x' || substr(hx, 16, 15))::BIGINT + 1) / {_MC_SCALE!r} AS u2
+  FROM h
+),
+s AS (
+  SELECT event_id,
+         value * (1.0 + 0.1 * (sqrt(-2.0 * ln(u1)) * cos(2.0 * pi() * u2)))
+             AS s1,
+         value * (1.0 + 0.1 * (sqrt(-2.0 * ln(u1)) * sin(2.0 * pi() * u2)))
+             AS s2
+  FROM u
+),
+agg AS (
+  SELECT event_id, sum(s1 + s2) AS S, sum(s1*s1 + s2*s2) AS SQ
+  FROM s GROUP BY event_id
+)
+SELECT event_id,
+       round(S / {_MC_DRAWS}.0, 6) AS rate,
+       round(sqrt(greatest(SQ / {_MC_DRAWS}.0
+                           - (S / {_MC_DRAWS}.0) * (S / {_MC_DRAWS}.0),
+                           0.0)), 6) AS rate_err
+FROM agg
+"""
+
+
+@query(oracle=ORACLE_MC_RATE, scan_table="events")
 def q_mc_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seeded Monte-Carlo rate kernel (magnitude_rate shape,
     ztf/fast_transient_rate/processor.py:119-301): per purchase event,
@@ -717,51 +783,20 @@ def q_mc_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_MC_RATE = f"""
-WITH ev AS (
-  SELECT event_id, value FROM events WHERE event_type = 'purchase'
-),
-d AS (
-  SELECT event_id, value, unnest(generate_series(0, {_MC_DRAWS // 2 - 1})) AS j
-  FROM ev
-),
-h AS (
-  SELECT event_id, value,
-         md5(event_id::VARCHAR || ':' || j::VARCHAR) AS hx
-  FROM d
-),
-u AS (
-  SELECT event_id, value,
-         (('0x' || substr(hx, 1, 15))::BIGINT + 1) / {_MC_SCALE!r} AS u1,
-         (('0x' || substr(hx, 16, 15))::BIGINT + 1) / {_MC_SCALE!r} AS u2
-  FROM h
-),
-s AS (
-  SELECT event_id,
-         value * (1.0 + 0.1 * (sqrt(-2.0 * ln(u1)) * cos(2.0 * pi() * u2)))
-             AS s1,
-         value * (1.0 + 0.1 * (sqrt(-2.0 * ln(u1)) * sin(2.0 * pi() * u2)))
-             AS s2
-  FROM u
-),
-agg AS (
-  SELECT event_id, sum(s1 + s2) AS S, sum(s1*s1 + s2*s2) AS SQ
-  FROM s GROUP BY event_id
-)
-SELECT event_id,
-       round(S / {_MC_DRAWS}.0, 6) AS rate,
-       round(sqrt(greatest(SQ / {_MC_DRAWS}.0
-                           - (S / {_MC_DRAWS}.0) * (S / {_MC_DRAWS}.0),
-                           0.0)), 6) AS rate_err
-FROM agg
-"""
-
-
 # --------------------------------------------------------------------------
 # Structured Streaming (M6) — stream/batch parity on the same DAG
 # --------------------------------------------------------------------------
 
 
+ORACLE_STREAM_WEEKLY_COUNTS = """
+SELECT (epoch_us(ts) // 604800000000) * 604800000000 AS week_us,
+       event_type, count(*) AS n, round(sum(value), 2) AS sum_value
+FROM events
+GROUP BY 1, 2
+"""
+
+
+@query(oracle=ORACLE_STREAM_WEEKLY_COUNTS)
 def q_stream_weekly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked tumbling-window aggregation executed as a REAL
     Structured Streaming query (availableNow → memory sink), returning the
@@ -806,54 +841,3 @@ def q_stream_weekly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
         F.round("sum_value", 2).alias("sum_value"),
     )
-
-
-ORACLE_STREAM_WEEKLY_COUNTS = """
-SELECT (epoch_us(ts) // 604800000000) * 604800000000 AS week_us,
-       event_type, count(*) AS n, round(sum(value), 2) AS sum_value
-FROM events
-GROUP BY 1, 2
-"""
-
-
-QUERIES_EXT: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "dedup_exact": q_dedup_exact,
-    "dedup_fingerprint": q_dedup_fingerprint,
-    "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-    "dedup_minhash_lsh": q_dedup_minhash_lsh,
-    "dedup_simhash": q_dedup_simhash,
-    "dedup_clusters": q_dedup_clusters,
-    "text_quality": q_text_quality,
-    "lang_id": q_lang_id,
-    "ann_cosine_topk": q_ann_cosine_topk,
-    "ann_lsh_topk": q_ann_lsh_topk,
-    "spatial_nn": q_spatial_nn,
-    "spatial_range_count": q_spatial_range_count,
-    "blob_features": q_blob_features,
-    "blob_gzip_roundtrip": q_blob_gzip_roundtrip,
-    "frame_samples": q_frame_samples,
-    "enrich_score": q_enrich_score,
-    "mc_rate": q_mc_rate,
-    "stream_weekly_counts": q_stream_weekly_counts,
-}
-
-ORACLES_EXT: dict[str, str] = {
-    "dedup_exact": ORACLE_DEDUP_EXACT,
-    "dedup_fingerprint": ORACLE_DEDUP_FINGERPRINT,
-    "dedup_ngram_jaccard": ORACLE_DEDUP_NGRAM_JACCARD,
-    "dedup_minhash_lsh": ORACLE_DEDUP_MINHASH_LSH,
-    "dedup_simhash": ORACLE_DEDUP_SIMHASH,
-    "dedup_clusters": _oracle_dedup_clusters(),
-    "text_quality": ORACLE_TEXT_QUALITY,
-    "lang_id": ORACLE_LANG_ID,
-    "ann_cosine_topk": ORACLE_ANN_COSINE_TOPK,
-    "ann_lsh_topk": ORACLE_ANN_LSH_TOPK,
-    "spatial_nn": ORACLE_SPATIAL_NN,
-    "spatial_range_count": ORACLE_SPATIAL_RANGE_COUNT,
-    "blob_features": ORACLE_BLOB_FEATURES,
-    "blob_gzip_roundtrip": ORACLE_BLOB_GZIP_ROUNDTRIP,
-    "frame_samples": ORACLE_FRAME_SAMPLES,
-    "enrich_score": ORACLE_ENRICH_SCORE,
-    "mc_rate": ORACLE_MC_RATE,
-    "stream_weekly_counts": ORACLE_STREAM_WEEKLY_COUNTS,
-}

@@ -1,4 +1,4 @@
-"""Query registry, wave 11: the mergeable-sketch family.
+"""Queries, wave 11: the mergeable-sketch family.
 
 Bloom-filter runtime join pruning, histogram quantile sketches, and
 exact heavy hitters — the "compact summary of a huge side" operators a
@@ -8,8 +8,6 @@ return EXACT answers; the sketch only prunes or pre-aggregates.
 """
 
 from __future__ import annotations
-
-from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,6 +29,7 @@ from fink_science_spark.operators.sketches import (
     histogram_quantiles,
     histogram_quantiles_oracle_sql,
 )
+from fink_science_spark.registry import query
 
 # --------------------------------------------------------------------------
 # bloom_prune_join: revenue of lineitems belonging to urgent high-value
@@ -50,6 +49,21 @@ _BLOOM_PRICE_MIN = 150_000.0
 _BLOOM_K = 4
 
 
+ORACLE_BLOOM_PRUNE_JOIN = f"""
+SELECT l_returnflag,
+       count(*) AS n_items,
+       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+FROM lineitem
+JOIN (SELECT o_orderkey FROM orders
+      WHERE o_orderpriority = '1-URGENT'
+        AND o_totalprice > {_BLOOM_PRICE_MIN!r}) dim
+  ON l_orderkey = o_orderkey
+GROUP BY l_returnflag
+ORDER BY l_returnflag
+"""
+
+
+@query(oracle=ORACLE_BLOOM_PRUNE_JOIN)
 def q_bloom_prune_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = _t(spark, sf_dir, "orders")
     lineitem = _t(spark, sf_dir, "lineitem")
@@ -79,19 +93,6 @@ def q_bloom_prune_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_BLOOM_PRUNE_JOIN = f"""
-SELECT l_returnflag,
-       count(*) AS n_items,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-FROM lineitem
-JOIN (SELECT o_orderkey FROM orders
-      WHERE o_orderpriority = '1-URGENT'
-        AND o_totalprice > {_BLOOM_PRICE_MIN!r}) dim
-  ON l_orderkey = o_orderkey
-GROUP BY l_returnflag
-ORDER BY l_returnflag
-"""
-
 # --------------------------------------------------------------------------
 # sketch_quantiles: per-returnflag p50/p90/p99 of extended price from a
 # 256-bin equi-width histogram — groups × bins partial counts cross the
@@ -102,19 +103,21 @@ ORDER BY l_returnflag
 _HQ_BINS = 256
 
 
-def q_sketch_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lineitem = _t(spark, sf_dir, "lineitem")
-    return histogram_quantiles(
-        lineitem, "l_returnflag", "l_extendedprice", bins=_HQ_BINS
-    ).orderBy("l_returnflag")
-
-
 ORACLE_SKETCH_QUANTILES = (
     histogram_quantiles_oracle_sql(
         "lineitem", "l_returnflag", "l_extendedprice", bins=_HQ_BINS
     )
     + "ORDER BY l_returnflag"
 )
+
+
+@query(oracle=ORACLE_SKETCH_QUANTILES)
+def q_sketch_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    lineitem = _t(spark, sf_dir, "lineitem")
+    return histogram_quantiles(
+        lineitem, "l_returnflag", "l_extendedprice", bins=_HQ_BINS
+    ).orderBy("l_returnflag")
+
 
 # --------------------------------------------------------------------------
 # heavy_hitters: corpus tokens with global share > 1/m, exact counts.
@@ -123,17 +126,6 @@ ORACLE_SKETCH_QUANTILES = (
 # --------------------------------------------------------------------------
 
 _HH_M = 35
-
-
-def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # fan out before the candidate tokenize pass (one 0.39 s single-task
-    # collect under the single-row-group scan); no-op at scale
-    docs = _fan_out(
-        spark, sf_dir, "documents",
-        _t(spark, sf_dir, "documents").select("doc_id", "text"),
-        key="doc_id",
-    )
-    return heavy_hitters(docs, "text", m=_HH_M).orderBy("token")
 
 
 ORACLE_HEAVY_HITTERS = f"""
@@ -149,6 +141,19 @@ GROUP BY token
 HAVING count(*) * {_HH_M} > (SELECT nt FROM tot)
 ORDER BY token
 """
+
+
+@query(oracle=ORACLE_HEAVY_HITTERS)
+def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # fan out before the candidate tokenize pass (one 0.39 s single-task
+    # collect under the single-row-group scan); no-op at scale
+    docs = _fan_out(
+        spark, sf_dir, "documents",
+        _t(spark, sf_dir, "documents").select("doc_id", "text"),
+        key="doc_id",
+    )
+    return heavy_hitters(docs, "text", m=_HH_M).orderBy("token")
+
 
 # --------------------------------------------------------------------------
 # lm_quality_buckets: CCNet-style language-model quality scoring — train
@@ -182,6 +187,71 @@ def _lm_quant(col):
     return F.floor(col * F.lit(_LM_Q) + F.lit(0.5)) / F.lit(_LM_Q)
 
 
+def _oracle_lm_quality_buckets() -> str:
+    quant = f"floor(log2(p) * {_LM_Q!r} + 0.5) / {_LM_Q!r}"
+    cuts_sql = histogram_quantiles_oracle_sql(
+        "per_doc_g",
+        "grp",
+        "nll",
+        bins=_LM_CUT_BINS,
+        qs=(_LM_T1, _LM_T2),
+        q_names=("t1", "t2"),
+    )
+    return f"""
+WITH toksrc AS (
+  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS toks
+  FROM documents
+),
+pairs AS (
+  SELECT doc_id, u['prev'] AS prev, u['w'] AS w
+  FROM (
+    SELECT doc_id,
+           unnest(list_transform(generate_series(2, len(toks)),
+                                 j -> {{'prev': toks[j - 1], 'w': toks[j]}})) AS u
+    FROM toksrc WHERE len(toks) >= 2
+  )
+),
+c2 AS (
+  SELECT prev, w, count(*)::BIGINT AS c2 FROM pairs
+  WHERE doc_id % 2 = 0 GROUP BY prev, w
+),
+c1 AS (SELECT prev, sum(c2)::BIGINT AS c1 FROM c2 GROUP BY prev),
+bigram_model AS (SELECT c2.prev, c2.w, c2.c2, c1.c1 FROM c2 JOIN c1 USING (prev)),
+train_toks AS (
+  SELECT unnest(toks) AS w FROM toksrc WHERE doc_id % 2 = 0
+),
+uni AS (SELECT w, count(*)::BIGINT AS cu FROM train_toks GROUP BY w),
+n_train AS (SELECT count(*)::BIGINT AS n_train FROM train_toks),
+scored AS (
+  SELECT doc_id,
+         coalesce(CAST(m.c2 AS DOUBLE) / m.c1,
+                  {_LM_BACKOFF!r} * (CAST(u.cu AS DOUBLE) / t.n_train),
+                  {_LM_BACKOFF!r} / t.n_train) AS p
+  FROM pairs
+  LEFT JOIN bigram_model m ON pairs.prev = m.prev AND pairs.w = m.w
+  LEFT JOIN uni u ON pairs.w = u.w
+  CROSS JOIN n_train t
+),
+per_doc AS (
+  SELECT doc_id, count(*)::BIGINT AS n_bigrams,
+         round(-sum({quant}) / count(*), 6) AS nll
+  FROM scored GROUP BY doc_id
+),
+per_doc_g AS (SELECT *, 1 AS grp FROM per_doc),
+cuts AS ({cuts_sql})
+SELECT doc_id, n_bigrams, nll,
+       CASE WHEN nll <= t1 THEN 'head'
+            WHEN nll <= t2 THEN 'middle'
+            ELSE 'tail' END AS bucket
+FROM per_doc, cuts
+ORDER BY doc_id
+"""
+
+
+ORACLE_LM_QUALITY_BUCKETS = _oracle_lm_quality_buckets()
+
+
+@query(oracle=ORACLE_LM_QUALITY_BUCKETS)
 def q_lm_quality_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     toks = F.filter(F.split("text", " "), lambda x: x != "")
@@ -273,69 +343,6 @@ def q_lm_quality_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("doc_id")
     )
 
-
-def _oracle_lm_quality_buckets() -> str:
-    quant = f"floor(log2(p) * {_LM_Q!r} + 0.5) / {_LM_Q!r}"
-    cuts_sql = histogram_quantiles_oracle_sql(
-        "per_doc_g",
-        "grp",
-        "nll",
-        bins=_LM_CUT_BINS,
-        qs=(_LM_T1, _LM_T2),
-        q_names=("t1", "t2"),
-    )
-    return f"""
-WITH toksrc AS (
-  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS toks
-  FROM documents
-),
-pairs AS (
-  SELECT doc_id, u['prev'] AS prev, u['w'] AS w
-  FROM (
-    SELECT doc_id,
-           unnest(list_transform(generate_series(2, len(toks)),
-                                 j -> {{'prev': toks[j - 1], 'w': toks[j]}})) AS u
-    FROM toksrc WHERE len(toks) >= 2
-  )
-),
-c2 AS (
-  SELECT prev, w, count(*)::BIGINT AS c2 FROM pairs
-  WHERE doc_id % 2 = 0 GROUP BY prev, w
-),
-c1 AS (SELECT prev, sum(c2)::BIGINT AS c1 FROM c2 GROUP BY prev),
-bigram_model AS (SELECT c2.prev, c2.w, c2.c2, c1.c1 FROM c2 JOIN c1 USING (prev)),
-train_toks AS (
-  SELECT unnest(toks) AS w FROM toksrc WHERE doc_id % 2 = 0
-),
-uni AS (SELECT w, count(*)::BIGINT AS cu FROM train_toks GROUP BY w),
-n_train AS (SELECT count(*)::BIGINT AS n_train FROM train_toks),
-scored AS (
-  SELECT doc_id,
-         coalesce(CAST(m.c2 AS DOUBLE) / m.c1,
-                  {_LM_BACKOFF!r} * (CAST(u.cu AS DOUBLE) / t.n_train),
-                  {_LM_BACKOFF!r} / t.n_train) AS p
-  FROM pairs
-  LEFT JOIN bigram_model m ON pairs.prev = m.prev AND pairs.w = m.w
-  LEFT JOIN uni u ON pairs.w = u.w
-  CROSS JOIN n_train t
-),
-per_doc AS (
-  SELECT doc_id, count(*)::BIGINT AS n_bigrams,
-         round(-sum({quant}) / count(*), 6) AS nll
-  FROM scored GROUP BY doc_id
-),
-per_doc_g AS (SELECT *, 1 AS grp FROM per_doc),
-cuts AS ({cuts_sql})
-SELECT doc_id, n_bigrams, nll,
-       CASE WHEN nll <= t1 THEN 'head'
-            WHEN nll <= t2 THEN 'middle'
-            ELSE 'tail' END AS bucket
-FROM per_doc, cuts
-ORDER BY doc_id
-"""
-
-
-ORACLE_LM_QUALITY_BUCKETS = _oracle_lm_quality_buckets()
 
 # --------------------------------------------------------------------------
 # pq_compression: product-quantization codes for the embedding store —
@@ -490,22 +497,6 @@ def _pq_d2_quant(sv, cv):
     return F.floor(d2 * F.lit(_PQ_Q) + F.lit(0.5)) / F.lit(_PQ_Q)
 
 
-def q_pq_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
-    subs, assign, cb1 = _pq_trained(spark, sf_dir)
-    m2 = assign(cb1)
-    d2r = _pq_d2_quant(F.col("sv"), F.col("cv"))
-    code_cols = [
-        F.max(F.when(F.col("s") == s, F.col("cell"))).alias(f"c{s}")
-        for s in range(_PQ_S)
-    ]
-    return (
-        m2.select("vec_id", "s", "cell", d2r.alias("d2"))
-        .groupBy("vec_id")
-        .agg(*code_cols, F.round(F.sum("d2"), 6).alias("recon_err"))
-        .orderBy("vec_id")
-    )
-
-
 def _pq_score_sql(sv: str, cv: str) -> str:
     return (
         f"round(list_inner_product({cv}, {cv}) - "
@@ -584,6 +575,24 @@ ORDER BY vec_id
 
 ORACLE_PQ_COMPRESSION = _oracle_pq_compression()
 
+
+@query(oracle=ORACLE_PQ_COMPRESSION)
+def q_pq_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
+    subs, assign, cb1 = _pq_trained(spark, sf_dir)
+    m2 = assign(cb1)
+    d2r = _pq_d2_quant(F.col("sv"), F.col("cv"))
+    code_cols = [
+        F.max(F.when(F.col("s") == s, F.col("cell"))).alias(f"c{s}")
+        for s in range(_PQ_S)
+    ]
+    return (
+        m2.select("vec_id", "s", "cell", d2r.alias("d2"))
+        .groupBy("vec_id")
+        .agg(*code_cols, F.round(F.sum("d2"), 6).alias("recon_err"))
+        .orderBy("vec_id")
+    )
+
+
 # --------------------------------------------------------------------------
 # pq_adc_topk: asymmetric-distance ANN over the PQ codes — the search
 # path that makes PQ useful. Each query precomputes a (subspace, cell)
@@ -605,39 +614,6 @@ ORACLE_PQ_COMPRESSION = _oracle_pq_compression()
 # --------------------------------------------------------------------------
 
 _ADC_K = 3  # results per query
-
-
-def q_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
-    subs, assign, cb1 = _pq_trained(spark, sf_dir)
-    codes = assign(cb1).select("vec_id", "s", "cell")
-    qsubs = subs.filter(F.col("vec_id") % 20 == 0).select(
-        F.col("vec_id").alias("qid"), "s", F.col("sv").alias("qsv")
-    )
-    lut = qsubs.join(F.broadcast(cb1), "s").select(
-        "qid", "s", "cell", _pq_d2_quant(F.col("qsv"), F.col("cv")).alias("qd2")
-    )
-    scored = (
-        codes.join(F.broadcast(lut), ["s", "cell"])
-        .filter(F.col("vec_id") != F.col("qid"))
-        .groupBy("qid", "vec_id")
-        .agg(F.sum("qd2").alias("approx_d2"))
-    )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("approx_d2").asc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _ADC_K)
-        .select(
-            "qid",
-            F.col("vec_id").alias("cid"),
-            "rank",
-            F.round("approx_d2", 6).alias("approx_d2"),
-        )
-        .orderBy("qid", "rank")
-    )
 
 
 def _oracle_pq_adc_topk() -> str:
@@ -675,6 +651,41 @@ ORDER BY qid, rank
 
 ORACLE_PQ_ADC_TOPK = _oracle_pq_adc_topk()
 
+
+@query(oracle=ORACLE_PQ_ADC_TOPK)
+def q_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql.window import Window
+
+    subs, assign, cb1 = _pq_trained(spark, sf_dir)
+    codes = assign(cb1).select("vec_id", "s", "cell")
+    qsubs = subs.filter(F.col("vec_id") % 20 == 0).select(
+        F.col("vec_id").alias("qid"), "s", F.col("sv").alias("qsv")
+    )
+    lut = qsubs.join(F.broadcast(cb1), "s").select(
+        "qid", "s", "cell", _pq_d2_quant(F.col("qsv"), F.col("cv")).alias("qd2")
+    )
+    scored = (
+        codes.join(F.broadcast(lut), ["s", "cell"])
+        .filter(F.col("vec_id") != F.col("qid"))
+        .groupBy("qid", "vec_id")
+        .agg(F.sum("qd2").alias("approx_d2"))
+    )
+    w = Window.partitionBy("qid").orderBy(
+        F.col("approx_d2").asc(), F.col("vec_id").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= _ADC_K)
+        .select(
+            "qid",
+            F.col("vec_id").alias("cid"),
+            "rank",
+            F.round("approx_d2", 6).alias("approx_d2"),
+        )
+        .orderBy("qid", "rank")
+    )
+
+
 # --------------------------------------------------------------------------
 # stream_heavy_hitters: the sketch family on the streaming surface —
 # per-token frequency state maintained across micro-batches with
@@ -691,6 +702,9 @@ ORACLE_PQ_ADC_TOPK = _oracle_pq_adc_topk()
 # --------------------------------------------------------------------------
 
 
+# the final stateful emission equals the batch aggregate, so it shares
+# the batch heavy-hitters oracle.
+@query(oracle=ORACLE_HEAVY_HITTERS, slow_oracle=True)
 def q_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import uuid
@@ -796,6 +810,41 @@ _RS_DAY_US = _US_PER_DAY  # alias kept for the resample family — the purchase
 # (a WEEKLY grid had zero empty buckets in every fixture)
 
 
+ORACLE_RESAMPLE_FFILL = f"""
+WITH e AS (
+  SELECT user_id, epoch_us(ts) AS ts_us, value, event_id FROM events
+  WHERE event_type = 'purchase'
+),
+o AS (
+  SELECT user_id, (ts_us - (ts_us % {_RS_DAY_US})) / {_RS_DAY_US} AS day,
+         value,
+         row_number() OVER (
+           PARTITION BY user_id, (ts_us - (ts_us % {_RS_DAY_US})) / {_RS_DAY_US}
+           ORDER BY ts_us DESC, event_id DESC) AS rn
+  FROM e
+),
+obs AS (SELECT user_id, day::BIGINT AS day, value FROM o WHERE rn = 1),
+span AS (
+  SELECT user_id, min(day) AS dlo, max(day) AS dhi FROM obs GROUP BY user_id
+),
+grid AS (
+  SELECT user_id, unnest(generate_series(dlo, dhi))::BIGINT AS day FROM span
+),
+j AS (
+  SELECT grid.user_id, grid.day, obs.value
+  FROM grid LEFT JOIN obs ON grid.user_id = obs.user_id AND grid.day = obs.day
+)
+SELECT user_id, day,
+       last_value(value IGNORE NULLS) OVER (
+         PARTITION BY user_id ORDER BY day
+         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS value_ffill,
+       value IS NOT NULL AS observed
+FROM j
+ORDER BY user_id, day
+"""
+
+
+@query(oracle=ORACLE_RESAMPLE_FFILL)
 def q_resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
@@ -838,39 +887,6 @@ def q_resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("user_id", "day")
 
 
-ORACLE_RESAMPLE_FFILL = f"""
-WITH e AS (
-  SELECT user_id, epoch_us(ts) AS ts_us, value, event_id FROM events
-  WHERE event_type = 'purchase'
-),
-o AS (
-  SELECT user_id, (ts_us - (ts_us % {_RS_DAY_US})) / {_RS_DAY_US} AS day,
-         value,
-         row_number() OVER (
-           PARTITION BY user_id, (ts_us - (ts_us % {_RS_DAY_US})) / {_RS_DAY_US}
-           ORDER BY ts_us DESC, event_id DESC) AS rn
-  FROM e
-),
-obs AS (SELECT user_id, day::BIGINT AS day, value FROM o WHERE rn = 1),
-span AS (
-  SELECT user_id, min(day) AS dlo, max(day) AS dhi FROM obs GROUP BY user_id
-),
-grid AS (
-  SELECT user_id, unnest(generate_series(dlo, dhi))::BIGINT AS day FROM span
-),
-j AS (
-  SELECT grid.user_id, grid.day, obs.value
-  FROM grid LEFT JOIN obs ON grid.user_id = obs.user_id AND grid.day = obs.day
-)
-SELECT user_id, day,
-       last_value(value IGNORE NULLS) OVER (
-         PARTITION BY user_id ORDER BY day
-         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS value_ffill,
-       value IS NOT NULL AS observed
-FROM j
-ORDER BY user_id, day
-"""
-
 # --------------------------------------------------------------------------
 # feature_drift_psi: population-stability-index drift report between two
 # event slices (click vs purchase value distributions) over the shared
@@ -890,6 +906,39 @@ _PSI_A, _PSI_B = "click", "purchase"
 _PSI_Q = float(1 << 20)
 
 
+ORACLE_FEATURE_DRIFT_PSI = f"""
+WITH e AS (
+  SELECT event_type, CAST(value AS DOUBLE) AS v FROM events
+  WHERE event_type IN ('{_PSI_A}', '{_PSI_B}')
+),
+bounds AS (SELECT min(v) AS lo, max(v) AS hi FROM e),
+counts AS (
+  SELECT CASE WHEN hi = lo THEN 0
+              ELSE least({_PSI_BINS - 1},
+                         CAST(floor((v - lo) / (hi - lo) * {float(_PSI_BINS)!r})
+                              AS BIGINT)) END AS bucket,
+         count(*) FILTER (event_type = '{_PSI_A}')::BIGINT AS n_a,
+         count(*) FILTER (event_type = '{_PSI_B}')::BIGINT AS n_b
+  FROM e, bounds GROUP BY 1
+),
+tot AS (SELECT sum(n_a)::BIGINT AS ta, sum(n_b)::BIGINT AS tb FROM counts),
+pb AS (
+  SELECT bucket, n_a, n_b,
+         floor(((n_a + 0.5) / (ta + {0.5 * _PSI_BINS!r})
+                - (n_b + 0.5) / (tb + {0.5 * _PSI_BINS!r}))
+               * ln(((n_a + 0.5) / (ta + {0.5 * _PSI_BINS!r}))
+                    / ((n_b + 0.5) / (tb + {0.5 * _PSI_BINS!r})))
+               * {_PSI_Q!r} + 0.5) / {_PSI_Q!r} AS contrib
+  FROM counts, tot
+),
+psi AS (SELECT round(sum(contrib), 6) AS psi FROM pb)
+SELECT bucket, n_a, n_b, round(contrib, 6) AS contrib, psi
+FROM pb, psi
+ORDER BY bucket
+"""
+
+
+@query(oracle=ORACLE_FEATURE_DRIFT_PSI)
 def q_feature_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fink_science_spark.queries import _events_us
 
@@ -939,37 +988,6 @@ def q_feature_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_FEATURE_DRIFT_PSI = f"""
-WITH e AS (
-  SELECT event_type, CAST(value AS DOUBLE) AS v FROM events
-  WHERE event_type IN ('{_PSI_A}', '{_PSI_B}')
-),
-bounds AS (SELECT min(v) AS lo, max(v) AS hi FROM e),
-counts AS (
-  SELECT CASE WHEN hi = lo THEN 0
-              ELSE least({_PSI_BINS - 1},
-                         CAST(floor((v - lo) / (hi - lo) * {float(_PSI_BINS)!r})
-                              AS BIGINT)) END AS bucket,
-         count(*) FILTER (event_type = '{_PSI_A}')::BIGINT AS n_a,
-         count(*) FILTER (event_type = '{_PSI_B}')::BIGINT AS n_b
-  FROM e, bounds GROUP BY 1
-),
-tot AS (SELECT sum(n_a)::BIGINT AS ta, sum(n_b)::BIGINT AS tb FROM counts),
-pb AS (
-  SELECT bucket, n_a, n_b,
-         floor(((n_a + 0.5) / (ta + {0.5 * _PSI_BINS!r})
-                - (n_b + 0.5) / (tb + {0.5 * _PSI_BINS!r}))
-               * ln(((n_a + 0.5) / (ta + {0.5 * _PSI_BINS!r}))
-                    / ((n_b + 0.5) / (tb + {0.5 * _PSI_BINS!r})))
-               * {_PSI_Q!r} + 0.5) / {_PSI_Q!r} AS contrib
-  FROM counts, tot
-),
-psi AS (SELECT round(sum(contrib), 6) AS psi FROM pb)
-SELECT bucket, n_a, n_b, round(contrib, 6) AS contrib, psi
-FROM pb, psi
-ORDER BY bucket
-"""
-
 # --------------------------------------------------------------------------
 # weighted_sample: weighted sampling WITHOUT replacement per stratum
 # (A-ES / Efraimidis–Spirakis exponential keys): key_i = -ln(u_i)/w_i
@@ -985,31 +1003,6 @@ ORDER BY bucket
 # --------------------------------------------------------------------------
 
 _WS_K = 10  # sample size per source
-
-
-def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
-    from fink_science_spark.functions.hashing import hash64
-    from fink_science_spark.queries_ext6 import _U_DENOM
-
-    docs = _t(spark, sf_dir, "documents")
-    # weight: longer documents are more valuable (n_chars as the
-    # quality proxy); u in (0, 1] via (h + 1) / 2^60
-    u = (hash64(F.col("doc_id").cast("string"), seed="wsample") + F.lit(1)) / F.lit(
-        _U_DENOM
-    )
-    key = F.round(-F.log(u) / F.col("n_chars"), 9)
-    w = Window.partitionBy("source").orderBy(
-        F.col("key").asc(), F.col("doc_id").asc()
-    )
-    return (
-        docs.select("source", "doc_id", "n_chars", key.alias("key"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _WS_K)
-        .select("source", "rank", "doc_id", "n_chars", "key")
-        .orderBy("source", "rank")
-    )
 
 
 def _oracle_weighted_sample() -> str:
@@ -1037,6 +1030,33 @@ ORDER BY source, rank
 
 ORACLE_WEIGHTED_SAMPLE = _oracle_weighted_sample()
 
+
+@query(oracle=ORACLE_WEIGHTED_SAMPLE)
+def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql.window import Window
+
+    from fink_science_spark.functions.hashing import hash64
+    from fink_science_spark.queries_ext6 import _U_DENOM
+
+    docs = _t(spark, sf_dir, "documents")
+    # weight: longer documents are more valuable (n_chars as the
+    # quality proxy); u in (0, 1] via (h + 1) / 2^60
+    u = (hash64(F.col("doc_id").cast("string"), seed="wsample") + F.lit(1)) / F.lit(
+        _U_DENOM
+    )
+    key = F.round(-F.log(u) / F.col("n_chars"), 9)
+    w = Window.partitionBy("source").orderBy(
+        F.col("key").asc(), F.col("doc_id").asc()
+    )
+    return (
+        docs.select("source", "doc_id", "n_chars", key.alias("key"))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= _WS_K)
+        .select("source", "rank", "doc_id", "n_chars", "key")
+        .orderBy("source", "rank")
+    )
+
+
 # --------------------------------------------------------------------------
 # user_trend: per-user OLS trend of purchase value over time (slope /
 # intercept / R²) from INTEGER sufficient statistics — the grouped
@@ -1053,6 +1073,42 @@ ORACLE_WEIGHTED_SAMPLE = _oracle_weighted_sample()
 # --------------------------------------------------------------------------
 
 
+ORACLE_USER_TREND = f"""
+WITH e AS (
+  SELECT user_id,
+         (epoch_us(ts) - (epoch_us(ts) % {_RS_DAY_US})) / {_RS_DAY_US} AS t,
+         round(value * 100)::BIGINT AS v
+  FROM events WHERE event_type = 'purchase'
+),
+s AS (
+  SELECT user_id, count(*)::BIGINT AS n,
+         sum(t)::BIGINT AS st, sum(v)::BIGINT AS sv,
+         sum(t * v)::BIGINT AS stv, sum(t * t)::BIGINT AS stt,
+         sum(v * v)::BIGINT AS svv
+  FROM e GROUP BY user_id
+),
+a AS (
+  SELECT user_id, n,
+         CAST(n * stv - st * sv AS DOUBLE) AS num,
+         CAST(n * stt - st * st AS DOUBLE) AS den,
+         CAST(n * svv - sv * sv AS DOUBLE) AS svar,
+         CAST(sv AS DOUBLE) AS svd, CAST(st AS DOUBLE) AS std
+  FROM s
+)
+SELECT user_id, n,
+       CASE WHEN den != 0 AND svar != 0
+            THEN round(num / den / 100.0, 6) END AS slope,
+       CASE WHEN den != 0 AND svar != 0
+            THEN round(svd / n / 100.0 - (num / den / 100.0) * (std / n), 6)
+       END AS intercept,
+       CASE WHEN den != 0 AND svar != 0
+            THEN round((num * num) / (den * svar), 6) END AS r2
+FROM a
+ORDER BY user_id
+"""
+
+
+@query(oracle=ORACLE_USER_TREND)
 def q_user_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fink_science_spark.queries import _events_us
 
@@ -1097,40 +1153,6 @@ def q_user_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_USER_TREND = f"""
-WITH e AS (
-  SELECT user_id,
-         (epoch_us(ts) - (epoch_us(ts) % {_RS_DAY_US})) / {_RS_DAY_US} AS t,
-         round(value * 100)::BIGINT AS v
-  FROM events WHERE event_type = 'purchase'
-),
-s AS (
-  SELECT user_id, count(*)::BIGINT AS n,
-         sum(t)::BIGINT AS st, sum(v)::BIGINT AS sv,
-         sum(t * v)::BIGINT AS stv, sum(t * t)::BIGINT AS stt,
-         sum(v * v)::BIGINT AS svv
-  FROM e GROUP BY user_id
-),
-a AS (
-  SELECT user_id, n,
-         CAST(n * stv - st * sv AS DOUBLE) AS num,
-         CAST(n * stt - st * st AS DOUBLE) AS den,
-         CAST(n * svv - sv * sv AS DOUBLE) AS svar,
-         CAST(sv AS DOUBLE) AS svd, CAST(st AS DOUBLE) AS std
-  FROM s
-)
-SELECT user_id, n,
-       CASE WHEN den != 0 AND svar != 0
-            THEN round(num / den / 100.0, 6) END AS slope,
-       CASE WHEN den != 0 AND svar != 0
-            THEN round(svd / n / 100.0 - (num / den / 100.0) * (std / n), 6)
-       END AS intercept,
-       CASE WHEN den != 0 AND svar != 0
-            THEN round((num * num) / (den * svar), 6) END AS r2
-FROM a
-ORDER BY user_id
-"""
-
 # --------------------------------------------------------------------------
 # quantile_transform: map every lineitem price to its approximate
 # per-group CDF position via the histogram summary — the rank/quantile
@@ -1142,6 +1164,39 @@ ORDER BY user_id
 _QT_BINS = 256
 
 
+ORACLE_QUANTILE_TRANSFORM = f"""
+WITH bounds AS (
+  SELECT min(CAST(l_extendedprice AS DOUBLE)) AS lo,
+         max(CAST(l_extendedprice AS DOUBLE)) AS hi
+  FROM lineitem
+),
+b AS (
+  SELECT l_orderkey, l_linenumber, l_returnflag, l_extendedprice,
+         CASE WHEN hi = lo THEN 0
+              ELSE least({_QT_BINS - 1},
+                         CAST(floor((CAST(l_extendedprice AS DOUBLE) - lo)
+                                    / (hi - lo) * {float(_QT_BINS)!r}) AS BIGINT))
+         END AS bucket
+  FROM lineitem, bounds
+),
+hist AS (
+  SELECT l_returnflag, bucket, count(*)::BIGINT AS c FROM b GROUP BY 1, 2
+),
+cdf_tab AS (
+  SELECT l_returnflag, bucket,
+         round(sum(c) OVER (PARTITION BY l_returnflag ORDER BY bucket
+                            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+               / sum(c) OVER (PARTITION BY l_returnflag), 6) AS cdf
+  FROM hist
+)
+SELECT b.l_orderkey, b.l_linenumber, b.l_returnflag, b.l_extendedprice, cdf
+FROM b JOIN cdf_tab ON b.l_returnflag = cdf_tab.l_returnflag
+                   AND b.bucket = cdf_tab.bucket
+ORDER BY b.l_orderkey, b.l_linenumber
+"""
+
+
+@query(oracle=ORACLE_QUANTILE_TRANSFORM)
 def q_quantile_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
@@ -1212,6 +1267,40 @@ _PMI_MIN_COUNT = 5
 _PMI_TOPK = 20
 
 
+ORACLE_PMI_COLLOCATIONS = f"""
+WITH toksrc AS (
+  SELECT list_filter(string_split(text, ' '), x -> x <> '') AS toks
+  FROM documents
+),
+pairs AS (
+  SELECT u['a'] AS a, u['b'] AS b
+  FROM (
+    SELECT unnest(list_transform(generate_series(2, len(toks)),
+                                 j -> {{'a': toks[j - 1], 'b': toks[j]}})) AS u
+    FROM toksrc WHERE len(toks) >= 2
+  )
+),
+uni AS (
+  SELECT w, count(*)::BIGINT AS c
+  FROM (SELECT unnest(toks) AS w FROM toksrc) GROUP BY w
+),
+n_tok AS (SELECT sum(c)::BIGINT AS n_tok FROM uni),
+c2 AS (SELECT a, b, count(*)::BIGINT AS c2 FROM pairs GROUP BY a, b),
+n_big AS (SELECT sum(c2)::BIGINT AS n_big FROM c2)
+SELECT c2.a, c2.b, c2.c2,
+       round(ln(CAST(c2.c2 * t.n_tok * t.n_tok AS DOUBLE)
+                / CAST(g.n_big * ua.c * ub.c AS DOUBLE)), 6) AS pmi
+FROM c2
+JOIN uni ua ON c2.a = ua.w
+JOIN uni ub ON c2.b = ub.w
+CROSS JOIN n_tok t CROSS JOIN n_big g
+WHERE c2.c2 >= {_PMI_MIN_COUNT}
+ORDER BY pmi DESC, c2.a, c2.b
+LIMIT {_PMI_TOPK}
+"""
+
+
+@query(oracle=ORACLE_PMI_COLLOCATIONS)
 def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     toks = F.filter(F.split("text", " "), lambda x: x != "")
@@ -1260,69 +1349,6 @@ def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_PMI_COLLOCATIONS = f"""
-WITH toksrc AS (
-  SELECT list_filter(string_split(text, ' '), x -> x <> '') AS toks
-  FROM documents
-),
-pairs AS (
-  SELECT u['a'] AS a, u['b'] AS b
-  FROM (
-    SELECT unnest(list_transform(generate_series(2, len(toks)),
-                                 j -> {{'a': toks[j - 1], 'b': toks[j]}})) AS u
-    FROM toksrc WHERE len(toks) >= 2
-  )
-),
-uni AS (
-  SELECT w, count(*)::BIGINT AS c
-  FROM (SELECT unnest(toks) AS w FROM toksrc) GROUP BY w
-),
-n_tok AS (SELECT sum(c)::BIGINT AS n_tok FROM uni),
-c2 AS (SELECT a, b, count(*)::BIGINT AS c2 FROM pairs GROUP BY a, b),
-n_big AS (SELECT sum(c2)::BIGINT AS n_big FROM c2)
-SELECT c2.a, c2.b, c2.c2,
-       round(ln(CAST(c2.c2 * t.n_tok * t.n_tok AS DOUBLE)
-                / CAST(g.n_big * ua.c * ub.c AS DOUBLE)), 6) AS pmi
-FROM c2
-JOIN uni ua ON c2.a = ua.w
-JOIN uni ub ON c2.b = ub.w
-CROSS JOIN n_tok t CROSS JOIN n_big g
-WHERE c2.c2 >= {_PMI_MIN_COUNT}
-ORDER BY pmi DESC, c2.a, c2.b
-LIMIT {_PMI_TOPK}
-"""
-
-ORACLE_QUANTILE_TRANSFORM = f"""
-WITH bounds AS (
-  SELECT min(CAST(l_extendedprice AS DOUBLE)) AS lo,
-         max(CAST(l_extendedprice AS DOUBLE)) AS hi
-  FROM lineitem
-),
-b AS (
-  SELECT l_orderkey, l_linenumber, l_returnflag, l_extendedprice,
-         CASE WHEN hi = lo THEN 0
-              ELSE least({_QT_BINS - 1},
-                         CAST(floor((CAST(l_extendedprice AS DOUBLE) - lo)
-                                    / (hi - lo) * {float(_QT_BINS)!r}) AS BIGINT))
-         END AS bucket
-  FROM lineitem, bounds
-),
-hist AS (
-  SELECT l_returnflag, bucket, count(*)::BIGINT AS c FROM b GROUP BY 1, 2
-),
-cdf_tab AS (
-  SELECT l_returnflag, bucket,
-         round(sum(c) OVER (PARTITION BY l_returnflag ORDER BY bucket
-                            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               / sum(c) OVER (PARTITION BY l_returnflag), 6) AS cdf
-  FROM hist
-)
-SELECT b.l_orderkey, b.l_linenumber, b.l_returnflag, b.l_extendedprice, cdf
-FROM b JOIN cdf_tab ON b.l_returnflag = cdf_tab.l_returnflag
-                   AND b.bucket = cdf_tab.bucket
-ORDER BY b.l_orderkey, b.l_linenumber
-"""
-
 # --------------------------------------------------------------------------
 # decontaminate_bloom: benchmark decontamination with a Bloom-pruned
 # first phase — identical semantics (and oracle) to `decontaminate`,
@@ -1339,6 +1365,9 @@ ORDER BY b.l_orderkey, b.l_linenumber
 # --------------------------------------------------------------------------
 
 
+# identical semantics to the exact path — the bloom only prunes; shares
+# decontaminate's oracle.
+@query(oracle=_ORACLE_DECON)
 def q_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fink_science_spark.functions.hashing import hash64
     from fink_science_spark.functions.text import tokens, word_shingles
@@ -1410,6 +1439,55 @@ def q_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SPAN_K = 5
 
 
+def _oracle_dup_span_profile() -> str:
+    from fink_science_spark.functions.hashing import hash64_sql
+    from fink_science_spark.queries_ext import _DOCS_TOK_CTE
+
+    k = _SPAN_K
+    gram_hash = hash64_sql(f"array_to_string(list_slice(toks, i, i + {k - 1}), ' ')")
+    return f"""
+WITH {_DOCS_TOK_CTE},
+base AS (
+  SELECT doc_id, greatest(len(toks) - {k - 1}, 0)::BIGINT AS n_grams, toks
+  FROM tok
+),
+g AS (
+  SELECT doc_id, u['pos'] AS pos, u['h'] AS h
+  FROM (
+    SELECT doc_id,
+           unnest(list_transform(generate_series(1, greatest(len(toks) - {k - 1}, 0)),
+                                 i -> {{'pos': i, 'h': {gram_hash}}})) AS u
+    FROM base
+  )
+),
+gdf AS (
+  SELECT h, count(*) AS ndocs
+  FROM (SELECT DISTINCT h, doc_id FROM g) GROUP BY h
+),
+dups AS (
+  SELECT g.doc_id, g.pos,
+         g.pos - row_number() OVER (PARTITION BY g.doc_id ORDER BY g.pos) AS grp
+  FROM g JOIN gdf ON g.h = gdf.h WHERE gdf.ndocs > 1
+),
+runs AS (
+  SELECT doc_id, grp, count(*)::BIGINT AS run FROM dups GROUP BY doc_id, grp
+),
+per AS (
+  SELECT doc_id, sum(run)::BIGINT AS n_dup, max(run)::BIGINT AS maxrun
+  FROM runs GROUP BY doc_id
+)
+SELECT b.doc_id, b.n_grams,
+       coalesce(p.n_dup, 0)::BIGINT AS n_dup,
+       CASE WHEN b.n_grams > 0
+            THEN ((2000000 * coalesce(p.n_dup, 0) + b.n_grams)
+                  // (2 * b.n_grams))::DOUBLE / 1000000.0
+            ELSE 0.0 END AS dup_frac,
+       coalesce(p.maxrun + {k - 1}, 0)::BIGINT AS longest_dup_tokens
+FROM base b LEFT JOIN per p ON b.doc_id = p.doc_id
+"""
+
+
+@query(oracle=_oracle_dup_span_profile)
 def q_dup_span_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-duplicated 5-gram coverage + longest duplicated run per doc."""
     from pyspark.sql.window import Window
@@ -1472,54 +1550,9 @@ def q_dup_span_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-def _oracle_dup_span_profile() -> str:
-    from fink_science_spark.functions.hashing import hash64_sql
-    from fink_science_spark.queries_ext import _DOCS_TOK_CTE
-
-    k = _SPAN_K
-    gram_hash = hash64_sql(f"array_to_string(list_slice(toks, i, i + {k - 1}), ' ')")
-    return f"""
-WITH {_DOCS_TOK_CTE},
-base AS (
-  SELECT doc_id, greatest(len(toks) - {k - 1}, 0)::BIGINT AS n_grams, toks
-  FROM tok
-),
-g AS (
-  SELECT doc_id, u['pos'] AS pos, u['h'] AS h
-  FROM (
-    SELECT doc_id,
-           unnest(list_transform(generate_series(1, greatest(len(toks) - {k - 1}, 0)),
-                                 i -> {{'pos': i, 'h': {gram_hash}}})) AS u
-    FROM base
-  )
-),
-gdf AS (
-  SELECT h, count(*) AS ndocs
-  FROM (SELECT DISTINCT h, doc_id FROM g) GROUP BY h
-),
-dups AS (
-  SELECT g.doc_id, g.pos,
-         g.pos - row_number() OVER (PARTITION BY g.doc_id ORDER BY g.pos) AS grp
-  FROM g JOIN gdf ON g.h = gdf.h WHERE gdf.ndocs > 1
-),
-runs AS (
-  SELECT doc_id, grp, count(*)::BIGINT AS run FROM dups GROUP BY doc_id, grp
-),
-per AS (
-  SELECT doc_id, sum(run)::BIGINT AS n_dup, max(run)::BIGINT AS maxrun
-  FROM runs GROUP BY doc_id
-)
-SELECT b.doc_id, b.n_grams,
-       coalesce(p.n_dup, 0)::BIGINT AS n_dup,
-       CASE WHEN b.n_grams > 0
-            THEN ((2000000 * coalesce(p.n_dup, 0) + b.n_grams)
-                  // (2 * b.n_grams))::DOUBLE / 1000000.0
-            ELSE 0.0 END AS dup_frac,
-       coalesce(p.maxrun + {k - 1}, 0)::BIGINT AS longest_dup_tokens
-FROM base b LEFT JOIN per p ON b.doc_id = p.doc_id
-"""
-
-
+# prefix filtering changes the candidate set, not the answer — shares
+# the exact-Jaccard-pairs oracle.
+@query(oracle=_ORACLE_JACCARD)
 def q_dedup_jaccard_ppjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 3-gram Jaccard pairs (threshold 0.5) via prefix-filtered
     set-similarity join (operators/dedup.jaccard_ppjoin_pairs)."""
@@ -1548,6 +1581,43 @@ _PHASH_VARIANT_BASE = 1_000_000
 _PHASH_MOD = 7
 
 
+ORACLE_IMAGE_PHASH_DEDUP = f"""
+WITH hx AS (
+  SELECT doc_id AS asset_id,
+         md5(text) || md5(text || 'a') || md5(text || 'b') || md5(text || 'c')
+             AS hx
+  FROM documents
+),
+px0 AS (
+  SELECT asset_id,
+         [('0x' || substr(hx, 2*i - 1, 2))::INT
+          for i in generate_series(1, 64)] AS p
+  FROM hx
+),
+pxall AS (
+  SELECT asset_id, p FROM px0
+  UNION ALL
+  SELECT asset_id + {_PHASH_VARIANT_BASE} AS asset_id,
+         [CASE WHEN i = 3 THEN (p[i] + 16) % 256 ELSE p[i] END
+          for i in generate_series(1, 64)] AS p
+  FROM px0 WHERE asset_id % {_PHASH_MOD} = 0
+),
+m AS (SELECT asset_id, p, list_avg(p) AS mean FROM pxall),
+sig AS (
+  SELECT asset_id,
+         list_sum(list_transform(generate_series(1, 60),
+            i -> CASE WHEN p[i] > mean THEN 1::BIGINT << (i - 1)
+                 ELSE 0::BIGINT END))::BIGINT AS h
+  FROM m
+)
+SELECT a.asset_id AS id_a, b.asset_id AS id_b,
+       bit_count(xor(a.h, b.h)) AS hamming
+FROM sig a JOIN sig b ON a.asset_id < b.asset_id
+WHERE bit_count(xor(a.h, b.h)) <= 3
+"""
+
+
+@query(oracle=ORACLE_IMAGE_PHASH_DEDUP)
 def q_image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """aHash near-dup pairs (Hamming ≤ 3) over fake-decoded 8×8 assets."""
     from fink_science_spark.operators.dedup import hamming_pairs
@@ -1604,27 +1674,6 @@ def q_image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 _HN_LO, _HN_HI, _HN_K = 0.15, 0.30, 3
 
 
-def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-3 in-band (0.15 <= cos < 0.30) negatives per anchor vector,
-    via the ANN block kernel with band masking (one corpus scan, local
-    top-k per partition, tiny merge)."""
-    from fink_science_spark.operators.similarity import cosine_topk_blocked
-    from fink_science_spark.queries import _t
-
-    emb = _t(spark, sf_dir, "embeddings")
-    anchors = emb.filter(F.col("vec_id") % 20 == 0).select(
-        F.col("vec_id").alias("aid"), F.col("embedding").alias("av")
-    )
-    corpus = emb.select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("cv")
-    )
-    out = cosine_topk_blocked(
-        corpus, anchors, "cid", "cv", "aid", "av",
-        k=_HN_K, band=(_HN_LO, _HN_HI),
-    )
-    return out.select("aid", F.col("cid").alias("neg_id"), "rank", "cos")
-
-
 ORACLE_HARD_NEGATIVES = f"""
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
 a AS (SELECT vec_id AS aid, v AS av FROM e WHERE vec_id % 20 = 0),
@@ -1646,6 +1695,28 @@ FROM banded WHERE rank <= {_HN_K}
 """
 
 
+@query(oracle=ORACLE_HARD_NEGATIVES)
+def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-3 in-band (0.15 <= cos < 0.30) negatives per anchor vector,
+    via the ANN block kernel with band masking (one corpus scan, local
+    top-k per partition, tiny merge)."""
+    from fink_science_spark.operators.similarity import cosine_topk_blocked
+    from fink_science_spark.queries import _t
+
+    emb = _t(spark, sf_dir, "embeddings")
+    anchors = emb.filter(F.col("vec_id") % 20 == 0).select(
+        F.col("vec_id").alias("aid"), F.col("embedding").alias("av")
+    )
+    corpus = emb.select(
+        F.col("vec_id").alias("cid"), F.col("embedding").alias("cv")
+    )
+    out = cosine_topk_blocked(
+        corpus, anchors, "cid", "cv", "aid", "av",
+        k=_HN_K, band=(_HN_LO, _HN_HI),
+    )
+    return out.select("aid", F.col("cid").alias("neg_id"), "rank", "cos")
+
+
 # --------------------------------------------------------------------------
 # temperature_mix_sample: the multilingual temperature-sampling recipe —
 # resample languages toward p_l^alpha / sum(p^alpha) with alpha = 0.5,
@@ -1665,6 +1736,37 @@ _TMIX_KEEP = 0.5  # target kept fraction of the corpus
 _TMIX_Q = float(1 << 40)
 
 
+def _oracle_temperature_mix_sample() -> str:
+    from fink_science_spark.functions.hashing import hash64_sql
+    from fink_science_spark.queries_ext6 import _U_DENOM
+
+    return f"""
+WITH counts AS (SELECT lang, count(*)::BIGINT AS n_l FROM documents GROUP BY lang),
+tot AS (SELECT sum(n_l)::BIGINT AS n_tot FROM counts),
+shares AS (
+  SELECT lang, n_l, n_tot,
+         floor(sqrt(n_l / n_tot::DOUBLE) * {_TMIX_Q!r}) AS q
+  FROM counts CROSS JOIN tot
+),
+norm AS (SELECT sum(q) AS qsum FROM shares),
+rates AS (
+  SELECT lang, n_l,
+         least(1.0, (q / qsum) * {_TMIX_KEEP!r} * (n_tot / n_l::DOUBLE))
+             AS keep_rate
+  FROM shares CROSS JOIN norm
+),
+draws AS (
+  SELECT d.doc_id, d.lang, r.keep_rate,
+         round({hash64_sql('doc_id::VARCHAR', seed='tmix')} / {_U_DENOM!r}, 9)
+             AS u
+  FROM documents d JOIN rates r USING (lang)
+)
+SELECT doc_id, lang, round(keep_rate, 9) AS keep_rate, u
+FROM draws WHERE u < keep_rate
+"""
+
+
+@query(oracle=_oracle_temperature_mix_sample)
 def q_temperature_mix_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """alpha=0.5 temperature resampling over the lang column."""
     from fink_science_spark.functions.hashing import hash64
@@ -1704,36 +1806,6 @@ def q_temperature_mix_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_temperature_mix_sample() -> str:
-    from fink_science_spark.functions.hashing import hash64_sql
-    from fink_science_spark.queries_ext6 import _U_DENOM
-
-    return f"""
-WITH counts AS (SELECT lang, count(*)::BIGINT AS n_l FROM documents GROUP BY lang),
-tot AS (SELECT sum(n_l)::BIGINT AS n_tot FROM counts),
-shares AS (
-  SELECT lang, n_l, n_tot,
-         floor(sqrt(n_l / n_tot::DOUBLE) * {_TMIX_Q!r}) AS q
-  FROM counts CROSS JOIN tot
-),
-norm AS (SELECT sum(q) AS qsum FROM shares),
-rates AS (
-  SELECT lang, n_l,
-         least(1.0, (q / qsum) * {_TMIX_KEEP!r} * (n_tot / n_l::DOUBLE))
-             AS keep_rate
-  FROM shares CROSS JOIN norm
-),
-draws AS (
-  SELECT d.doc_id, d.lang, r.keep_rate,
-         round({hash64_sql('doc_id::VARCHAR', seed='tmix')} / {_U_DENOM!r}, 9)
-             AS u
-  FROM documents d JOIN rates r USING (lang)
-)
-SELECT doc_id, lang, round(keep_rate, 9) AS keep_rate, u
-FROM draws WHERE u < keep_rate
-"""
-
-
 # --------------------------------------------------------------------------
 # stream_dedup_lsh: NEAR-duplicate detection on the streaming surface —
 # the MinHash band index lives in streaming STATE instead of a stored
@@ -1757,6 +1829,9 @@ FROM draws WHERE u < keep_rate
 _SDL_STATE_BUCKETS = 64
 
 
+# the chunk-independent candidate emission makes the verified streaming
+# answer equal the batch LSH pairs — shares dedup_minhash_lsh's oracle.
+@query(oracle=_ORACLE_MINHASH, slow_oracle=True)
 def q_stream_dedup_lsh(
     spark: SparkSession,
     sf_dir: str,
@@ -2128,6 +2203,28 @@ def q_stream_dedup_lsh(
 _MANIFEST_SHARDS = 8
 
 
+def _oracle_shard_manifest() -> str:
+    from fink_science_spark.functions.hashing import hash64_sql
+    from fink_science_spark.functions.text import tokens_sql
+
+    h_shard = hash64_sql("doc_id::VARCHAR", seed="shuffle")
+    return f"""
+WITH d AS (
+  SELECT doc_id,
+         ({h_shard}) % {_MANIFEST_SHARDS} AS shard,
+         {hash64_sql('text')} AS content,
+         len({tokens_sql('text')})::BIGINT AS ntok
+  FROM documents
+)
+SELECT shard::INT AS shard, count(*) AS n_docs,
+       sum(ntok)::BIGINT AS total_tokens,
+       bit_xor(content) AS content_checksum,
+       min(doc_id) AS min_doc_id, max(doc_id) AS max_doc_id
+FROM d GROUP BY shard
+"""
+
+
+@query(oracle=_oracle_shard_manifest)
 def q_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-shard manifest: doc count, token total, xor content checksum."""
     from fink_science_spark.functions.hashing import hash64
@@ -2150,27 +2247,6 @@ def q_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("doc_id").alias("min_doc_id"),
         F.max("doc_id").alias("max_doc_id"),
     )
-
-
-def _oracle_shard_manifest() -> str:
-    from fink_science_spark.functions.hashing import hash64_sql
-    from fink_science_spark.functions.text import tokens_sql
-
-    h_shard = hash64_sql("doc_id::VARCHAR", seed="shuffle")
-    return f"""
-WITH d AS (
-  SELECT doc_id,
-         ({h_shard}) % {_MANIFEST_SHARDS} AS shard,
-         {hash64_sql('text')} AS content,
-         len({tokens_sql('text')})::BIGINT AS ntok
-  FROM documents
-)
-SELECT shard::INT AS shard, count(*) AS n_docs,
-       sum(ntok)::BIGINT AS total_tokens,
-       bit_xor(content) AS content_checksum,
-       min(doc_id) AS min_doc_id, max(doc_id) AS max_doc_id
-FROM d GROUP BY shard
-"""
 
 
 # --------------------------------------------------------------------------
@@ -2196,6 +2272,46 @@ _HLL_WBITS = 60 - _HLL_P        # remainder bits in the 60-bit hash
 _HLL_SCALE = _HLL_WBITS + 1     # max rho = wbits+1 (all-zero remainder)
 
 
+def _oracle_hll_distinct_portable() -> str:
+    from fink_science_spark.functions.hashing import hash64_sql
+
+    day_us = 24 * 3600 * 1_000_000
+    h = hash64_sql(f"user_id::VARCHAR || ':' || (ts_us // {day_us})::VARCHAR")
+    smear = "w"
+    for sh in (1, 2, 4, 8, 16, 32):
+        smear = f"({smear} | ({smear} >> {sh}))"
+    return f"""
+WITH ev AS (SELECT event_type, user_id, epoch_us(ts) AS ts_us FROM events),
+hx AS (SELECT event_type, {h} AS h FROM ev),
+wr AS (
+  SELECT event_type, h % {_HLL_M} AS reg, h >> {_HLL_P} AS w FROM hx
+),
+rho AS (
+  SELECT event_type, reg,
+         {_HLL_WBITS + 1} - bit_count({smear})::INT AS rho
+  FROM wr
+),
+regs AS (
+  SELECT event_type, reg, max(rho) AS mj FROM rho GROUP BY event_type, reg
+),
+per AS (
+  SELECT event_type,
+         sum((1::BIGINT << ({_HLL_SCALE} - mj)))::BIGINT AS s_obs,
+         count(*) AS n_obs
+  FROM regs GROUP BY event_type
+)
+SELECT event_type,
+       ({_HLL_M} - n_obs)::INT AS zero_regs,
+       (s_obs + ({_HLL_M} - n_obs) * (1::BIGINT << {_HLL_SCALE}))::BIGINT
+           AS reg_sum_scaled,
+       round({_HLL_ALPHA * _HLL_M * _HLL_M * float(1 << _HLL_SCALE)!r}
+             / (s_obs + ({_HLL_M} - n_obs) * (1::BIGINT << {_HLL_SCALE})), 2)
+           AS hll_estimate
+FROM per
+"""
+
+
+@query(oracle=_oracle_hll_distinct_portable)
 def q_hll_distinct_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct (user, day) pairs per event type via portable HLL."""
     from fink_science_spark.functions.hashing import hash64
@@ -2248,45 +2364,6 @@ def q_hll_distinct_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_hll_distinct_portable() -> str:
-    from fink_science_spark.functions.hashing import hash64_sql
-
-    day_us = 24 * 3600 * 1_000_000
-    h = hash64_sql(f"user_id::VARCHAR || ':' || (ts_us // {day_us})::VARCHAR")
-    smear = "w"
-    for sh in (1, 2, 4, 8, 16, 32):
-        smear = f"({smear} | ({smear} >> {sh}))"
-    return f"""
-WITH ev AS (SELECT event_type, user_id, epoch_us(ts) AS ts_us FROM events),
-hx AS (SELECT event_type, {h} AS h FROM ev),
-wr AS (
-  SELECT event_type, h % {_HLL_M} AS reg, h >> {_HLL_P} AS w FROM hx
-),
-rho AS (
-  SELECT event_type, reg,
-         {_HLL_WBITS + 1} - bit_count({smear})::INT AS rho
-  FROM wr
-),
-regs AS (
-  SELECT event_type, reg, max(rho) AS mj FROM rho GROUP BY event_type, reg
-),
-per AS (
-  SELECT event_type,
-         sum((1::BIGINT << ({_HLL_SCALE} - mj)))::BIGINT AS s_obs,
-         count(*) AS n_obs
-  FROM regs GROUP BY event_type
-)
-SELECT event_type,
-       ({_HLL_M} - n_obs)::INT AS zero_regs,
-       (s_obs + ({_HLL_M} - n_obs) * (1::BIGINT << {_HLL_SCALE}))::BIGINT
-           AS reg_sum_scaled,
-       round({_HLL_ALPHA * _HLL_M * _HLL_M * float(1 << _HLL_SCALE)!r}
-             / (s_obs + ({_HLL_M} - n_obs) * (1::BIGINT << {_HLL_SCALE})), 2)
-           AS hll_estimate
-FROM per
-"""
-
-
 # --------------------------------------------------------------------------
 # semantic_dedup: SemDeDup-style semantic deduplication of the embedding
 # store — cluster with the TRAINED IVF coarse quantizer (the codebook is
@@ -2307,6 +2384,25 @@ FROM per
 _SEM_TAU = 0.35
 
 
+def _oracle_semantic_dedup() -> str:
+    from fink_science_spark.queries_ext3 import _cos9_sql, _ivf_cells_cte_parts
+
+    parts = _ivf_cells_cte_parts()
+    parts.append(
+        f"""dropped AS (
+  SELECT DISTINCT b.vec_id
+  FROM cells a JOIN cells b ON a.cell = b.cell AND a.vec_id < b.vec_id
+  WHERE {_cos9_sql('a.v', 'b.v')} >= {_SEM_TAU!r})"""
+    )
+    return (
+        "WITH " + ",\n".join(parts) + """
+SELECT c.vec_id, c.cell::BIGINT AS cell, (d.vec_id IS NULL) AS kept
+FROM cells c LEFT JOIN dropped d ON c.vec_id = d.vec_id
+"""
+    )
+
+
+@query(oracle=_oracle_semantic_dedup, slow_oracle=True)
 def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster embeddings with the trained IVF codebook; greedily keep
     the smallest-id exemplar among same-cluster vectors with cos >= tau."""
@@ -2415,60 +2511,6 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_semantic_dedup() -> str:
-    from fink_science_spark.queries_ext3 import _cos9_sql, _ivf_cells_cte_parts
-
-    parts = _ivf_cells_cte_parts()
-    parts.append(
-        f"""dropped AS (
-  SELECT DISTINCT b.vec_id
-  FROM cells a JOIN cells b ON a.cell = b.cell AND a.vec_id < b.vec_id
-  WHERE {_cos9_sql('a.v', 'b.v')} >= {_SEM_TAU!r})"""
-    )
-    return (
-        "WITH " + ",\n".join(parts) + """
-SELECT c.vec_id, c.cell::BIGINT AS cell, (d.vec_id IS NULL) AS kept
-FROM cells c LEFT JOIN dropped d ON c.vec_id = d.vec_id
-"""
-    )
-
-
-ORACLE_IMAGE_PHASH_DEDUP = f"""
-WITH hx AS (
-  SELECT doc_id AS asset_id,
-         md5(text) || md5(text || 'a') || md5(text || 'b') || md5(text || 'c')
-             AS hx
-  FROM documents
-),
-px0 AS (
-  SELECT asset_id,
-         [('0x' || substr(hx, 2*i - 1, 2))::INT
-          for i in generate_series(1, 64)] AS p
-  FROM hx
-),
-pxall AS (
-  SELECT asset_id, p FROM px0
-  UNION ALL
-  SELECT asset_id + {_PHASH_VARIANT_BASE} AS asset_id,
-         [CASE WHEN i = 3 THEN (p[i] + 16) % 256 ELSE p[i] END
-          for i in generate_series(1, 64)] AS p
-  FROM px0 WHERE asset_id % {_PHASH_MOD} = 0
-),
-m AS (SELECT asset_id, p, list_avg(p) AS mean FROM pxall),
-sig AS (
-  SELECT asset_id,
-         list_sum(list_transform(generate_series(1, 60),
-            i -> CASE WHEN p[i] > mean THEN 1::BIGINT << (i - 1)
-                 ELSE 0::BIGINT END))::BIGINT AS h
-  FROM m
-)
-SELECT a.asset_id AS id_a, b.asset_id AS id_b,
-       bit_count(xor(a.h, b.h)) AS hamming
-FROM sig a JOIN sig b ON a.asset_id < b.asset_id
-WHERE bit_count(xor(a.h, b.h)) <= 3
-"""
-
-
 # --------------------------------------------------------------------------
 # dsir_select: Data Selection via Importance Resampling (Xie et al. 2023)
 # — score every document by how much its hashed-unigram profile looks
@@ -2495,6 +2537,48 @@ _DSIR_TARGET_LANG = "en"
 _DSIR_Q = float(1 << 20)  # dyadic weight-quantization lanes
 
 
+ORACLE_DSIR_SELECT = f"""
+WITH tok AS (
+  SELECT doc_id, lang,
+         ('0x' || substr(md5('dsir:' || w), 1, 15))::BIGINT % {_DSIR_B} AS bucket
+  FROM (
+    SELECT doc_id, lang, unnest(list_filter(string_split(text, ' '),
+                                            x -> x <> '')) AS w
+    FROM documents
+  )
+),
+wt AS (
+  SELECT bucket,
+         count(*) FILTER (lang = '{_DSIR_TARGET_LANG}')::BIGINT AS ct,
+         count(*)::BIGINT AS cr
+  FROM tok GROUP BY bucket
+),
+tot AS (SELECT sum(ct)::BIGINT AS nt, sum(cr)::BIGINT AS nr FROM wt),
+weights AS (
+  SELECT bucket,
+         CAST(floor(ln(CAST((ct + 1) * (nr + {_DSIR_B}) AS DOUBLE)
+                       / CAST((cr + 1) * (nt + {_DSIR_B}) AS DOUBLE))
+                    * {_DSIR_Q!r} + 0.5) AS BIGINT) AS lw_q
+  FROM wt, tot
+),
+per_doc AS (
+  SELECT t.doc_id, sum(t.c * w.lw_q)::BIGINT AS score_q,
+         sum(t.c)::BIGINT AS n_tok
+  FROM (SELECT doc_id, bucket, count(*)::BIGINT AS c
+        FROM tok GROUP BY doc_id, bucket) t
+  JOIN weights w USING (bucket)
+  GROUP BY t.doc_id
+)
+SELECT p.doc_id, d.lang, p.n_tok,
+       floor(CAST(p.score_q AS DOUBLE) / {_DSIR_Q!r} * 1e6 + 0.5) / 1e6
+         AS dsir_score
+FROM per_doc p JOIN documents d USING (doc_id)
+ORDER BY dsir_score DESC, p.doc_id
+LIMIT {_DSIR_K}
+"""
+
+
+@query(oracle=ORACLE_DSIR_SELECT)
 def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
@@ -2585,47 +2669,6 @@ def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_DSIR_SELECT = f"""
-WITH tok AS (
-  SELECT doc_id, lang,
-         ('0x' || substr(md5('dsir:' || w), 1, 15))::BIGINT % {_DSIR_B} AS bucket
-  FROM (
-    SELECT doc_id, lang, unnest(list_filter(string_split(text, ' '),
-                                            x -> x <> '')) AS w
-    FROM documents
-  )
-),
-wt AS (
-  SELECT bucket,
-         count(*) FILTER (lang = '{_DSIR_TARGET_LANG}')::BIGINT AS ct,
-         count(*)::BIGINT AS cr
-  FROM tok GROUP BY bucket
-),
-tot AS (SELECT sum(ct)::BIGINT AS nt, sum(cr)::BIGINT AS nr FROM wt),
-weights AS (
-  SELECT bucket,
-         CAST(floor(ln(CAST((ct + 1) * (nr + {_DSIR_B}) AS DOUBLE)
-                       / CAST((cr + 1) * (nt + {_DSIR_B}) AS DOUBLE))
-                    * {_DSIR_Q!r} + 0.5) AS BIGINT) AS lw_q
-  FROM wt, tot
-),
-per_doc AS (
-  SELECT t.doc_id, sum(t.c * w.lw_q)::BIGINT AS score_q,
-         sum(t.c)::BIGINT AS n_tok
-  FROM (SELECT doc_id, bucket, count(*)::BIGINT AS c
-        FROM tok GROUP BY doc_id, bucket) t
-  JOIN weights w USING (bucket)
-  GROUP BY t.doc_id
-)
-SELECT p.doc_id, d.lang, p.n_tok,
-       floor(CAST(p.score_q AS DOUBLE) / {_DSIR_Q!r} * 1e6 + 0.5) / 1e6
-         AS dsir_score
-FROM per_doc p JOIN documents d USING (doc_id)
-ORDER BY dsir_score DESC, p.doc_id
-LIMIT {_DSIR_K}
-"""
-
-
 # --------------------------------------------------------------------------
 # funnel_steps: multi-step conversion funnel (view → click → purchase,
 # strictly increasing timestamps) — the product-analytics staple
@@ -2645,6 +2688,53 @@ LIMIT {_DSIR_K}
 _FUNNEL_STEPS = ("view", "click", "purchase")
 
 
+ORACLE_FUNNEL_STEPS = f"""
+WITH ev AS (
+  SELECT user_id, event_id, event_type, epoch_us(ts) AS ts_us FROM events
+),
+s2 AS (
+  SELECT *,
+         CASE WHEN event_type = '{_FUNNEL_STEPS[1]}'
+                   AND min(CASE WHEN event_type = '{_FUNNEL_STEPS[0]}'
+                                THEN ts_us END)
+                       OVER (PARTITION BY user_id ORDER BY ts_us, event_id
+                             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+                       < ts_us
+              THEN ts_us END AS q2_ts
+  FROM ev
+),
+s3 AS (
+  SELECT *,
+         (event_type = '{_FUNNEL_STEPS[2]}'
+          AND min(q2_ts)
+              OVER (PARTITION BY user_id ORDER BY ts_us, event_id
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+              < ts_us) AS q3
+  FROM s2
+),
+agg AS (
+  SELECT count(DISTINCT CASE WHEN event_type = '{_FUNNEL_STEPS[0]}'
+                             THEN user_id END)::BIGINT AS u1,
+         count(DISTINCT CASE WHEN q2_ts IS NOT NULL
+                             THEN user_id END)::BIGINT AS u2,
+         count(DISTINCT CASE WHEN q3 THEN user_id END)::BIGINT AS u3
+  FROM s3
+)
+SELECT u.step, u.event_type, u.users,
+       CASE WHEN a.u1 > 0
+            THEN floor(CAST(u.users AS DOUBLE) / CAST(a.u1 AS DOUBLE)
+                       * 1e6 + 0.5) / 1e6
+       END AS conv_rate
+FROM agg a,
+     LATERAL (VALUES (1, '{_FUNNEL_STEPS[0]}', a.u1),
+                     (2, '{_FUNNEL_STEPS[1]}', a.u2),
+                     (3, '{_FUNNEL_STEPS[2]}', a.u3))
+       AS u(step, event_type, users)
+ORDER BY u.step
+"""
+
+
+@query(oracle=ORACLE_FUNNEL_STEPS)
 def q_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
@@ -2722,52 +2812,6 @@ def q_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("r.step", "r.event_type", "r.users", "r.conv_rate")
 
 
-ORACLE_FUNNEL_STEPS = f"""
-WITH ev AS (
-  SELECT user_id, event_id, event_type, epoch_us(ts) AS ts_us FROM events
-),
-s2 AS (
-  SELECT *,
-         CASE WHEN event_type = '{_FUNNEL_STEPS[1]}'
-                   AND min(CASE WHEN event_type = '{_FUNNEL_STEPS[0]}'
-                                THEN ts_us END)
-                       OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-                             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-                       < ts_us
-              THEN ts_us END AS q2_ts
-  FROM ev
-),
-s3 AS (
-  SELECT *,
-         (event_type = '{_FUNNEL_STEPS[2]}'
-          AND min(q2_ts)
-              OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-              < ts_us) AS q3
-  FROM s2
-),
-agg AS (
-  SELECT count(DISTINCT CASE WHEN event_type = '{_FUNNEL_STEPS[0]}'
-                             THEN user_id END)::BIGINT AS u1,
-         count(DISTINCT CASE WHEN q2_ts IS NOT NULL
-                             THEN user_id END)::BIGINT AS u2,
-         count(DISTINCT CASE WHEN q3 THEN user_id END)::BIGINT AS u3
-  FROM s3
-)
-SELECT u.step, u.event_type, u.users,
-       CASE WHEN a.u1 > 0
-            THEN floor(CAST(u.users AS DOUBLE) / CAST(a.u1 AS DOUBLE)
-                       * 1e6 + 0.5) / 1e6
-       END AS conv_rate
-FROM agg a,
-     LATERAL (VALUES (1, '{_FUNNEL_STEPS[0]}', a.u1),
-                     (2, '{_FUNNEL_STEPS[1]}', a.u2),
-                     (3, '{_FUNNEL_STEPS[2]}', a.u3))
-       AS u(step, event_type, users)
-ORDER BY u.step
-"""
-
-
 # --------------------------------------------------------------------------
 # retention_cohorts: weekly cohort retention matrix — users grouped by
 # the ISO week of their FIRST event; each later week's active share of
@@ -2783,7 +2827,39 @@ ORDER BY u.step
 # --------------------------------------------------------------------------
 
 
+ORACLE_RETENTION_COHORTS = f"""
+WITH evw AS (
+  SELECT user_id,
+         d - ((d + 3) % 7) AS week_day
+  FROM (SELECT user_id,
+               CAST(floor(epoch_us(ts) / {_US_PER_DAY}) AS BIGINT) AS d
+        FROM events)
+),
+firsts AS (
+  SELECT user_id, min(week_day) AS cohort_day FROM evw GROUP BY user_id
+),
+active AS (
+  SELECT cohort_day, week_offset, count(*)::BIGINT AS active_users
+  FROM (
+    SELECT DISTINCT e.user_id, f.cohort_day,
+           CAST((e.week_day - f.cohort_day) / 7 AS BIGINT) AS week_offset
+    FROM evw e JOIN firsts f USING (user_id)
+  ) GROUP BY cohort_day, week_offset
+),
+sizes AS (
+  SELECT cohort_day, count(*)::BIGINT AS cohort_size FROM firsts
+  GROUP BY cohort_day
+)
+SELECT DATE '1970-01-01' + CAST(a.cohort_day AS INT) AS cohort_week,
+       a.week_offset, a.active_users, s.cohort_size,
+       floor(CAST(a.active_users AS DOUBLE) / CAST(s.cohort_size AS DOUBLE)
+             * 1e6 + 0.5) / 1e6 AS retention_rate
+FROM active a JOIN sizes s USING (cohort_day)
+ORDER BY cohort_week, week_offset
+"""
 
+
+@query(oracle=ORACLE_RETENTION_COHORTS)
 def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fink_science_spark.queries import _events_us
 
@@ -2827,38 +2903,6 @@ def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_RETENTION_COHORTS = f"""
-WITH evw AS (
-  SELECT user_id,
-         d - ((d + 3) % 7) AS week_day
-  FROM (SELECT user_id,
-               CAST(floor(epoch_us(ts) / {_US_PER_DAY}) AS BIGINT) AS d
-        FROM events)
-),
-firsts AS (
-  SELECT user_id, min(week_day) AS cohort_day FROM evw GROUP BY user_id
-),
-active AS (
-  SELECT cohort_day, week_offset, count(*)::BIGINT AS active_users
-  FROM (
-    SELECT DISTINCT e.user_id, f.cohort_day,
-           CAST((e.week_day - f.cohort_day) / 7 AS BIGINT) AS week_offset
-    FROM evw e JOIN firsts f USING (user_id)
-  ) GROUP BY cohort_day, week_offset
-),
-sizes AS (
-  SELECT cohort_day, count(*)::BIGINT AS cohort_size FROM firsts
-  GROUP BY cohort_day
-)
-SELECT DATE '1970-01-01' + CAST(a.cohort_day AS INT) AS cohort_week,
-       a.week_offset, a.active_users, s.cohort_size,
-       floor(CAST(a.active_users AS DOUBLE) / CAST(s.cohort_size AS DOUBLE)
-             * 1e6 + 0.5) / 1e6 AS retention_rate
-FROM active a JOIN sizes s USING (cohort_day)
-ORDER BY cohort_week, week_offset
-"""
-
-
 # --------------------------------------------------------------------------
 # rolling_range_window: time-INTERVAL window frame (RANGE BETWEEN 7 DAYS
 # PRECEDING AND CURRENT ROW) — the rolling-metric surface rows-based
@@ -2872,6 +2916,32 @@ _RRW_DAYS = 7
 _RRW_Q = float(1 << 20)
 
 
+ORACLE_ROLLING_RANGE_WINDOW = f"""
+WITH b AS (
+  SELECT event_id, user_id, epoch_us(ts) AS ts_us,
+         CAST(floor(value * {_RRW_Q!r} + 0.5) AS BIGINT) AS vq
+  FROM events
+),
+r AS (
+  SELECT event_id, user_id,
+         sum(vq) OVER w AS roll_sum,
+         count(*) OVER w AS roll_n
+  FROM b
+  WINDOW w AS (PARTITION BY user_id ORDER BY ts_us
+               RANGE BETWEEN {_RRW_DAYS * _US_PER_DAY} PRECEDING
+                         AND CURRENT ROW)
+)
+SELECT event_id, user_id,
+       floor(CAST(roll_sum AS DOUBLE) / {_RRW_Q!r} * 1e6 + 0.5) / 1e6 AS sum_7d,
+       roll_n::BIGINT AS n_7d,
+       floor(CAST(roll_sum AS DOUBLE) / CAST(roll_n AS DOUBLE) / {_RRW_Q!r}
+             * 1e6 + 0.5) / 1e6 AS avg_7d
+FROM r
+ORDER BY event_id
+"""
+
+
+@query(oracle=ORACLE_ROLLING_RANGE_WINDOW)
 def q_rolling_range_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
@@ -2903,31 +2973,6 @@ def q_rolling_range_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_id")
 
 
-ORACLE_ROLLING_RANGE_WINDOW = f"""
-WITH b AS (
-  SELECT event_id, user_id, epoch_us(ts) AS ts_us,
-         CAST(floor(value * {_RRW_Q!r} + 0.5) AS BIGINT) AS vq
-  FROM events
-),
-r AS (
-  SELECT event_id, user_id,
-         sum(vq) OVER w AS roll_sum,
-         count(*) OVER w AS roll_n
-  FROM b
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts_us
-               RANGE BETWEEN {_RRW_DAYS * _US_PER_DAY} PRECEDING
-                         AND CURRENT ROW)
-)
-SELECT event_id, user_id,
-       floor(CAST(roll_sum AS DOUBLE) / {_RRW_Q!r} * 1e6 + 0.5) / 1e6 AS sum_7d,
-       roll_n::BIGINT AS n_7d,
-       floor(CAST(roll_sum AS DOUBLE) / CAST(roll_n AS DOUBLE) / {_RRW_Q!r}
-             * 1e6 + 0.5) / 1e6 AS avg_7d
-FROM r
-ORDER BY event_id
-"""
-
-
 # --------------------------------------------------------------------------
 # table_profile: per-column data-quality profile (null count, exact
 # distinct count, min/max as strings) — the data-card / catalog-page
@@ -2945,6 +2990,20 @@ ORDER BY event_id
 _PROFILE_COLS = ("l_quantity", "l_extendedprice", "l_returnflag", "l_shipdate")
 
 
+def _oracle_table_profile() -> str:
+    parts = []
+    for c in _PROFILE_COLS:
+        parts.append(
+            f"SELECT '{c}' AS col_name, count(*)::BIGINT AS n_rows,\n"
+            f"       count(*) FILTER ({c} IS NULL)::BIGINT AS n_nulls,\n"
+            f"       count(DISTINCT {c})::BIGINT AS n_distinct,\n"
+            f"       min({c}::VARCHAR) AS min_val, max({c}::VARCHAR) AS max_val\n"
+            f"FROM lineitem"
+        )
+    return "\nUNION ALL\n".join(parts) + "\nORDER BY col_name"
+
+
+@query(oracle=_oracle_table_profile)
 def q_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     # one pruned single-column scan per profiled column, unioned — the
@@ -2971,19 +3030,6 @@ def q_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("col_name")
 
 
-def _oracle_table_profile() -> str:
-    parts = []
-    for c in _PROFILE_COLS:
-        parts.append(
-            f"SELECT '{c}' AS col_name, count(*)::BIGINT AS n_rows,\n"
-            f"       count(*) FILTER ({c} IS NULL)::BIGINT AS n_nulls,\n"
-            f"       count(DISTINCT {c})::BIGINT AS n_distinct,\n"
-            f"       min({c}::VARCHAR) AS min_val, max({c}::VARCHAR) AS max_val\n"
-            f"FROM lineitem"
-        )
-    return "\nUNION ALL\n".join(parts) + "\nORDER BY col_name"
-
-
 # --------------------------------------------------------------------------
 # event_transitions: first-order Markov transition matrix over the
 # per-user event sequence — (current type → next type) counts and
@@ -2993,6 +3039,27 @@ def _oracle_table_profile() -> str:
 # --------------------------------------------------------------------------
 
 
+ORACLE_EVENT_TRANSITIONS = """
+WITH seq AS (
+  SELECT event_type,
+         lead(event_type) OVER (PARTITION BY user_id
+                                ORDER BY epoch_us(ts), event_id) AS next_type
+  FROM events
+),
+pairs AS (
+  SELECT event_type, next_type, count(*)::BIGINT AS c
+  FROM seq WHERE next_type IS NOT NULL
+  GROUP BY event_type, next_type
+),
+tot AS (SELECT event_type, sum(c)::BIGINT AS t FROM pairs GROUP BY event_type)
+SELECT p.event_type, p.next_type, p.c,
+       floor(CAST(p.c AS DOUBLE) / CAST(t.t AS DOUBLE) * 1e6 + 0.5) / 1e6 AS p
+FROM pairs p JOIN tot t USING (event_type)
+ORDER BY p.event_type, p.next_type
+"""
+
+
+@query(oracle=ORACLE_EVENT_TRANSITIONS)
 def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
@@ -3018,26 +3085,6 @@ def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_EVENT_TRANSITIONS = """
-WITH seq AS (
-  SELECT event_type,
-         lead(event_type) OVER (PARTITION BY user_id
-                                ORDER BY epoch_us(ts), event_id) AS next_type
-  FROM events
-),
-pairs AS (
-  SELECT event_type, next_type, count(*)::BIGINT AS c
-  FROM seq WHERE next_type IS NOT NULL
-  GROUP BY event_type, next_type
-),
-tot AS (SELECT event_type, sum(c)::BIGINT AS t FROM pairs GROUP BY event_type)
-SELECT p.event_type, p.next_type, p.c,
-       floor(CAST(p.c AS DOUBLE) / CAST(t.t AS DOUBLE) * 1e6 + 0.5) / 1e6 AS p
-FROM pairs p JOIN tot t USING (event_type)
-ORDER BY p.event_type, p.next_type
-"""
-
-
 # --------------------------------------------------------------------------
 # contingency_chi2: lang × source contingency table + Pearson chi-square
 # independence statistic. Observed counts are one map-combinable agg;
@@ -3052,6 +3099,31 @@ ORDER BY p.event_type, p.next_type
 _CHI2_Q = float(1 << 20)
 
 
+ORACLE_CONTINGENCY_CHI2 = f"""
+WITH obs AS (
+  SELECT lang, source, count(*)::BIGINT AS o FROM documents
+  GROUP BY lang, source
+),
+rt AS (SELECT lang, sum(o)::BIGINT AS rt FROM obs GROUP BY lang),
+ct AS (SELECT source, sum(o)::BIGINT AS ct FROM obs GROUP BY source),
+n AS (SELECT sum(o)::BIGINT AS n FROM obs),
+cells AS (
+  SELECT obs.o,
+         CAST(floor((CAST(obs.o AS DOUBLE)
+                     - (CAST(rt.rt AS DOUBLE) * CAST(ct.ct AS DOUBLE)) / CAST(n.n AS DOUBLE))
+                    * (CAST(obs.o AS DOUBLE)
+                       - (CAST(rt.rt AS DOUBLE) * CAST(ct.ct AS DOUBLE)) / CAST(n.n AS DOUBLE))
+                    / ((CAST(rt.rt AS DOUBLE) * CAST(ct.ct AS DOUBLE)) / CAST(n.n AS DOUBLE))
+                    * {_CHI2_Q!r} + 0.5) AS BIGINT) AS tq
+  FROM obs JOIN rt USING (lang) JOIN ct USING (source) CROSS JOIN n
+)
+SELECT count(*)::BIGINT AS n_cells, sum(o)::BIGINT AS n_docs,
+       floor(CAST(sum(tq) AS DOUBLE) / {_CHI2_Q!r} * 1e6 + 0.5) / 1e6 AS chi2
+FROM cells
+"""
+
+
+@query(oracle=ORACLE_CONTINGENCY_CHI2)
 def q_contingency_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     obs = docs.groupBy("lang", "source").agg(F.count(F.lit(1)).alias("o"))
@@ -3084,30 +3156,6 @@ def q_contingency_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("o").alias("n_docs"),
         chi2.alias("chi2"),
     )
-
-
-ORACLE_CONTINGENCY_CHI2 = f"""
-WITH obs AS (
-  SELECT lang, source, count(*)::BIGINT AS o FROM documents
-  GROUP BY lang, source
-),
-rt AS (SELECT lang, sum(o)::BIGINT AS rt FROM obs GROUP BY lang),
-ct AS (SELECT source, sum(o)::BIGINT AS ct FROM obs GROUP BY source),
-n AS (SELECT sum(o)::BIGINT AS n FROM obs),
-cells AS (
-  SELECT obs.o,
-         CAST(floor((CAST(obs.o AS DOUBLE)
-                     - (CAST(rt.rt AS DOUBLE) * CAST(ct.ct AS DOUBLE)) / CAST(n.n AS DOUBLE))
-                    * (CAST(obs.o AS DOUBLE)
-                       - (CAST(rt.rt AS DOUBLE) * CAST(ct.ct AS DOUBLE)) / CAST(n.n AS DOUBLE))
-                    / ((CAST(rt.rt AS DOUBLE) * CAST(ct.ct AS DOUBLE)) / CAST(n.n AS DOUBLE))
-                    * {_CHI2_Q!r} + 0.5) AS BIGINT) AS tq
-  FROM obs JOIN rt USING (lang) JOIN ct USING (source) CROSS JOIN n
-)
-SELECT count(*)::BIGINT AS n_cells, sum(o)::BIGINT AS n_docs,
-       floor(CAST(sum(tq) AS DOUBLE) / {_CHI2_Q!r} * 1e6 + 0.5) / 1e6 AS chi2
-FROM cells
-"""
 
 
 # --------------------------------------------------------------------------
@@ -3178,20 +3226,6 @@ def triangle_stats(raw: DataFrame, max_degree: int = _TRI_MAX_DEGREE) -> DataFra
     )
 
 
-def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from fink_science_spark.operators.dedup import minhash_lsh_pairs
-    from fink_science_spark.queries_ext import _doc_shingles
-
-    raw = minhash_lsh_pairs(
-        _doc_shingles(spark, sf_dir),
-        "doc_id",
-        "shingles",
-        jaccard_threshold=0.5,
-        shingles_col="shingles",
-    ).select("id_a", "id_b")
-    return triangle_stats(raw)
-
-
 def _oracle_triangle_count() -> str:
     return f"""
 WITH raw_edges AS (SELECT id_a, id_b FROM ({_ORACLE_MINHASH}) __mh),
@@ -3222,6 +3256,21 @@ SELECT tri.triangles, w.wedges FROM tri, w
 """
 
 
+@query(oracle=_oracle_triangle_count, slow_oracle=True)
+def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from fink_science_spark.operators.dedup import minhash_lsh_pairs
+    from fink_science_spark.queries_ext import _doc_shingles
+
+    raw = minhash_lsh_pairs(
+        _doc_shingles(spark, sf_dir),
+        "doc_id",
+        "shingles",
+        jaccard_threshold=0.5,
+        shingles_col="shingles",
+    ).select("id_a", "id_b")
+    return triangle_stats(raw)
+
+
 # --------------------------------------------------------------------------
 # sessions_native: gaps-and-islands sessionization in pure window
 # functions — the SCALE-PATH twin of udtf_sessions (same answer, same
@@ -3234,6 +3283,9 @@ SELECT tri.triangles, w.wedges FROM tri, w
 # --------------------------------------------------------------------------
 
 
+# the gaps-and-islands scale twin of udtf_sessions — same answer, shares
+# its oracle.
+@query(oracle=_ORACLE_UDTF_SESSIONS)
 def q_sessions_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
@@ -3276,45 +3328,6 @@ _CUSUM_K_DEN = 2
 _CUSUM_H = 5.0  # alarm threshold in value units
 
 
-def q_cusum_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
-    from fink_science_spark.queries import _events_us
-
-    ev = _events_us(spark, sf_dir).select("event_id", "user_id", "ts_us", "value")
-    vq = F.floor(F.col("value") * F.lit(float(_CUSUM_Q)) + F.lit(0.5)).cast("long")
-    # per-user mean of the quantized series as the reference level,
-    # floor-divided exactly (integer mu so d_i stays exact int64)
-    wu = Window.partitionBy("user_id")
-    mu = F.floor(F.sum(vq).over(wu) / F.count(F.lit(1)).over(wu)).cast("long")
-    k = F.lit(_CUSUM_K_NUM * _CUSUM_Q // _CUSUM_K_DEN).cast("long")
-    wo = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    wrun = wo.rowsBetween(Window.unboundedPreceding, 0)
-    # two projection levels: p is a window result, so its running min is
-    # a second Window pass on the SAME partitioning (one shuffle total)
-    with_p = ev.select(
-        "event_id",
-        "user_id",
-        "ts_us",
-        F.sum(vq - mu - k).over(wrun).alias("__p"),
-    )
-    # S_i = max(0, S_{i-1}+d_i) == P_i − min(0, min_{j≤i} P_j): the
-    # least(…, 0) seeds the running min with the empty prefix
-    stat = F.col("__p") - F.least(
-        F.min("__p").over(wrun), F.lit(0).cast("long")
-    )
-    h = F.lit(int(_CUSUM_H * _CUSUM_Q)).cast("long")
-    out_stat = F.floor(
-        stat.cast("double") / F.lit(float(_CUSUM_Q)) * F.lit(1e6) + F.lit(0.5)
-    ) / F.lit(1e6)
-    return with_p.select(
-        "event_id",
-        "user_id",
-        out_stat.alias("cusum"),
-        (stat > h).alias("drift_flag"),
-    ).orderBy("event_id")
-
-
 ORACLE_CUSUM_CHANGEPOINTS = f"""
 WITH b AS (
   SELECT event_id, user_id, epoch_us(ts) AS ts_us,
@@ -3355,6 +3368,46 @@ ORDER BY event_id
 """
 
 
+@query(oracle=ORACLE_CUSUM_CHANGEPOINTS)
+def q_cusum_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql.window import Window
+
+    from fink_science_spark.queries import _events_us
+
+    ev = _events_us(spark, sf_dir).select("event_id", "user_id", "ts_us", "value")
+    vq = F.floor(F.col("value") * F.lit(float(_CUSUM_Q)) + F.lit(0.5)).cast("long")
+    # per-user mean of the quantized series as the reference level,
+    # floor-divided exactly (integer mu so d_i stays exact int64)
+    wu = Window.partitionBy("user_id")
+    mu = F.floor(F.sum(vq).over(wu) / F.count(F.lit(1)).over(wu)).cast("long")
+    k = F.lit(_CUSUM_K_NUM * _CUSUM_Q // _CUSUM_K_DEN).cast("long")
+    wo = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
+    wrun = wo.rowsBetween(Window.unboundedPreceding, 0)
+    # two projection levels: p is a window result, so its running min is
+    # a second Window pass on the SAME partitioning (one shuffle total)
+    with_p = ev.select(
+        "event_id",
+        "user_id",
+        "ts_us",
+        F.sum(vq - mu - k).over(wrun).alias("__p"),
+    )
+    # S_i = max(0, S_{i-1}+d_i) == P_i − min(0, min_{j≤i} P_j): the
+    # least(…, 0) seeds the running min with the empty prefix
+    stat = F.col("__p") - F.least(
+        F.min("__p").over(wrun), F.lit(0).cast("long")
+    )
+    h = F.lit(int(_CUSUM_H * _CUSUM_Q)).cast("long")
+    out_stat = F.floor(
+        stat.cast("double") / F.lit(float(_CUSUM_Q)) * F.lit(1e6) + F.lit(0.5)
+    ) / F.lit(1e6)
+    return with_p.select(
+        "event_id",
+        "user_id",
+        out_stat.alias("cusum"),
+        (stat > h).alias("drift_flag"),
+    ).orderBy("event_id")
+
+
 # --------------------------------------------------------------------------
 # correlated_subquery: TPC-H Q17-shaped correlated SCALAR subquery —
 # "lineitems below 20% of their part's average quantity" — exercising
@@ -3369,6 +3422,25 @@ ORDER BY event_id
 _CSQ_BRANDS = ("Brand#1", "Brand#2")
 
 
+ORACLE_CORRELATED_SUBQUERY = f"""
+SELECT p.p_brand,
+       count(*)::BIGINT AS n_small,
+       CAST(sum(CAST(floor(l.l_extendedprice * 100 + 0.5) AS BIGINT))
+            AS DOUBLE) / 100.0 AS small_revenue
+FROM lineitem l
+JOIN part p ON p.p_partkey = l.l_partkey
+WHERE p.p_brand IN ({", ".join(f"'{b}'" for b in _CSQ_BRANDS)})
+  AND l.l_quantity < (
+      SELECT 0.2 * avg(l2.l_quantity)
+      FROM lineitem l2
+      WHERE l2.l_partkey = l.l_partkey
+  )
+GROUP BY p.p_brand
+ORDER BY p.p_brand
+"""
+
+
+@query(oracle=ORACLE_CORRELATED_SUBQUERY)
 def q_correlated_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     _t(spark, sf_dir, "lineitem").createOrReplaceTempView(
         "__csq_lineitem"
@@ -3397,24 +3469,6 @@ def q_correlated_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_CORRELATED_SUBQUERY = f"""
-SELECT p.p_brand,
-       count(*)::BIGINT AS n_small,
-       CAST(sum(CAST(floor(l.l_extendedprice * 100 + 0.5) AS BIGINT))
-            AS DOUBLE) / 100.0 AS small_revenue
-FROM lineitem l
-JOIN part p ON p.p_partkey = l.l_partkey
-WHERE p.p_brand IN ({", ".join(f"'{b}'" for b in _CSQ_BRANDS)})
-  AND l.l_quantity < (
-      SELECT 0.2 * avg(l2.l_quantity)
-      FROM lineitem l2
-      WHERE l2.l_partkey = l.l_partkey
-  )
-GROUP BY p.p_brand
-ORDER BY p.p_brand
-"""
-
-
 # --------------------------------------------------------------------------
 # grouping_sets_id: explicit GROUPING SETS with grouping_id() —
 # completes the multi-granularity aggregation family (rollup_counts /
@@ -3424,6 +3478,19 @@ ORDER BY p.p_brand
 # --------------------------------------------------------------------------
 
 
+ORACLE_GROUPING_SETS_ID = """
+SELECT o_orderstatus, o_orderpriority,
+       CAST(grouping(o_orderstatus) * 2 + grouping(o_orderpriority)
+            AS BIGINT) AS gid,
+       count(*)::BIGINT AS n
+FROM orders
+GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority),
+                        (o_orderstatus), ())
+ORDER BY gid, o_orderstatus, o_orderpriority
+"""
+
+
+@query(oracle=ORACLE_GROUPING_SETS_ID)
 def q_grouping_sets_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     _t(spark, sf_dir, "orders").createOrReplaceTempView(
         "__gs_orders"
@@ -3442,18 +3509,6 @@ def q_grouping_sets_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_GROUPING_SETS_ID = """
-SELECT o_orderstatus, o_orderpriority,
-       CAST(grouping(o_orderstatus) * 2 + grouping(o_orderpriority)
-            AS BIGINT) AS gid,
-       count(*)::BIGINT AS n
-FROM orders
-GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority),
-                        (o_orderstatus), ())
-ORDER BY gid, o_orderstatus, o_orderpriority
-"""
-
-
 # --------------------------------------------------------------------------
 # set_ops_multiplicity: INTERSECT ALL / EXCEPT ALL — the bag-semantics
 # set operators (the plain anti-join/union family in §2.6 is set-
@@ -3462,27 +3517,6 @@ ORDER BY gid, o_orderstatus, o_orderpriority
 # shuffle each, no join. Inputs: customers with open vs fulfilled
 # orders, a real "same key on both sides with multiplicity" workload.
 # --------------------------------------------------------------------------
-
-
-def q_set_ops_multiplicity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    a = orders.filter(F.col("o_orderstatus") == "O").select("o_custkey")
-    b = orders.filter(F.col("o_orderstatus") == "F").select("o_custkey")
-    both = a.intersectAll(b).groupBy("o_custkey").agg(
-        F.count(F.lit(1)).alias("n_both")
-    )
-    only_open = a.exceptAll(b).groupBy("o_custkey").agg(
-        F.count(F.lit(1)).alias("n_only")
-    )
-    return (
-        both.join(only_open, "o_custkey", "full_outer")
-        .select(
-            "o_custkey",
-            F.coalesce("n_both", F.lit(0)).alias("n_both"),
-            F.coalesce("n_only", F.lit(0)).alias("n_only"),
-        )
-        .orderBy("o_custkey")
-    )
 
 
 ORACLE_SET_OPS_MULTIPLICITY = """
@@ -3506,6 +3540,28 @@ ORDER BY o_custkey
 """
 
 
+@query(oracle=ORACLE_SET_OPS_MULTIPLICITY)
+def q_set_ops_multiplicity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    orders = _t(spark, sf_dir, "orders")
+    a = orders.filter(F.col("o_orderstatus") == "O").select("o_custkey")
+    b = orders.filter(F.col("o_orderstatus") == "F").select("o_custkey")
+    both = a.intersectAll(b).groupBy("o_custkey").agg(
+        F.count(F.lit(1)).alias("n_both")
+    )
+    only_open = a.exceptAll(b).groupBy("o_custkey").agg(
+        F.count(F.lit(1)).alias("n_only")
+    )
+    return (
+        both.join(only_open, "o_custkey", "full_outer")
+        .select(
+            "o_custkey",
+            F.coalesce("n_both", F.lit(0)).alias("n_both"),
+            F.coalesce("n_only", F.lit(0)).alias("n_only"),
+        )
+        .orderBy("o_custkey")
+    )
+
+
 # --------------------------------------------------------------------------
 # cogroup_reconcile: cross-source reconciliation via the COGROUPED
 # Arrow surface (groupBy().cogroup().applyInPandas — the one PySpark
@@ -3521,6 +3577,29 @@ ORDER BY o_custkey
 # --------------------------------------------------------------------------
 
 
+ORACLE_COGROUP_RECONCILE = """
+WITH e AS (
+  SELECT user_id AS k, count(*)::BIGINT AS n_events,
+         sum(CAST(floor(value * 100 + 0.5) AS BIGINT))::BIGINT AS event_cents
+  FROM events GROUP BY user_id
+),
+o AS (
+  SELECT o_custkey AS k, count(*)::BIGINT AS n_orders,
+         sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))::BIGINT
+           AS order_cents
+  FROM orders GROUP BY o_custkey
+)
+SELECT COALESCE(e.k, o.k) AS k,
+       COALESCE(n_events, 0)::BIGINT AS n_events,
+       COALESCE(n_orders, 0)::BIGINT AS n_orders,
+       COALESCE(event_cents, 0)::BIGINT AS event_cents,
+       COALESCE(order_cents, 0)::BIGINT AS order_cents
+FROM e FULL OUTER JOIN o ON e.k = o.k
+ORDER BY k
+"""
+
+
+@query(oracle=ORACLE_COGROUP_RECONCILE)
 def q_cogroup_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
@@ -3588,28 +3667,6 @@ def q_cogroup_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("k")
 
 
-ORACLE_COGROUP_RECONCILE = """
-WITH e AS (
-  SELECT user_id AS k, count(*)::BIGINT AS n_events,
-         sum(CAST(floor(value * 100 + 0.5) AS BIGINT))::BIGINT AS event_cents
-  FROM events GROUP BY user_id
-),
-o AS (
-  SELECT o_custkey AS k, count(*)::BIGINT AS n_orders,
-         sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))::BIGINT
-           AS order_cents
-  FROM orders GROUP BY o_custkey
-)
-SELECT COALESCE(e.k, o.k) AS k,
-       COALESCE(n_events, 0)::BIGINT AS n_events,
-       COALESCE(n_orders, 0)::BIGINT AS n_orders,
-       COALESCE(event_cents, 0)::BIGINT AS event_cents,
-       COALESCE(order_cents, 0)::BIGINT AS order_cents
-FROM e FULL OUTER JOIN o ON e.k = o.k
-ORDER BY k
-"""
-
-
 # --------------------------------------------------------------------------
 # cdc_apply: change-data-capture log compaction + apply — the lakehouse
 # MERGE staple: an ordered change log (upserts + deletes) collapses to
@@ -3625,6 +3682,34 @@ ORDER BY k
 # --------------------------------------------------------------------------
 
 
+ORACLE_CDC_APPLY = """
+WITH log AS (
+  SELECT user_id % 100 AS key, epoch_us(ts) AS seq, event_id,
+         CASE WHEN event_type = 'error' THEN 'D' ELSE 'U' END AS op,
+         CAST(floor(value * 100 + 0.5) AS BIGINT) AS new_cents
+  FROM events WHERE event_type IN ('purchase', 'error')
+),
+compacted AS (
+  SELECT key, op, new_cents FROM (
+    SELECT *, row_number() OVER (PARTITION BY key
+                                 ORDER BY seq DESC, event_id DESC) AS rn
+    FROM log
+  ) WHERE rn = 1
+),
+snap AS (
+  SELECT s_suppkey, s_name,
+         CAST(floor(s_acctbal * 100 + 0.5) AS BIGINT) AS bal_cents
+  FROM supplier
+)
+SELECT COALESCE(s.s_suppkey, c.key) AS s_suppkey, s.s_name,
+       CASE WHEN c.op = 'U' THEN c.new_cents ELSE s.bal_cents END AS bal_cents
+FROM snap s FULL OUTER JOIN compacted c ON s.s_suppkey = c.key
+WHERE COALESCE(c.op, 'K') <> 'D'
+ORDER BY s_suppkey
+"""
+
+
+@query(oracle=ORACLE_CDC_APPLY)
 def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
@@ -3674,33 +3759,6 @@ def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_CDC_APPLY = """
-WITH log AS (
-  SELECT user_id % 100 AS key, epoch_us(ts) AS seq, event_id,
-         CASE WHEN event_type = 'error' THEN 'D' ELSE 'U' END AS op,
-         CAST(floor(value * 100 + 0.5) AS BIGINT) AS new_cents
-  FROM events WHERE event_type IN ('purchase', 'error')
-),
-compacted AS (
-  SELECT key, op, new_cents FROM (
-    SELECT *, row_number() OVER (PARTITION BY key
-                                 ORDER BY seq DESC, event_id DESC) AS rn
-    FROM log
-  ) WHERE rn = 1
-),
-snap AS (
-  SELECT s_suppkey, s_name,
-         CAST(floor(s_acctbal * 100 + 0.5) AS BIGINT) AS bal_cents
-  FROM supplier
-)
-SELECT COALESCE(s.s_suppkey, c.key) AS s_suppkey, s.s_name,
-       CASE WHEN c.op = 'U' THEN c.new_cents ELSE s.bal_cents END AS bal_cents
-FROM snap s FULL OUTER JOIN compacted c ON s.s_suppkey = c.key
-WHERE COALESCE(c.op, 'K') <> 'D'
-ORDER BY s_suppkey
-"""
-
-
 # --------------------------------------------------------------------------
 # interval_overlap_join: which user sessions intersect the weekly
 # maintenance windows (Sundays 00:00-06:00 UTC, derived from the data's
@@ -3718,47 +3776,6 @@ ORDER BY s_suppkey
 # --------------------------------------------------------------------------
 
 _IOJ_WINDOW_US = 6 * 3_600_000_000  # maintenance window length: 6 h
-
-
-def q_interval_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    iv = q_sessions_native(spark, sf_dir).select(
-        "user_id", "session_id", "start_us", "end_us"
-    )
-    from fink_science_spark.queries import _events_us
-
-    ev = _events_us(spark, sf_dir)
-    bounds = ev.agg(
-        F.floor(F.min("ts_us") / F.lit(_US_PER_DAY)).alias("__d0"),
-        F.floor(F.max("ts_us") / F.lit(_US_PER_DAY)).alias("__d1"),
-    )
-    windows = (
-        bounds.select(
-            F.explode(F.sequence(F.col("__d0"), F.col("__d1"))).alias("day")
-        )
-        .filter(F.pmod("day", F.lit(7)) == 3)  # Sundays
-        .select(
-            "day",
-            (F.col("day") * F.lit(_US_PER_DAY)).alias("ws"),
-            (F.col("day") * F.lit(_US_PER_DAY) + F.lit(_IOJ_WINDOW_US)).alias(
-                "we"
-            ),
-        )
-    )
-    hit = iv.join(
-        F.broadcast(windows),
-        (F.col("start_us") <= F.col("we")) & (F.col("ws") <= F.col("end_us")),
-    )
-    overlap = F.least(F.col("end_us"), F.col("we")) - F.greatest(
-        F.col("start_us"), F.col("ws")
-    )
-    return hit.select(
-        "user_id",
-        "session_id",
-        F.date_add(F.lit("1970-01-01").cast("date"), F.col("day").cast("int")).alias(
-            "window_day"
-        ),
-        overlap.alias("overlap_us"),
-    ).orderBy("user_id", "session_id", "window_day")
 
 
 def _oracle_interval_overlap_join() -> str:
@@ -3802,97 +3819,43 @@ ORDER BY iv.user_id, iv.session_id, window_day
 """
 
 
-QUERIES_EXT10: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "bloom_prune_join": q_bloom_prune_join,
-    "sketch_quantiles": q_sketch_quantiles,
-    "heavy_hitters": q_heavy_hitters,
-    "lm_quality_buckets": q_lm_quality_buckets,
-    "pq_compression": q_pq_compression,
-    "stream_heavy_hitters": q_stream_heavy_hitters,
-    "pq_adc_topk": q_pq_adc_topk,
-    "resample_ffill": q_resample_ffill,
-    "feature_drift_psi": q_feature_drift_psi,
-    "weighted_sample": q_weighted_sample,
-    "user_trend": q_user_trend,
-    "quantile_transform": q_quantile_transform,
-    "pmi_collocations": q_pmi_collocations,
-    "decontaminate_bloom": q_decontaminate_bloom,
-    "dedup_jaccard_ppjoin": q_dedup_jaccard_ppjoin,
-    "dup_span_profile": q_dup_span_profile,
-    "image_phash_dedup": q_image_phash_dedup,
-    "semantic_dedup": q_semantic_dedup,
-    "hll_distinct_portable": q_hll_distinct_portable,
-    "shard_manifest": q_shard_manifest,
-    "stream_dedup_lsh": q_stream_dedup_lsh,
-    "temperature_mix_sample": q_temperature_mix_sample,
-    "hard_negatives": q_hard_negatives,
-    "dsir_select": q_dsir_select,
-    "funnel_steps": q_funnel_steps,
-    "retention_cohorts": q_retention_cohorts,
-    "rolling_range_window": q_rolling_range_window,
-    "table_profile": q_table_profile,
-    "event_transitions": q_event_transitions,
-    "contingency_chi2": q_contingency_chi2,
-    "triangle_count": q_triangle_count,
-    "sessions_native": q_sessions_native,
-    "cusum_changepoints": q_cusum_changepoints,
-    "correlated_subquery": q_correlated_subquery,
-    "grouping_sets_id": q_grouping_sets_id,
-    "set_ops_multiplicity": q_set_ops_multiplicity,
-    "cogroup_reconcile": q_cogroup_reconcile,
-    "cdc_apply": q_cdc_apply,
-    "interval_overlap_join": q_interval_overlap_join,
-}
+@query(oracle=_oracle_interval_overlap_join)
+def q_interval_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    iv = q_sessions_native(spark, sf_dir).select(
+        "user_id", "session_id", "start_us", "end_us"
+    )
+    from fink_science_spark.queries import _events_us
 
-ORACLES_EXT10: dict[str, str] = {
-    "bloom_prune_join": ORACLE_BLOOM_PRUNE_JOIN,
-    "sketch_quantiles": ORACLE_SKETCH_QUANTILES,
-    "heavy_hitters": ORACLE_HEAVY_HITTERS,
-    "lm_quality_buckets": ORACLE_LM_QUALITY_BUCKETS,
-    "pq_compression": ORACLE_PQ_COMPRESSION,
-    # stream_heavy_hitters: the final stateful emission equals the batch
-    # aggregate, so it shares the batch heavy-hitters oracle.
-    "stream_heavy_hitters": ORACLE_HEAVY_HITTERS,
-    "pq_adc_topk": ORACLE_PQ_ADC_TOPK,
-    "resample_ffill": ORACLE_RESAMPLE_FFILL,
-    "feature_drift_psi": ORACLE_FEATURE_DRIFT_PSI,
-    "weighted_sample": ORACLE_WEIGHTED_SAMPLE,
-    "user_trend": ORACLE_USER_TREND,
-    "quantile_transform": ORACLE_QUANTILE_TRANSFORM,
-    "pmi_collocations": ORACLE_PMI_COLLOCATIONS,
-    # decontaminate_bloom: identical semantics to the exact path — the
-    # bloom only prunes; shares decontaminate's oracle.
-    "decontaminate_bloom": _ORACLE_DECON,
-    # dedup_jaccard_ppjoin: prefix filtering changes the candidate set,
-    # not the answer — shares the exact-Jaccard-pairs oracle.
-    "dedup_jaccard_ppjoin": _ORACLE_JACCARD,
-    "dup_span_profile": _oracle_dup_span_profile(),
-    "image_phash_dedup": ORACLE_IMAGE_PHASH_DEDUP,
-    "semantic_dedup": _oracle_semantic_dedup(),
-    "hll_distinct_portable": _oracle_hll_distinct_portable(),
-    "shard_manifest": _oracle_shard_manifest(),
-    # stream_dedup_lsh: the chunk-independent candidate emission makes
-    # the verified streaming answer equal the batch LSH pairs — shares
-    # dedup_minhash_lsh's oracle.
-    "stream_dedup_lsh": _ORACLE_MINHASH,
-    "temperature_mix_sample": _oracle_temperature_mix_sample(),
-    "hard_negatives": ORACLE_HARD_NEGATIVES,
-    "dsir_select": ORACLE_DSIR_SELECT,
-    "funnel_steps": ORACLE_FUNNEL_STEPS,
-    "retention_cohorts": ORACLE_RETENTION_COHORTS,
-    "rolling_range_window": ORACLE_ROLLING_RANGE_WINDOW,
-    "table_profile": _oracle_table_profile(),
-    "event_transitions": ORACLE_EVENT_TRANSITIONS,
-    "contingency_chi2": ORACLE_CONTINGENCY_CHI2,
-    "triangle_count": _oracle_triangle_count(),
-    # sessions_native: the gaps-and-islands scale twin of udtf_sessions —
-    # same answer, shares its oracle.
-    "sessions_native": _ORACLE_UDTF_SESSIONS,
-    "cusum_changepoints": ORACLE_CUSUM_CHANGEPOINTS,
-    "correlated_subquery": ORACLE_CORRELATED_SUBQUERY,
-    "grouping_sets_id": ORACLE_GROUPING_SETS_ID,
-    "set_ops_multiplicity": ORACLE_SET_OPS_MULTIPLICITY,
-    "cogroup_reconcile": ORACLE_COGROUP_RECONCILE,
-    "cdc_apply": ORACLE_CDC_APPLY,
-    "interval_overlap_join": _oracle_interval_overlap_join(),
-}
+    ev = _events_us(spark, sf_dir)
+    bounds = ev.agg(
+        F.floor(F.min("ts_us") / F.lit(_US_PER_DAY)).alias("__d0"),
+        F.floor(F.max("ts_us") / F.lit(_US_PER_DAY)).alias("__d1"),
+    )
+    windows = (
+        bounds.select(
+            F.explode(F.sequence(F.col("__d0"), F.col("__d1"))).alias("day")
+        )
+        .filter(F.pmod("day", F.lit(7)) == 3)  # Sundays
+        .select(
+            "day",
+            (F.col("day") * F.lit(_US_PER_DAY)).alias("ws"),
+            (F.col("day") * F.lit(_US_PER_DAY) + F.lit(_IOJ_WINDOW_US)).alias(
+                "we"
+            ),
+        )
+    )
+    hit = iv.join(
+        F.broadcast(windows),
+        (F.col("start_us") <= F.col("we")) & (F.col("ws") <= F.col("end_us")),
+    )
+    overlap = F.least(F.col("end_us"), F.col("we")) - F.greatest(
+        F.col("start_us"), F.col("ws")
+    )
+    return hit.select(
+        "user_id",
+        "session_id",
+        F.date_add(F.lit("1970-01-01").cast("date"), F.col("day").cast("int")).alias(
+            "window_day"
+        ),
+        overlap.alias("overlap_us"),
+    ).orderBy("user_id", "session_id", "window_day")

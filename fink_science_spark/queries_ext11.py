@@ -1,4 +1,4 @@
-"""Query registry, wave 12: market-basket affinity, sliding-window
+"""Queries, wave 12: market-basket affinity, sliding-window
 distinct actives, and marketing attribution.
 
 Three classic warehouse/event-analytics operators the reference's users
@@ -13,10 +13,9 @@ floor idiom on both engines.
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from fink_science_spark.registry import query
 
 _US_PER_DAY = 86_400_000_000
 
@@ -43,6 +42,35 @@ def _halfup6(col: F.Column) -> F.Column:
     return F.floor(col * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
 
 
+ORACLE_PART_AFFINITY = """
+WITH b AS (
+  SELECT DISTINCT l_orderkey, p_brand
+  FROM lineitem JOIN part ON l_partkey = p_partkey
+),
+tot AS (SELECT count(DISTINCT l_orderkey) AS n_orders FROM b),
+m AS (SELECT p_brand, count(*) AS brand_orders FROM b GROUP BY 1),
+p AS (
+  SELECT a.p_brand AS brand_a, c.p_brand AS brand_b, count(*) AS pair_orders
+  FROM b a JOIN b c
+    ON a.l_orderkey = c.l_orderkey AND a.p_brand < c.p_brand
+  GROUP BY 1, 2
+)
+SELECT brand_a, brand_b, pair_orders,
+       floor(pair_orders / CAST(n_orders AS DOUBLE) * 1e6 + 0.5) / 1e6 AS support,
+       floor(pair_orders / CAST(ma.brand_orders AS DOUBLE) * 1e6 + 0.5) / 1e6
+         AS confidence,
+       floor(pair_orders * CAST(n_orders AS DOUBLE)
+             / (CAST(ma.brand_orders AS DOUBLE) * CAST(mb.brand_orders AS DOUBLE))
+             * 1e6 + 0.5) / 1e6 AS lift
+FROM p
+JOIN m ma ON p.brand_a = ma.p_brand
+JOIN m mb ON p.brand_b = mb.p_brand
+CROSS JOIN tot
+ORDER BY brand_a, brand_b
+"""
+
+
+@query(oracle=ORACLE_PART_AFFINITY)
 def q_part_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fink_science_spark.queries import _t
 
@@ -113,33 +141,6 @@ def q_part_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("brand_a", "brand_b")
 
 
-ORACLE_PART_AFFINITY = """
-WITH b AS (
-  SELECT DISTINCT l_orderkey, p_brand
-  FROM lineitem JOIN part ON l_partkey = p_partkey
-),
-tot AS (SELECT count(DISTINCT l_orderkey) AS n_orders FROM b),
-m AS (SELECT p_brand, count(*) AS brand_orders FROM b GROUP BY 1),
-p AS (
-  SELECT a.p_brand AS brand_a, c.p_brand AS brand_b, count(*) AS pair_orders
-  FROM b a JOIN b c
-    ON a.l_orderkey = c.l_orderkey AND a.p_brand < c.p_brand
-  GROUP BY 1, 2
-)
-SELECT brand_a, brand_b, pair_orders,
-       floor(pair_orders / CAST(n_orders AS DOUBLE) * 1e6 + 0.5) / 1e6 AS support,
-       floor(pair_orders / CAST(ma.brand_orders AS DOUBLE) * 1e6 + 0.5) / 1e6
-         AS confidence,
-       floor(pair_orders * CAST(n_orders AS DOUBLE)
-             / (CAST(ma.brand_orders AS DOUBLE) * CAST(mb.brand_orders AS DOUBLE))
-             * 1e6 + 0.5) / 1e6 AS lift
-FROM p
-JOIN m ma ON p.brand_a = ma.p_brand
-JOIN m mb ON p.brand_b = mb.p_brand
-CROSS JOIN tot
-ORDER BY brand_a, brand_b
-"""
-
 # --------------------------------------------------------------------------
 # sliding_distinct_users: trailing-7-day distinct active users per day —
 # the DAU/WAU-style rolling reach metric. COUNT(DISTINCT) over a
@@ -160,6 +161,26 @@ ORDER BY brand_a, brand_b
 _SDU_WINDOW = 7
 
 
+ORACLE_SLIDING_DISTINCT_USERS = f"""
+WITH a AS (
+  SELECT DISTINCT user_id, CAST(epoch_us(ts) // {_US_PER_DAY} AS BIGINT) AS day
+  FROM events
+),
+bounds AS (SELECT max(day) AS dmax FROM a),
+fan AS (
+  SELECT DISTINCT user_id, t
+  FROM a, bounds, unnest(generate_series(day, day + {_SDU_WINDOW - 1})) AS u(t)
+  WHERE t <= dmax
+),
+daily AS (SELECT day, count(*) AS dau FROM a GROUP BY 1),
+weekly AS (SELECT t AS day, count(*) AS wau_7d FROM fan GROUP BY 1)
+SELECT w.day, coalesce(d.dau, 0) AS dau, w.wau_7d
+FROM weekly w LEFT JOIN daily d ON w.day = d.day
+ORDER BY w.day
+"""
+
+
+@query(oracle=ORACLE_SLIDING_DISTINCT_USERS)
 def q_sliding_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fink_science_spark.queries import _events_us
 
@@ -191,24 +212,6 @@ def q_sliding_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_SLIDING_DISTINCT_USERS = f"""
-WITH a AS (
-  SELECT DISTINCT user_id, CAST(epoch_us(ts) // {_US_PER_DAY} AS BIGINT) AS day
-  FROM events
-),
-bounds AS (SELECT max(day) AS dmax FROM a),
-fan AS (
-  SELECT DISTINCT user_id, t
-  FROM a, bounds, unnest(generate_series(day, day + {_SDU_WINDOW - 1})) AS u(t)
-  WHERE t <= dmax
-),
-daily AS (SELECT day, count(*) AS dau FROM a GROUP BY 1),
-weekly AS (SELECT t AS day, count(*) AS wau_7d FROM fan GROUP BY 1)
-SELECT w.day, coalesce(d.dau, 0) AS dau, w.wau_7d
-FROM weekly w LEFT JOIN daily d ON w.day = d.day
-ORDER BY w.day
-"""
-
 # --------------------------------------------------------------------------
 # last_touch_attribution: assign every purchase to the user's most
 # recent preceding marketing touch (click/view) within a 3-day
@@ -229,6 +232,37 @@ _ATTR_Q = float(1 << 14)
 _ATTR_CHANNELS = ("click", "view")
 
 
+ORACLE_LAST_TOUCH_ATTRIBUTION = f"""
+WITH e AS (
+  SELECT user_id, epoch_us(ts) AS ts_us, event_type, value, event_id
+  FROM events
+),
+t AS (
+  SELECT *,
+         last_value(CASE WHEN event_type IN ('click', 'view')
+                         THEN event_type END IGNORE NULLS) OVER w AS touch_type,
+         last_value(CASE WHEN event_type IN ('click', 'view')
+                         THEN ts_us END IGNORE NULLS) OVER w AS touch_ts
+  FROM e
+  WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+),
+p AS (
+  SELECT CASE WHEN touch_ts >= ts_us - {_ATTR_LOOKBACK_US}
+              THEN touch_type ELSE 'direct' END AS channel,
+         CAST(floor(value * {_ATTR_Q!r} + 0.5) AS BIGINT) AS vq
+  FROM t
+  WHERE event_type = 'purchase'
+)
+SELECT channel, count(*) AS conversions,
+       floor(sum(vq) / {_ATTR_Q!r} * 1e6 + 0.5) / 1e6 AS revenue
+FROM p
+GROUP BY channel
+ORDER BY channel
+"""
+
+
+@query(oracle=ORACLE_LAST_TOUCH_ATTRIBUTION)
 def q_last_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
@@ -275,36 +309,6 @@ def q_last_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_LAST_TOUCH_ATTRIBUTION = f"""
-WITH e AS (
-  SELECT user_id, epoch_us(ts) AS ts_us, event_type, value, event_id
-  FROM events
-),
-t AS (
-  SELECT *,
-         last_value(CASE WHEN event_type IN ('click', 'view')
-                         THEN event_type END IGNORE NULLS) OVER w AS touch_type,
-         last_value(CASE WHEN event_type IN ('click', 'view')
-                         THEN ts_us END IGNORE NULLS) OVER w AS touch_ts
-  FROM e
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-),
-p AS (
-  SELECT CASE WHEN touch_ts >= ts_us - {_ATTR_LOOKBACK_US}
-              THEN touch_type ELSE 'direct' END AS channel,
-         CAST(floor(value * {_ATTR_Q!r} + 0.5) AS BIGINT) AS vq
-  FROM t
-  WHERE event_type = 'purchase'
-)
-SELECT channel, count(*) AS conversions,
-       floor(sum(vq) / {_ATTR_Q!r} * 1e6 + 0.5) / 1e6 AS revenue
-FROM p
-GROUP BY channel
-ORDER BY channel
-"""
-
-
 # --------------------------------------------------------------------------
 # ewma_user_value: per-user exponentially-weighted moving average of
 # purchase values — the standard time-series smoother, in its
@@ -323,38 +327,6 @@ ORDER BY channel
 
 _EWMA_K = 8
 _EWMA_Q = float(1 << 14)
-
-
-def q_ewma_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
-    from fink_science_spark.queries import _events_us
-
-    ev = (
-        _events_us(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select("event_id", "user_id", "ts_us", "value")
-    )
-    vq = F.floor(F.col("value") * F.lit(_EWMA_Q) + F.lit(0.5)).cast("long")
-    base = ev.select("event_id", "user_id", "ts_us", vq.alias("vq"))
-    w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    num = F.lit(0).cast("long")
-    den = F.lit(0).cast("long")
-    for k in range(_EWMA_K):
-        wk = 1 << (_EWMA_K - 1 - k)
-        lagged = F.col("vq") if k == 0 else F.lag("vq", k).over(w)
-        num = num + F.coalesce(lagged * F.lit(wk), F.lit(0))
-        den = den + F.when(lagged.isNotNull(), F.lit(wk)).otherwise(F.lit(0))
-    ewma = F.floor(
-        num.cast("double")
-        / den.cast("double")
-        / F.lit(_EWMA_Q)
-        * F.lit(1e6)
-        + F.lit(0.5)
-    ) / F.lit(1e6)
-    return base.select(
-        "event_id", "user_id", ewma.alias("ewma")
-    ).orderBy("event_id")
 
 
 def _oracle_ewma() -> str:
@@ -387,6 +359,40 @@ ORDER BY event_id
 
 ORACLE_EWMA_USER_VALUE = _oracle_ewma()
 
+
+@query(oracle=ORACLE_EWMA_USER_VALUE)
+def q_ewma_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql.window import Window
+
+    from fink_science_spark.queries import _events_us
+
+    ev = (
+        _events_us(spark, sf_dir)
+        .filter(F.col("event_type") == "purchase")
+        .select("event_id", "user_id", "ts_us", "value")
+    )
+    vq = F.floor(F.col("value") * F.lit(_EWMA_Q) + F.lit(0.5)).cast("long")
+    base = ev.select("event_id", "user_id", "ts_us", vq.alias("vq"))
+    w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
+    num = F.lit(0).cast("long")
+    den = F.lit(0).cast("long")
+    for k in range(_EWMA_K):
+        wk = 1 << (_EWMA_K - 1 - k)
+        lagged = F.col("vq") if k == 0 else F.lag("vq", k).over(w)
+        num = num + F.coalesce(lagged * F.lit(wk), F.lit(0))
+        den = den + F.when(lagged.isNotNull(), F.lit(wk)).otherwise(F.lit(0))
+    ewma = F.floor(
+        num.cast("double")
+        / den.cast("double")
+        / F.lit(_EWMA_Q)
+        * F.lit(1e6)
+        + F.lit(0.5)
+    ) / F.lit(1e6)
+    return base.select(
+        "event_id", "user_id", ewma.alias("ewma")
+    ).orderBy("event_id")
+
+
 # --------------------------------------------------------------------------
 # robust_outliers: per-event-type robust outlier census via median/MAD
 # (median absolute deviation) — the data-quality gate that survives the
@@ -403,6 +409,29 @@ ORACLE_EWMA_USER_VALUE = _oracle_ewma()
 # --------------------------------------------------------------------------
 
 
+ORACLE_ROBUST_OUTLIERS = """
+WITH med AS (
+  SELECT event_type, quantile_cont(value, 0.5) AS med
+  FROM events GROUP BY 1
+),
+mad AS (
+  SELECT e.event_type, any_value(m.med) AS med,
+         quantile_cont(abs(e.value - m.med), 0.5) AS mad
+  FROM events e JOIN med m ON e.event_type = m.event_type
+  GROUP BY 1
+)
+SELECT e.event_type, count(*) AS n,
+       round(any_value(d.med), 6) AS med,
+       round(any_value(d.mad), 6) AS mad,
+       sum(CASE WHEN abs(e.value - d.med) > 3.0 * d.mad
+                THEN 1 ELSE 0 END)::BIGINT AS n_outliers
+FROM events e JOIN mad d ON e.event_type = d.event_type
+GROUP BY 1
+ORDER BY 1
+"""
+
+
+@query(oracle=ORACLE_ROBUST_OUTLIERS)
 def q_robust_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fink_science_spark.queries import _events_us
 
@@ -435,27 +464,6 @@ def q_robust_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_ROBUST_OUTLIERS = """
-WITH med AS (
-  SELECT event_type, quantile_cont(value, 0.5) AS med
-  FROM events GROUP BY 1
-),
-mad AS (
-  SELECT e.event_type, any_value(m.med) AS med,
-         quantile_cont(abs(e.value - m.med), 0.5) AS mad
-  FROM events e JOIN med m ON e.event_type = m.event_type
-  GROUP BY 1
-)
-SELECT e.event_type, count(*) AS n,
-       round(any_value(d.med), 6) AS med,
-       round(any_value(d.mad), 6) AS mad,
-       sum(CASE WHEN abs(e.value - d.med) > 3.0 * d.mad
-                THEN 1 ELSE 0 END)::BIGINT AS n_outliers
-FROM events e JOIN mad d ON e.event_type = d.event_type
-GROUP BY 1
-ORDER BY 1
-"""
-
 # --------------------------------------------------------------------------
 # phrase_match: positional phrase search over the corpus — which
 # documents contain an exact N-word phrase, and how many times. The
@@ -474,6 +482,37 @@ ORDER BY 1
 _PM_N = 3
 
 
+def _oracle_phrase_match() -> str:
+    from fink_science_spark.functions.text import (
+        tokens_sql,
+        word_shingles_sql,
+    )
+
+    return f"""
+WITH tok AS (
+  SELECT doc_id, {tokens_sql('text')} AS toks FROM documents
+),
+g AS (
+  SELECT doc_id, unnest({word_shingles_sql('toks', _PM_N)}) AS gram,
+         generate_subscripts({word_shingles_sql('toks', _PM_N)}, 1) AS pos1
+  FROM tok
+),
+top AS (
+  SELECT gram AS needle FROM g GROUP BY gram
+  ORDER BY count(*) DESC, gram LIMIT 1
+)
+SELECT doc_id, count(*) AS n_occurrences,
+       CAST(min(pos1) - 1 AS INTEGER) AS first_pos
+FROM g JOIN top ON g.gram = top.needle
+GROUP BY doc_id
+ORDER BY doc_id
+"""
+
+
+ORACLE_PHRASE_MATCH = _oracle_phrase_match()
+
+
+@query(oracle=ORACLE_PHRASE_MATCH)
 def q_phrase_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fink_science_spark.functions.text import tokens, word_shingles
 
@@ -518,36 +557,6 @@ def q_phrase_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hits
 
 
-def _oracle_phrase_match() -> str:
-    from fink_science_spark.functions.text import (
-        tokens_sql,
-        word_shingles_sql,
-    )
-
-    return f"""
-WITH tok AS (
-  SELECT doc_id, {tokens_sql('text')} AS toks FROM documents
-),
-g AS (
-  SELECT doc_id, unnest({word_shingles_sql('toks', _PM_N)}) AS gram,
-         generate_subscripts({word_shingles_sql('toks', _PM_N)}, 1) AS pos1
-  FROM tok
-),
-top AS (
-  SELECT gram AS needle FROM g GROUP BY gram
-  ORDER BY count(*) DESC, gram LIMIT 1
-)
-SELECT doc_id, count(*) AS n_occurrences,
-       CAST(min(pos1) - 1 AS INTEGER) AS first_pos
-FROM g JOIN top ON g.gram = top.needle
-GROUP BY doc_id
-ORDER BY doc_id
-"""
-
-
-ORACLE_PHRASE_MATCH = _oracle_phrase_match()
-
-
 # --------------------------------------------------------------------------
 # containment_pairs: asymmetric set containment |A∩B|/|A| ≥ 0.8 over
 # 3-gram shingles — the quote / excerpt / subset detector that
@@ -558,15 +567,6 @@ ORACLE_PHRASE_MATCH = _oracle_phrase_match()
 # --------------------------------------------------------------------------
 
 _CT_T = 0.8
-
-
-def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from fink_science_spark.operators.dedup import containment_pairs
-    from fink_science_spark.queries_ext import _doc_shingles
-
-    return containment_pairs(
-        _doc_shingles(spark, sf_dir), "doc_id", "shingles", threshold=_CT_T
-    )
 
 
 def _oracle_containment() -> str:
@@ -590,6 +590,17 @@ WHERE inter * 1.0 / na >= {_CT_T!r}
 
 ORACLE_CONTAINMENT_PAIRS = _oracle_containment()
 
+
+@query(oracle=ORACLE_CONTAINMENT_PAIRS)
+def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from fink_science_spark.operators.dedup import containment_pairs
+    from fink_science_spark.queries_ext import _doc_shingles
+
+    return containment_pairs(
+        _doc_shingles(spark, sf_dir), "doc_id", "shingles", threshold=_CT_T
+    )
+
+
 # --------------------------------------------------------------------------
 # winsorized_stats: per-event-type stats after clipping to the exact
 # [p05, p95] band — the standard tail-robust preprocessing twin of
@@ -602,6 +613,36 @@ ORACLE_CONTAINMENT_PAIRS = _oracle_containment()
 _WZ_Q = float(1 << 14)
 
 
+ORACLE_WINSORIZED_STATS = f"""
+WITH cuts AS (
+  SELECT event_type,
+         quantile_cont(value, 0.05) AS lo,
+         quantile_cont(value, 0.95) AS hi
+  FROM events GROUP BY 1
+),
+c AS (
+  SELECT e.event_type,
+         CAST(floor(least(greatest(e.value, t.lo), t.hi) * {_WZ_Q!r} + 0.5)
+              AS BIGINT) AS cq,
+         CASE WHEN e.value < t.lo THEN 1 ELSE 0 END AS is_lo,
+         CASE WHEN e.value > t.hi THEN 1 ELSE 0 END AS is_hi,
+         t.lo, t.hi
+  FROM events e JOIN cuts t ON e.event_type = t.event_type
+)
+SELECT event_type, count(*) AS n,
+       round(any_value(lo), 6) AS p05,
+       round(any_value(hi), 6) AS p95,
+       floor(sum(cq) / CAST(count(*) AS DOUBLE) / {_WZ_Q!r} * 1e6 + 0.5) / 1e6
+         AS winsorized_mean,
+       sum(is_lo)::BIGINT AS n_clipped_lo,
+       sum(is_hi)::BIGINT AS n_clipped_hi
+FROM c
+GROUP BY 1
+ORDER BY 1
+"""
+
+
+@query(oracle=ORACLE_WINSORIZED_STATS)
 def q_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fink_science_spark.queries import _events_us
 
@@ -642,34 +683,6 @@ def q_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_WINSORIZED_STATS = f"""
-WITH cuts AS (
-  SELECT event_type,
-         quantile_cont(value, 0.05) AS lo,
-         quantile_cont(value, 0.95) AS hi
-  FROM events GROUP BY 1
-),
-c AS (
-  SELECT e.event_type,
-         CAST(floor(least(greatest(e.value, t.lo), t.hi) * {_WZ_Q!r} + 0.5)
-              AS BIGINT) AS cq,
-         CASE WHEN e.value < t.lo THEN 1 ELSE 0 END AS is_lo,
-         CASE WHEN e.value > t.hi THEN 1 ELSE 0 END AS is_hi,
-         t.lo, t.hi
-  FROM events e JOIN cuts t ON e.event_type = t.event_type
-)
-SELECT event_type, count(*) AS n,
-       round(any_value(lo), 6) AS p05,
-       round(any_value(hi), 6) AS p95,
-       floor(sum(cq) / CAST(count(*) AS DOUBLE) / {_WZ_Q!r} * 1e6 + 0.5) / 1e6
-         AS winsorized_mean,
-       sum(is_lo)::BIGINT AS n_clipped_lo,
-       sum(is_hi)::BIGINT AS n_clipped_hi
-FROM c
-GROUP BY 1
-ORDER BY 1
-"""
-
 # --------------------------------------------------------------------------
 # session_paths: entry-path analysis — the first 5 event types of every
 # session (1-day gap sessionization, same contract as sessions_native)
@@ -687,6 +700,46 @@ ORDER BY 1
 _SP_DEPTH = 5
 
 
+def _oracle_session_paths() -> str:
+    from fink_science_spark.queries_ext9 import _SESS_GAP_US
+
+    return f"""
+WITH e AS (
+  SELECT user_id, epoch_us(ts) AS ts_us, event_id, event_type FROM events
+),
+b AS (
+  SELECT *,
+         CASE WHEN ts_us - lag(ts_us) OVER w > {_SESS_GAP_US}
+              THEN 1 ELSE 0 END AS brk
+  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)
+),
+s AS (
+  SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
+                           ROWS UNBOUNDED PRECEDING) AS session_id
+  FROM b
+),
+r AS (
+  SELECT *, row_number() OVER (PARTITION BY user_id, session_id
+                               ORDER BY ts_us, event_id) AS rk
+  FROM s
+),
+p AS (
+  SELECT user_id, session_id,
+         string_agg(event_type, '>' ORDER BY rk) AS path
+  FROM r WHERE rk <= {_SP_DEPTH}
+  GROUP BY 1, 2
+)
+SELECT path, count(*) AS n_sessions
+FROM p GROUP BY 1
+ORDER BY n_sessions DESC, path
+LIMIT 20
+"""
+
+
+ORACLE_SESSION_PATHS = _oracle_session_paths()
+
+
+@query(oracle=ORACLE_SESSION_PATHS)
 def q_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
@@ -734,67 +787,3 @@ def q_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(20)
     )
     return paths
-
-
-def _oracle_session_paths() -> str:
-    from fink_science_spark.queries_ext9 import _SESS_GAP_US
-
-    return f"""
-WITH e AS (
-  SELECT user_id, epoch_us(ts) AS ts_us, event_id, event_type FROM events
-),
-b AS (
-  SELECT *,
-         CASE WHEN ts_us - lag(ts_us) OVER w > {_SESS_GAP_US}
-              THEN 1 ELSE 0 END AS brk
-  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)
-),
-s AS (
-  SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-                           ROWS UNBOUNDED PRECEDING) AS session_id
-  FROM b
-),
-r AS (
-  SELECT *, row_number() OVER (PARTITION BY user_id, session_id
-                               ORDER BY ts_us, event_id) AS rk
-  FROM s
-),
-p AS (
-  SELECT user_id, session_id,
-         string_agg(event_type, '>' ORDER BY rk) AS path
-  FROM r WHERE rk <= {_SP_DEPTH}
-  GROUP BY 1, 2
-)
-SELECT path, count(*) AS n_sessions
-FROM p GROUP BY 1
-ORDER BY n_sessions DESC, path
-LIMIT 20
-"""
-
-
-ORACLE_SESSION_PATHS = _oracle_session_paths()
-
-
-QUERIES_EXT11: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "part_affinity": q_part_affinity,
-    "sliding_distinct_users": q_sliding_distinct_users,
-    "last_touch_attribution": q_last_touch_attribution,
-    "ewma_user_value": q_ewma_user_value,
-    "robust_outliers": q_robust_outliers,
-    "phrase_match": q_phrase_match,
-    "containment_pairs": q_containment_pairs,
-    "winsorized_stats": q_winsorized_stats,
-    "session_paths": q_session_paths,
-}
-
-ORACLES_EXT11: dict[str, str] = {
-    "part_affinity": ORACLE_PART_AFFINITY,
-    "sliding_distinct_users": ORACLE_SLIDING_DISTINCT_USERS,
-    "last_touch_attribution": ORACLE_LAST_TOUCH_ATTRIBUTION,
-    "ewma_user_value": ORACLE_EWMA_USER_VALUE,
-    "robust_outliers": ORACLE_ROBUST_OUTLIERS,
-    "phrase_match": ORACLE_PHRASE_MATCH,
-    "containment_pairs": ORACLE_CONTAINMENT_PAIRS,
-    "winsorized_stats": ORACLE_WINSORIZED_STATS,
-    "session_paths": ORACLE_SESSION_PATHS,
-}

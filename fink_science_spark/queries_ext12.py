@@ -1,4 +1,4 @@
-"""Query registry, wave 13: Pareto skyline, segment overlap, and
+"""Queries, wave 13: Pareto skyline, segment overlap, and
 MMR-diversified retrieval.
 
 Three operators from the catalog/analytics edge the earlier waves did
@@ -21,8 +21,6 @@ Scale shapes, per the engine contract:
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -32,6 +30,7 @@ from fink_science_spark.queries import _t
 # canonical home: functions/exact.py (re-exported here because every
 # later wave already imports the underscore name from this module)
 from fink_science_spark.functions.exact import halfup6 as _halfup6  # noqa: E402
+from fink_science_spark.registry import query
 
 
 # --------------------------------------------------------------------------
@@ -108,6 +107,19 @@ _SKY_TARGET_CELL = 4096
 _SKY_MAX_BINS = 1024
 
 
+ORACLE_SKYLINE_FRONTIER = """
+SELECT p_partkey, p_retailprice AS price, p_size::BIGINT AS size
+FROM part y
+WHERE NOT EXISTS (
+  SELECT 1 FROM part x
+  WHERE x.p_retailprice <= y.p_retailprice AND x.p_size >= y.p_size
+    AND (x.p_retailprice < y.p_retailprice OR x.p_size > y.p_size)
+)
+ORDER BY price, p_partkey
+"""
+
+
+@query(oracle=ORACLE_SKYLINE_FRONTIER, slow_oracle=True)
 def q_skyline_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts = _t(spark, sf_dir, "part").select(
         "p_partkey",
@@ -177,18 +189,6 @@ def q_skyline_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     return frontier.orderBy("price", "p_partkey")
 
 
-ORACLE_SKYLINE_FRONTIER = """
-SELECT p_partkey, p_retailprice AS price, p_size::BIGINT AS size
-FROM part y
-WHERE NOT EXISTS (
-  SELECT 1 FROM part x
-  WHERE x.p_retailprice <= y.p_retailprice AND x.p_size >= y.p_size
-    AND (x.p_retailprice < y.p_retailprice OR x.p_size > y.p_size)
-)
-ORDER BY price, p_partkey
-"""
-
-
 # --------------------------------------------------------------------------
 # segment_overlap: audience-overlap matrix — for every pair of behavior
 # segments (event types), how many users are active in both, and the
@@ -209,6 +209,26 @@ ORDER BY price, p_partkey
 # --------------------------------------------------------------------------
 
 
+ORACLE_SEGMENT_OVERLAP = """
+WITH ut AS (SELECT DISTINCT user_id, event_type FROM events),
+s AS (SELECT event_type, count(*)::BIGINT AS n FROM ut GROUP BY 1),
+b AS (
+  SELECT a.event_type AS type_a, c.event_type AS type_b,
+         count(*)::BIGINT AS n_both
+  FROM ut a JOIN ut c
+    ON a.user_id = c.user_id AND a.event_type < c.event_type
+  GROUP BY 1, 2
+)
+SELECT type_a, type_b, sa.n AS n_a, sb.n AS n_b, n_both,
+       floor(n_both / (sa.n + sb.n - n_both) * 1e6 + 0.5) / 1e6 AS jaccard
+FROM b
+JOIN s sa ON sa.event_type = type_a
+JOIN s sb ON sb.event_type = type_b
+ORDER BY type_a, type_b
+"""
+
+
+@query(oracle=ORACLE_SEGMENT_OVERLAP)
 def q_segment_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
@@ -286,25 +306,6 @@ def q_segment_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_SEGMENT_OVERLAP = """
-WITH ut AS (SELECT DISTINCT user_id, event_type FROM events),
-s AS (SELECT event_type, count(*)::BIGINT AS n FROM ut GROUP BY 1),
-b AS (
-  SELECT a.event_type AS type_a, c.event_type AS type_b,
-         count(*)::BIGINT AS n_both
-  FROM ut a JOIN ut c
-    ON a.user_id = c.user_id AND a.event_type < c.event_type
-  GROUP BY 1, 2
-)
-SELECT type_a, type_b, sa.n AS n_a, sb.n AS n_b, n_both,
-       floor(n_both / (sa.n + sb.n - n_both) * 1e6 + 0.5) / 1e6 AS jaccard
-FROM b
-JOIN s sa ON sa.event_type = type_a
-JOIN s sb ON sb.event_type = type_b
-ORDER BY type_a, type_b
-"""
-
-
 # --------------------------------------------------------------------------
 # mmr_diverse_topk: maximal-marginal-relevance selection — from each
 # query's ANN candidate list, greedily pick K items maximizing
@@ -327,6 +328,86 @@ _MMR_K = 4      # selected per query
 _MMR_LAM = 0.7  # relevance weight
 
 
+def _oracle_mmr() -> str:
+    lam = repr(_MMR_LAM)
+    one_minus = repr(1.0 - _MMR_LAM)
+    steps = []
+    sel_union = f"SELECT qid, cid, 1 AS step, round({lam} * rel, 9) AS mmr FROM s1"
+    for i in range(2, _MMR_K + 1):
+        steps.append(
+            f"""
+sel{i - 1} AS ({sel_union}),
+red{i} AS (
+  SELECT p.qid, p.a AS cid, max(p.sim9) AS red
+  FROM pc p JOIN sel{i - 1} s ON s.qid = p.qid AND s.cid = p.b
+  GROUP BY p.qid, p.a
+),
+s{i} AS (
+  SELECT qid, cid, rel, mmr FROM (
+    SELECT c.qid, c.cid, c.rel,
+           round({lam} * c.rel - {one_minus} * r.red, 9) AS mmr,
+           row_number() OVER (
+             PARTITION BY c.qid ORDER BY
+               round({lam} * c.rel - {one_minus} * r.red, 9) DESC,
+               c.cid ASC
+           ) AS rn
+    FROM cand c
+    JOIN red{i} r ON r.qid = c.qid AND r.cid = c.cid
+    WHERE NOT EXISTS (
+      SELECT 1 FROM sel{i - 1} s WHERE s.qid = c.qid AND s.cid = c.cid
+    )
+  ) z WHERE rn = 1
+)"""
+        )
+        sel_union += (
+            f"\nUNION ALL SELECT qid, cid, {i} AS step, mmr FROM s{i}"
+        )
+    return f"""
+WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id % 100 = 0),
+scored AS (
+  SELECT q.qid, c.vec_id AS cid,
+         round(list_inner_product(q.qv, c.v) /
+               sqrt(list_inner_product(q.qv, q.qv) *
+                    list_inner_product(c.v, c.v)), 9) AS cosr
+  FROM q JOIN e c ON c.vec_id != q.qid
+),
+cand AS (
+  SELECT qid, cid, round(cosr, 6) AS rel FROM (
+    SELECT qid, cid, cosr,
+           row_number() OVER (PARTITION BY qid
+                              ORDER BY cosr DESC, cid ASC) AS rank
+    FROM scored
+  ) r WHERE rank <= {_MMR_N}
+),
+pc AS (
+  SELECT a.qid, a.cid AS a, b.cid AS b,
+         round(list_inner_product(ea.v, eb.v) /
+               sqrt(list_inner_product(ea.v, ea.v) *
+                    list_inner_product(eb.v, eb.v)), 9) AS sim9
+  FROM cand a
+  JOIN cand b ON a.qid = b.qid AND a.cid != b.cid
+  JOIN e ea ON ea.vec_id = a.cid
+  JOIN e eb ON eb.vec_id = b.cid
+),
+s1 AS (
+  SELECT qid, cid, rel FROM (
+    SELECT qid, cid, rel,
+           row_number() OVER (PARTITION BY qid
+                              ORDER BY rel DESC, cid ASC) AS rn
+    FROM cand
+  ) z WHERE rn = 1
+),
+{",".join(s.lstrip() for s in steps)}
+SELECT qid, cid, step, mmr FROM ({sel_union}) final
+ORDER BY qid, step
+"""
+
+
+ORACLE_MMR_DIVERSE_TOPK = _oracle_mmr()
+
+
+@query(oracle=ORACLE_MMR_DIVERSE_TOPK, slow_oracle=True)
 def q_mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
@@ -425,98 +506,6 @@ def q_mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sel.orderBy("qid", "step")
 
 
-def _oracle_mmr() -> str:
-    lam = repr(_MMR_LAM)
-    one_minus = repr(1.0 - _MMR_LAM)
-    steps = []
-    sel_union = f"SELECT qid, cid, 1 AS step, round({lam} * rel, 9) AS mmr FROM s1"
-    for i in range(2, _MMR_K + 1):
-        steps.append(
-            f"""
-sel{i - 1} AS ({sel_union}),
-red{i} AS (
-  SELECT p.qid, p.a AS cid, max(p.sim9) AS red
-  FROM pc p JOIN sel{i - 1} s ON s.qid = p.qid AND s.cid = p.b
-  GROUP BY p.qid, p.a
-),
-s{i} AS (
-  SELECT qid, cid, rel, mmr FROM (
-    SELECT c.qid, c.cid, c.rel,
-           round({lam} * c.rel - {one_minus} * r.red, 9) AS mmr,
-           row_number() OVER (
-             PARTITION BY c.qid ORDER BY
-               round({lam} * c.rel - {one_minus} * r.red, 9) DESC,
-               c.cid ASC
-           ) AS rn
-    FROM cand c
-    JOIN red{i} r ON r.qid = c.qid AND r.cid = c.cid
-    WHERE NOT EXISTS (
-      SELECT 1 FROM sel{i - 1} s WHERE s.qid = c.qid AND s.cid = c.cid
-    )
-  ) z WHERE rn = 1
-)"""
-        )
-        sel_union += (
-            f"\nUNION ALL SELECT qid, cid, {i} AS step, mmr FROM s{i}"
-        )
-    return f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id % 100 = 0),
-scored AS (
-  SELECT q.qid, c.vec_id AS cid,
-         round(list_inner_product(q.qv, c.v) /
-               sqrt(list_inner_product(q.qv, q.qv) *
-                    list_inner_product(c.v, c.v)), 9) AS cosr
-  FROM q JOIN e c ON c.vec_id != q.qid
-),
-cand AS (
-  SELECT qid, cid, round(cosr, 6) AS rel FROM (
-    SELECT qid, cid, cosr,
-           row_number() OVER (PARTITION BY qid
-                              ORDER BY cosr DESC, cid ASC) AS rank
-    FROM scored
-  ) r WHERE rank <= {_MMR_N}
-),
-pc AS (
-  SELECT a.qid, a.cid AS a, b.cid AS b,
-         round(list_inner_product(ea.v, eb.v) /
-               sqrt(list_inner_product(ea.v, ea.v) *
-                    list_inner_product(eb.v, eb.v)), 9) AS sim9
-  FROM cand a
-  JOIN cand b ON a.qid = b.qid AND a.cid != b.cid
-  JOIN e ea ON ea.vec_id = a.cid
-  JOIN e eb ON eb.vec_id = b.cid
-),
-s1 AS (
-  SELECT qid, cid, rel FROM (
-    SELECT qid, cid, rel,
-           row_number() OVER (PARTITION BY qid
-                              ORDER BY rel DESC, cid ASC) AS rn
-    FROM cand
-  ) z WHERE rn = 1
-),
-{",".join(s.lstrip() for s in steps)}
-SELECT qid, cid, step, mmr FROM ({sel_union}) final
-ORDER BY qid, step
-"""
-
-
-ORACLE_MMR_DIVERSE_TOPK = _oracle_mmr()
-
-
-QUERIES_EXT12: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "skyline_frontier": q_skyline_frontier,
-    "segment_overlap": q_segment_overlap,
-    "mmr_diverse_topk": q_mmr_diverse_topk,
-}
-
-ORACLES_EXT12: dict[str, str] = {
-    "skyline_frontier": ORACLE_SKYLINE_FRONTIER,
-    "segment_overlap": ORACLE_SEGMENT_OVERLAP,
-    "mmr_diverse_topk": ORACLE_MMR_DIVERSE_TOPK,
-}
-
-
 # --------------------------------------------------------------------------
 # hll_rollup: sketch RE-AGGREGATION — the property that makes sketches
 # worth their error bars at 100 TB. The event scan is aggregated ONCE
@@ -529,6 +518,60 @@ ORACLES_EXT12: dict[str, str] = {
 # --------------------------------------------------------------------------
 
 
+def _oracle_hll_rollup() -> str:
+    from fink_science_spark.functions.hashing import hash64_sql
+    from fink_science_spark.queries_ext10 import (
+        _HLL_ALPHA,
+        _HLL_M,
+        _HLL_P,
+        _HLL_SCALE,
+        _HLL_WBITS,
+    )
+
+    day_us = 24 * 3600 * 1_000_000
+    h = hash64_sql(f"user_id::VARCHAR || ':' || (ts_us // {day_us})::VARCHAR")
+    smear = "w"
+    for sh in (1, 2, 4, 8, 16, 32):
+        smear = f"({smear} | ({smear} >> {sh}))"
+    return f"""
+WITH ev AS (SELECT event_type, user_id, epoch_us(ts) AS ts_us FROM events),
+hx AS (SELECT event_type, {h} AS h FROM ev),
+wr AS (
+  SELECT event_type, h % {_HLL_M} AS reg, h >> {_HLL_P} AS w FROM hx
+),
+rho AS (
+  SELECT event_type, reg,
+         {_HLL_WBITS + 1} - bit_count({smear})::INT AS rho
+  FROM wr
+),
+regs AS (
+  SELECT event_type, reg, max(rho) AS mj FROM rho GROUP BY event_type, reg
+),
+lvl AS (
+  SELECT event_type, reg, mj FROM regs
+  UNION ALL
+  SELECT '__all' AS event_type, reg, max(mj) AS mj FROM regs GROUP BY reg
+),
+per AS (
+  SELECT event_type,
+         sum((1::BIGINT << ({_HLL_SCALE} - mj)))::BIGINT AS s_obs,
+         count(*) AS n_obs
+  FROM lvl GROUP BY event_type
+)
+SELECT event_type,
+       ({_HLL_M} - n_obs)::INT AS zero_regs,
+       round({_HLL_ALPHA * _HLL_M * _HLL_M * float(1 << _HLL_SCALE)!r}
+             / (s_obs + ({_HLL_M} - n_obs) * (1::BIGINT << {_HLL_SCALE})), 2)
+           AS hll_estimate
+FROM per
+ORDER BY event_type
+"""
+
+
+ORACLE_HLL_ROLLUP = _oracle_hll_rollup()
+
+
+@query(oracle=ORACLE_HLL_ROLLUP)
 def q_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-type + rolled-up-total distinct-(user, day) HLL estimates
     from one scan; the total merges the per-type registers."""
@@ -592,62 +635,6 @@ def q_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type")
 
 
-def _oracle_hll_rollup() -> str:
-    from fink_science_spark.functions.hashing import hash64_sql
-    from fink_science_spark.queries_ext10 import (
-        _HLL_ALPHA,
-        _HLL_M,
-        _HLL_P,
-        _HLL_SCALE,
-        _HLL_WBITS,
-    )
-
-    day_us = 24 * 3600 * 1_000_000
-    h = hash64_sql(f"user_id::VARCHAR || ':' || (ts_us // {day_us})::VARCHAR")
-    smear = "w"
-    for sh in (1, 2, 4, 8, 16, 32):
-        smear = f"({smear} | ({smear} >> {sh}))"
-    return f"""
-WITH ev AS (SELECT event_type, user_id, epoch_us(ts) AS ts_us FROM events),
-hx AS (SELECT event_type, {h} AS h FROM ev),
-wr AS (
-  SELECT event_type, h % {_HLL_M} AS reg, h >> {_HLL_P} AS w FROM hx
-),
-rho AS (
-  SELECT event_type, reg,
-         {_HLL_WBITS + 1} - bit_count({smear})::INT AS rho
-  FROM wr
-),
-regs AS (
-  SELECT event_type, reg, max(rho) AS mj FROM rho GROUP BY event_type, reg
-),
-lvl AS (
-  SELECT event_type, reg, mj FROM regs
-  UNION ALL
-  SELECT '__all' AS event_type, reg, max(mj) AS mj FROM regs GROUP BY reg
-),
-per AS (
-  SELECT event_type,
-         sum((1::BIGINT << ({_HLL_SCALE} - mj)))::BIGINT AS s_obs,
-         count(*) AS n_obs
-  FROM lvl GROUP BY event_type
-)
-SELECT event_type,
-       ({_HLL_M} - n_obs)::INT AS zero_regs,
-       round({_HLL_ALPHA * _HLL_M * _HLL_M * float(1 << _HLL_SCALE)!r}
-             / (s_obs + ({_HLL_M} - n_obs) * (1::BIGINT << {_HLL_SCALE})), 2)
-           AS hll_estimate
-FROM per
-ORDER BY event_type
-"""
-
-
-ORACLE_HLL_ROLLUP = _oracle_hll_rollup()
-
-QUERIES_EXT12["hll_rollup"] = q_hll_rollup
-ORACLES_EXT12["hll_rollup"] = ORACLE_HLL_ROLLUP
-
-
 # --------------------------------------------------------------------------
 # median_bracket: EXACT global median of a 100 TB column in bounded
 # passes — the sketch-guided-exact pattern. A single exact percentile
@@ -665,6 +652,13 @@ ORACLES_EXT12["hll_rollup"] = ORACLE_HLL_ROLLUP
 _MB_BINS = 1024
 
 
+ORACLE_MEDIAN_BRACKET = """
+SELECT count(*)::BIGINT AS n, median(l_extendedprice::DOUBLE) AS median
+FROM lineitem
+"""
+
+
+@query(oracle=ORACLE_MEDIAN_BRACKET)
 def q_median_bracket(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
@@ -736,15 +730,6 @@ def q_median_bracket(spark: SparkSession, sf_dir: str) -> DataFrame:
     return picked.select(F.lit(n).alias("n"), "median")
 
 
-ORACLE_MEDIAN_BRACKET = """
-SELECT count(*)::BIGINT AS n, median(l_extendedprice::DOUBLE) AS median
-FROM lineitem
-"""
-
-QUERIES_EXT12["median_bracket"] = q_median_bracket
-ORACLES_EXT12["median_bracket"] = ORACLE_MEDIAN_BRACKET
-
-
 # --------------------------------------------------------------------------
 # image_thumbnail: the multimodal resize stage — 4×4 deterministic
 # byte-matrix images average-pooled to 2×2 thumbnails in one Arrow
@@ -752,15 +737,6 @@ ORACLES_EXT12["median_bracket"] = ORACLE_MEDIAN_BRACKET
 # shuffle; block means of uint8 pixels are exact multiples of 1/4, so
 # the SQL twin reproduces the thumbnail exactly.
 # --------------------------------------------------------------------------
-
-
-def q_image_thumbnail(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from fink_science_spark.operators.multimodal import image_resize_pool
-
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", F.unhex(F.md5("text")).alias("blob")
-    )
-    return image_resize_pool(docs, "doc_id", "blob", width=4, height=4, factor=2)
 
 
 ORACLE_IMAGE_THUMBNAIL = """
@@ -784,5 +760,12 @@ SELECT doc_id, thumb,
 FROM t
 """
 
-QUERIES_EXT12["image_thumbnail"] = q_image_thumbnail
-ORACLES_EXT12["image_thumbnail"] = ORACLE_IMAGE_THUMBNAIL
+
+@query(oracle=ORACLE_IMAGE_THUMBNAIL)
+def q_image_thumbnail(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from fink_science_spark.operators.multimodal import image_resize_pool
+
+    docs = _t(spark, sf_dir, "documents").select(
+        "doc_id", F.unhex(F.md5("text")).alias("blob")
+    )
+    return image_resize_pool(docs, "doc_id", "blob", width=4, height=4, factor=2)

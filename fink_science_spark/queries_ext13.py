@@ -1,4 +1,4 @@
-"""Query registry, wave 14: retrieval ranking, entity resolution,
+"""Queries, wave 14: retrieval ranking, entity resolution,
 sampling, and time-series decomposition.
 
 Seven operators rounding out the training-data-pipeline and analytics
@@ -44,18 +44,13 @@ Scale shapes, per the engine contract:
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from fink_science_spark.functions.text import tokens, tokens_sql
 from fink_science_spark.queries import _fan_out, _t
 from fink_science_spark.queries_ext12 import _halfup6
-
-
-QUERIES_EXT13: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES_EXT13: dict[str, str] = {}
+from fink_science_spark.registry import query
 
 
 # --------------------------------------------------------------------------
@@ -129,36 +124,20 @@ def _bm25_part(i: int) -> F.Column:
     return idf * tf * F.lit(_BM25_K1 + 1.0) / denom
 
 
-def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = _bm25_base(spark, sf_dir)
-    stats = _bm25_stats(base)
-    score = _bm25_part(0) + _bm25_part(1) + _bm25_part(2)
-    scored = (
-        base.crossJoin(F.broadcast(stats))
-        .withColumn("score", score)
-        .filter(F.col("score") > 0)
-    )
-    return (
-        scored.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(_BM25_K)
-        .select(
-            "doc_id",
-            "dl",
-            _halfup6(F.col("score")).alias("bm25"),
-        )
-    )
-
-
 _BM25_TF_SQL = ", ".join(
     f"len(list_filter({tokens_sql('text')}, x -> x = '{t}')) AS tf{i}"
     for i, t in enumerate(_BM25_TERMS)
 )
+
+
 _BM25_PART_SQL = " + ".join(
     f"(ln(1.0 + (n_docs - df{i} + 0.5) / (df{i} + 0.5))"
     f" * (tf{i}::DOUBLE) * {_BM25_K1 + 1.0}"
     f" / (tf{i}::DOUBLE + {_BM25_K1} * ({1.0 - _BM25_B} + {_BM25_B} * (CASE WHEN avgdl > 0 THEN dl / avgdl ELSE 0.0 END))))"
     for i in range(len(_BM25_TERMS))
 )
+
+
 ORACLE_BM25_TOPK = f"""
 WITH base AS (
   SELECT doc_id,
@@ -185,8 +164,26 @@ ORDER BY score DESC, doc_id ASC
 LIMIT {_BM25_K}
 """
 
-QUERIES_EXT13["bm25_topk"] = q_bm25_topk
-ORACLES_EXT13["bm25_topk"] = ORACLE_BM25_TOPK
+
+@query(oracle=ORACLE_BM25_TOPK, scan_table="documents")
+def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    base = _bm25_base(spark, sf_dir)
+    stats = _bm25_stats(base)
+    score = _bm25_part(0) + _bm25_part(1) + _bm25_part(2)
+    scored = (
+        base.crossJoin(F.broadcast(stats))
+        .withColumn("score", score)
+        .filter(F.col("score") > 0)
+    )
+    return (
+        scored.orderBy(F.col("score").desc(), F.col("doc_id").asc())
+        .limit(_BM25_K)
+        .select(
+            "doc_id",
+            "dl",
+            _halfup6(F.col("score")).alias("bm25"),
+        )
+    )
 
 
 # --------------------------------------------------------------------------
@@ -212,6 +209,32 @@ ORACLES_EXT13["bm25_topk"] = ORACLE_BM25_TOPK
 # --------------------------------------------------------------------------
 
 
+ORACLE_FUZZY_MATCH_NAMES = """
+WITH dirty AS (
+  SELECT p_partkey AS dirty_id,
+         upper(substr(p_name, 1, 1)) || substr(p_name, 3) AS dirty_name
+  FROM part WHERE p_partkey % 5 = 0
+),
+clean AS (
+  SELECT p_partkey, p_name, substr(p_name, 3) AS bk FROM part
+),
+cand AS (
+  SELECT d.dirty_id, d.dirty_name, c.p_partkey, c.p_name,
+         levenshtein(d.dirty_name, c.p_name) AS dist
+  FROM dirty d JOIN clean c ON substr(d.dirty_name, 2) = c.bk
+),
+ranked AS (
+  SELECT dirty_id, p_partkey, dist,
+         row_number() OVER (PARTITION BY dirty_id
+                            ORDER BY dist ASC, p_partkey ASC) AS rn
+  FROM cand WHERE dist <= 3
+)
+SELECT dirty_id, p_partkey AS match_id, dist::INT AS dist
+FROM ranked WHERE rn = 1
+"""
+
+
+@query(oracle=ORACLE_FUZZY_MATCH_NAMES)
 def q_fuzzy_match_names(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fan the tiny single-row-group part scan out before the blocked
     # join: the levenshtein verify over every blocking-key candidate ran
@@ -247,34 +270,6 @@ def q_fuzzy_match_names(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_FUZZY_MATCH_NAMES = """
-WITH dirty AS (
-  SELECT p_partkey AS dirty_id,
-         upper(substr(p_name, 1, 1)) || substr(p_name, 3) AS dirty_name
-  FROM part WHERE p_partkey % 5 = 0
-),
-clean AS (
-  SELECT p_partkey, p_name, substr(p_name, 3) AS bk FROM part
-),
-cand AS (
-  SELECT d.dirty_id, d.dirty_name, c.p_partkey, c.p_name,
-         levenshtein(d.dirty_name, c.p_name) AS dist
-  FROM dirty d JOIN clean c ON substr(d.dirty_name, 2) = c.bk
-),
-ranked AS (
-  SELECT dirty_id, p_partkey, dist,
-         row_number() OVER (PARTITION BY dirty_id
-                            ORDER BY dist ASC, p_partkey ASC) AS rn
-  FROM cand WHERE dist <= 3
-)
-SELECT dirty_id, p_partkey AS match_id, dist::INT AS dist
-FROM ranked WHERE rn = 1
-"""
-
-QUERIES_EXT13["fuzzy_match_names"] = q_fuzzy_match_names
-ORACLES_EXT13["fuzzy_match_names"] = ORACLE_FUZZY_MATCH_NAMES
-
-
 # --------------------------------------------------------------------------
 # stratified_sample: exact per-stratum fractional sampling. Within each
 # (lang, source) stratum, rows are ordered by a deterministic integer
@@ -294,6 +289,22 @@ _KNUTH = 2654435761
 _MERSENNE31 = 2147483647
 
 
+ORACLE_STRATIFIED_SAMPLE = f"""
+WITH h AS (
+  SELECT doc_id, lang, source, n_chars,
+         (doc_id % {_MERSENNE31}) * {_KNUTH} % {_MERSENNE31} AS h,
+         count(*) OVER (PARTITION BY lang, source) AS n_stratum,
+         row_number() OVER (PARTITION BY lang, source
+                            ORDER BY (doc_id % {_MERSENNE31}) * {_KNUTH} % {_MERSENNE31} ASC,
+                                     doc_id ASC) AS rn
+  FROM documents
+)
+SELECT doc_id, lang, source, n_chars, n_stratum
+FROM h WHERE rn <= ceil(n_stratum * {_STRAT_FRAC})
+"""
+
+
+@query(oracle=ORACLE_STRATIFIED_SAMPLE)
 def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "n_chars"
@@ -315,24 +326,6 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_STRATIFIED_SAMPLE = f"""
-WITH h AS (
-  SELECT doc_id, lang, source, n_chars,
-         (doc_id % {_MERSENNE31}) * {_KNUTH} % {_MERSENNE31} AS h,
-         count(*) OVER (PARTITION BY lang, source) AS n_stratum,
-         row_number() OVER (PARTITION BY lang, source
-                            ORDER BY (doc_id % {_MERSENNE31}) * {_KNUTH} % {_MERSENNE31} ASC,
-                                     doc_id ASC) AS rn
-  FROM documents
-)
-SELECT doc_id, lang, source, n_chars, n_stratum
-FROM h WHERE rn <= ceil(n_stratum * {_STRAT_FRAC})
-"""
-
-QUERIES_EXT13["stratified_sample"] = q_stratified_sample
-ORACLES_EXT13["stratified_sample"] = ORACLE_STRATIFIED_SAMPLE
-
-
 # --------------------------------------------------------------------------
 # acf_lags: the sample autocorrelation function of the daily event-count
 # series at lags 1..7 — r_k = Σ_{t>k}(x_t - x̄)(x_{t-k} - x̄) / Σ(x - x̄)²
@@ -350,6 +343,35 @@ ORACLES_EXT13["stratified_sample"] = ORACLE_STRATIFIED_SAMPLE
 _ACF_MAX_LAG = 7
 
 
+ORACLE_ACF_LAGS = f"""
+WITH daily AS (
+  SELECT CAST(ts AS DATE) AS d, count(*)::DOUBLE AS x
+  FROM events GROUP BY 1
+),
+mu AS (SELECT avg(x) AS mu FROM daily),
+lagged AS (
+  SELECT d, x,
+         {', '.join(f'lag(x, {k}) OVER (ORDER BY d) AS xl{k}' for k in range(1, _ACF_MAX_LAG + 1))}
+  FROM daily
+),
+den AS (
+  SELECT sum((x - mu) * (x - mu)) AS den FROM daily CROSS JOIN mu
+),
+pairs AS (
+  {' UNION ALL '.join(f"SELECT {k} AS lag, x, xl{k} AS xl FROM lagged" for k in range(1, _ACF_MAX_LAG + 1))}
+),
+num AS (
+  SELECT lag, sum((x - mu) * (xl - mu)) AS num, count(*) AS n_pairs
+  FROM pairs CROSS JOIN mu WHERE xl IS NOT NULL GROUP BY lag
+)
+SELECT lag::INT AS lag, n_pairs,
+       CASE WHEN den > 0 THEN floor(num / den * 1e6 + 0.5) / 1e6 END AS acf
+FROM num CROSS JOIN den
+ORDER BY lag
+"""
+
+
+@query(oracle=ORACLE_ACF_LAGS)
 def q_acf_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
         _t(spark, sf_dir, "events")
@@ -398,37 +420,6 @@ def q_acf_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_ACF_LAGS = f"""
-WITH daily AS (
-  SELECT CAST(ts AS DATE) AS d, count(*)::DOUBLE AS x
-  FROM events GROUP BY 1
-),
-mu AS (SELECT avg(x) AS mu FROM daily),
-lagged AS (
-  SELECT d, x,
-         {', '.join(f'lag(x, {k}) OVER (ORDER BY d) AS xl{k}' for k in range(1, _ACF_MAX_LAG + 1))}
-  FROM daily
-),
-den AS (
-  SELECT sum((x - mu) * (x - mu)) AS den FROM daily CROSS JOIN mu
-),
-pairs AS (
-  {' UNION ALL '.join(f"SELECT {k} AS lag, x, xl{k} AS xl FROM lagged" for k in range(1, _ACF_MAX_LAG + 1))}
-),
-num AS (
-  SELECT lag, sum((x - mu) * (xl - mu)) AS num, count(*) AS n_pairs
-  FROM pairs CROSS JOIN mu WHERE xl IS NOT NULL GROUP BY lag
-)
-SELECT lag::INT AS lag, n_pairs,
-       CASE WHEN den > 0 THEN floor(num / den * 1e6 + 0.5) / 1e6 END AS acf
-FROM num CROSS JOIN den
-ORDER BY lag
-"""
-
-QUERIES_EXT13["acf_lags"] = q_acf_lags
-ORACLES_EXT13["acf_lags"] = ORACLE_ACF_LAGS
-
-
 # --------------------------------------------------------------------------
 # seasonal_decompose: classical additive decomposition of the daily
 # event-count series with period 7 — trend = centered 7-day moving
@@ -447,6 +438,40 @@ ORACLES_EXT13["acf_lags"] = ORACLE_ACF_LAGS
 # --------------------------------------------------------------------------
 
 
+ORACLE_SEASONAL_DECOMPOSE = """
+WITH daily AS (
+  SELECT CAST(ts AS DATE) AS d, count(*)::DOUBLE AS x
+  FROM events GROUP BY 1
+),
+trended AS (
+  SELECT d, x,
+         count(*) OVER w AS n_win,
+         avg(x) OVER w AS trend,
+         (d - DATE '1970-01-01') % 7 AS pos
+  FROM daily
+  WINDOW w AS (ORDER BY d ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)
+),
+full_win AS (
+  SELECT pos, x - trend AS detr FROM trended WHERE n_win = 7
+),
+seasonal AS (
+  SELECT pos, avg(detr) AS seasonal_raw, count(*) AS n_days
+  FROM full_win GROUP BY pos
+),
+resid AS (
+  SELECT f.pos, avg((f.detr - s.seasonal_raw) * (f.detr - s.seasonal_raw))
+             AS mse_raw
+  FROM full_win f JOIN seasonal s USING (pos) GROUP BY f.pos
+)
+SELECT pos::INT AS pos, n_days,
+       floor(seasonal_raw * 1e6 + 0.5) / 1e6 AS seasonal,
+       floor(mse_raw * 1e6 + 0.5) / 1e6 AS resid_mse
+FROM seasonal JOIN resid USING (pos)
+ORDER BY pos
+"""
+
+
+@query(oracle=ORACLE_SEASONAL_DECOMPOSE)
 def q_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
         _t(spark, sf_dir, "events")
@@ -484,42 +509,6 @@ def q_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_SEASONAL_DECOMPOSE = """
-WITH daily AS (
-  SELECT CAST(ts AS DATE) AS d, count(*)::DOUBLE AS x
-  FROM events GROUP BY 1
-),
-trended AS (
-  SELECT d, x,
-         count(*) OVER w AS n_win,
-         avg(x) OVER w AS trend,
-         (d - DATE '1970-01-01') % 7 AS pos
-  FROM daily
-  WINDOW w AS (ORDER BY d ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)
-),
-full_win AS (
-  SELECT pos, x - trend AS detr FROM trended WHERE n_win = 7
-),
-seasonal AS (
-  SELECT pos, avg(detr) AS seasonal_raw, count(*) AS n_days
-  FROM full_win GROUP BY pos
-),
-resid AS (
-  SELECT f.pos, avg((f.detr - s.seasonal_raw) * (f.detr - s.seasonal_raw))
-             AS mse_raw
-  FROM full_win f JOIN seasonal s USING (pos) GROUP BY f.pos
-)
-SELECT pos::INT AS pos, n_days,
-       floor(seasonal_raw * 1e6 + 0.5) / 1e6 AS seasonal,
-       floor(mse_raw * 1e6 + 0.5) / 1e6 AS resid_mse
-FROM seasonal JOIN resid USING (pos)
-ORDER BY pos
-"""
-
-QUERIES_EXT13["seasonal_decompose"] = q_seasonal_decompose
-ORACLES_EXT13["seasonal_decompose"] = ORACLE_SEASONAL_DECOMPOSE
-
-
 # --------------------------------------------------------------------------
 # length_bucket_batches: length-bucketed batch assembly. Documents are
 # bucketed by n_chars DIV 100 (fixed-width integer buckets — no float
@@ -538,6 +527,26 @@ ORACLES_EXT13["seasonal_decompose"] = ORACLE_SEASONAL_DECOMPOSE
 _BATCH_SIZE = 32
 
 
+ORACLE_LENGTH_BUCKET_BATCHES = f"""
+WITH assigned AS (
+  SELECT doc_id, n_chars,
+         n_chars // 100 AS bucket,
+         (row_number() OVER (PARTITION BY n_chars // 100
+                             ORDER BY (doc_id % {_MERSENNE31}) * {_KNUTH} % {_MERSENNE31} ASC,
+                                      doc_id ASC) - 1) // {_BATCH_SIZE}
+             AS batch_id
+  FROM documents
+)
+SELECT bucket, batch_id,
+       count(*) AS n_docs,
+       max(n_chars) AS max_chars,
+       sum(n_chars)::BIGINT AS sum_chars,
+       (count(*) * max(n_chars) - sum(n_chars))::BIGINT AS padding_waste
+FROM assigned GROUP BY bucket, batch_id
+"""
+
+
+@query(oracle=ORACLE_LENGTH_BUCKET_BATCHES)
 def q_length_bucket_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").select("doc_id", "n_chars")
     # reduce mod M BEFORE multiplying: ids can be arbitrarily large
@@ -569,28 +578,6 @@ def q_length_bucket_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_LENGTH_BUCKET_BATCHES = f"""
-WITH assigned AS (
-  SELECT doc_id, n_chars,
-         n_chars // 100 AS bucket,
-         (row_number() OVER (PARTITION BY n_chars // 100
-                             ORDER BY (doc_id % {_MERSENNE31}) * {_KNUTH} % {_MERSENNE31} ASC,
-                                      doc_id ASC) - 1) // {_BATCH_SIZE}
-             AS batch_id
-  FROM documents
-)
-SELECT bucket, batch_id,
-       count(*) AS n_docs,
-       max(n_chars) AS max_chars,
-       sum(n_chars)::BIGINT AS sum_chars,
-       (count(*) * max(n_chars) - sum(n_chars))::BIGINT AS padding_waste
-FROM assigned GROUP BY bucket, batch_id
-"""
-
-QUERIES_EXT13["length_bucket_batches"] = q_length_bucket_batches
-ORACLES_EXT13["length_bucket_batches"] = ORACLE_LENGTH_BUCKET_BATCHES
-
-
 # --------------------------------------------------------------------------
 # snapshot_diff: reconciliation of two table snapshots — the
 # data-versioning diff (Delta/Iceberg snapshot compare; cdc_apply is
@@ -607,6 +594,34 @@ ORACLES_EXT13["length_bucket_batches"] = ORACLE_LENGTH_BUCKET_BATCHES
 # --------------------------------------------------------------------------
 
 
+ORACLE_SNAPSHOT_DIFF = """
+WITH snap_a AS (
+  SELECT o_orderkey AS k, o_totalprice AS va
+  FROM orders WHERE o_orderkey % 97 <> 0
+),
+snap_b AS (
+  SELECT o_orderkey AS k,
+         CASE WHEN o_orderkey % 7 = 0 THEN o_totalprice + 1.0
+              ELSE o_totalprice END AS vb
+  FROM orders WHERE o_orderkey % 89 <> 0
+),
+joined AS (
+  SELECT coalesce(a.k, b.k) AS k, a.va, b.vb
+  FROM snap_a a FULL OUTER JOIN snap_b b ON a.k = b.k
+)
+SELECT CASE WHEN va IS NULL THEN 'added'
+            WHEN vb IS NULL THEN 'removed'
+            WHEN va <> vb THEN 'changed'
+            ELSE 'unchanged' END AS cls,
+       count(*) AS n,
+       sum(floor(coalesce(vb, 0.0) * 100.0 + 0.5)::BIGINT
+           - floor(coalesce(va, 0.0) * 100.0 + 0.5)::BIGINT) / 100.0
+           AS value_delta
+FROM joined GROUP BY 1
+"""
+
+
+@query(oracle=ORACLE_SNAPSHOT_DIFF)
 def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     snap_a = orders.filter(F.col("o_orderkey") % 97 != 0).select(
@@ -653,36 +668,6 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_SNAPSHOT_DIFF = """
-WITH snap_a AS (
-  SELECT o_orderkey AS k, o_totalprice AS va
-  FROM orders WHERE o_orderkey % 97 <> 0
-),
-snap_b AS (
-  SELECT o_orderkey AS k,
-         CASE WHEN o_orderkey % 7 = 0 THEN o_totalprice + 1.0
-              ELSE o_totalprice END AS vb
-  FROM orders WHERE o_orderkey % 89 <> 0
-),
-joined AS (
-  SELECT coalesce(a.k, b.k) AS k, a.va, b.vb
-  FROM snap_a a FULL OUTER JOIN snap_b b ON a.k = b.k
-)
-SELECT CASE WHEN va IS NULL THEN 'added'
-            WHEN vb IS NULL THEN 'removed'
-            WHEN va <> vb THEN 'changed'
-            ELSE 'unchanged' END AS cls,
-       count(*) AS n,
-       sum(floor(coalesce(vb, 0.0) * 100.0 + 0.5)::BIGINT
-           - floor(coalesce(va, 0.0) * 100.0 + 0.5)::BIGINT) / 100.0
-           AS value_delta
-FROM joined GROUP BY 1
-"""
-
-QUERIES_EXT13["snapshot_diff"] = q_snapshot_diff
-ORACLES_EXT13["snapshot_diff"] = ORACLE_SNAPSHOT_DIFF
-
-
 # ==========================================================================
 # Wave 15: retrieval fusion, A/B stats, data-quality audit, calibration
 # ==========================================================================
@@ -713,6 +698,66 @@ _RRF_TOP = 20
 _RRF_C = 100
 
 
+# the BM25 leg of the fusion oracle is the SAME algebra as bm25_topk's
+_RRF_BM25_SQL = _BM25_PART_SQL
+
+
+_RRF_TFIDF_SQL = " + ".join(
+    f"(tf{i}::DOUBLE * (ln((n_docs + 1.0) / (df{i} + 1.0)) + 1.0))"
+    for i in range(len(_BM25_TERMS))
+)
+
+
+ORACLE_RRF_FUSION = f"""
+WITH base AS (
+  SELECT doc_id,
+         len({tokens_sql('text')}) AS dl,
+         {_BM25_TF_SQL}
+  FROM documents
+),
+stats AS (
+  SELECT count(*) AS n_docs, avg(dl) AS avgdl,
+         sum((tf0 > 0)::BIGINT) AS df0,
+         sum((tf1 > 0)::BIGINT) AS df1,
+         sum((tf2 > 0)::BIGINT) AS df2
+  FROM base
+),
+scored AS (
+  SELECT doc_id,
+         {_RRF_BM25_SQL} AS s_bm25,
+         {_RRF_TFIDF_SQL} AS s_tfidf
+  FROM base CROSS JOIN stats
+  WHERE tf0 + tf1 + tf2 > 0
+),
+r1 AS (
+  SELECT doc_id, rank_bm25 FROM (
+    SELECT doc_id, row_number() OVER (ORDER BY s_bm25 DESC, doc_id ASC)
+               AS rank_bm25
+    FROM scored
+  ) WHERE rank_bm25 <= {_RRF_C}
+),
+r2 AS (
+  SELECT doc_id, rank_tfidf FROM (
+    SELECT doc_id, row_number() OVER (ORDER BY s_tfidf DESC, doc_id ASC)
+               AS rank_tfidf
+    FROM scored
+  ) WHERE rank_tfidf <= {_RRF_C}
+),
+fused AS (
+  SELECT doc_id, rank_bm25::INT AS rank_bm25, rank_tfidf::INT AS rank_tfidf,
+         floor((coalesce(1.0 / ({_RRF_K} + rank_bm25), 0.0)
+                + coalesce(1.0 / ({_RRF_K} + rank_tfidf), 0.0))
+               * 1e6 + 0.5) / 1e6 AS rrf
+  FROM r1 FULL OUTER JOIN r2 USING (doc_id)
+)
+SELECT doc_id, rank_bm25, rank_tfidf, rrf
+FROM fused
+ORDER BY rrf DESC, doc_id ASC
+LIMIT {_RRF_TOP}
+"""
+
+
+@query(oracle=ORACLE_RRF_FUSION)
 def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _bm25_base(spark, sf_dir)
     stats = _bm25_stats(base)
@@ -776,64 +821,6 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# the BM25 leg of the fusion oracle is the SAME algebra as bm25_topk's
-_RRF_BM25_SQL = _BM25_PART_SQL
-_RRF_TFIDF_SQL = " + ".join(
-    f"(tf{i}::DOUBLE * (ln((n_docs + 1.0) / (df{i} + 1.0)) + 1.0))"
-    for i in range(len(_BM25_TERMS))
-)
-ORACLE_RRF_FUSION = f"""
-WITH base AS (
-  SELECT doc_id,
-         len({tokens_sql('text')}) AS dl,
-         {_BM25_TF_SQL}
-  FROM documents
-),
-stats AS (
-  SELECT count(*) AS n_docs, avg(dl) AS avgdl,
-         sum((tf0 > 0)::BIGINT) AS df0,
-         sum((tf1 > 0)::BIGINT) AS df1,
-         sum((tf2 > 0)::BIGINT) AS df2
-  FROM base
-),
-scored AS (
-  SELECT doc_id,
-         {_RRF_BM25_SQL} AS s_bm25,
-         {_RRF_TFIDF_SQL} AS s_tfidf
-  FROM base CROSS JOIN stats
-  WHERE tf0 + tf1 + tf2 > 0
-),
-r1 AS (
-  SELECT doc_id, rank_bm25 FROM (
-    SELECT doc_id, row_number() OVER (ORDER BY s_bm25 DESC, doc_id ASC)
-               AS rank_bm25
-    FROM scored
-  ) WHERE rank_bm25 <= {_RRF_C}
-),
-r2 AS (
-  SELECT doc_id, rank_tfidf FROM (
-    SELECT doc_id, row_number() OVER (ORDER BY s_tfidf DESC, doc_id ASC)
-               AS rank_tfidf
-    FROM scored
-  ) WHERE rank_tfidf <= {_RRF_C}
-),
-fused AS (
-  SELECT doc_id, rank_bm25::INT AS rank_bm25, rank_tfidf::INT AS rank_tfidf,
-         floor((coalesce(1.0 / ({_RRF_K} + rank_bm25), 0.0)
-                + coalesce(1.0 / ({_RRF_K} + rank_tfidf), 0.0))
-               * 1e6 + 0.5) / 1e6 AS rrf
-  FROM r1 FULL OUTER JOIN r2 USING (doc_id)
-)
-SELECT doc_id, rank_bm25, rank_tfidf, rrf
-FROM fused
-ORDER BY rrf DESC, doc_id ASC
-LIMIT {_RRF_TOP}
-"""
-
-QUERIES_EXT13["rrf_fusion"] = q_rrf_fusion
-ORACLES_EXT13["rrf_fusion"] = ORACLE_RRF_FUSION
-
-
 # --------------------------------------------------------------------------
 # ab_welch_ttest: Welch's unequal-variance t-test between two event
 # cohorts (the A/B-experiment readout) — per-group mean/variance from
@@ -849,6 +836,38 @@ ORACLES_EXT13["rrf_fusion"] = ORACLE_RRF_FUSION
 _AB_GROUPS = ("click", "purchase")
 
 
+ORACLE_AB_WELCH_TTEST = f"""
+WITH g AS (
+  SELECT event_type, count(*) AS n, sum(value) AS s,
+         sum(value * value) AS ss
+  FROM events WHERE event_type IN ('{_AB_GROUPS[0]}', '{_AB_GROUPS[1]}')
+  GROUP BY event_type HAVING count(*) >= 2
+),
+a AS (SELECT n AS na, s AS sa, ss AS ssa FROM g
+      WHERE event_type = '{_AB_GROUPS[0]}'),
+b AS (SELECT n AS nb, s AS sb, ss AS ssb FROM g
+      WHERE event_type = '{_AB_GROUPS[1]}'),
+c AS (
+  SELECT na, nb,
+         sa / na AS ma, sb / nb AS mb,
+         ((ssa - na * (sa / na) * (sa / na)) / (na - 1)) / na AS sea,
+         ((ssb - nb * (sb / nb) * (sb / nb)) / (nb - 1)) / nb AS seb
+  FROM a CROSS JOIN b
+)
+SELECT na, nb,
+       floor(ma * 1e6 + 0.5) / 1e6 AS mean_a,
+       floor(mb * 1e6 + 0.5) / 1e6 AS mean_b,
+       CASE WHEN sea + seb > 0 THEN
+         floor((ma - mb) / sqrt(sea + seb) * 1e6 + 0.5) / 1e6 END AS t_stat,
+       CASE WHEN sea + seb > 0 THEN
+         floor((sea + seb) * (sea + seb)
+               / (sea * sea / (na - 1) + seb * seb / (nb - 1))
+               * 1e6 + 0.5) / 1e6 END AS welch_dof
+FROM c
+"""
+
+
+@query(oracle=ORACLE_AB_WELCH_TTEST)
 def q_ab_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = (
         _t(spark, sf_dir, "events")
@@ -901,40 +920,6 @@ def q_ab_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_AB_WELCH_TTEST = f"""
-WITH g AS (
-  SELECT event_type, count(*) AS n, sum(value) AS s,
-         sum(value * value) AS ss
-  FROM events WHERE event_type IN ('{_AB_GROUPS[0]}', '{_AB_GROUPS[1]}')
-  GROUP BY event_type HAVING count(*) >= 2
-),
-a AS (SELECT n AS na, s AS sa, ss AS ssa FROM g
-      WHERE event_type = '{_AB_GROUPS[0]}'),
-b AS (SELECT n AS nb, s AS sb, ss AS ssb FROM g
-      WHERE event_type = '{_AB_GROUPS[1]}'),
-c AS (
-  SELECT na, nb,
-         sa / na AS ma, sb / nb AS mb,
-         ((ssa - na * (sa / na) * (sa / na)) / (na - 1)) / na AS sea,
-         ((ssb - nb * (sb / nb) * (sb / nb)) / (nb - 1)) / nb AS seb
-  FROM a CROSS JOIN b
-)
-SELECT na, nb,
-       floor(ma * 1e6 + 0.5) / 1e6 AS mean_a,
-       floor(mb * 1e6 + 0.5) / 1e6 AS mean_b,
-       CASE WHEN sea + seb > 0 THEN
-         floor((ma - mb) / sqrt(sea + seb) * 1e6 + 0.5) / 1e6 END AS t_stat,
-       CASE WHEN sea + seb > 0 THEN
-         floor((sea + seb) * (sea + seb)
-               / (sea * sea / (na - 1) + seb * seb / (nb - 1))
-               * 1e6 + 0.5) / 1e6 END AS welch_dof
-FROM c
-"""
-
-QUERIES_EXT13["ab_welch_ttest"] = q_ab_welch_ttest
-ORACLES_EXT13["ab_welch_ttest"] = ORACLE_AB_WELCH_TTEST
-
-
 # --------------------------------------------------------------------------
 # fk_integrity_audit: referential-integrity profile of the warehouse —
 # for each declared FK edge (orders→customer, lineitem→orders,
@@ -949,6 +934,35 @@ ORACLES_EXT13["ab_welch_ttest"] = ORACLE_AB_WELCH_TTEST
 # --------------------------------------------------------------------------
 
 
+ORACLE_FK_INTEGRITY_AUDIT = """
+WITH e1 AS (
+  SELECT 'orders->customer' AS fk, count(*) AS n_rows,
+         sum((c.c_custkey IS NULL)::BIGINT) AS n_orphans
+  FROM orders o LEFT JOIN (SELECT DISTINCT c_custkey FROM customer) c ON o.o_custkey = c.c_custkey
+),
+e2 AS (
+  SELECT 'lineitem->orders' AS fk, count(*) AS n_rows,
+         sum((o.o_orderkey IS NULL)::BIGINT) AS n_orphans
+  FROM lineitem l LEFT JOIN (SELECT DISTINCT o_orderkey FROM orders) o ON l.l_orderkey = o.o_orderkey
+),
+e3 AS (
+  SELECT 'lineitem->part' AS fk, count(*) AS n_rows,
+         sum((p.p_partkey IS NULL)::BIGINT) AS n_orphans
+  FROM lineitem l LEFT JOIN (SELECT DISTINCT p_partkey FROM part) p ON l.l_partkey = p.p_partkey
+),
+e4 AS (
+  SELECT 'lineitem->supplier' AS fk, count(*) AS n_rows,
+         sum((s.s_suppkey IS NULL)::BIGINT) AS n_orphans
+  FROM lineitem l LEFT JOIN (SELECT DISTINCT s_suppkey FROM supplier) s ON l.l_suppkey = s.s_suppkey
+)
+SELECT fk, n_rows, n_orphans::BIGINT AS n_orphans,
+       floor(n_orphans / n_rows * 1e6 + 0.5) / 1e6 AS orphan_rate
+FROM (SELECT * FROM e1 UNION ALL SELECT * FROM e2
+      UNION ALL SELECT * FROM e3 UNION ALL SELECT * FROM e4)
+"""
+
+
+@query(oracle=ORACLE_FK_INTEGRITY_AUDIT)
 def q_fk_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = _t(spark, sf_dir, "orders")
     lineitem = _t(spark, sf_dir, "lineitem")
@@ -990,37 +1004,6 @@ def q_fk_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_FK_INTEGRITY_AUDIT = """
-WITH e1 AS (
-  SELECT 'orders->customer' AS fk, count(*) AS n_rows,
-         sum((c.c_custkey IS NULL)::BIGINT) AS n_orphans
-  FROM orders o LEFT JOIN (SELECT DISTINCT c_custkey FROM customer) c ON o.o_custkey = c.c_custkey
-),
-e2 AS (
-  SELECT 'lineitem->orders' AS fk, count(*) AS n_rows,
-         sum((o.o_orderkey IS NULL)::BIGINT) AS n_orphans
-  FROM lineitem l LEFT JOIN (SELECT DISTINCT o_orderkey FROM orders) o ON l.l_orderkey = o.o_orderkey
-),
-e3 AS (
-  SELECT 'lineitem->part' AS fk, count(*) AS n_rows,
-         sum((p.p_partkey IS NULL)::BIGINT) AS n_orphans
-  FROM lineitem l LEFT JOIN (SELECT DISTINCT p_partkey FROM part) p ON l.l_partkey = p.p_partkey
-),
-e4 AS (
-  SELECT 'lineitem->supplier' AS fk, count(*) AS n_rows,
-         sum((s.s_suppkey IS NULL)::BIGINT) AS n_orphans
-  FROM lineitem l LEFT JOIN (SELECT DISTINCT s_suppkey FROM supplier) s ON l.l_suppkey = s.s_suppkey
-)
-SELECT fk, n_rows, n_orphans::BIGINT AS n_orphans,
-       floor(n_orphans / n_rows * 1e6 + 0.5) / 1e6 AS orphan_rate
-FROM (SELECT * FROM e1 UNION ALL SELECT * FROM e2
-      UNION ALL SELECT * FROM e3 UNION ALL SELECT * FROM e4)
-"""
-
-QUERIES_EXT13["fk_integrity_audit"] = q_fk_integrity_audit
-ORACLES_EXT13["fk_integrity_audit"] = ORACLE_FK_INTEGRITY_AUDIT
-
-
 # --------------------------------------------------------------------------
 # calibration_bins: model-score calibration profile (reliability
 # diagram + expected calibration error). Score = logistic of the
@@ -1041,6 +1024,35 @@ ORACLES_EXT13["fk_integrity_audit"] = ORACLE_FK_INTEGRITY_AUDIT
 # --------------------------------------------------------------------------
 
 
+ORACLE_CALIBRATION_BINS = """
+WITH stats AS (
+  SELECT avg(value) AS mu, stddev_pop(value) AS sigma,
+         quantile_cont(value, 0.75) AS cut
+  FROM events
+),
+scored AS (
+  SELECT event_id,
+         floor(1.0 / (1.0 + exp(-(CASE WHEN sigma > 0 THEN (value - mu) / sigma ELSE 0.0 END))) * 1e6 + 0.5)::BIGINT
+             AS q_micro,
+         (value > cut)::BIGINT AS label
+  FROM events CROSS JOIN stats
+),
+binned AS (
+  SELECT least(q_micro // 100000, 9) AS bin, q_micro, label
+  FROM scored
+),
+tot AS (SELECT count(*)::DOUBLE AS n_total FROM binned)
+SELECT bin, count(*) AS n, sum(label)::BIGINT AS n_pos,
+       floor(sum(q_micro)::BIGINT / 1e6 / count(*) * 1e6 + 0.5) / 1e6 AS mean_score,
+       floor(sum(label) / count(*) * 1e6 + 0.5) / 1e6 AS pos_rate,
+       floor(abs(sum(q_micro)::BIGINT / 1e6 / count(*) - sum(label)::DOUBLE / count(*))
+             * count(*) / n_total * 1e6 + 0.5) / 1e6 AS ece_term
+FROM binned CROSS JOIN tot
+GROUP BY bin, n_total
+"""
+
+
+@query(oracle=ORACLE_CALIBRATION_BINS)
 def q_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events").select("event_id", "value")
     stats = ev.agg(
@@ -1107,37 +1119,6 @@ def q_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_CALIBRATION_BINS = """
-WITH stats AS (
-  SELECT avg(value) AS mu, stddev_pop(value) AS sigma,
-         quantile_cont(value, 0.75) AS cut
-  FROM events
-),
-scored AS (
-  SELECT event_id,
-         floor(1.0 / (1.0 + exp(-(CASE WHEN sigma > 0 THEN (value - mu) / sigma ELSE 0.0 END))) * 1e6 + 0.5)::BIGINT
-             AS q_micro,
-         (value > cut)::BIGINT AS label
-  FROM events CROSS JOIN stats
-),
-binned AS (
-  SELECT least(q_micro // 100000, 9) AS bin, q_micro, label
-  FROM scored
-),
-tot AS (SELECT count(*)::DOUBLE AS n_total FROM binned)
-SELECT bin, count(*) AS n, sum(label)::BIGINT AS n_pos,
-       floor(sum(q_micro)::BIGINT / 1e6 / count(*) * 1e6 + 0.5) / 1e6 AS mean_score,
-       floor(sum(label) / count(*) * 1e6 + 0.5) / 1e6 AS pos_rate,
-       floor(abs(sum(q_micro)::BIGINT / 1e6 / count(*) - sum(label)::DOUBLE / count(*))
-             * count(*) / n_total * 1e6 + 0.5) / 1e6 AS ece_term
-FROM binned CROSS JOIN tot
-GROUP BY bin, n_total
-"""
-
-QUERIES_EXT13["calibration_bins"] = q_calibration_bins
-ORACLES_EXT13["calibration_bins"] = ORACLE_CALIBRATION_BINS
-
-
 # --------------------------------------------------------------------------
 # gap_islands: consecutive-day activity streaks per user (the
 # gaps-and-islands pattern — user streaks, sensor uptime, SLA windows).
@@ -1153,6 +1134,40 @@ ORACLES_EXT13["calibration_bins"] = ORACLE_CALIBRATION_BINS
 # --------------------------------------------------------------------------
 
 
+ORACLE_GAP_ISLANDS = """
+WITH days AS (
+  SELECT DISTINCT user_id,
+         (CAST(ts AS DATE) - DATE '1970-01-01') AS day
+  FROM events
+),
+islands AS (
+  SELECT user_id, day,
+         day - dense_rank() OVER (PARTITION BY user_id ORDER BY day)
+             AS island
+  FROM days
+),
+streaks AS (
+  SELECT user_id, island, count(*) AS len, min(day) AS start_day
+  FROM islands GROUP BY user_id, island
+),
+best AS (
+  SELECT user_id, len, start_day,
+         row_number() OVER (PARTITION BY user_id
+                            ORDER BY len DESC, start_day ASC) AS rn
+  FROM streaks
+),
+counts AS (
+  SELECT user_id, count(*) AS n_streaks FROM streaks GROUP BY user_id
+)
+SELECT b.user_id, c.n_streaks,
+       b.len::BIGINT AS longest_streak,
+       b.start_day::BIGINT AS longest_start_day
+FROM best b JOIN counts c USING (user_id)
+WHERE b.rn = 1
+"""
+
+
+@query(oracle=ORACLE_GAP_ISLANDS)
 def q_gap_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     days = (
         _t(spark, sf_dir, "events")
@@ -1188,39 +1203,3 @@ def q_gap_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("start_day").alias("longest_start_day"),
         )
     )
-
-
-ORACLE_GAP_ISLANDS = """
-WITH days AS (
-  SELECT DISTINCT user_id,
-         (CAST(ts AS DATE) - DATE '1970-01-01') AS day
-  FROM events
-),
-islands AS (
-  SELECT user_id, day,
-         day - dense_rank() OVER (PARTITION BY user_id ORDER BY day)
-             AS island
-  FROM days
-),
-streaks AS (
-  SELECT user_id, island, count(*) AS len, min(day) AS start_day
-  FROM islands GROUP BY user_id, island
-),
-best AS (
-  SELECT user_id, len, start_day,
-         row_number() OVER (PARTITION BY user_id
-                            ORDER BY len DESC, start_day ASC) AS rn
-  FROM streaks
-),
-counts AS (
-  SELECT user_id, count(*) AS n_streaks FROM streaks GROUP BY user_id
-)
-SELECT b.user_id, c.n_streaks,
-       b.len::BIGINT AS longest_streak,
-       b.start_day::BIGINT AS longest_start_day
-FROM best b JOIN counts c USING (user_id)
-WHERE b.rn = 1
-"""
-
-QUERIES_EXT13["gap_islands"] = q_gap_islands
-ORACLES_EXT13["gap_islands"] = ORACLE_GAP_ISLANDS

@@ -1,4 +1,4 @@
-"""Query registry, wave 16: decision-support decorrelation suite.
+"""Queries, wave 16: decision-support decorrelation suite.
 
 Twelve classic warehouse query shapes (the TPC-H patterns not already
 covered by earlier waves, adapted to the reduced test schema — there is
@@ -61,8 +61,6 @@ Scale shapes, per the engine contract:
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -82,9 +80,7 @@ from fink_science_spark.functions.exact import (
     rev_micro as _rev_micro,
 )
 from fink_science_spark.queries import _t
-
-QUERIES_EXT14: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES_EXT14: dict[str, str] = {}
+from fink_science_spark.registry import query
 
 
 # --------------------------------------------------------------------------
@@ -123,6 +119,46 @@ def _europe_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_UNIT_CENTS_SQL = (
+    "CAST(floor(l_extendedprice / l_quantity * 100 + 0.5) AS BIGINT)"
+)
+
+
+ORACLE_MIN_COST_SUPPLIER = f"""
+WITH esup AS (
+  SELECT s_suppkey, s_name, s_acctbal, n_name
+  FROM supplier
+  JOIN nation ON s_nationkey = n_nationkey
+  JOIN region ON n_regionkey = r_regionkey
+  WHERE r_name = 'EUROPE'
+),
+epart AS (
+  SELECT p_partkey, p_name FROM part
+  WHERE p_type = 'STANDARD' AND p_size <= 15
+),
+supply AS (
+  SELECT l_partkey, l_suppkey, MIN({_UNIT_CENTS_SQL}) AS cost_cents
+  FROM lineitem
+  JOIN epart ON l_partkey = p_partkey
+  JOIN esup ON l_suppkey = s_suppkey
+  GROUP BY l_partkey, l_suppkey
+),
+best AS (
+  SELECT l_partkey, MIN(cost_cents) AS cost_cents FROM supply GROUP BY l_partkey
+)
+SELECT s_acctbal, s_name, n_name, supply.l_partkey AS p_partkey, p_name,
+       supply.cost_cents / 100.0 AS cost
+FROM supply
+JOIN best ON supply.l_partkey = best.l_partkey
+         AND supply.cost_cents = best.cost_cents
+JOIN esup ON supply.l_suppkey = s_suppkey
+JOIN epart ON supply.l_partkey = p_partkey
+ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
+LIMIT 100
+"""
+
+
+@query(oracle=ORACLE_MIN_COST_SUPPLIER)
 def q_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     esup = _europe_suppliers(spark, sf_dir)
     epart = (
@@ -164,47 +200,6 @@ def q_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_UNIT_CENTS_SQL = (
-    "CAST(floor(l_extendedprice / l_quantity * 100 + 0.5) AS BIGINT)"
-)
-
-ORACLE_MIN_COST_SUPPLIER = f"""
-WITH esup AS (
-  SELECT s_suppkey, s_name, s_acctbal, n_name
-  FROM supplier
-  JOIN nation ON s_nationkey = n_nationkey
-  JOIN region ON n_regionkey = r_regionkey
-  WHERE r_name = 'EUROPE'
-),
-epart AS (
-  SELECT p_partkey, p_name FROM part
-  WHERE p_type = 'STANDARD' AND p_size <= 15
-),
-supply AS (
-  SELECT l_partkey, l_suppkey, MIN({_UNIT_CENTS_SQL}) AS cost_cents
-  FROM lineitem
-  JOIN epart ON l_partkey = p_partkey
-  JOIN esup ON l_suppkey = s_suppkey
-  GROUP BY l_partkey, l_suppkey
-),
-best AS (
-  SELECT l_partkey, MIN(cost_cents) AS cost_cents FROM supply GROUP BY l_partkey
-)
-SELECT s_acctbal, s_name, n_name, supply.l_partkey AS p_partkey, p_name,
-       supply.cost_cents / 100.0 AS cost
-FROM supply
-JOIN best ON supply.l_partkey = best.l_partkey
-         AND supply.cost_cents = best.cost_cents
-JOIN esup ON supply.l_suppkey = s_suppkey
-JOIN epart ON supply.l_partkey = p_partkey
-ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
-LIMIT 100
-"""
-
-QUERIES_EXT14["min_cost_supplier"] = q_min_cost_supplier
-ORACLES_EXT14["min_cost_supplier"] = ORACLE_MIN_COST_SUPPLIER
-
-
 # --------------------------------------------------------------------------
 # market_share (Q8 shape): per order-year, the fraction of revenue on
 # sales to ASIA-region customers that was supplied by NATION_5
@@ -220,6 +215,38 @@ ORACLES_EXT14["min_cost_supplier"] = ORACLE_MIN_COST_SUPPLIER
 # --------------------------------------------------------------------------
 
 
+ORACLE_MARKET_SHARE = f"""
+WITH joined AS (
+  SELECT year(o_orderdate) AS o_year,
+         {_REV_MICRO_SQL} AS rev_micro,
+         (SELECT n_name FROM nation WHERE n_nationkey = s_nationkey) = 'NATION_5'
+           AS is_n5
+  FROM lineitem
+  JOIN orders ON l_orderkey = o_orderkey
+  JOIN customer ON o_custkey = c_custkey
+  JOIN supplier ON l_suppkey = s_suppkey
+  WHERE c_nationkey IN (
+    SELECT n_nationkey FROM nation
+    JOIN region ON n_regionkey = r_regionkey
+    WHERE r_name = 'ASIA'
+  )
+),
+agg AS (
+  SELECT o_year,
+         CAST(SUM(CASE WHEN is_n5 THEN rev_micro ELSE 0 END) AS BIGINT) AS n5_micro,
+         CAST(SUM(rev_micro) AS BIGINT) AS total_micro
+  FROM joined GROUP BY o_year
+)
+SELECT o_year,
+       CASE WHEN total_micro > 0
+            THEN floor(n5_micro / total_micro * 1e6 + 0.5) / 1e6 END
+         AS mkt_share,
+       total_micro / 10000.0 AS total_revenue
+FROM agg
+"""
+
+
+@query(oracle=ORACLE_MARKET_SHARE)
 def q_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     nat = _t(spark, sf_dir, "nation")
     reg = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
@@ -265,40 +292,6 @@ def q_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_MARKET_SHARE = f"""
-WITH joined AS (
-  SELECT year(o_orderdate) AS o_year,
-         {_REV_MICRO_SQL} AS rev_micro,
-         (SELECT n_name FROM nation WHERE n_nationkey = s_nationkey) = 'NATION_5'
-           AS is_n5
-  FROM lineitem
-  JOIN orders ON l_orderkey = o_orderkey
-  JOIN customer ON o_custkey = c_custkey
-  JOIN supplier ON l_suppkey = s_suppkey
-  WHERE c_nationkey IN (
-    SELECT n_nationkey FROM nation
-    JOIN region ON n_regionkey = r_regionkey
-    WHERE r_name = 'ASIA'
-  )
-),
-agg AS (
-  SELECT o_year,
-         CAST(SUM(CASE WHEN is_n5 THEN rev_micro ELSE 0 END) AS BIGINT) AS n5_micro,
-         CAST(SUM(rev_micro) AS BIGINT) AS total_micro
-  FROM joined GROUP BY o_year
-)
-SELECT o_year,
-       CASE WHEN total_micro > 0
-            THEN floor(n5_micro / total_micro * 1e6 + 0.5) / 1e6 END
-         AS mkt_share,
-       total_micro / 10000.0 AS total_revenue
-FROM agg
-"""
-
-QUERIES_EXT14["market_share"] = q_market_share
-ORACLES_EXT14["market_share"] = ORACLE_MARKET_SHARE
-
-
 # --------------------------------------------------------------------------
 # product_profit (Q9 shape): profit per (supplier nation, order year)
 # on parts whose name contains 'bolt'. Without a supplycost column the
@@ -313,6 +306,26 @@ ORACLES_EXT14["market_share"] = ORACLE_MARKET_SHARE
 # --------------------------------------------------------------------------
 
 
+ORACLE_PRODUCT_PROFIT = f"""
+WITH profit AS (
+  SELECT n_name, year(o_orderdate) AS o_year,
+         {_REV_MICRO_SQL}
+           - {_cents_sql('p_retailprice')}
+             * CAST(l_quantity AS BIGINT) * 100 AS profit_micro
+  FROM lineitem
+  JOIN part ON l_partkey = p_partkey
+  JOIN supplier ON l_suppkey = s_suppkey
+  JOIN nation ON s_nationkey = n_nationkey
+  JOIN orders ON l_orderkey = o_orderkey
+  WHERE p_name LIKE '%bolt%'
+)
+SELECT n_name, o_year,
+       CAST(SUM(profit_micro) AS BIGINT) / 10000.0 AS profit
+FROM profit GROUP BY n_name, o_year
+"""
+
+
+@query(oracle=ORACLE_PRODUCT_PROFIT)
 def q_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts = (
         _t(spark, sf_dir, "part")
@@ -357,28 +370,6 @@ def q_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_PRODUCT_PROFIT = f"""
-WITH profit AS (
-  SELECT n_name, year(o_orderdate) AS o_year,
-         {_REV_MICRO_SQL}
-           - {_cents_sql('p_retailprice')}
-             * CAST(l_quantity AS BIGINT) * 100 AS profit_micro
-  FROM lineitem
-  JOIN part ON l_partkey = p_partkey
-  JOIN supplier ON l_suppkey = s_suppkey
-  JOIN nation ON s_nationkey = n_nationkey
-  JOIN orders ON l_orderkey = o_orderkey
-  WHERE p_name LIKE '%bolt%'
-)
-SELECT n_name, o_year,
-       CAST(SUM(profit_micro) AS BIGINT) / 10000.0 AS profit
-FROM profit GROUP BY n_name, o_year
-"""
-
-QUERIES_EXT14["product_profit"] = q_product_profit
-ORACLES_EXT14["product_profit"] = ORACLE_PRODUCT_PROFIT
-
-
 # --------------------------------------------------------------------------
 # important_parts (Q11 shape): parts whose supplied value (revenue from
 # AMERICA-region suppliers) exceeds 2× the average part's value.
@@ -399,6 +390,27 @@ ORACLES_EXT14["product_profit"] = ORACLE_PRODUCT_PROFIT
 # --------------------------------------------------------------------------
 
 
+ORACLE_IMPORTANT_PARTS = f"""
+WITH per_part AS (
+  SELECT l_partkey,
+         CAST(SUM({_cents_sql('l_extendedprice')}) AS BIGINT) AS value_cents
+  FROM lineitem
+  WHERE l_suppkey IN (
+    SELECT s_suppkey FROM supplier
+    JOIN nation ON s_nationkey = n_nationkey
+    JOIN region ON n_regionkey = r_regionkey
+    WHERE r_name = 'AMERICA'
+  )
+  GROUP BY l_partkey
+)
+SELECT l_partkey AS p_partkey, value_cents / 100.0 AS value
+FROM per_part
+WHERE value_cents > (SELECT (2 * CAST(SUM(value_cents) AS BIGINT)) // COUNT(*)
+                     FROM per_part)
+"""
+
+
+@query(oracle=ORACLE_IMPORTANT_PARTS)
 def q_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     nat = _t(spark, sf_dir, "nation")
     reg = _t(spark, sf_dir, "region").filter(F.col("r_name") == "AMERICA")
@@ -438,29 +450,6 @@ def q_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_IMPORTANT_PARTS = f"""
-WITH per_part AS (
-  SELECT l_partkey,
-         CAST(SUM({_cents_sql('l_extendedprice')}) AS BIGINT) AS value_cents
-  FROM lineitem
-  WHERE l_suppkey IN (
-    SELECT s_suppkey FROM supplier
-    JOIN nation ON s_nationkey = n_nationkey
-    JOIN region ON n_regionkey = r_regionkey
-    WHERE r_name = 'AMERICA'
-  )
-  GROUP BY l_partkey
-)
-SELECT l_partkey AS p_partkey, value_cents / 100.0 AS value
-FROM per_part
-WHERE value_cents > (SELECT (2 * CAST(SUM(value_cents) AS BIGINT)) // COUNT(*)
-                     FROM per_part)
-"""
-
-QUERIES_EXT14["important_parts"] = q_important_parts
-ORACLES_EXT14["important_parts"] = ORACLE_IMPORTANT_PARTS
-
-
 # --------------------------------------------------------------------------
 # custorder_distribution (Q13 shape): distribution of customers by how
 # many non-'4-*'-priority orders they placed, INCLUDING the zero bucket
@@ -473,22 +462,6 @@ ORACLES_EXT14["important_parts"] = ORACLE_IMPORTANT_PARTS
 # zero bucket comes back via left join + coalesce(0). Final histogram
 # agg is 2-level (c_count has ~tens of distinct values).
 # --------------------------------------------------------------------------
-
-
-def q_custorder_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    per_cust = (
-        _t(spark, sf_dir, "orders")
-        .filter(~F.col("o_orderpriority").like("4%"))
-        .groupBy("o_custkey")
-        .agg(F.count("*").alias("n_orders"))
-    )
-    cust = _t(spark, sf_dir, "customer").select("c_custkey")
-    return (
-        cust.join(per_cust, cust.c_custkey == per_cust.o_custkey, "left")
-        .select(F.coalesce(F.col("n_orders"), F.lit(0)).alias("c_count"))
-        .groupBy("c_count")
-        .agg(F.count("*").alias("custdist"))
-    )
 
 
 ORACLE_CUSTORDER_DISTRIBUTION = """
@@ -505,8 +478,22 @@ FROM (
 GROUP BY c_count
 """
 
-QUERIES_EXT14["custorder_distribution"] = q_custorder_distribution
-ORACLES_EXT14["custorder_distribution"] = ORACLE_CUSTORDER_DISTRIBUTION
+
+@query(oracle=ORACLE_CUSTORDER_DISTRIBUTION)
+def q_custorder_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
+    per_cust = (
+        _t(spark, sf_dir, "orders")
+        .filter(~F.col("o_orderpriority").like("4%"))
+        .groupBy("o_custkey")
+        .agg(F.count("*").alias("n_orders"))
+    )
+    cust = _t(spark, sf_dir, "customer").select("c_custkey")
+    return (
+        cust.join(per_cust, cust.c_custkey == per_cust.o_custkey, "left")
+        .select(F.coalesce(F.col("n_orders"), F.lit(0)).alias("c_count"))
+        .groupBy("c_count")
+        .agg(F.count("*").alias("custdist"))
+    )
 
 
 # --------------------------------------------------------------------------
@@ -522,6 +509,22 @@ ORACLES_EXT14["custorder_distribution"] = ORACLE_CUSTORDER_DISTRIBUTION
 # --------------------------------------------------------------------------
 
 
+ORACLE_TOP_SUPPLIER = f"""
+WITH rev AS (
+  SELECT l_suppkey,
+         CAST(SUM({_REV_MICRO_SQL}) AS BIGINT) AS total_micro
+  FROM lineitem
+  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+    AND l_shipdate <  TIMESTAMP '1996-04-01'
+  GROUP BY l_suppkey
+)
+SELECT s_suppkey, s_name, total_micro / 10000.0 AS total_revenue
+FROM rev JOIN supplier ON l_suppkey = s_suppkey
+WHERE total_micro = (SELECT MAX(total_micro) FROM rev)
+"""
+
+
+@query(oracle=ORACLE_TOP_SUPPLIER)
 def q_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
@@ -550,24 +553,6 @@ def q_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_TOP_SUPPLIER = f"""
-WITH rev AS (
-  SELECT l_suppkey,
-         CAST(SUM({_REV_MICRO_SQL}) AS BIGINT) AS total_micro
-  FROM lineitem
-  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-    AND l_shipdate <  TIMESTAMP '1996-04-01'
-  GROUP BY l_suppkey
-)
-SELECT s_suppkey, s_name, total_micro / 10000.0 AS total_revenue
-FROM rev JOIN supplier ON l_suppkey = s_suppkey
-WHERE total_micro = (SELECT MAX(total_micro) FROM rev)
-"""
-
-QUERIES_EXT14["top_supplier"] = q_top_supplier
-ORACLES_EXT14["top_supplier"] = ORACLE_TOP_SUPPLIER
-
-
 # --------------------------------------------------------------------------
 # supplier_part_counts (Q16 shape): how many distinct suppliers supply
 # each surviving (brand, type, size) combination — excluding one brand,
@@ -586,6 +571,19 @@ ORACLES_EXT14["top_supplier"] = ORACLE_TOP_SUPPLIER
 _SPC_SIZES = (1, 4, 9, 16, 25, 36, 49)
 
 
+ORACLE_SUPPLIER_PART_COUNTS = f"""
+SELECT p_brand, p_type, p_size, COUNT(DISTINCT l_suppkey) AS supplier_cnt
+FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem) supply
+JOIN part ON l_partkey = p_partkey
+WHERE p_brand <> 'Brand#5'
+  AND p_type <> 'PROMO'
+  AND p_size IN {_SPC_SIZES!r}
+  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
+GROUP BY p_brand, p_type, p_size
+"""
+
+
+@query(oracle=ORACLE_SUPPLIER_PART_COUNTS)
 def q_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     supply = (
         _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey").distinct()
@@ -616,21 +614,6 @@ def q_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_SUPPLIER_PART_COUNTS = f"""
-SELECT p_brand, p_type, p_size, COUNT(DISTINCT l_suppkey) AS supplier_cnt
-FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem) supply
-JOIN part ON l_partkey = p_partkey
-WHERE p_brand <> 'Brand#5'
-  AND p_type <> 'PROMO'
-  AND p_size IN {_SPC_SIZES!r}
-  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-GROUP BY p_brand, p_type, p_size
-"""
-
-QUERIES_EXT14["supplier_part_counts"] = q_supplier_part_counts
-ORACLES_EXT14["supplier_part_counts"] = ORACLE_SUPPLIER_PART_COUNTS
-
-
 # --------------------------------------------------------------------------
 # small_qty_revenue (Q17 shape): average yearly revenue lost if Brand#3
 # orders below 20% of that part's average quantity were not filled.
@@ -646,6 +629,24 @@ ORACLES_EXT14["supplier_part_counts"] = ORACLE_SUPPLIER_PART_COUNTS
 # --------------------------------------------------------------------------
 
 
+ORACLE_SMALL_QTY_REVENUE = f"""
+WITH li AS (
+  SELECT l_partkey, l_quantity,
+         {_cents_sql('l_extendedprice')} AS price_cents
+  FROM lineitem
+  WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_brand = 'Brand#3')
+),
+qlim AS (
+  SELECT l_partkey, 0.2 * AVG(l_quantity) AS qty_limit
+  FROM li GROUP BY l_partkey
+)
+SELECT CAST(SUM(price_cents) AS BIGINT) / 100.0 / 7.0 AS avg_yearly
+FROM li JOIN qlim USING (l_partkey)
+WHERE l_quantity < qty_limit
+"""
+
+
+@query(oracle=ORACLE_SMALL_QTY_REVENUE)
 def q_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     b3 = (
         _t(spark, sf_dir, "part")
@@ -667,26 +668,6 @@ def q_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_SMALL_QTY_REVENUE = f"""
-WITH li AS (
-  SELECT l_partkey, l_quantity,
-         {_cents_sql('l_extendedprice')} AS price_cents
-  FROM lineitem
-  WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_brand = 'Brand#3')
-),
-qlim AS (
-  SELECT l_partkey, 0.2 * AVG(l_quantity) AS qty_limit
-  FROM li GROUP BY l_partkey
-)
-SELECT CAST(SUM(price_cents) AS BIGINT) / 100.0 / 7.0 AS avg_yearly
-FROM li JOIN qlim USING (l_partkey)
-WHERE l_quantity < qty_limit
-"""
-
-QUERIES_EXT14["small_qty_revenue"] = q_small_qty_revenue
-ORACLES_EXT14["small_qty_revenue"] = ORACLE_SMALL_QTY_REVENUE
-
-
 # --------------------------------------------------------------------------
 # large_volume_customers (Q18 shape): customers whose single order
 # carries more than 300 units. The classic `o_orderkey IN (SELECT
@@ -700,6 +681,22 @@ ORACLES_EXT14["small_qty_revenue"] = ORACLE_SMALL_QTY_REVENUE
 # --------------------------------------------------------------------------
 
 
+ORACLE_LARGE_VOLUME_CUSTOMERS = """
+WITH big AS (
+  SELECT l_orderkey, CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty
+  FROM lineitem GROUP BY l_orderkey HAVING SUM(CAST(l_quantity AS BIGINT)) > 300
+)
+SELECT c_name, c_custkey, o_orderkey, CAST(o_orderdate AS DATE) AS o_orderdate,
+       o_totalprice, sum_qty
+FROM big
+JOIN orders ON l_orderkey = o_orderkey
+JOIN customer ON o_custkey = c_custkey
+ORDER BY o_totalprice DESC, o_orderkey
+LIMIT 100
+"""
+
+
+@query(oracle=ORACLE_LARGE_VOLUME_CUSTOMERS)
 def q_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     big = (
         _t(spark, sf_dir, "lineitem")
@@ -727,24 +724,6 @@ def q_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_LARGE_VOLUME_CUSTOMERS = """
-WITH big AS (
-  SELECT l_orderkey, CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty
-  FROM lineitem GROUP BY l_orderkey HAVING SUM(CAST(l_quantity AS BIGINT)) > 300
-)
-SELECT c_name, c_custkey, o_orderkey, CAST(o_orderdate AS DATE) AS o_orderdate,
-       o_totalprice, sum_qty
-FROM big
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-ORDER BY o_totalprice DESC, o_orderkey
-LIMIT 100
-"""
-
-QUERIES_EXT14["large_volume_customers"] = q_large_volume_customers
-ORACLES_EXT14["large_volume_customers"] = ORACLE_LARGE_VOLUME_CUSTOMERS
-
-
 # --------------------------------------------------------------------------
 # disjunctive_revenue (Q19 shape): revenue from three brand/size/qty
 # bands OR-ed together across the part⋈lineitem join. Catalyst pushes a
@@ -762,6 +741,21 @@ _DJ_BANDS = (
 )
 
 
+_DJ_BANDS_SQL = " OR ".join(
+    f"(p_brand = '{b}' AND p_size BETWEEN 1 AND {s}"
+    f" AND l_quantity BETWEEN {ql} AND {qh})"
+    for b, s, ql, qh in _DJ_BANDS
+)
+
+
+ORACLE_DISJUNCTIVE_REVENUE = f"""
+SELECT CAST(SUM({_REV_MICRO_SQL}) AS BIGINT) / 10000.0 AS revenue
+FROM lineitem JOIN part ON l_partkey = p_partkey
+WHERE {_DJ_BANDS_SQL}
+"""
+
+
+@query(oracle=ORACLE_DISJUNCTIVE_REVENUE)
 def q_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     brands = [b for b, _, _, _ in _DJ_BANDS]
     parts = (
@@ -789,22 +783,6 @@ def q_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DJ_BANDS_SQL = " OR ".join(
-    f"(p_brand = '{b}' AND p_size BETWEEN 1 AND {s}"
-    f" AND l_quantity BETWEEN {ql} AND {qh})"
-    for b, s, ql, qh in _DJ_BANDS
-)
-
-ORACLE_DISJUNCTIVE_REVENUE = f"""
-SELECT CAST(SUM({_REV_MICRO_SQL}) AS BIGINT) / 10000.0 AS revenue
-FROM lineitem JOIN part ON l_partkey = p_partkey
-WHERE {_DJ_BANDS_SQL}
-"""
-
-QUERIES_EXT14["disjunctive_revenue"] = q_disjunctive_revenue
-ORACLES_EXT14["disjunctive_revenue"] = ORACLE_DISJUNCTIVE_REVENUE
-
-
 # --------------------------------------------------------------------------
 # sole_late_supplier (Q21 shape): suppliers who were the ONLY late
 # shipper on a finished multi-supplier order ("late" = shipped more
@@ -829,6 +807,35 @@ ORACLES_EXT14["disjunctive_revenue"] = ORACLE_DISJUNCTIVE_REVENUE
 # --------------------------------------------------------------------------
 
 
+ORACLE_SOLE_LATE_SUPPLIER = """
+WITH l1 AS (
+  SELECT l_orderkey, l_suppkey, l_shipdate, o_orderdate
+  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+  WHERE o_orderstatus = 'F'
+)
+SELECT s_name, COUNT(*) AS numwait
+FROM (
+  SELECT DISTINCT a.l_orderkey, a.l_suppkey
+  FROM l1 a
+  WHERE a.l_shipdate > a.o_orderdate + INTERVAL 90 DAY
+    AND EXISTS (
+      SELECT 1 FROM l1 b
+      WHERE b.l_orderkey = a.l_orderkey AND b.l_suppkey <> a.l_suppkey
+    )
+    AND NOT EXISTS (
+      SELECT 1 FROM l1 c
+      WHERE c.l_orderkey = a.l_orderkey AND c.l_suppkey <> a.l_suppkey
+        AND c.l_shipdate > c.o_orderdate + INTERVAL 90 DAY
+    )
+) w
+JOIN supplier ON w.l_suppkey = s_suppkey
+GROUP BY s_name
+ORDER BY numwait DESC, s_name
+LIMIT 50
+"""
+
+
+@query(oracle=ORACLE_SOLE_LATE_SUPPLIER)
 def q_sole_late_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = (
         _t(spark, sf_dir, "orders")
@@ -883,37 +890,6 @@ def q_sole_late_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_SOLE_LATE_SUPPLIER = """
-WITH l1 AS (
-  SELECT l_orderkey, l_suppkey, l_shipdate, o_orderdate
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-  WHERE o_orderstatus = 'F'
-)
-SELECT s_name, COUNT(*) AS numwait
-FROM (
-  SELECT DISTINCT a.l_orderkey, a.l_suppkey
-  FROM l1 a
-  WHERE a.l_shipdate > a.o_orderdate + INTERVAL 90 DAY
-    AND EXISTS (
-      SELECT 1 FROM l1 b
-      WHERE b.l_orderkey = a.l_orderkey AND b.l_suppkey <> a.l_suppkey
-    )
-    AND NOT EXISTS (
-      SELECT 1 FROM l1 c
-      WHERE c.l_orderkey = a.l_orderkey AND c.l_suppkey <> a.l_suppkey
-        AND c.l_shipdate > c.o_orderdate + INTERVAL 90 DAY
-    )
-) w
-JOIN supplier ON w.l_suppkey = s_suppkey
-GROUP BY s_name
-ORDER BY numwait DESC, s_name
-LIMIT 50
-"""
-
-QUERIES_EXT14["sole_late_supplier"] = q_sole_late_supplier
-ORACLES_EXT14["sole_late_supplier"] = ORACLE_SOLE_LATE_SUPPLIER
-
-
 # --------------------------------------------------------------------------
 # dormant_customers (Q22 shape): per nation (over a 5-nation segment),
 # the count and total balance of above-average-balance customers with
@@ -930,33 +906,6 @@ ORACLES_EXT14["sole_late_supplier"] = ORACLE_SOLE_LATE_SUPPLIER
 
 _DORMANT_NATIONS = (1, 6, 11, 16, 21)
 _DORMANT_CUTOFF = "2000-01-01"
-
-
-def q_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = (
-        _t(spark, sf_dir, "customer")
-        .filter(F.col("c_nationkey").isin(*_DORMANT_NATIONS))
-        .select("c_custkey", "c_nationkey", _cents("c_acctbal").alias("acct_cents"))
-    )
-    pos = cust.filter(F.col("acct_cents") > 0).agg(
-        F.count("*").alias("n_pos"), F.sum("acct_cents").alias("pos_total_cents")
-    )
-    recent = (
-        _t(spark, sf_dir, "orders")
-        .filter(F.col("o_orderdate") >= _DORMANT_CUTOFF)
-        .select("o_custkey")
-        .distinct()
-    )
-    rich = cust.crossJoin(F.broadcast(pos)).filter(
-        F.col("acct_cents") * F.col("n_pos") > F.col("pos_total_cents")
-    )
-    dormant = rich.join(
-        recent, rich.c_custkey == recent.o_custkey, "left_anti"
-    )
-    return dormant.groupBy("c_nationkey").agg(
-        F.count("*").alias("numcust"),
-        (F.sum("acct_cents") / F.lit(100.0)).alias("totacctbal"),
-    )
 
 
 ORACLE_DORMANT_CUSTOMERS = f"""
@@ -983,5 +932,30 @@ WHERE acct_cents * n_pos > pos_total_cents
 GROUP BY c_nationkey
 """
 
-QUERIES_EXT14["dormant_customers"] = q_dormant_customers
-ORACLES_EXT14["dormant_customers"] = ORACLE_DORMANT_CUSTOMERS
+
+@query(oracle=ORACLE_DORMANT_CUSTOMERS)
+def q_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    cust = (
+        _t(spark, sf_dir, "customer")
+        .filter(F.col("c_nationkey").isin(*_DORMANT_NATIONS))
+        .select("c_custkey", "c_nationkey", _cents("c_acctbal").alias("acct_cents"))
+    )
+    pos = cust.filter(F.col("acct_cents") > 0).agg(
+        F.count("*").alias("n_pos"), F.sum("acct_cents").alias("pos_total_cents")
+    )
+    recent = (
+        _t(spark, sf_dir, "orders")
+        .filter(F.col("o_orderdate") >= _DORMANT_CUTOFF)
+        .select("o_custkey")
+        .distinct()
+    )
+    rich = cust.crossJoin(F.broadcast(pos)).filter(
+        F.col("acct_cents") * F.col("n_pos") > F.col("pos_total_cents")
+    )
+    dormant = rich.join(
+        recent, rich.c_custkey == recent.o_custkey, "left_anti"
+    )
+    return dormant.groupBy("c_nationkey").agg(
+        F.count("*").alias("numcust"),
+        (F.sum("acct_cents") / F.lit(100.0)).alias("totacctbal"),
+    )

@@ -1,4 +1,4 @@
-"""Query registry, wave 17: scale-ops planning family.
+"""Queries, wave 17: scale-ops planning family.
 
 The diagnostics and layout planners an operator actually runs BEFORE
 pointing a 1000-executor job at 100 TB — each one an engine-native
@@ -38,16 +38,12 @@ Scale shapes, per the engine contract:
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from fink_science_spark.queries import _t
 from fink_science_spark.queries_ext12 import _halfup6
-
-QUERIES_EXT15: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES_EXT15: dict[str, str] = {}
+from fink_science_spark.registry import query
 
 
 # --------------------------------------------------------------------------
@@ -67,6 +63,30 @@ ORACLES_EXT15: dict[str, str] = {}
 _SKEW_KEYS = ("l_partkey", "l_suppkey", "l_orderkey")
 
 
+def _skew_report_sql(key: str) -> str:
+    return f"""
+  SELECT '{key}' AS key_col,
+         CAST(SUM(cnt) AS BIGINT) AS n_rows,
+         COUNT(*) AS n_keys,
+         MAX(cnt) AS max_cnt,
+         (SELECT MAX(k) FROM counts_{key}
+          WHERE cnt = (SELECT MAX(cnt) FROM counts_{key})) AS top_key,
+         floor(CAST(MAX(cnt) AS DOUBLE) * COUNT(*)
+               / CAST(SUM(cnt) AS BIGINT) * 1e6 + 0.5) / 1e6 AS skew_ratio
+  FROM counts_{key}"""
+
+
+ORACLE_PARTITION_SKEW_REPORT = (
+    "WITH "
+    + ", ".join(
+        f"counts_{k} AS (SELECT {k} AS k, COUNT(*) AS cnt FROM lineitem GROUP BY {k})"
+        for k in _SKEW_KEYS
+    )
+    + " UNION ALL ".join(_skew_report_sql(k) for k in _SKEW_KEYS)
+)
+
+
+@query(oracle=ORACLE_PARTITION_SKEW_REPORT)
 def q_partition_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     reports = []
@@ -103,32 +123,6 @@ def q_partition_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-def _skew_report_sql(key: str) -> str:
-    return f"""
-  SELECT '{key}' AS key_col,
-         CAST(SUM(cnt) AS BIGINT) AS n_rows,
-         COUNT(*) AS n_keys,
-         MAX(cnt) AS max_cnt,
-         (SELECT MAX(k) FROM counts_{key}
-          WHERE cnt = (SELECT MAX(cnt) FROM counts_{key})) AS top_key,
-         floor(CAST(MAX(cnt) AS DOUBLE) * COUNT(*)
-               / CAST(SUM(cnt) AS BIGINT) * 1e6 + 0.5) / 1e6 AS skew_ratio
-  FROM counts_{key}"""
-
-
-ORACLE_PARTITION_SKEW_REPORT = (
-    "WITH "
-    + ", ".join(
-        f"counts_{k} AS (SELECT {k} AS k, COUNT(*) AS cnt FROM lineitem GROUP BY {k})"
-        for k in _SKEW_KEYS
-    )
-    + " UNION ALL ".join(_skew_report_sql(k) for k in _SKEW_KEYS)
-)
-
-QUERIES_EXT15["partition_skew_report"] = q_partition_skew_report
-ORACLES_EXT15["partition_skew_report"] = ORACLE_PARTITION_SKEW_REPORT
-
-
 # --------------------------------------------------------------------------
 # zipf_skew_fit: least-squares fit of ln(freq) against ln(rank) over
 # the top-K heaviest l_partkey values — the Zipf exponent s (slope
@@ -157,6 +151,46 @@ ORACLES_EXT15["partition_skew_report"] = ORACLE_PARTITION_SKEW_REPORT
 _ZIPF_TOP_K = 100
 
 
+ORACLE_ZIPF_SKEW_FIT = f"""
+WITH counts AS (
+  SELECT l_partkey, COUNT(*) AS cnt FROM lineitem GROUP BY l_partkey
+),
+top AS (
+  SELECT cnt, ROW_NUMBER() OVER (ORDER BY cnt DESC, l_partkey ASC) AS rank
+  FROM counts QUALIFY rank <= {_ZIPF_TOP_K}
+),
+q AS (
+  SELECT CAST(floor(ln(CAST(rank AS DOUBLE)) * 1e6 + 0.5) AS BIGINT) AS xq,
+         CAST(floor(ln(CAST(cnt AS DOUBLE)) * 1e6 + 0.5) AS BIGINT) AS yq
+  FROM top
+),
+s AS (
+  SELECT COUNT(*) AS n,
+         CAST(SUM(xq) AS BIGINT) AS sx, CAST(SUM(yq) AS BIGINT) AS sy,
+         CAST(SUM(xq * xq) AS BIGINT) AS sxx,
+         CAST(SUM(xq * yq) AS BIGINT) AS sxy,
+         CAST(SUM(yq * yq) AS BIGINT) AS syy
+  FROM q
+)
+SELECT n,
+       CASE WHEN n * sxx - sx * sx > 0 THEN
+         floor((n * sxy - sx * sy) / (n * sxx - sx * sx) * 1e6 + 0.5) / 1e6
+       END AS slope,
+       CASE WHEN n * sxx - sx * sx > 0 THEN
+         floor((sy - ((n * sxy - sx * sy) / (n * sxx - sx * sx)) * sx)
+               / n / 1e6 * 1e6 + 0.5) / 1e6
+       END AS intercept,
+       CASE WHEN n * sxx - sx * sx > 0 AND n * syy - sy * sy > 0 THEN
+         floor(CAST(n * sxy - sx * sy AS DOUBLE)
+               * CAST(n * sxy - sx * sy AS DOUBLE)
+               / (CAST(n * sxx - sx * sx AS DOUBLE)
+                  * CAST(n * syy - sy * sy AS DOUBLE)) * 1e6 + 0.5) / 1e6
+       END AS r2
+FROM s
+"""
+
+
+@query(oracle=ORACLE_ZIPF_SKEW_FIT)
 def q_zipf_skew_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = (
         _t(spark, sf_dir, "lineitem")
@@ -215,48 +249,6 @@ def q_zipf_skew_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_ZIPF_SKEW_FIT = f"""
-WITH counts AS (
-  SELECT l_partkey, COUNT(*) AS cnt FROM lineitem GROUP BY l_partkey
-),
-top AS (
-  SELECT cnt, ROW_NUMBER() OVER (ORDER BY cnt DESC, l_partkey ASC) AS rank
-  FROM counts QUALIFY rank <= {_ZIPF_TOP_K}
-),
-q AS (
-  SELECT CAST(floor(ln(CAST(rank AS DOUBLE)) * 1e6 + 0.5) AS BIGINT) AS xq,
-         CAST(floor(ln(CAST(cnt AS DOUBLE)) * 1e6 + 0.5) AS BIGINT) AS yq
-  FROM top
-),
-s AS (
-  SELECT COUNT(*) AS n,
-         CAST(SUM(xq) AS BIGINT) AS sx, CAST(SUM(yq) AS BIGINT) AS sy,
-         CAST(SUM(xq * xq) AS BIGINT) AS sxx,
-         CAST(SUM(xq * yq) AS BIGINT) AS sxy,
-         CAST(SUM(yq * yq) AS BIGINT) AS syy
-  FROM q
-)
-SELECT n,
-       CASE WHEN n * sxx - sx * sx > 0 THEN
-         floor((n * sxy - sx * sy) / (n * sxx - sx * sx) * 1e6 + 0.5) / 1e6
-       END AS slope,
-       CASE WHEN n * sxx - sx * sx > 0 THEN
-         floor((sy - ((n * sxy - sx * sy) / (n * sxx - sx * sx)) * sx)
-               / n / 1e6 * 1e6 + 0.5) / 1e6
-       END AS intercept,
-       CASE WHEN n * sxx - sx * sx > 0 AND n * syy - sy * sy > 0 THEN
-         floor(CAST(n * sxy - sx * sy AS DOUBLE)
-               * CAST(n * sxy - sx * sy AS DOUBLE)
-               / (CAST(n * sxx - sx * sx AS DOUBLE)
-                  * CAST(n * syy - sy * sy AS DOUBLE)) * 1e6 + 0.5) / 1e6
-       END AS r2
-FROM s
-"""
-
-QUERIES_EXT15["zipf_skew_fit"] = q_zipf_skew_fit
-ORACLES_EXT15["zipf_skew_fit"] = ORACLE_ZIPF_SKEW_FIT
-
-
 # --------------------------------------------------------------------------
 # compaction_plan: greedy in-order bin packing of each directory's
 # files into ~target-byte output groups — the small-file compaction
@@ -277,23 +269,6 @@ ORACLES_EXT15["zipf_skew_fit"] = ORACLE_ZIPF_SKEW_FIT
 _COMPACT_TARGET = 2000  # bytes per output group (documents.n_chars units)
 
 
-def q_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents").select("source", "doc_id", "n_chars")
-    binned = docs.withColumn(
-        "bin",
-        F.expr(f"coalesce(sum(n_chars) over "
-               f"(partition by source order by doc_id "
-               f"rows between unbounded preceding and 1 preceding), 0)"
-               f" div {_COMPACT_TARGET}"),
-    )
-    return binned.groupBy("source", "bin").agg(
-        F.count("*").alias("n_files"),
-        F.sum("n_chars").alias("total_bytes"),
-        F.min("doc_id").alias("first_doc"),
-        F.max("doc_id").alias("last_doc"),
-    )
-
-
 ORACLE_COMPACTION_PLAN = f"""
 WITH binned AS (
   SELECT source, doc_id, n_chars,
@@ -309,8 +284,23 @@ SELECT source, bin, COUNT(*) AS n_files,
 FROM binned GROUP BY source, bin
 """
 
-QUERIES_EXT15["compaction_plan"] = q_compaction_plan
-ORACLES_EXT15["compaction_plan"] = ORACLE_COMPACTION_PLAN
+
+@query(oracle=ORACLE_COMPACTION_PLAN)
+def q_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = _t(spark, sf_dir, "documents").select("source", "doc_id", "n_chars")
+    binned = docs.withColumn(
+        "bin",
+        F.expr(f"coalesce(sum(n_chars) over "
+               f"(partition by source order by doc_id "
+               f"rows between unbounded preceding and 1 preceding), 0)"
+               f" div {_COMPACT_TARGET}"),
+    )
+    return binned.groupBy("source", "bin").agg(
+        F.count("*").alias("n_files"),
+        F.sum("n_chars").alias("total_bytes"),
+        F.min("doc_id").alias("first_doc"),
+        F.max("doc_id").alias("last_doc"),
+    )
 
 
 # --------------------------------------------------------------------------
@@ -332,6 +322,25 @@ ORACLES_EXT15["compaction_plan"] = ORACLE_COMPACTION_PLAN
 _RANGE_K = 8
 
 
+ORACLE_BALANCED_RANGES = f"""
+WITH counts AS (
+  SELECT l_partkey, COUNT(*) AS cnt FROM lineitem GROUP BY l_partkey
+),
+assigned AS (
+  SELECT l_partkey, cnt,
+         CAST(({_RANGE_K} * COALESCE(SUM(cnt) OVER (
+            ORDER BY l_partkey
+            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0))
+           // (SUM(cnt) OVER ()) AS BIGINT) AS bucket
+  FROM counts
+)
+SELECT bucket, MIN(l_partkey) AS lo_key, MAX(l_partkey) AS hi_key,
+       CAST(SUM(cnt) AS BIGINT) AS n_rows
+FROM assigned GROUP BY bucket
+"""
+
+
+@query(oracle=ORACLE_BALANCED_RANGES)
 def q_balanced_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = (
         _t(spark, sf_dir, "lineitem")
@@ -363,24 +372,3 @@ def q_balanced_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("l_partkey").alias("hi_key"),
         F.sum("cnt").alias("n_rows"),
     )
-
-
-ORACLE_BALANCED_RANGES = f"""
-WITH counts AS (
-  SELECT l_partkey, COUNT(*) AS cnt FROM lineitem GROUP BY l_partkey
-),
-assigned AS (
-  SELECT l_partkey, cnt,
-         CAST(({_RANGE_K} * COALESCE(SUM(cnt) OVER (
-            ORDER BY l_partkey
-            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0))
-           // (SUM(cnt) OVER ()) AS BIGINT) AS bucket
-  FROM counts
-)
-SELECT bucket, MIN(l_partkey) AS lo_key, MAX(l_partkey) AS hi_key,
-       CAST(SUM(cnt) AS BIGINT) AS n_rows
-FROM assigned GROUP BY bucket
-"""
-
-QUERIES_EXT15["balanced_ranges"] = q_balanced_ranges
-ORACLES_EXT15["balanced_ranges"] = ORACLE_BALANCED_RANGES

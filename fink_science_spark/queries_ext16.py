@@ -1,4 +1,4 @@
-"""Query registry, wave 18: multimodal sequence analysis.
+"""Queries, wave 18: multimodal sequence analysis.
 
 Two operators extending the multimodal family from per-blob statistics
 to ACROSS-FRAME sequence analysis — the video/audio shapes that need
@@ -34,15 +34,11 @@ Scale shapes, per the engine contract:
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from fink_science_spark.queries import _fan_out, _t
-
-QUERIES_EXT16: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES_EXT16: dict[str, str] = {}
+from fink_science_spark.registry import query
 
 
 # --------------------------------------------------------------------------
@@ -69,6 +65,30 @@ _VSC_CUT = 30.0
 assert _VSC_FRAMES <= _SEQ_STRIDE
 
 
+ORACLE_VIDEO_SCENE_CUTS = f"""
+WITH m AS (
+  SELECT doc_id, i AS frame_idx,
+         list_avg([('0x' || substr(md5(text || '#' || i), 2*j - 1, 2))::INT
+                   for j in generate_series(1, 16)]) AS luma
+  FROM documents, (SELECT unnest(generate_series(0, {_VSC_FRAMES - 1})) AS i)
+  WHERE text IS NOT NULL
+),
+j AS (
+  SELECT doc_id, frame_idx,
+         abs(luma - lag(luma) OVER (PARTITION BY doc_id ORDER BY frame_idx))
+           AS jump
+  FROM m
+)
+SELECT doc_id, COUNT(*) AS n_frames,
+       COALESCE(CAST(SUM((jump > {_VSC_CUT!r})::BIGINT) AS BIGINT), 0)
+         AS n_cuts,
+       MAX(jump) AS max_jump,
+       MIN(CASE WHEN jump > {_VSC_CUT!r} THEN frame_idx END) AS first_cut
+FROM j GROUP BY doc_id
+"""
+
+
+@query(oracle=ORACLE_VIDEO_SCENE_CUTS)
 def q_video_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fink_science_spark.operators.multimodal import image_matrix_stats
 
@@ -126,32 +146,6 @@ def q_video_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_VIDEO_SCENE_CUTS = f"""
-WITH m AS (
-  SELECT doc_id, i AS frame_idx,
-         list_avg([('0x' || substr(md5(text || '#' || i), 2*j - 1, 2))::INT
-                   for j in generate_series(1, 16)]) AS luma
-  FROM documents, (SELECT unnest(generate_series(0, {_VSC_FRAMES - 1})) AS i)
-  WHERE text IS NOT NULL
-),
-j AS (
-  SELECT doc_id, frame_idx,
-         abs(luma - lag(luma) OVER (PARTITION BY doc_id ORDER BY frame_idx))
-           AS jump
-  FROM m
-)
-SELECT doc_id, COUNT(*) AS n_frames,
-       COALESCE(CAST(SUM((jump > {_VSC_CUT!r})::BIGINT) AS BIGINT), 0)
-         AS n_cuts,
-       MAX(jump) AS max_jump,
-       MIN(CASE WHEN jump > {_VSC_CUT!r} THEN frame_idx END) AS first_cut
-FROM j GROUP BY doc_id
-"""
-
-QUERIES_EXT16["video_scene_cuts"] = q_video_scene_cuts
-ORACLES_EXT16["video_scene_cuts"] = ORACLE_VIDEO_SCENE_CUTS
-
-
 # --------------------------------------------------------------------------
 # audio_silence_map: window w of doc d has samples md5(text || '~' ||
 # w) (16 unsigned-8-bit PCM samples); loudness = mean |sample − 128|
@@ -166,6 +160,41 @@ _ASM_SILENT = 58.0
 assert _ASM_WINDOWS <= _SEQ_STRIDE
 
 
+ORACLE_AUDIO_SILENCE_MAP = f"""
+WITH m AS (
+  SELECT doc_id, i AS win_idx,
+         list_avg([abs(('0x' || substr(md5(text || '~' || i), 2*j - 1, 2))::INT
+                       - 128)
+                   for j in generate_series(1, 16)]) AS loudness
+  FROM (SELECT * FROM documents WHERE text IS NOT NULL) documents,
+       (SELECT unnest(generate_series(0, {_ASM_WINDOWS - 1})) AS i)
+),
+s AS (
+  SELECT doc_id, win_idx FROM m WHERE loudness < {_ASM_SILENT!r}
+),
+runs AS (
+  SELECT doc_id,
+         win_idx - ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY win_idx)
+           AS grp
+  FROM s
+),
+per AS (
+  SELECT doc_id, grp, COUNT(*) AS run_len FROM runs GROUP BY doc_id, grp
+),
+agg AS (
+  SELECT doc_id, CAST(SUM(run_len) AS BIGINT) AS n_silent,
+         MAX(run_len) AS longest_silence
+  FROM per GROUP BY doc_id
+)
+SELECT d.doc_id, {_ASM_WINDOWS} AS n_windows,
+       COALESCE(agg.n_silent, 0) AS n_silent,
+       COALESCE(agg.longest_silence, 0) AS longest_silence
+FROM (SELECT * FROM documents WHERE text IS NOT NULL) d
+LEFT JOIN agg ON d.doc_id = agg.doc_id
+"""
+
+
+@query(oracle=ORACLE_AUDIO_SILENCE_MAP)
 def q_audio_silence_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fink_science_spark.operators.multimodal import window_mad
 
@@ -238,40 +267,3 @@ def q_audio_silence_map(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce("n_silent", F.lit(0)).alias("n_silent"),
         F.coalesce("longest_silence", F.lit(0)).alias("longest_silence"),
     )
-
-
-ORACLE_AUDIO_SILENCE_MAP = f"""
-WITH m AS (
-  SELECT doc_id, i AS win_idx,
-         list_avg([abs(('0x' || substr(md5(text || '~' || i), 2*j - 1, 2))::INT
-                       - 128)
-                   for j in generate_series(1, 16)]) AS loudness
-  FROM (SELECT * FROM documents WHERE text IS NOT NULL) documents,
-       (SELECT unnest(generate_series(0, {_ASM_WINDOWS - 1})) AS i)
-),
-s AS (
-  SELECT doc_id, win_idx FROM m WHERE loudness < {_ASM_SILENT!r}
-),
-runs AS (
-  SELECT doc_id,
-         win_idx - ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY win_idx)
-           AS grp
-  FROM s
-),
-per AS (
-  SELECT doc_id, grp, COUNT(*) AS run_len FROM runs GROUP BY doc_id, grp
-),
-agg AS (
-  SELECT doc_id, CAST(SUM(run_len) AS BIGINT) AS n_silent,
-         MAX(run_len) AS longest_silence
-  FROM per GROUP BY doc_id
-)
-SELECT d.doc_id, {_ASM_WINDOWS} AS n_windows,
-       COALESCE(agg.n_silent, 0) AS n_silent,
-       COALESCE(agg.longest_silence, 0) AS longest_silence
-FROM (SELECT * FROM documents WHERE text IS NOT NULL) d
-LEFT JOIN agg ON d.doc_id = agg.doc_id
-"""
-
-QUERIES_EXT16["audio_silence_map"] = q_audio_silence_map
-ORACLES_EXT16["audio_silence_map"] = ORACLE_AUDIO_SILENCE_MAP

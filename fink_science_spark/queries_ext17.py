@@ -17,11 +17,14 @@ executed Spark-first with exact DuckDB oracles.
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fink_science_spark.queries import _events_us, _fan_out
+from fink_science_spark.registry import query
 
 # --------------------------------------------------------------------------
 # snn_ia_real
@@ -36,6 +39,74 @@ _K = 8  # fixed unroll depth: first K events per user (time order)
 # constants, one-hot band flags, delta_time in days.
 
 
+def _oracle_snn_real() -> str:
+    from fink_science_spark.operators.snn_lstm import (
+        load_snn_lstm,
+        snn_lstm_sql,
+        snn_weight_cte,
+    )
+    from fink_science_spark.operators.snn_norm import snn_norm_sql
+
+    norm = load_snn_lstm()["norm"]
+
+    def feat(t: int) -> str:
+        """8 feature expressions for step t (1-indexed), as a DOUBLE[]."""
+        val = f"val_arr[{t}]"
+        is_g = (t % 2) == 1
+        mag = f"(10.0 + {val} / 32.0)"
+        sig = f"(0.01 + abs({val}) / 1000.0)"
+        flux = f"(pow(10.0, -0.4 * {mag}) * 1e11)"
+        err = f"(9.21034e10 * exp(-0.921034 * {mag}) * {sig})"
+        fg, fr = (flux, "0.0") if is_g else ("0.0", flux)
+        eg, er = (err, "0.0") if is_g else ("0.0", err)
+        if t == 1:
+            dt = "0.0"
+        else:
+            dt = f"((ts_arr[{t}] - ts_arr[{t - 1}]) / 86400e6)"
+        oh = ["1.0", "0.0", "0.0"] if is_g else ["0.0", "0.0", "1.0"]
+        feats = [
+            snn_norm_sql(fg, norm["FLUXCAL_g"]),
+            snn_norm_sql(fr, norm["FLUXCAL_r"]),
+            snn_norm_sql(eg, norm["FLUXCALERR_g"]),
+            snn_norm_sql(er, norm["FLUXCALERR_r"]),
+            snn_norm_sql(dt, norm["delta_time"]),
+        ] + oh
+        # pad steps produce garbage (val_arr[t] NULL -> NULL features);
+        # guard to 0.0 so the list stays well-typed. Pad steps never
+        # contribute: the recurrence carries state through t > n.
+        zeros = "[" + ",".join(["0.0"] * 8) + "]::DOUBLE[]"
+        return (
+            f"CASE WHEN {t} <= n THEN [" + ",".join(feats) + "]::DOUBLE[] "
+            f"ELSE {zeros} END"
+        )
+
+    xs = "[" + ",".join(feat(t) for t in range(1, _K + 1)) + "]"
+    wcte = snn_weight_cte(load_snn_lstm()["tensors"])
+    ctes, last, prob = snn_lstm_sql(_K, "feat")
+    return f"""
+WITH grouped AS (
+  SELECT user_id,
+         list(epoch_us(ts) ORDER BY epoch_us(ts), value) AS ts_all,
+         list(value ORDER BY epoch_us(ts), value) AS val_all,
+         count(*) AS cnt
+  FROM events GROUP BY user_id
+),
+sliced AS (
+  SELECT user_id, ts_all[1:{_K}] AS ts_arr, val_all[1:{_K}] AS val_arr,
+         CAST(least(cnt, {_K}) AS INTEGER) AS n
+  FROM grouped
+),
+{wcte},
+feat AS (
+  SELECT *, {xs} AS xs FROM sliced CROSS JOIN w
+),
+{ctes}
+SELECT user_id, n, round({prob}, 6) AS snn_ia_real
+FROM {last}
+"""
+
+
+@query(oracle=_oracle_snn_real)
 def q_snn_ia_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import (
         DoubleType,
@@ -118,76 +189,6 @@ def q_snn_ia_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_snn_real() -> str:
-    from fink_science_spark.operators.snn_lstm import (
-        load_snn_lstm,
-        snn_lstm_sql,
-        snn_weight_cte,
-    )
-    from fink_science_spark.operators.snn_norm import snn_norm_sql
-
-    norm = load_snn_lstm()["norm"]
-
-    def feat(t: int) -> str:
-        """8 feature expressions for step t (1-indexed), as a DOUBLE[]."""
-        val = f"val_arr[{t}]"
-        is_g = (t % 2) == 1
-        mag = f"(10.0 + {val} / 32.0)"
-        sig = f"(0.01 + abs({val}) / 1000.0)"
-        flux = f"(pow(10.0, -0.4 * {mag}) * 1e11)"
-        err = f"(9.21034e10 * exp(-0.921034 * {mag}) * {sig})"
-        fg, fr = (flux, "0.0") if is_g else ("0.0", flux)
-        eg, er = (err, "0.0") if is_g else ("0.0", err)
-        if t == 1:
-            dt = "0.0"
-        else:
-            dt = f"((ts_arr[{t}] - ts_arr[{t - 1}]) / 86400e6)"
-        oh = ["1.0", "0.0", "0.0"] if is_g else ["0.0", "0.0", "1.0"]
-        feats = [
-            snn_norm_sql(fg, norm["FLUXCAL_g"]),
-            snn_norm_sql(fr, norm["FLUXCAL_r"]),
-            snn_norm_sql(eg, norm["FLUXCALERR_g"]),
-            snn_norm_sql(er, norm["FLUXCALERR_r"]),
-            snn_norm_sql(dt, norm["delta_time"]),
-        ] + oh
-        # pad steps produce garbage (val_arr[t] NULL -> NULL features);
-        # guard to 0.0 so the list stays well-typed. Pad steps never
-        # contribute: the recurrence carries state through t > n.
-        zeros = "[" + ",".join(["0.0"] * 8) + "]::DOUBLE[]"
-        return (
-            f"CASE WHEN {t} <= n THEN [" + ",".join(feats) + "]::DOUBLE[] "
-            f"ELSE {zeros} END"
-        )
-
-    xs = "[" + ",".join(feat(t) for t in range(1, _K + 1)) + "]"
-    wcte = snn_weight_cte(load_snn_lstm()["tensors"])
-    ctes, last, prob = snn_lstm_sql(_K, "feat")
-    return f"""
-WITH grouped AS (
-  SELECT user_id,
-         list(epoch_us(ts) ORDER BY epoch_us(ts), value) AS ts_all,
-         list(value ORDER BY epoch_us(ts), value) AS val_all,
-         count(*) AS cnt
-  FROM events GROUP BY user_id
-),
-sliced AS (
-  SELECT user_id, ts_all[1:{_K}] AS ts_arr, val_all[1:{_K}] AS val_arr,
-         CAST(least(cnt, {_K}) AS INTEGER) AS n
-  FROM grouped
-),
-{wcte},
-feat AS (
-  SELECT *, {xs} AS xs FROM sliced CROSS JOIN w
-),
-{ctes}
-SELECT user_id, n, round({prob}, 6) AS snn_ia_real
-FROM {last}
-"""
-
-
-ORACLE_SNN_IA_REAL = None  # built lazily: see ORACLES_EXT17 below
-
-
 # --------------------------------------------------------------------------
 # mulens_real: the REAL LIA microlensing artifacts (rf.sav 1000-tree
 # RandomForest over 47 statistics, pca.sav whitened 47->44 PCA —
@@ -233,6 +234,36 @@ def _mulens_feat_sql() -> list[str]:
     ]
 
 
+def _oracle_mulens_real() -> str:
+    from fink_science_spark.operators.sklearn_forest import (
+        load_checkpoint,
+        pca_transform_sql,
+        rf_proba_sql,
+    )
+
+    rf = load_checkpoint("mulens_rf")
+    pca = load_checkpoint("mulens_pca")
+    feats = [f"f{j}" for j in range(_MULENS_N_FEATS)]
+    fdefs = ", ".join(
+        f"{e} AS f{j}" for j, e in enumerate(_mulens_feat_sql())
+    )
+    pml = rf_proba_sql(rf, feats, rf["classes"].index("ML"))
+    pc1 = pca_transform_sql(pca, feats)[0]
+    return f"""
+WITH base AS (
+  SELECT user_id, count(*) AS n, sum(value) AS vsum,
+         min(value) AS vmin, max(value) AS vmax
+  FROM events GROUP BY user_id
+),
+feats AS (SELECT user_id, n, {fdefs} FROM base)
+SELECT user_id, n, round({pc1}, 6) AS pc1,
+       CASE WHEN n >= {_MULENS_MIN_PTS} THEN round({pml}, 6)
+            ELSE 0.0 END AS p_ml
+FROM feats
+"""
+
+
+@query(oracle=_oracle_mulens_real)
 def q_mulens_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import (
         DoubleType,
@@ -297,35 +328,6 @@ def q_mulens_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_mulens_real() -> str:
-    from fink_science_spark.operators.sklearn_forest import (
-        load_checkpoint,
-        pca_transform_sql,
-        rf_proba_sql,
-    )
-
-    rf = load_checkpoint("mulens_rf")
-    pca = load_checkpoint("mulens_pca")
-    feats = [f"f{j}" for j in range(_MULENS_N_FEATS)]
-    fdefs = ", ".join(
-        f"{e} AS f{j}" for j, e in enumerate(_mulens_feat_sql())
-    )
-    pml = rf_proba_sql(rf, feats, rf["classes"].index("ML"))
-    pc1 = pca_transform_sql(pca, feats)[0]
-    return f"""
-WITH base AS (
-  SELECT user_id, count(*) AS n, sum(value) AS vsum,
-         min(value) AS vmin, max(value) AS vmax
-  FROM events GROUP BY user_id
-),
-feats AS (SELECT user_id, n, {fdefs} FROM base)
-SELECT user_id, n, round({pc1}, 6) AS pc1,
-       CASE WHEN n >= {_MULENS_MIN_PTS} THEN round({pml}, 6)
-            ELSE 0.0 END AS p_ml
-FROM feats
-"""
-
-
 # --------------------------------------------------------------------------
 # mulens_real_lia: the REAL LIA artifacts fed with the 47-statistic
 # LIA-family feature bank (operators/lia_stats.py) instead of
@@ -348,6 +350,90 @@ _MULENS_LIA_MIN_TOT = 20  # reference: >= 20 valid measurements
 _MULENS_LIA_MAX_TOT = 100  # reference: ndethist < 100
 
 
+def _oracle_mulens_real_lia() -> str:
+    from fink_science_spark.operators.lia_stats import lia_stats_sql_ctes
+    from fink_science_spark.operators.sklearn_forest import (
+        load_checkpoint,
+        rf_nodes_cte,
+        rf_walk_sql,
+    )
+
+    rf = load_checkpoint("mulens_rf")
+    classes = rf["classes"]
+    ml = classes.index("ML")
+    n_cls = len(classes)
+    src = (
+        "(SELECT user_id, event_type,"
+        " epoch_us(ts) * 1.0 / 86400e6 AS t,"
+        " 16.0 + value / 64.0 AS m,"
+        " (json_extract_string(props, '$.k')::DOUBLE + 1.0) / 64.0 AS err"
+        " FROM events WHERE event_type IN ('click', 'purchase'))"
+    )
+    fcols = [f"f{j}" for j in range(47)]
+    rounded = ", ".join(f"round({c}, 6) AS {c}" for c in fcols)
+    xs = "[" + ", ".join(fcols) + "]"
+
+    def argmax_case(p: str) -> str:
+        conds = []
+        for k in range(n_cls):
+            geq = " AND ".join(
+                f"round({p}.p{k}, 6) >= round({p}.p{j}, 6)"
+                for j in range(k + 1, n_cls)
+            )
+            conds.append(
+                f"WHEN {geq} THEN '{classes[k]}'"
+                if geq
+                else f"ELSE '{classes[k]}'"
+            )
+        return "CASE " + " ".join(conds) + " END"
+
+    gate = (
+        f"u.n_tot >= {_MULENS_LIA_MIN_TOT}"
+        f" AND u.n_tot < {_MULENS_LIA_MAX_TOT}"
+    )
+    return f"""
+WITH RECURSIVE
+{lia_stats_sql_ctes(src, _MULENS_LIA_MIN_BAND)},
+featsr AS (SELECT user_id, event_type, n, {rounded} FROM lia_feats),
+fg AS (
+  SELECT user_id, n AS nb, {xs}::DOUBLE[] AS xs FROM featsr
+  WHERE event_type = 'click'
+),
+fr AS (
+  SELECT user_id, n AS nb, {xs}::DOUBLE[] AS xs FROM featsr
+  WHERE event_type = 'purchase'
+),
+{rf_nodes_cte(rf, "mlnodes")},
+{rf_walk_sql("mlnodes", "fg", "user_id", "xs", "probs_g", n_cls, len(rf["trees"]))},
+{rf_walk_sql("mlnodes", "fr", "user_id", "xs", "probs_r", n_cls, len(rf["trees"]))},
+universe AS (
+  SELECT user_id, count(*) AS n_tot FROM events
+  WHERE event_type IN ('click', 'purchase') GROUP BY user_id
+),
+final AS (
+  SELECT u.user_id, u.n_tot,
+         coalesce(fg.nb, 0) AS n_g, coalesce(fr.nb, 0) AS n_r,
+         CASE WHEN {gate} AND pg.p0 IS NOT NULL
+              THEN {argmax_case('pg')} ELSE '' END AS class_g,
+         CASE WHEN {gate} AND pr.p0 IS NOT NULL
+              THEN {argmax_case('pr')} ELSE '' END AS class_r,
+         round(pg.p{ml}, 6) AS pml_g, round(pr.p{ml}, 6) AS pml_r
+  FROM universe u
+  LEFT JOIN fg ON fg.user_id = u.user_id
+  LEFT JOIN fr ON fr.user_id = u.user_id
+  LEFT JOIN probs_g pg ON pg.user_id = u.user_id
+  LEFT JOIN probs_r pr ON pr.user_id = u.user_id
+)
+SELECT user_id, n_tot, n_g, n_r, class_g, class_r,
+       CASE WHEN class_g != '' THEN pml_g ELSE 0.0 END AS p_ml_g,
+       CASE WHEN class_r != '' THEN pml_r ELSE 0.0 END AS p_ml_r,
+       CASE WHEN class_g = 'ML' AND class_r = 'ML'
+            THEN round((pml_g + pml_r) / 2.0, 6) ELSE 0.0 END AS mulens
+FROM final
+"""
+
+
+@query(oracle=_oracle_mulens_real_lia)
 def q_mulens_real_lia(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import (
         DoubleType,
@@ -516,89 +602,6 @@ def q_mulens_real_lia(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_mulens_real_lia() -> str:
-    from fink_science_spark.operators.lia_stats import lia_stats_sql_ctes
-    from fink_science_spark.operators.sklearn_forest import (
-        load_checkpoint,
-        rf_nodes_cte,
-        rf_walk_sql,
-    )
-
-    rf = load_checkpoint("mulens_rf")
-    classes = rf["classes"]
-    ml = classes.index("ML")
-    n_cls = len(classes)
-    src = (
-        "(SELECT user_id, event_type,"
-        " epoch_us(ts) * 1.0 / 86400e6 AS t,"
-        " 16.0 + value / 64.0 AS m,"
-        " (json_extract_string(props, '$.k')::DOUBLE + 1.0) / 64.0 AS err"
-        " FROM events WHERE event_type IN ('click', 'purchase'))"
-    )
-    fcols = [f"f{j}" for j in range(47)]
-    rounded = ", ".join(f"round({c}, 6) AS {c}" for c in fcols)
-    xs = "[" + ", ".join(fcols) + "]"
-
-    def argmax_case(p: str) -> str:
-        conds = []
-        for k in range(n_cls):
-            geq = " AND ".join(
-                f"round({p}.p{k}, 6) >= round({p}.p{j}, 6)"
-                for j in range(k + 1, n_cls)
-            )
-            conds.append(
-                f"WHEN {geq} THEN '{classes[k]}'"
-                if geq
-                else f"ELSE '{classes[k]}'"
-            )
-        return "CASE " + " ".join(conds) + " END"
-
-    gate = (
-        f"u.n_tot >= {_MULENS_LIA_MIN_TOT}"
-        f" AND u.n_tot < {_MULENS_LIA_MAX_TOT}"
-    )
-    return f"""
-WITH RECURSIVE
-{lia_stats_sql_ctes(src, _MULENS_LIA_MIN_BAND)},
-featsr AS (SELECT user_id, event_type, n, {rounded} FROM lia_feats),
-fg AS (
-  SELECT user_id, n AS nb, {xs}::DOUBLE[] AS xs FROM featsr
-  WHERE event_type = 'click'
-),
-fr AS (
-  SELECT user_id, n AS nb, {xs}::DOUBLE[] AS xs FROM featsr
-  WHERE event_type = 'purchase'
-),
-{rf_nodes_cte(rf, "mlnodes")},
-{rf_walk_sql("mlnodes", "fg", "user_id", "xs", "probs_g", n_cls, len(rf["trees"]))},
-{rf_walk_sql("mlnodes", "fr", "user_id", "xs", "probs_r", n_cls, len(rf["trees"]))},
-universe AS (
-  SELECT user_id, count(*) AS n_tot FROM events
-  WHERE event_type IN ('click', 'purchase') GROUP BY user_id
-),
-final AS (
-  SELECT u.user_id, u.n_tot,
-         coalesce(fg.nb, 0) AS n_g, coalesce(fr.nb, 0) AS n_r,
-         CASE WHEN {gate} AND pg.p0 IS NOT NULL
-              THEN {argmax_case('pg')} ELSE '' END AS class_g,
-         CASE WHEN {gate} AND pr.p0 IS NOT NULL
-              THEN {argmax_case('pr')} ELSE '' END AS class_r,
-         round(pg.p{ml}, 6) AS pml_g, round(pr.p{ml}, 6) AS pml_r
-  FROM universe u
-  LEFT JOIN fg ON fg.user_id = u.user_id
-  LEFT JOIN fr ON fr.user_id = u.user_id
-  LEFT JOIN probs_g pg ON pg.user_id = u.user_id
-  LEFT JOIN probs_r pr ON pr.user_id = u.user_id
-)
-SELECT user_id, n_tot, n_g, n_r, class_g, class_r,
-       CASE WHEN class_g != '' THEN pml_g ELSE 0.0 END AS p_ml_g,
-       CASE WHEN class_r != '' THEN pml_r ELSE 0.0 END AS p_ml_r,
-       CASE WHEN class_g = 'ML' AND class_r = 'ML'
-            THEN round((pml_g + pml_r) / 2.0, 6) ELSE 0.0 END AS mulens
-FROM final
-"""
-
-
 # --------------------------------------------------------------------------
 # orphan_real: the REAL Rubin orphan-afterglow GradientBoosting model
 # (model_orphans.pkl, 100 log_loss stages, DummyClassifier log-odds
@@ -631,6 +634,44 @@ _ORPHAN_RECIPE = [
 ]
 
 
+def _oracle_orphan_real() -> str:
+    from fink_science_spark.operators.sklearn_forest import (
+        gbt_proba_sql,
+        load_checkpoint,
+    )
+
+    gbt = load_checkpoint("orphans_gbt")
+    nums = {
+        "dur": "duration",
+        "mean": "(vsum / n)",
+        "vmax": "vmax",
+        "vmin": "vmin",
+        "vspan_neg": "(vmin - vmax)",
+        "n": "n",
+        "mean_minus_max": "((vsum / n) - vmax)",
+        "min_minus_mean": "(vmin - (vsum / n))",
+    }
+    fdefs = ", ".join(
+        f"round({nums[num]} / ({div!r}), 6) AS f{j}"
+        for j, (num, div) in enumerate(_ORPHAN_RECIPE)
+    )
+    p = gbt_proba_sql(gbt, [f"f{j}" for j in range(_ORPHAN_N_FEATS)])
+    return f"""
+WITH base AS (
+  SELECT user_id, count(*) AS n,
+         (max(epoch_us(ts)) - min(epoch_us(ts))) / 86400e6 AS duration,
+         sum(value) AS vsum, max(value) AS vmax, min(value) AS vmin
+  FROM events GROUP BY user_id
+),
+feats AS (SELECT user_id, n, {fdefs} FROM base)
+SELECT user_id, n,
+       CASE WHEN n >= {_ORPHAN_MIN_PTS} THEN round({p}, 6)
+            ELSE 0.0 END AS p_orphan
+FROM feats
+"""
+
+
+@query(oracle=_oracle_orphan_real)
 def q_orphan_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import (
         DoubleType,
@@ -701,43 +742,6 @@ def q_orphan_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_orphan_real() -> str:
-    from fink_science_spark.operators.sklearn_forest import (
-        gbt_proba_sql,
-        load_checkpoint,
-    )
-
-    gbt = load_checkpoint("orphans_gbt")
-    nums = {
-        "dur": "duration",
-        "mean": "(vsum / n)",
-        "vmax": "vmax",
-        "vmin": "vmin",
-        "vspan_neg": "(vmin - vmax)",
-        "n": "n",
-        "mean_minus_max": "((vsum / n) - vmax)",
-        "min_minus_mean": "(vmin - (vsum / n))",
-    }
-    fdefs = ", ".join(
-        f"round({nums[num]} / ({div!r}), 6) AS f{j}"
-        for j, (num, div) in enumerate(_ORPHAN_RECIPE)
-    )
-    p = gbt_proba_sql(gbt, [f"f{j}" for j in range(_ORPHAN_N_FEATS)])
-    return f"""
-WITH base AS (
-  SELECT user_id, count(*) AS n,
-         (max(epoch_us(ts)) - min(epoch_us(ts))) / 86400e6 AS duration,
-         sum(value) AS vsum, max(value) AS vmax, min(value) AS vmin
-  FROM events GROUP BY user_id
-),
-feats AS (SELECT user_id, n, {fdefs} FROM base)
-SELECT user_id, n,
-       CASE WHEN n >= {_ORPHAN_MIN_PTS} THEN round({p}, 6)
-            ELSE 0.0 END AS p_orphan
-FROM feats
-"""
-
-
 # --------------------------------------------------------------------------
 # kn_rf_real: the REAL kilonova head — KN_model_1PC.pkl's
 # RobustScaler + 50-tree RandomForest — stacked on the REAL kndetect
@@ -749,6 +753,76 @@ FROM feats
 # --------------------------------------------------------------------------
 
 
+def _oracle_kn_rf_real() -> str:
+    from fink_science_spark.operators.sklearn_forest import (
+        load_checkpoint,
+        rf_proba_sql,
+        robust_scaler_sql,
+    )
+    from fink_science_spark.queries_ext8 import (
+        _KN_GAINS,
+        _KN_PCS,
+        _KN_PREP_G,
+        _KN_PREP_R,
+        _kn_coef_sql,
+    )
+
+    art = load_checkpoint("kn_rf_1pc")
+    scaler = next(s for s in art["steps"] if s.get("kind") == "robust_scaler")
+    rf = next(s for s in art["steps"] if s.get("kind") == "rf_classifier")
+    feats = [
+        f"round({_kn_coef_sql('kg_s', 'kg_m', 'kg_sh', _KN_PCS['g'][0], _KN_GAINS[0])}, 6)",
+        f"round({_kn_coef_sql('kg_s', 'kg_m', 'kg_sh', _KN_PCS['g'][1], _KN_GAINS[1])}, 6)",
+        f"round({_kn_coef_sql('kr_s', 'kr_m', 'kr_sh', _KN_PCS['r'][0], _KN_GAINS[2])}, 6)",
+        f"round({_kn_coef_sql('kr_s', 'kr_m', 'kr_sh', _KN_PCS['r'][1], _KN_GAINS[3])}, 6)",
+        "round(ln(1.0 + n_g), 6)",
+        "round(ln(1.0 + n_r), 6)",
+        "round(ln(kg_m), 6)",
+        "round(ln(kr_m), 6)",
+    ]
+    fdefs = ", ".join(f"{e} AS f{j}" for j, e in enumerate(feats))
+    scaled = robust_scaler_sql(scaler, [f"f{j}" for j in range(8)])
+    p = rf_proba_sql(rf, scaled, rf["classes"].index("True"))
+    return f"""
+WITH curves AS (
+  SELECT user_id, event_type,
+         list(value ORDER BY epoch_us(ts), value) AS vals,
+         count(*) AS npts
+  FROM events
+  WHERE event_type IN ('click', 'purchase')
+  GROUP BY user_id, event_type
+),
+both_bands AS (
+  SELECT coalesce(g.user_id, r.user_id) AS user_id,
+         coalesce(g.npts, 0) AS n_g, coalesce(r.npts, 0) AS n_r,
+         g.vals AS g_vals, r.vals AS r_vals
+  FROM (SELECT * FROM curves WHERE event_type = 'click') g
+  FULL OUTER JOIN (SELECT * FROM curves WHERE event_type = 'purchase') r
+    ON g.user_id = r.user_id
+),
+with_seg AS (
+  SELECT b.*, c.c_mktsegment FROM both_bands b
+  LEFT JOIN customer c ON b.user_id = c.c_custkey
+),
+prepped AS (
+  SELECT user_id, n_g, n_r, c_mktsegment,
+         {_KN_PREP_G[0]} AS kg_s, {_KN_PREP_G[1]} AS kg_m,
+         {_KN_PREP_G[2]} AS kg_sh,
+         {_KN_PREP_R[0]} AS kr_s, {_KN_PREP_R[1]} AS kr_m,
+         {_KN_PREP_R[2]} AS kr_sh
+  FROM with_seg
+),
+feats AS (SELECT user_id, n_g, n_r, c_mktsegment, {fdefs} FROM prepped)
+SELECT user_id, n_g, n_r,
+       CASE WHEN n_g >= 2 AND n_r >= 2
+                 AND c_mktsegment IN ('BUILDING', 'AUTOMOBILE', 'MACHINERY')
+            THEN round({p}, 6)
+            ELSE 0.0 END AS p_kn
+FROM feats
+"""
+
+
+@query(oracle=_oracle_kn_rf_real)
 def q_kn_rf_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import (
         DoubleType,
@@ -881,36 +955,55 @@ def q_kn_rf_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_kn_rf_real() -> str:
+# --------------------------------------------------------------------------
+# kn_legacy_real: the reference repo's OTHER two shipped kilonova
+# forests (kilonova_model.pkl — 100 trees over 8 features, and the
+# kn_diff_pc_sets.pkl variant), extracted with the same stub unpickler.
+# Neither is referenced by current reference code (the production path
+# imports partial.pkl from the external kndetect package,
+# ztf/kilonova/processor.py:31,165), so this query completes the
+# shipped-artifact coverage: the trained split-threshold signature of
+# kilonova_model.pkl reads as per-band [point count (splits 1.5-9.5),
+# three FLUX-scale PC coefficients (splits to ±3e4)] x (g, r) — served
+# here with the REAL kndetect PC basis (peak-aligned projections x the
+# band's curve max restores flux scale) and a documented count
+# placement (2 + n % 8) that lands inside the trained count span.
+# --------------------------------------------------------------------------
+
+
+def _oracle_kn_legacy_real() -> str:
     from fink_science_spark.operators.sklearn_forest import (
         load_checkpoint,
         rf_proba_sql,
-        robust_scaler_sql,
     )
     from fink_science_spark.queries_ext8 import (
-        _KN_GAINS,
         _KN_PCS,
         _KN_PREP_G,
         _KN_PREP_R,
         _kn_coef_sql,
     )
 
-    art = load_checkpoint("kn_rf_1pc")
-    scaler = next(s for s in art["steps"] if s.get("kind") == "robust_scaler")
-    rf = next(s for s in art["steps"] if s.get("kind") == "rf_classifier")
+    rf = load_checkpoint("kilonova_rf")
+
+    def flux_coef(prefix: str, band: str, k: int) -> str:
+        c = _kn_coef_sql(
+            f"{prefix}_s", f"{prefix}_m", f"{prefix}_sh",
+            _KN_PCS[band][k], 1.0,
+        )
+        return f"round({c} * {prefix}_m, 6)"
+
     feats = [
-        f"round({_kn_coef_sql('kg_s', 'kg_m', 'kg_sh', _KN_PCS['g'][0], _KN_GAINS[0])}, 6)",
-        f"round({_kn_coef_sql('kg_s', 'kg_m', 'kg_sh', _KN_PCS['g'][1], _KN_GAINS[1])}, 6)",
-        f"round({_kn_coef_sql('kr_s', 'kr_m', 'kr_sh', _KN_PCS['r'][0], _KN_GAINS[2])}, 6)",
-        f"round({_kn_coef_sql('kr_s', 'kr_m', 'kr_sh', _KN_PCS['r'][1], _KN_GAINS[3])}, 6)",
-        "round(ln(1.0 + n_g), 6)",
-        "round(ln(1.0 + n_r), 6)",
-        "round(ln(kg_m), 6)",
-        "round(ln(kr_m), 6)",
+        "round(2.0 + (n_g % 8), 6)",
+        flux_coef("kg", "g", 0),
+        flux_coef("kg", "g", 1),
+        flux_coef("kg", "g", 2),
+        "round(2.0 + (n_r % 8), 6)",
+        flux_coef("kr", "r", 0),
+        flux_coef("kr", "r", 1),
+        flux_coef("kr", "r", 2),
     ]
     fdefs = ", ".join(f"{e} AS f{j}" for j, e in enumerate(feats))
-    scaled = robust_scaler_sql(scaler, [f"f{j}" for j in range(8)])
-    p = rf_proba_sql(rf, scaled, rf["classes"].index("True"))
+    p = rf_proba_sql(rf, [f"f{j}" for j in range(8)], rf["classes"].index("1"))
     return f"""
 WITH curves AS (
   SELECT user_id, event_type,
@@ -928,44 +1021,23 @@ both_bands AS (
   FULL OUTER JOIN (SELECT * FROM curves WHERE event_type = 'purchase') r
     ON g.user_id = r.user_id
 ),
-with_seg AS (
-  SELECT b.*, c.c_mktsegment FROM both_bands b
-  LEFT JOIN customer c ON b.user_id = c.c_custkey
-),
 prepped AS (
-  SELECT user_id, n_g, n_r, c_mktsegment,
+  SELECT user_id, n_g, n_r,
          {_KN_PREP_G[0]} AS kg_s, {_KN_PREP_G[1]} AS kg_m,
          {_KN_PREP_G[2]} AS kg_sh,
          {_KN_PREP_R[0]} AS kr_s, {_KN_PREP_R[1]} AS kr_m,
          {_KN_PREP_R[2]} AS kr_sh
-  FROM with_seg
+  FROM both_bands
 ),
-feats AS (SELECT user_id, n_g, n_r, c_mktsegment, {fdefs} FROM prepped)
+feats AS (SELECT user_id, n_g, n_r, {fdefs} FROM prepped)
 SELECT user_id, n_g, n_r,
-       CASE WHEN n_g >= 2 AND n_r >= 2
-                 AND c_mktsegment IN ('BUILDING', 'AUTOMOBILE', 'MACHINERY')
-            THEN round({p}, 6)
+       CASE WHEN n_g >= 2 AND n_r >= 2 THEN round({p}, 6)
             ELSE 0.0 END AS p_kn
 FROM feats
 """
 
 
-# --------------------------------------------------------------------------
-# kn_legacy_real: the reference repo's OTHER two shipped kilonova
-# forests (kilonova_model.pkl — 100 trees over 8 features, and the
-# kn_diff_pc_sets.pkl variant), extracted with the same stub unpickler.
-# Neither is referenced by current reference code (the production path
-# imports partial.pkl from the external kndetect package,
-# ztf/kilonova/processor.py:31,165), so this query completes the
-# shipped-artifact coverage: the trained split-threshold signature of
-# kilonova_model.pkl reads as per-band [point count (splits 1.5-9.5),
-# three FLUX-scale PC coefficients (splits to ±3e4)] x (g, r) — served
-# here with the REAL kndetect PC basis (peak-aligned projections x the
-# band's curve max restores flux scale) and a documented count
-# placement (2 + n % 8) that lands inside the trained count span.
-# --------------------------------------------------------------------------
-
-
+@query(oracle=_oracle_kn_legacy_real)
 def q_kn_legacy_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import (
         DoubleType,
@@ -1070,72 +1142,6 @@ def q_kn_legacy_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_kn_legacy_real() -> str:
-    from fink_science_spark.operators.sklearn_forest import (
-        load_checkpoint,
-        rf_proba_sql,
-    )
-    from fink_science_spark.queries_ext8 import (
-        _KN_PCS,
-        _KN_PREP_G,
-        _KN_PREP_R,
-        _kn_coef_sql,
-    )
-
-    rf = load_checkpoint("kilonova_rf")
-
-    def flux_coef(prefix: str, band: str, k: int) -> str:
-        c = _kn_coef_sql(
-            f"{prefix}_s", f"{prefix}_m", f"{prefix}_sh",
-            _KN_PCS[band][k], 1.0,
-        )
-        return f"round({c} * {prefix}_m, 6)"
-
-    feats = [
-        "round(2.0 + (n_g % 8), 6)",
-        flux_coef("kg", "g", 0),
-        flux_coef("kg", "g", 1),
-        flux_coef("kg", "g", 2),
-        "round(2.0 + (n_r % 8), 6)",
-        flux_coef("kr", "r", 0),
-        flux_coef("kr", "r", 1),
-        flux_coef("kr", "r", 2),
-    ]
-    fdefs = ", ".join(f"{e} AS f{j}" for j, e in enumerate(feats))
-    p = rf_proba_sql(rf, [f"f{j}" for j in range(8)], rf["classes"].index("1"))
-    return f"""
-WITH curves AS (
-  SELECT user_id, event_type,
-         list(value ORDER BY epoch_us(ts), value) AS vals,
-         count(*) AS npts
-  FROM events
-  WHERE event_type IN ('click', 'purchase')
-  GROUP BY user_id, event_type
-),
-both_bands AS (
-  SELECT coalesce(g.user_id, r.user_id) AS user_id,
-         coalesce(g.npts, 0) AS n_g, coalesce(r.npts, 0) AS n_r,
-         g.vals AS g_vals, r.vals AS r_vals
-  FROM (SELECT * FROM curves WHERE event_type = 'click') g
-  FULL OUTER JOIN (SELECT * FROM curves WHERE event_type = 'purchase') r
-    ON g.user_id = r.user_id
-),
-prepped AS (
-  SELECT user_id, n_g, n_r,
-         {_KN_PREP_G[0]} AS kg_s, {_KN_PREP_G[1]} AS kg_m,
-         {_KN_PREP_G[2]} AS kg_sh,
-         {_KN_PREP_R[0]} AS kr_s, {_KN_PREP_R[1]} AS kr_m,
-         {_KN_PREP_R[2]} AS kr_sh
-  FROM both_bands
-),
-feats AS (SELECT user_id, n_g, n_r, {fdefs} FROM prepped)
-SELECT user_id, n_g, n_r,
-       CASE WHEN n_g >= 2 AND n_r >= 2 THEN round({p}, 6)
-            ELSE 0.0 END AS p_kn
-FROM feats
-"""
-
-
 # --------------------------------------------------------------------------
 # anomaly_real: the REAL AAD anomaly-detection forests — two ONNX
 # TreeEnsembleRegressors (150 depth-12 trees, ~150k nodes per band,
@@ -1170,6 +1176,15 @@ def _anom_bounds(band: str) -> list[tuple[float, float]]:
             if f >= 0:
                 lo[f] = min(lo[f], float(th))
                 hi[f] = max(hi[f], float(th))
+    # a feature no tree splits on keeps its ±inf start, which would format
+    # as the SQL literal infD that neither engine parses
+    unsplit = [f for f in range(_ANOM_N_FEATS)
+               if not (math.isfinite(lo[f]) and math.isfinite(hi[f]))]
+    if unsplit:
+        raise ValueError(
+            f"anomaly_forest_{band}: no tree splits on feature(s) {unsplit}, "
+            "so their synthetic value range has no finite bounds"
+        )
     return list(zip(lo, hi))
 
 
@@ -1201,6 +1216,58 @@ def _anom_feat_sql(band: str, vsum: str, vmax: str) -> list[str]:
     return out
 
 
+def _oracle_anomaly_real() -> str:
+    from fink_science_spark.operators.sklearn_forest import (
+        load_checkpoint,
+        onnx_nodes_cte,
+        onnx_walk_sql,
+    )
+
+    fg = load_checkpoint("anomaly_forest_g")
+    fr = load_checkpoint("anomaly_forest_r")
+    gfeats = _anom_feat_sql("g", "gsum", "gmax")
+    rfeats = _anom_feat_sql("r", "rsum", "rmax")
+    gxs = "[" + ",".join(gfeats) + "]"
+    rxs = "[" + ",".join(rfeats) + "]"
+    return f"""
+WITH RECURSIVE per_band AS (
+  SELECT user_id, event_type, count(*) AS n, sum(value) AS vsum,
+         max(value) AS vmax
+  FROM events WHERE event_type IN ('click', 'purchase')
+  GROUP BY user_id, event_type
+),
+both_bands AS (
+  SELECT coalesce(g.user_id, r.user_id) AS user_id,
+         coalesce(g.n, 0) AS n_g, coalesce(r.n, 0) AS n_r,
+         coalesce(g.vsum, 0.0) AS gsum, coalesce(g.vmax, 0.0) AS gmax,
+         coalesce(r.vsum, 0.0) AS rsum, coalesce(r.vmax, 0.0) AS rmax
+  FROM (SELECT * FROM per_band WHERE event_type = 'click') g
+  FULL OUTER JOIN (SELECT * FROM per_band WHERE event_type = 'purchase') r
+    ON g.user_id = r.user_id
+),
+feats AS (
+  SELECT user_id, n_g, n_r, {gxs}::DOUBLE[] AS gxs, {rxs}::DOUBLE[] AS rxs
+  FROM both_bands
+),
+{onnx_nodes_cte(fg, "nodes_g")},
+{onnx_nodes_cte(fr, "nodes_r")},
+{onnx_walk_sql("nodes_g", "feats", "user_id", "gxs", fg["base"], "score_g")},
+{onnx_walk_sql("nodes_r", "feats", "user_id", "rxs", fr["base"], "score_r")}
+SELECT f.user_id, f.n_g, f.n_r,
+       CASE
+         WHEN f.n_g >= {_ANOM_MIN_PTS} AND f.n_r >= {_ANOM_MIN_PTS}
+           THEN least(round(sg.score, 6), round(sr.score, 6))
+         WHEN f.n_g >= {_ANOM_MIN_PTS} THEN round(sg.score, 6)
+         WHEN f.n_r >= {_ANOM_MIN_PTS} THEN round(sr.score, 6)
+         ELSE 0.0
+       END AS anomaly
+FROM feats f
+LEFT JOIN score_g sg ON sg.user_id = f.user_id
+LEFT JOIN score_r sr ON sr.user_id = f.user_id
+"""
+
+
+@query(oracle=_oracle_anomaly_real)
 def q_anomaly_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import (
         DoubleType,
@@ -1305,57 +1372,6 @@ def q_anomaly_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_anomaly_real() -> str:
-    from fink_science_spark.operators.sklearn_forest import (
-        load_checkpoint,
-        onnx_nodes_cte,
-        onnx_walk_sql,
-    )
-
-    fg = load_checkpoint("anomaly_forest_g")
-    fr = load_checkpoint("anomaly_forest_r")
-    gfeats = _anom_feat_sql("g", "gsum", "gmax")
-    rfeats = _anom_feat_sql("r", "rsum", "rmax")
-    gxs = "[" + ",".join(gfeats) + "]"
-    rxs = "[" + ",".join(rfeats) + "]"
-    return f"""
-WITH RECURSIVE per_band AS (
-  SELECT user_id, event_type, count(*) AS n, sum(value) AS vsum,
-         max(value) AS vmax
-  FROM events WHERE event_type IN ('click', 'purchase')
-  GROUP BY user_id, event_type
-),
-both_bands AS (
-  SELECT coalesce(g.user_id, r.user_id) AS user_id,
-         coalesce(g.n, 0) AS n_g, coalesce(r.n, 0) AS n_r,
-         coalesce(g.vsum, 0.0) AS gsum, coalesce(g.vmax, 0.0) AS gmax,
-         coalesce(r.vsum, 0.0) AS rsum, coalesce(r.vmax, 0.0) AS rmax
-  FROM (SELECT * FROM per_band WHERE event_type = 'click') g
-  FULL OUTER JOIN (SELECT * FROM per_band WHERE event_type = 'purchase') r
-    ON g.user_id = r.user_id
-),
-feats AS (
-  SELECT user_id, n_g, n_r, {gxs}::DOUBLE[] AS gxs, {rxs}::DOUBLE[] AS rxs
-  FROM both_bands
-),
-{onnx_nodes_cte(fg, "nodes_g")},
-{onnx_nodes_cte(fr, "nodes_r")},
-{onnx_walk_sql("nodes_g", "feats", "user_id", "gxs", fg["base"], "score_g")},
-{onnx_walk_sql("nodes_r", "feats", "user_id", "rxs", fr["base"], "score_r")}
-SELECT f.user_id, f.n_g, f.n_r,
-       CASE
-         WHEN f.n_g >= {_ANOM_MIN_PTS} AND f.n_r >= {_ANOM_MIN_PTS}
-           THEN least(round(sg.score, 6), round(sr.score, 6))
-         WHEN f.n_g >= {_ANOM_MIN_PTS} THEN round(sg.score, 6)
-         WHEN f.n_r >= {_ANOM_MIN_PTS} THEN round(sr.score, 6)
-         ELSE 0.0
-       END AS anomaly
-FROM feats f
-LEFT JOIN score_g sg ON sg.user_id = f.user_id
-LEFT JOIN score_r sr ON sr.user_id = f.user_id
-"""
-
-
 # --------------------------------------------------------------------------
 # anomaly_real_lc: the same REAL AAD forests, fed with PHYSICALLY-DERIVED
 # light-curve features instead of anomaly_real's documented synthetic
@@ -1404,6 +1420,61 @@ _ANOM_LC_FEATS = [
 ]
 
 
+def _oracle_anomaly_real_lc() -> str:
+    from fink_science_spark.operators.sklearn_forest import (
+        load_checkpoint,
+        onnx_nodes_cte,
+        onnx_walk_sql,
+    )
+    from fink_science_spark.queries_ext3 import (
+        band_features_ctes,
+        band_features_select,
+    )
+
+    fg = load_checkpoint("anomaly_forest_g")
+    fr = load_checkpoint("anomaly_forest_r")
+    src = "(SELECT * FROM events WHERE event_type IN ('click', 'purchase'))"
+    xs = "[" + ", ".join(_ANOM_LC_FEATS) + "]"
+    nonnull = " AND ".join(f"{c} IS NOT NULL" for c in _ANOM_LC_FEATS)
+    return f"""
+WITH RECURSIVE
+{band_features_ctes(src)},
+featrows AS (
+{band_features_select(_ANOM_LC_FEATS, _ANOM_MIN_PTS)}
+),
+fg AS (
+  SELECT user_id, {xs}::DOUBLE[] AS xs FROM featrows
+  WHERE event_type = 'click' AND {nonnull}
+),
+fr AS (
+  SELECT user_id, {xs}::DOUBLE[] AS xs FROM featrows
+  WHERE event_type = 'purchase' AND {nonnull}
+),
+{onnx_nodes_cte(fg, "nodes_g")},
+{onnx_nodes_cte(fr, "nodes_r")},
+{onnx_walk_sql("nodes_g", "fg", "user_id", "xs", fg["base"], "score_g")},
+{onnx_walk_sql("nodes_r", "fr", "user_id", "xs", fr["base"], "score_r")},
+universe AS (
+  SELECT DISTINCT user_id FROM events
+  WHERE event_type IN ('click', 'purchase')
+)
+SELECT u.user_id,
+       sg.score IS NOT NULL AS ok_g,
+       sr.score IS NOT NULL AS ok_r,
+       CASE
+         WHEN sg.score IS NOT NULL AND sr.score IS NOT NULL
+           THEN least(round(sg.score, 6), round(sr.score, 6))
+         WHEN sg.score IS NOT NULL THEN round(sg.score, 6)
+         WHEN sr.score IS NOT NULL THEN round(sr.score, 6)
+         ELSE 0.0
+       END AS anomaly
+FROM universe u
+LEFT JOIN score_g sg ON sg.user_id = u.user_id
+LEFT JOIN score_r sr ON sr.user_id = u.user_id
+"""
+
+
+@query(oracle=_oracle_anomaly_real_lc)
 def q_anomaly_real_lc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import (
         BooleanType,
@@ -1528,60 +1599,6 @@ def q_anomaly_real_lc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_anomaly_real_lc() -> str:
-    from fink_science_spark.operators.sklearn_forest import (
-        load_checkpoint,
-        onnx_nodes_cte,
-        onnx_walk_sql,
-    )
-    from fink_science_spark.queries_ext3 import (
-        band_features_ctes,
-        band_features_select,
-    )
-
-    fg = load_checkpoint("anomaly_forest_g")
-    fr = load_checkpoint("anomaly_forest_r")
-    src = "(SELECT * FROM events WHERE event_type IN ('click', 'purchase'))"
-    xs = "[" + ", ".join(_ANOM_LC_FEATS) + "]"
-    nonnull = " AND ".join(f"{c} IS NOT NULL" for c in _ANOM_LC_FEATS)
-    return f"""
-WITH RECURSIVE
-{band_features_ctes(src)},
-featrows AS (
-{band_features_select(_ANOM_LC_FEATS, _ANOM_MIN_PTS)}
-),
-fg AS (
-  SELECT user_id, {xs}::DOUBLE[] AS xs FROM featrows
-  WHERE event_type = 'click' AND {nonnull}
-),
-fr AS (
-  SELECT user_id, {xs}::DOUBLE[] AS xs FROM featrows
-  WHERE event_type = 'purchase' AND {nonnull}
-),
-{onnx_nodes_cte(fg, "nodes_g")},
-{onnx_nodes_cte(fr, "nodes_r")},
-{onnx_walk_sql("nodes_g", "fg", "user_id", "xs", fg["base"], "score_g")},
-{onnx_walk_sql("nodes_r", "fr", "user_id", "xs", fr["base"], "score_r")},
-universe AS (
-  SELECT DISTINCT user_id FROM events
-  WHERE event_type IN ('click', 'purchase')
-)
-SELECT u.user_id,
-       sg.score IS NOT NULL AS ok_g,
-       sr.score IS NOT NULL AS ok_r,
-       CASE
-         WHEN sg.score IS NOT NULL AND sr.score IS NOT NULL
-           THEN least(round(sg.score, 6), round(sr.score, 6))
-         WHEN sg.score IS NOT NULL THEN round(sg.score, 6)
-         WHEN sr.score IS NOT NULL THEN round(sr.score, 6)
-         ELSE 0.0
-       END AS anomaly
-FROM universe u
-LEFT JOIN score_g sg ON sg.user_id = u.user_id
-LEFT JOIN score_r sr ON sr.user_id = u.user_id
-"""
-
-
 # --------------------------------------------------------------------------
 # superluminous_real: the REAL superluminous (SLSN) XGBoost head
 # (superluminous_classifier.joblib — ztf/superluminous/kernel.py:21,
@@ -1630,6 +1647,79 @@ def _slsn_bounds() -> dict[int, tuple[float, float]]:
     return {f: (lo[f], hi[f]) for f in lo}
 
 
+def _oracle_superluminous_real() -> str:
+    from fink_science_spark.operators.sklearn_forest import (
+        load_checkpoint,
+        xgb_proba_sql,
+    )
+
+    ckpt = load_checkpoint("superluminous_xgb")
+    names = ckpt["feature_names"]
+    bounds = _slsn_bounds()
+    thr = float(ckpt["optimal_threshold"])
+
+    real_sql = {
+        "max_slope": "max_slope",
+        "flux_amplitude": "(vmax - vmin)",
+        "skew": "(CASE WHEN m2 > 0 THEN m3 / pow(m2, 1.5) END)",
+        "duration": "duration",
+        "std_flux": "std_flux",
+        "q15": "q15",
+        "q85": "q85",
+    }
+    fdefs = []
+    for j, nm in enumerate(names):
+        if nm in _SLSN_REAL_FEATS:
+            e = real_sql[nm]
+        else:
+            lo, hi = bounds.get(j, (0.0, 1.0))
+            mix = f"(vsum * ({_SLSN_C[j]!r}) + vmax * ({_SLSN_D[j]!r}))"
+            u = f"({mix} - floor({mix}))"
+            e = f"(({lo!r}) + {u} * ({hi - lo!r}))"
+        fdefs.append(f"round({e}, 6) AS f{j}")
+    feats = [f"f{j}" for j in range(27)]
+    proba = xgb_proba_sql(ckpt, feats)
+    return f"""
+WITH rows_w AS (
+  SELECT user_id, event_type, value, epoch_us(ts) AS ts_us,
+         avg(value) OVER (PARTITION BY user_id) AS mean_w,
+         CASE WHEN (epoch_us(ts) - lag(epoch_us(ts)) OVER w) > 0
+              THEN (value - lag(value) OVER w)
+                   / ((epoch_us(ts) - lag(epoch_us(ts)) OVER w) / 86400e6)
+         END AS slope
+  FROM events
+  WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), value)
+),
+per_user AS (
+  SELECT user_id, count(*) AS n,
+         sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS n_err,
+         sum(value) AS vsum, min(value) AS vmin, max(value) AS vmax,
+         stddev_samp(value) AS std_flux,
+         quantile_cont(value, 0.15) AS q15,
+         quantile_cont(value, 0.85) AS q85,
+         avg(pow(value - mean_w, 2)) AS m2,
+         avg(pow(value - mean_w, 3)) AS m3,
+         (max(ts_us) - min(ts_us)) / 86400e6 AS duration,
+         max(abs(slope)) AS max_slope
+  FROM rows_w GROUP BY user_id
+),
+feats AS (
+  SELECT user_id, n,
+         (n_err * 5 < n AND duration >= 25.0 AND n >= 20) AS ok,
+         {", ".join(fdefs)}
+  FROM per_user
+),
+scored AS (
+  SELECT user_id, n, ok, round({proba}, 6) AS proba FROM feats
+)
+SELECT user_id, n,
+       CASE WHEN ok THEN proba ELSE -1.0 END AS proba,
+       (ok AND proba > ({thr!r})) AS is_slsn
+FROM scored
+"""
+
+
+@query(oracle=_oracle_superluminous_real)
 def q_superluminous_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
     from pyspark.sql.types import (
@@ -1755,78 +1845,6 @@ def q_superluminous_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_superluminous_real() -> str:
-    from fink_science_spark.operators.sklearn_forest import (
-        load_checkpoint,
-        xgb_proba_sql,
-    )
-
-    ckpt = load_checkpoint("superluminous_xgb")
-    names = ckpt["feature_names"]
-    bounds = _slsn_bounds()
-    thr = float(ckpt["optimal_threshold"])
-
-    real_sql = {
-        "max_slope": "max_slope",
-        "flux_amplitude": "(vmax - vmin)",
-        "skew": "(CASE WHEN m2 > 0 THEN m3 / pow(m2, 1.5) END)",
-        "duration": "duration",
-        "std_flux": "std_flux",
-        "q15": "q15",
-        "q85": "q85",
-    }
-    fdefs = []
-    for j, nm in enumerate(names):
-        if nm in _SLSN_REAL_FEATS:
-            e = real_sql[nm]
-        else:
-            lo, hi = bounds.get(j, (0.0, 1.0))
-            mix = f"(vsum * ({_SLSN_C[j]!r}) + vmax * ({_SLSN_D[j]!r}))"
-            u = f"({mix} - floor({mix}))"
-            e = f"(({lo!r}) + {u} * ({hi - lo!r}))"
-        fdefs.append(f"round({e}, 6) AS f{j}")
-    feats = [f"f{j}" for j in range(27)]
-    proba = xgb_proba_sql(ckpt, feats)
-    return f"""
-WITH rows_w AS (
-  SELECT user_id, event_type, value, epoch_us(ts) AS ts_us,
-         avg(value) OVER (PARTITION BY user_id) AS mean_w,
-         CASE WHEN (epoch_us(ts) - lag(epoch_us(ts)) OVER w) > 0
-              THEN (value - lag(value) OVER w)
-                   / ((epoch_us(ts) - lag(epoch_us(ts)) OVER w) / 86400e6)
-         END AS slope
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), value)
-),
-per_user AS (
-  SELECT user_id, count(*) AS n,
-         sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS n_err,
-         sum(value) AS vsum, min(value) AS vmin, max(value) AS vmax,
-         stddev_samp(value) AS std_flux,
-         quantile_cont(value, 0.15) AS q15,
-         quantile_cont(value, 0.85) AS q85,
-         avg(pow(value - mean_w, 2)) AS m2,
-         avg(pow(value - mean_w, 3)) AS m3,
-         (max(ts_us) - min(ts_us)) / 86400e6 AS duration,
-         max(abs(slope)) AS max_slope
-  FROM rows_w GROUP BY user_id
-),
-feats AS (
-  SELECT user_id, n,
-         (n_err * 5 < n AND duration >= 25.0 AND n >= 20) AS ok,
-         {", ".join(fdefs)}
-  FROM per_user
-),
-scored AS (
-  SELECT user_id, n, ok, round({proba}, 6) AS proba FROM feats
-)
-SELECT user_id, n,
-       CASE WHEN ok THEN proba ELSE -1.0 END AS proba,
-       (ok AND proba > ({thr!r})) AS is_slsn
-FROM scored
-"""
-
-
 # --------------------------------------------------------------------------
 # cats_real: the REAL CATS broad classifier (517,541 params from the
 # reference's TensorFlow SavedModel, rubin/cats/processor.py:36-169;
@@ -1845,6 +1863,7 @@ _CATS_COHORT_MOD = 20
 _CATS_MAX_EVENTS = 64
 
 
+@query(oracle=None, bench=False)
 def q_cats_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import (
         ArrayType,
@@ -1940,6 +1959,7 @@ def q_cats_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 _T2_COHORT_MOD = 10
 
 
+@query(oracle=None)
 def q_t2_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import (
         ArrayType,
@@ -2029,73 +2049,3 @@ def q_t2_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     return both.mapInPandas(kernel, schema=schema).select(
         "user_id", "n_g", "n_r", "t2_class", "p_max", "preds"
     )
-
-
-def _lazy_oracles() -> dict[str, str]:
-    return {
-        "snn_ia_real": _oracle_snn_real(),
-        "mulens_real": _oracle_mulens_real(),
-        "mulens_real_lia": _oracle_mulens_real_lia(),
-        "orphan_real": _oracle_orphan_real(),
-        "kn_rf_real": _oracle_kn_rf_real(),
-        "anomaly_real": _oracle_anomaly_real(),
-        "anomaly_real_lc": _oracle_anomaly_real_lc(),
-        "superluminous_real": _oracle_superluminous_real(),
-        "kn_legacy_real": _oracle_kn_legacy_real(),
-    }
-
-
-QUERIES_EXT17 = {
-    "snn_ia_real": q_snn_ia_real,
-    "mulens_real": q_mulens_real,
-    "mulens_real_lia": q_mulens_real_lia,
-    "orphan_real": q_orphan_real,
-    "kn_rf_real": q_kn_rf_real,
-    "anomaly_real": q_anomaly_real,
-    "anomaly_real_lc": q_anomaly_real_lc,
-    "superluminous_real": q_superluminous_real,
-    "kn_legacy_real": q_kn_legacy_real,
-    "t2_real": q_t2_real,
-    "cats_real": q_cats_real,
-}
-
-
-class _LazyOracles(dict):
-    """Oracle SQL for this wave embeds ~36k weight literals; build it on
-    first access instead of at import."""
-
-    def __init__(self):
-        super().__init__()
-        self._built = False
-
-    def _ensure(self):
-        if not self._built:
-            super().update(_lazy_oracles())
-            self._built = True
-
-    def __getitem__(self, k):
-        self._ensure()
-        return super().__getitem__(k)
-
-    def __contains__(self, k):
-        self._ensure()
-        return super().__contains__(k)
-
-    def __iter__(self):
-        self._ensure()
-        return super().__iter__()
-
-    def keys(self):
-        self._ensure()
-        return super().keys()
-
-    def items(self):
-        self._ensure()
-        return super().items()
-
-    def __len__(self):
-        self._ensure()
-        return super().__len__()
-
-
-ORACLES_EXT17 = _LazyOracles()

@@ -1,4 +1,4 @@
-"""Query registry, wave 3: the 2-D sky crossmatch (the reference's
+"""Queries, wave 3: the 2-D sky crossmatch (the reference's
 flagship join), per-group Arrow feature fits, trapezoid fluence, decode
 patterns (split-string, from_json), scalar-function coverage, embedding
 cosine near-dup, sliding-window + stateful streaming, and the
@@ -11,7 +11,6 @@ from __future__ import annotations
 
 import os
 import uuid
-from typing import Callable
 
 import pandas as pd
 
@@ -22,6 +21,7 @@ from fink_science_spark.functions.arrays import trapezoid_integral
 from fink_science_spark.operators.aggregates import fit_features_per_group
 from fink_science_spark.operators.spatial import nearest_join_sky
 from fink_science_spark.queries import _events_us, _fan_out, _t, _ts_event_col
+from fink_science_spark.registry import query
 
 DAY_US = 24 * 3600 * 1_000_000
 WEEK_US = 7 * DAY_US
@@ -65,6 +65,31 @@ _HAVERSINE_SQL = (
 )
 
 
+ORACLE_CROSSMATCH_SKY = f"""
+WITH c AS (SELECT c_custkey,
+                  {_ra_sql('c_custkey', *_CUST_RA)} AS ra,
+                  {_dec_sql('c_custkey', *_CUST_DEC)} AS dec
+           FROM customer),
+s AS (SELECT s_suppkey,
+             {_ra_sql('s_suppkey', *_SUPP_RA)} AS ra,
+             {_dec_sql('s_suppkey', *_SUPP_DEC)} AS dec
+      FROM supplier),
+cand AS (
+  SELECT c_custkey, s_suppkey,
+         {_HAVERSINE_SQL.format(ra1='c.ra', dec1='c.dec', ra2='s.ra', dec2='s.dec')} AS d
+  FROM c, s
+),
+ranked AS (
+  SELECT *, row_number() OVER (PARTITION BY c_custkey
+                               ORDER BY d ASC, s_suppkey ASC) AS rn
+  FROM cand WHERE d <= {_SKY_RADIUS}
+)
+SELECT c_custkey, s_suppkey, round(d, 6) AS dist_deg
+FROM ranked WHERE rn = 1
+"""
+
+
+@query(oracle=ORACLE_CROSSMATCH_SKY)
 def q_crossmatch_sky(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE flagship join: 1-NN sky crossmatch of customers (alerts) against
     the supplier catalog (broadcast side) within 15°, via (ra_block,
@@ -93,35 +118,24 @@ def q_crossmatch_sky(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_CROSSMATCH_SKY = f"""
-WITH c AS (SELECT c_custkey,
-                  {_ra_sql('c_custkey', *_CUST_RA)} AS ra,
-                  {_dec_sql('c_custkey', *_CUST_DEC)} AS dec
-           FROM customer),
-s AS (SELECT s_suppkey,
-             {_ra_sql('s_suppkey', *_SUPP_RA)} AS ra,
-             {_dec_sql('s_suppkey', *_SUPP_DEC)} AS dec
-      FROM supplier),
-cand AS (
-  SELECT c_custkey, s_suppkey,
-         {_HAVERSINE_SQL.format(ra1='c.ra', dec1='c.dec', ra2='s.ra', dec2='s.dec')} AS d
-  FROM c, s
-),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY c_custkey
-                               ORDER BY d ASC, s_suppkey ASC) AS rn
-  FROM cand WHERE d <= {_SKY_RADIUS}
-)
-SELECT c_custkey, s_suppkey, round(d, 6) AS dist_deg
-FROM ranked WHERE rn = 1
-"""
-
-
 # --------------------------------------------------------------------------
 # Per-group Arrow feature fit (M5 / §2.8 applyInPandas surface)
 # --------------------------------------------------------------------------
 
 
+ORACLE_GROUP_FEATURES = """
+SELECT user_id, count(*) AS n,
+       round(avg(value), 6)                               AS mean,
+       round(max(value) - min(value), 6)                  AS amp,
+       round(regr_slope(value, epoch_us(ts) / 86400e6), 6) AS slope
+FROM events
+WHERE event_type = 'purchase'
+GROUP BY user_id
+HAVING count(*) >= 2 AND var_pop(epoch_us(ts) / 86400e6) > 0
+"""
+
+
+@query(oracle=ORACLE_GROUP_FEATURES)
 def q_group_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user light-curve feature fit (applyInPandas + numpy closed-form
     least squares) over purchase events; time axis in days so the slope is
@@ -141,18 +155,22 @@ def q_group_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_GROUP_FEATURES = """
-SELECT user_id, count(*) AS n,
-       round(avg(value), 6)                               AS mean,
-       round(max(value) - min(value), 6)                  AS amp,
-       round(regr_slope(value, epoch_us(ts) / 86400e6), 6) AS slope
-FROM events
-WHERE event_type = 'purchase'
-GROUP BY user_id
-HAVING count(*) >= 2 AND var_pop(epoch_us(ts) / 86400e6) > 0
+ORACLE_TRAPEZOID_FLUENCE = """
+WITH h AS (
+  SELECT user_id,
+         list(epoch_us(ts) / 86400e6 ORDER BY epoch_us(ts) / 86400e6, value) AS t,
+         list(value ORDER BY epoch_us(ts) / 86400e6, value)                  AS v
+  FROM events GROUP BY user_id
+)
+SELECT user_id,
+       round(coalesce(list_sum(
+         [ (v[i] + v[i+1]) / 2 * (t[i+1] - t[i])
+           for i in generate_series(1, len(t) - 1) ]), 0.0), 4) AS fluence
+FROM h
 """
 
 
+@query(oracle=ORACLE_TRAPEZOID_FLUENCE)
 def q_trapezoid_fluence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing-fluence trapezoidal integral of value over time (days) per
     user, over the full time-sorted history arrays (SURVEY §2.4
@@ -170,26 +188,27 @@ def q_trapezoid_fluence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_TRAPEZOID_FLUENCE = """
-WITH h AS (
-  SELECT user_id,
-         list(epoch_us(ts) / 86400e6 ORDER BY epoch_us(ts) / 86400e6, value) AS t,
-         list(value ORDER BY epoch_us(ts) / 86400e6, value)                  AS v
-  FROM events GROUP BY user_id
-)
-SELECT user_id,
-       round(coalesce(list_sum(
-         [ (v[i] + v[i+1]) / 2 * (t[i+1] - t[i])
-           for i in generate_series(1, len(t) - 1) ]), 0.0), 4) AS fluence
-FROM h
-"""
-
-
 # --------------------------------------------------------------------------
 # Decode patterns (§3.2 decode-struct, §2.7 JSON)
 # --------------------------------------------------------------------------
 
 
+ORACLE_DECODE_CSV = """
+WITH p AS (
+  SELECT o_orderkey,
+         o_orderstatus || '|' || o_orderpriority || '|' || o_custkey::VARCHAR
+             AS packed
+  FROM orders
+)
+SELECT o_orderkey,
+       string_split(packed, '|')[1]           AS status,
+       string_split(packed, '|')[2]           AS priority,
+       string_split(packed, '|')[3]::BIGINT   AS custkey
+FROM p
+"""
+
+
+@query(oracle=ORACLE_DECODE_CSV, bench=False)
 def q_decode_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The xmatch_cds decode pattern (reference shape:
     ztf/xmatch/processor.py:287-292): one packed delimiter-string column
@@ -208,21 +227,15 @@ def q_decode_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_DECODE_CSV = """
-WITH p AS (
-  SELECT o_orderkey,
-         o_orderstatus || '|' || o_orderpriority || '|' || o_custkey::VARCHAR
-             AS packed
-  FROM orders
-)
-SELECT o_orderkey,
-       string_split(packed, '|')[1]           AS status,
-       string_split(packed, '|')[2]           AS priority,
-       string_split(packed, '|')[3]::BIGINT   AS custkey
-FROM p
+ORACLE_JSON_STRUCT_DECODE = """
+SELECT (json_extract_string(props, '$.k')::INT) % 10 AS k_bucket,
+       count(*) AS n, round(avg(value), 6) AS avg_value
+FROM events
+GROUP BY 1
 """
 
 
+@query(oracle=ORACLE_JSON_STRUCT_DECODE, bench=False)
 def q_json_struct_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """from_json with an explicit schema (replacing the reference's
     driver-side eval, ztf/ssoft/processor.py:858-865): parse props into a
@@ -239,14 +252,21 @@ def q_json_struct_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_JSON_STRUCT_DECODE = """
-SELECT (json_extract_string(props, '$.k')::INT) % 10 AS k_bucket,
-       count(*) AS n, round(avg(value), 6) AS avg_value
-FROM events
-GROUP BY 1
+ORACLE_SCALAR_KITCHEN_SINK = """
+SELECT l_orderkey, l_linenumber,
+       round(log10(l_quantity + 1.0), 6)       AS log_qty,
+       round(sqrt(l_extendedprice), 6)         AS sqrt_price,
+       round(abs(l_discount - 0.05), 6)        AS abs_disc,
+       l_orderkey % 7                          AS mod7,
+       upper(substr(l_returnflag, 1, 1))       AS flag_u,
+       l_returnflag || ':' || l_linestatus     AS flag_status,
+       l_linestatus LIKE '%F%'                 AS is_fo,
+       round(least(l_quantity, 25.0) + greatest(l_tax, 0.04), 6) AS capped
+FROM lineitem
 """
 
 
+@query(oracle=ORACLE_SCALAR_KITCHEN_SINK, bench=False)
 def q_scalar_kitchen_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.7 scalar-function coverage in one narrow projection: log10/sqrt/
     abs/mod (math), upper/substring/concat_ws/LIKE (string), least/greatest
@@ -270,20 +290,6 @@ def q_scalar_kitchen_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_SCALAR_KITCHEN_SINK = """
-SELECT l_orderkey, l_linenumber,
-       round(log10(l_quantity + 1.0), 6)       AS log_qty,
-       round(sqrt(l_extendedprice), 6)         AS sqrt_price,
-       round(abs(l_discount - 0.05), 6)        AS abs_disc,
-       l_orderkey % 7                          AS mod7,
-       upper(substr(l_returnflag, 1, 1))       AS flag_u,
-       l_returnflag || ':' || l_linestatus     AS flag_status,
-       l_linestatus LIKE '%F%'                 AS is_fo,
-       round(least(l_quantity, 25.0) + greatest(l_tax, 0.04), 6) AS capped
-FROM lineitem
-"""
-
-
 # --------------------------------------------------------------------------
 # Embedding cosine near-dup (M7 dedup family, 5th tier)
 # --------------------------------------------------------------------------
@@ -291,27 +297,6 @@ FROM lineitem
 _EMB_DIM = 64
 _COS_BITS = 6
 _COS_THRESHOLD = 0.4
-
-
-def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup pairs: LSH-bucket candidate generation
-    (same-bucket pairs only — the scale path) + exact cosine ≥ threshold
-    refine, fully JVM-side (SURVEY M7 embedding-cosine near-dup)."""
-    from fink_science_spark.operators.similarity import (
-        cosine_pairs_bucketed,
-        lsh_bucket_udf,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    bucket = lsh_bucket_udf(_EMB_DIM, _COS_BITS)
-    pairs = cosine_pairs_bucketed(
-        emb, "vec_id", "v",
-        bucket_col=bucket(F.col("v")),
-        threshold=_COS_THRESHOLD,
-    )
-    return pairs.select("id_a", "id_b", F.round("cosr", 6).alias("cos"))
 
 
 def _lsh_bucket_sql(vec: str) -> str:
@@ -342,10 +327,53 @@ WHERE list_inner_product(a.v, bb.v) /
 """
 
 
+@query(oracle=ORACLE_DEDUP_EMBEDDING_COSINE)
+def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding-cosine near-dup pairs: LSH-bucket candidate generation
+    (same-bucket pairs only — the scale path) + exact cosine ≥ threshold
+    refine, fully JVM-side (SURVEY M7 embedding-cosine near-dup)."""
+    from fink_science_spark.operators.similarity import (
+        cosine_pairs_bucketed,
+        lsh_bucket_udf,
+    )
+
+    emb = _t(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    )
+    bucket = lsh_bucket_udf(_EMB_DIM, _COS_BITS)
+    pairs = cosine_pairs_bucketed(
+        emb, "vec_id", "v",
+        bucket_col=bucket(F.col("v")),
+        threshold=_COS_THRESHOLD,
+    )
+    return pairs.select("id_a", "id_b", F.round("cosr", 6).alias("cos"))
+
+
 _COS_CAP_FLOOR = 12
 _COS_CAP_FRAC = 40  # cap = max(floor, n_rows // frac)
 
 
+ORACLE_DEDUP_EMBEDDING_COSINE_CAPPED = f"""
+WITH e AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
+b AS (SELECT vec_id, v, {_lsh_bucket_sql('v')} AS bucket FROM e),
+sz AS (SELECT bucket, count(*) AS n FROM b GROUP BY bucket),
+cap AS (SELECT greatest({_COS_CAP_FLOOR}, count(*) // {_COS_CAP_FRAC}) AS c
+        FROM e),
+keep AS (SELECT b.* FROM b JOIN sz USING (bucket)
+         WHERE sz.n <= (SELECT c FROM cap))
+SELECT a.vec_id AS id_a, bb.vec_id AS id_b,
+       round(list_inner_product(a.v, bb.v) /
+             sqrt(list_inner_product(a.v, a.v) *
+                  list_inner_product(bb.v, bb.v)), 6) AS cos
+FROM keep a JOIN keep bb
+  ON a.bucket = bb.bucket AND a.vec_id < bb.vec_id
+WHERE list_inner_product(a.v, bb.v) /
+      sqrt(list_inner_product(a.v, a.v) * list_inner_product(bb.v, bb.v))
+      >= {_COS_THRESHOLD}
+"""
+
+
+@query(oracle=ORACLE_DEDUP_EMBEDDING_COSINE_CAPPED)
 def q_dedup_embedding_cosine_capped(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -379,31 +407,25 @@ def q_dedup_embedding_cosine_capped(
     return pairs.select("id_a", "id_b", F.round("cosr", 6).alias("cos"))
 
 
-ORACLE_DEDUP_EMBEDDING_COSINE_CAPPED = f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
-b AS (SELECT vec_id, v, {_lsh_bucket_sql('v')} AS bucket FROM e),
-sz AS (SELECT bucket, count(*) AS n FROM b GROUP BY bucket),
-cap AS (SELECT greatest({_COS_CAP_FLOOR}, count(*) // {_COS_CAP_FRAC}) AS c
-        FROM e),
-keep AS (SELECT b.* FROM b JOIN sz USING (bucket)
-         WHERE sz.n <= (SELECT c FROM cap))
-SELECT a.vec_id AS id_a, bb.vec_id AS id_b,
-       round(list_inner_product(a.v, bb.v) /
-             sqrt(list_inner_product(a.v, a.v) *
-                  list_inner_product(bb.v, bb.v)), 6) AS cos
-FROM keep a JOIN keep bb
-  ON a.bucket = bb.bucket AND a.vec_id < bb.vec_id
-WHERE list_inner_product(a.v, bb.v) /
-      sqrt(list_inner_product(a.v, a.v) * list_inner_product(bb.v, bb.v))
-      >= {_COS_THRESHOLD}
-"""
-
-
 # --------------------------------------------------------------------------
 # Streaming (M6): sliding windows + stateful per-key aggregation
 # --------------------------------------------------------------------------
 
 
+ORACLE_STREAM_SLIDING_COUNTS = """
+WITH off AS (SELECT unnest([0, 1]) AS i),
+w AS (
+  SELECT ((epoch_us(ts) // 604800000000) - i) * 604800000000 AS win_us,
+         event_type, value
+  FROM events, off
+)
+SELECT win_us, event_type, count(*) AS n, round(sum(value), 2) AS sum_value
+FROM w
+GROUP BY 1, 2
+"""
+
+
+@query(oracle=ORACLE_STREAM_SLIDING_COUNTS)
 def q_stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding-window (14d window, 7d slide) watermarked aggregation as a
     real Structured Streaming query; every event lands in exactly two
@@ -449,19 +471,14 @@ def q_stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         return run_to_memory(counts, name, spark)
 
 
-ORACLE_STREAM_SLIDING_COUNTS = """
-WITH off AS (SELECT unnest([0, 1]) AS i),
-w AS (
-  SELECT ((epoch_us(ts) // 604800000000) - i) * 604800000000 AS win_us,
-         event_type, value
-  FROM events, off
-)
-SELECT win_us, event_type, count(*) AS n, round(sum(value), 2) AS sum_value
-FROM w
-GROUP BY 1, 2
+ORACLE_STREAM_STATEFUL_USER_STATS = """
+SELECT user_id, count(*) AS n, round(max(value), 6) AS max_value
+FROM events
+GROUP BY user_id
 """
 
 
+@query(oracle=ORACLE_STREAM_STATEFUL_USER_STATS)
 def q_stream_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful streaming operator via applyInPandasWithState:
     per-user running (count, max) state across micro-batches, emitting the
@@ -531,18 +548,28 @@ def q_stream_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_STREAM_STATEFUL_USER_STATS = """
-SELECT user_id, count(*) AS n, round(max(value), 6) AS max_value
-FROM events
-GROUP BY user_id
-"""
-
-
 # --------------------------------------------------------------------------
 # Nested alert data model (§1.1/1.2): candidate struct + prv_candidates
 # --------------------------------------------------------------------------
 
 
+ORACLE_ALERT_ENRICHMENT = """
+WITH agg AS (
+  SELECT user_id, count(*) AS n,
+         list(value ORDER BY epoch_us(ts), value) AS vs
+  FROM events GROUP BY user_id
+)
+SELECT user_id,
+       n - 1 AS n_prv,
+       CASE WHEN n >= 2 THEN round(vs[-1] - vs[-2], 6) END AS delta_last,
+       len(list_filter(vs, x -> x >= 10.0)) AS n_valid,
+       coalesce(vs[-1] > list_max(list_slice(vs, 1, n - 1)), FALSE)
+           AS is_brightening
+FROM agg
+"""
+
+
+@query(oracle=ORACLE_ALERT_ENRICHMENT, bench=False)
 def q_alert_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end nested alert pipeline: build the candidate-struct +
     prv_candidates-array layout from the event stream, derive c-columns
@@ -569,22 +596,6 @@ def q_alert_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_ALERT_ENRICHMENT = """
-WITH agg AS (
-  SELECT user_id, count(*) AS n,
-         list(value ORDER BY epoch_us(ts), value) AS vs
-  FROM events GROUP BY user_id
-)
-SELECT user_id,
-       n - 1 AS n_prv,
-       CASE WHEN n >= 2 THEN round(vs[-1] - vs[-2], 6) END AS delta_last,
-       len(list_filter(vs, x -> x >= 10.0)) AS n_valid,
-       coalesce(vs[-1] > list_max(list_slice(vs, 1, n - 1)), FALSE)
-           AS is_brightening
-FROM agg
-"""
-
-
 # --------------------------------------------------------------------------
 # Sink/source roundtrip (§2.1): parquet sink, CSV sink+source
 # --------------------------------------------------------------------------
@@ -595,6 +606,14 @@ _SCRATCH = os.path.join(
 os.makedirs(_SCRATCH, exist_ok=True)
 
 
+ORACLE_SINK_ROUNDTRIP = """
+SELECT o_orderpriority, count(*) AS n, round(sum(o_totalprice), 2) AS total
+FROM orders
+GROUP BY o_orderpriority
+"""
+
+
+@query(oracle=ORACLE_SINK_ROUNDTRIP, bench=False)
 def q_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sink coverage: aggregate → write CSV (header) → read CSV with an
     explicit schema → write parquet → read parquet → return. Exercises
@@ -618,41 +637,3 @@ def q_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).csv(csv_path)
     back.write.mode("overwrite").parquet(pq_path)
     return spark.read.parquet(pq_path)
-
-
-ORACLE_SINK_ROUNDTRIP = """
-SELECT o_orderpriority, count(*) AS n, round(sum(o_totalprice), 2) AS total
-FROM orders
-GROUP BY o_orderpriority
-"""
-
-
-QUERIES_EXT2: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "crossmatch_sky": q_crossmatch_sky,
-    "group_features": q_group_features,
-    "trapezoid_fluence": q_trapezoid_fluence,
-    "decode_csv": q_decode_csv,
-    "json_struct_decode": q_json_struct_decode,
-    "scalar_kitchen_sink": q_scalar_kitchen_sink,
-    "dedup_embedding_cosine": q_dedup_embedding_cosine,
-    "dedup_embedding_cosine_capped": q_dedup_embedding_cosine_capped,
-    "alert_enrichment": q_alert_enrichment,
-    "stream_sliding_counts": q_stream_sliding_counts,
-    "stream_stateful_user_stats": q_stream_stateful_user_stats,
-    "sink_roundtrip": q_sink_roundtrip,
-}
-
-ORACLES_EXT2: dict[str, str] = {
-    "crossmatch_sky": ORACLE_CROSSMATCH_SKY,
-    "group_features": ORACLE_GROUP_FEATURES,
-    "trapezoid_fluence": ORACLE_TRAPEZOID_FLUENCE,
-    "decode_csv": ORACLE_DECODE_CSV,
-    "json_struct_decode": ORACLE_JSON_STRUCT_DECODE,
-    "scalar_kitchen_sink": ORACLE_SCALAR_KITCHEN_SINK,
-    "dedup_embedding_cosine": ORACLE_DEDUP_EMBEDDING_COSINE,
-    "dedup_embedding_cosine_capped": ORACLE_DEDUP_EMBEDDING_COSINE_CAPPED,
-    "alert_enrichment": ORACLE_ALERT_ENRICHMENT,
-    "stream_sliding_counts": ORACLE_STREAM_SLIDING_COUNTS,
-    "stream_stateful_user_stats": ORACLE_STREAM_STATEFUL_USER_STATS,
-    "sink_roundtrip": ORACLE_SINK_ROUNDTRIP,
-}

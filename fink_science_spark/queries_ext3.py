@@ -1,4 +1,4 @@
-"""Query registry, wave 4: IVF similarity search, session windows,
+"""Queries, wave 4: IVF similarity search, session windows,
 stream-static broadcast enrichment, rule-cascade alert flags, catalog
 standardization (standardized_flux shape), extreme-state threshold
 ratios, winnowing document fingerprints, per-band feature extraction,
@@ -10,7 +10,6 @@ from __future__ import annotations
 
 import os
 import uuid
-from typing import Callable
 
 import pandas as pd
 
@@ -21,6 +20,7 @@ from fink_science_spark.functions.hashing import hash64, hash64_sql
 from fink_science_spark.functions.text import tokens, tokens_sql, word_shingles, word_shingles_sql
 from fink_science_spark.operators.similarity import ivf_topk_blocked
 from fink_science_spark.queries import _events_us, _fan_out, _t, _ts_event_col
+from fink_science_spark.registry import query
 
 DAY_US = 24 * 3600 * 1_000_000
 
@@ -40,52 +40,6 @@ _IVF_OVERSAMPLE = 4
 # process reproduces the identical codebook — nothing about correctness
 # depends on the cache being warm).
 _IVF_CODEBOOKS: dict[str, list[tuple[int, list[float]]]] = {}
-
-
-def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF approximate top-3 with a TRAINED coarse quantizer: 8 centroids
-    from a deterministic k-means||-style init (hash-ranked 4× oversample
-    → driver-local maximin seed selection) + 2 distributed Lloyd rounds
-    (train_ivf_centroids — mapInPandas partial sums, one persisted-scan
-    per round), nprobe=2 probing, exact cosine inside the probed cells.
-    One numpy block kernel per corpus partition (SURVEY M7 scale path).
-    The oracle replays the identical training (oversample + unrolled
-    maximin picks + unrolled Lloyd rounds in SQL) — cosines rounded to 9
-    decimals before every argmax/argmin in both engines so assignment
-    boundaries cannot flip on engine ulp noise."""
-    emb = _t(spark, sf_dir, "embeddings")
-    corpus = emb.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cv"))
-    queries = emb.filter(F.col("vec_id") % 20 == 0).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
-    )
-    trained = _ivf_codebook(spark, sf_dir)
-    cents = spark.createDataFrame(
-        trained, "centid long, centv array<double>"
-    )
-    return ivf_topk_blocked(
-        corpus, queries, cents, "cid", "cv", "qid", "qv", "centid", "centv",
-        k=_IVF_K, nprobe=_IVF_NPROBE,
-    )
-
-
-def _ivf_codebook(spark: SparkSession, sf_dir: str) -> list:
-    """The trained coarse quantizer for ``sf_dir`` (process-memoized —
-    see _IVF_CODEBOOKS). Shared by every query that clusters the
-    embedding table with this codebook (ann_ivf_topk, semantic_dedup)."""
-    from fink_science_spark.operators.similarity import train_ivf_centroids
-
-    trained = _IVF_CODEBOOKS.get(sf_dir)
-    if trained is None:
-        emb = _t(spark, sf_dir, "embeddings")
-        corpus = emb.select(
-            F.col("vec_id").alias("cid"), F.col("embedding").alias("cv")
-        )
-        trained = train_ivf_centroids(
-            corpus, "cid", "cv", n_centroids=_IVF_CELLS, rounds=_IVF_ROUNDS,
-            oversample=_IVF_OVERSAMPLE,
-        )
-        _IVF_CODEBOOKS[sf_dir] = trained
-    return trained
 
 
 def _cos9_sql(a: str, b: str) -> str:
@@ -193,6 +147,53 @@ FROM ranked WHERE rank <= {_IVF_K}
 ORACLE_ANN_IVF_TOPK = _oracle_ann_ivf_topk()
 
 
+@query(oracle=ORACLE_ANN_IVF_TOPK)
+def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF approximate top-3 with a TRAINED coarse quantizer: 8 centroids
+    from a deterministic k-means||-style init (hash-ranked 4× oversample
+    → driver-local maximin seed selection) + 2 distributed Lloyd rounds
+    (train_ivf_centroids — mapInPandas partial sums, one persisted-scan
+    per round), nprobe=2 probing, exact cosine inside the probed cells.
+    One numpy block kernel per corpus partition (SURVEY M7 scale path).
+    The oracle replays the identical training (oversample + unrolled
+    maximin picks + unrolled Lloyd rounds in SQL) — cosines rounded to 9
+    decimals before every argmax/argmin in both engines so assignment
+    boundaries cannot flip on engine ulp noise."""
+    emb = _t(spark, sf_dir, "embeddings")
+    corpus = emb.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cv"))
+    queries = emb.filter(F.col("vec_id") % 20 == 0).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
+    )
+    trained = _ivf_codebook(spark, sf_dir)
+    cents = spark.createDataFrame(
+        trained, "centid long, centv array<double>"
+    )
+    return ivf_topk_blocked(
+        corpus, queries, cents, "cid", "cv", "qid", "qv", "centid", "centv",
+        k=_IVF_K, nprobe=_IVF_NPROBE,
+    )
+
+
+def _ivf_codebook(spark: SparkSession, sf_dir: str) -> list:
+    """The trained coarse quantizer for ``sf_dir`` (process-memoized —
+    see _IVF_CODEBOOKS). Shared by every query that clusters the
+    embedding table with this codebook (ann_ivf_topk, semantic_dedup)."""
+    from fink_science_spark.operators.similarity import train_ivf_centroids
+
+    trained = _IVF_CODEBOOKS.get(sf_dir)
+    if trained is None:
+        emb = _t(spark, sf_dir, "embeddings")
+        corpus = emb.select(
+            F.col("vec_id").alias("cid"), F.col("embedding").alias("cv")
+        )
+        trained = train_ivf_centroids(
+            corpus, "cid", "cv", n_centroids=_IVF_CELLS, rounds=_IVF_ROUNDS,
+            oversample=_IVF_OVERSAMPLE,
+        )
+        _IVF_CODEBOOKS[sf_dir] = trained
+    return trained
+
+
 # --------------------------------------------------------------------------
 # Streaming (M6): session windows + stream-static broadcast join
 # --------------------------------------------------------------------------
@@ -201,6 +202,30 @@ _SESSION_GAP = "3 days"
 _SESSION_GAP_US = 3 * DAY_US
 
 
+ORACLE_STREAM_SESSION_WINDOWS = f"""
+WITH o AS (
+  SELECT user_id, value, epoch_us(ts) AS t,
+         lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts)) AS prev_t
+  FROM events
+),
+marked AS (
+  SELECT *, CASE WHEN prev_t IS NULL OR t - prev_t >= {_SESSION_GAP_US}
+                 THEN 1 ELSE 0 END AS is_new
+  FROM o
+),
+sessions AS (
+  SELECT *, sum(is_new) OVER (PARTITION BY user_id ORDER BY t
+                              ROWS UNBOUNDED PRECEDING) AS sid
+  FROM marked
+)
+SELECT min(t) AS session_start_us, user_id,
+       count(*) AS n, round(sum(value), 2) AS sum_value
+FROM sessions
+GROUP BY user_id, sid
+"""
+
+
+@query(oracle=ORACLE_STREAM_SESSION_WINDOWS)
 def q_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows (3-day inactivity gap) per user as a real streaming
     query: merge-on-overlap session aggregation — the sessionization shape
@@ -244,29 +269,14 @@ def q_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         return run_to_memory(sessions, name, spark)
 
 
-ORACLE_STREAM_SESSION_WINDOWS = f"""
-WITH o AS (
-  SELECT user_id, value, epoch_us(ts) AS t,
-         lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts)) AS prev_t
-  FROM events
-),
-marked AS (
-  SELECT *, CASE WHEN prev_t IS NULL OR t - prev_t >= {_SESSION_GAP_US}
-                 THEN 1 ELSE 0 END AS is_new
-  FROM o
-),
-sessions AS (
-  SELECT *, sum(is_new) OVER (PARTITION BY user_id ORDER BY t
-                              ROWS UNBOUNDED PRECEDING) AS sid
-  FROM marked
-)
-SELECT min(t) AS session_start_us, user_id,
-       count(*) AS n, round(sum(value), 2) AS sum_value
-FROM sessions
-GROUP BY user_id, sid
+ORACLE_STREAM_STATIC_JOIN = """
+SELECT c_mktsegment, count(*) AS n, round(sum(value), 2) AS sum_value
+FROM events JOIN customer ON user_id = c_custkey
+GROUP BY c_mktsegment
 """
 
 
+@query(oracle=ORACLE_STREAM_STATIC_JOIN, bench=False)
 def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static broadcast enrichment: the streaming events frame
     joined against the static customer dimension (the reference's
@@ -302,18 +312,27 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         return run_to_memory(agg, name, spark)
 
 
-ORACLE_STREAM_STATIC_JOIN = """
-SELECT c_mktsegment, count(*) AS n, round(sum(value), 2) AS sum_value
-FROM events JOIN customer ON user_id = c_custkey
-GROUP BY c_mktsegment
-"""
-
-
 # --------------------------------------------------------------------------
 # Alert rule cascade (M2: roid_catcher as native boolean algebra)
 # --------------------------------------------------------------------------
 
 
+ORACLE_ALERT_RULE_FLAGS = """
+WITH agg AS (
+  SELECT user_id, count(*) AS n,
+         list(value ORDER BY epoch_us(ts), value) AS vs
+  FROM events GROUP BY user_id
+)
+SELECT user_id,
+       CASE WHEN vs[-1] > 450 AND n - 1 >= 5 THEN 3
+            WHEN vs[-1] > 300 AND n >= 2 AND vs[-1] - vs[-2] > 0 THEN 2
+            WHEN n - 1 = 0 THEN 1
+            ELSE 0 END AS flag
+FROM agg
+"""
+
+
+@query(oracle=ORACLE_ALERT_RULE_FLAGS, scan_table="events")
 def q_alert_rule_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rule-cascade flag derivation over the nested alert layout — the
     roid_catcher shape (reference: rule-based flags 0-3,
@@ -336,26 +355,22 @@ def q_alert_rule_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df.select("user_id", flag.alias("flag"))
 
 
-ORACLE_ALERT_RULE_FLAGS = """
-WITH agg AS (
-  SELECT user_id, count(*) AS n,
-         list(value ORDER BY epoch_us(ts), value) AS vs
-  FROM events GROUP BY user_id
-)
-SELECT user_id,
-       CASE WHEN vs[-1] > 450 AND n - 1 >= 5 THEN 3
-            WHEN vs[-1] > 300 AND n >= 2 AND vs[-1] - vs[-2] > 0 THEN 2
-            WHEN n - 1 = 0 THEN 1
-            ELSE 0 END AS flag
-FROM agg
-"""
-
-
 # --------------------------------------------------------------------------
 # Catalog standardization (standardized_flux shape) + extreme state
 # --------------------------------------------------------------------------
 
 
+ORACLE_STANDARDIZED_VALUE = """
+WITH cat AS (
+  SELECT event_type, quantile_cont(value, 0.5) AS med
+  FROM events GROUP BY event_type
+)
+SELECT event_id, round(value / med, 6) AS standardized
+FROM events JOIN cat USING (event_type)
+"""
+
+
+@query(oracle=ORACLE_STANDARDIZED_VALUE, bench=False)
 def q_standardized_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """standardized_flux pattern (reference: flux / per-band catalog
     median, ztf/standardized_flux/processor.py:31-179): build the per-type
@@ -375,16 +390,19 @@ def q_standardized_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_STANDARDIZED_VALUE = """
-WITH cat AS (
-  SELECT event_type, quantile_cont(value, 0.5) AS med
+ORACLE_EXTREME_STATE_RATIO = """
+WITH th AS (
+  SELECT event_type, quantile_cont(value, 0.9) AS p90
   FROM events GROUP BY event_type
 )
-SELECT event_id, round(value / med, 6) AS standardized
-FROM events JOIN cat USING (event_type)
+SELECT user_id, event_type, count(*) AS n,
+       round(avg(CASE WHEN value > p90 THEN 1.0 ELSE 0.0 END), 6) AS high_ratio
+FROM events JOIN th USING (event_type)
+GROUP BY user_id, event_type
 """
 
 
+@query(oracle=ORACLE_EXTREME_STATE_RATIO, bench=False)
 def q_extreme_state_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """extreme_state pattern (reference: threshold-exceedance ratios,
     ztf/blazar_extreme_state/processor.py:67-277): per (user, type), the
@@ -406,18 +424,18 @@ def q_extreme_state_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_EXTREME_STATE_RATIO = """
-WITH th AS (
-  SELECT event_type, quantile_cont(value, 0.9) AS p90
-  FROM events GROUP BY event_type
-)
-SELECT user_id, event_type, count(*) AS n,
-       round(avg(CASE WHEN value > p90 THEN 1.0 ELSE 0.0 END), 6) AS high_ratio
-FROM events JOIN th USING (event_type)
-GROUP BY user_id, event_type
-"""
+def _oracle_band_features() -> str:
+    from fink_science_spark.operators.aggregates import BAND_FEATURE_COLS
+
+    return (
+        "WITH "
+        + band_features_ctes()
+        + "\n"
+        + band_features_select(BAND_FEATURE_COLS[1:], 3)
+    )
 
 
+@query(oracle=_oracle_band_features)
 def q_band_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-(object, band) feature extraction — the reference's marquee
     per-band UDF (ad_features: 26 features per filter id via the
@@ -663,17 +681,21 @@ GROUP BY xc.user_id, xc.event_type
 HAVING any_value(p2.n) >= {min_pts}"""
 
 
-def _oracle_band_features() -> str:
-    from fink_science_spark.operators.aggregates import BAND_FEATURE_COLS
+def _oracle_bpe_token_count() -> str:
+    from fink_science_spark.functions.text import bpe_tokens_sql, tokens_sql
 
-    return (
-        "WITH "
-        + band_features_ctes()
-        + "\n"
-        + band_features_select(BAND_FEATURE_COLS[1:], 3)
-    )
+    return f"""
+SELECT doc_id,
+       len({tokens_sql('text')})      AS n_ws_tokens,
+       len({bpe_tokens_sql('text')})  AS n_bpe_tokens,
+       CASE WHEN len({tokens_sql('text')}) > 0
+            THEN round(len({bpe_tokens_sql('text')}) * 1.0 /
+                       len({tokens_sql('text')}), 6) END AS bpe_per_word
+FROM documents
+"""
 
 
+@query(oracle=_oracle_bpe_token_count, scan_table="documents")
 def q_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting with the BPE-style pre-tokenizer (letter/digit/punct
     runs — the GPT-family pre-tokenization shape) alongside the whitespace
@@ -694,20 +716,34 @@ def q_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_bpe_token_count() -> str:
-    from fink_science_spark.functions.text import bpe_tokens_sql, tokens_sql
-
-    return f"""
-SELECT doc_id,
-       len({tokens_sql('text')})      AS n_ws_tokens,
-       len({bpe_tokens_sql('text')})  AS n_bpe_tokens,
-       CASE WHEN len({tokens_sql('text')}) > 0
-            THEN round(len({bpe_tokens_sql('text')}) * 1.0 /
-                       len({tokens_sql('text')}), 6) END AS bpe_per_word
-FROM documents
+ORACLE_ALERT_PIPELINE = """
+WITH agg AS (
+  SELECT user_id, count(*) AS n,
+         list(value ORDER BY epoch_us(ts), value) AS vs
+  FROM events GROUP BY user_id
+),
+flagged AS (
+  SELECT user_id, vs[-1] AS last_value,
+         CASE WHEN vs[-1] > 200 AND n - 1 >= 5 THEN 3
+              WHEN vs[-1] > 50 AND n >= 2 AND vs[-1] - vs[-2] > 0 THEN 2
+              WHEN n - 1 = 0 THEN 1
+              ELSE 0 END AS flag
+  FROM agg
+),
+scored AS (
+  SELECT flag,
+         CASE WHEN flag >= 2
+              THEN 1.0 / (1.0 + exp(-(last_value - 100.0) / 30.0))
+              ELSE 0.0 END AS score
+  FROM flagged
+)
+SELECT flag, count(*) AS n, round(avg(score), 6) AS avg_score
+FROM scored WHERE score > 0.25
+GROUP BY flag
 """
 
 
+@query(oracle=ORACLE_ALERT_PIPELINE)
 def q_alert_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The canonical chained enrichment query (SURVEY §3.1: the SNN
     lifecycle): build nested alerts → c-columns → rule-cascade flag module
@@ -760,33 +796,6 @@ def q_alert_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_ALERT_PIPELINE = """
-WITH agg AS (
-  SELECT user_id, count(*) AS n,
-         list(value ORDER BY epoch_us(ts), value) AS vs
-  FROM events GROUP BY user_id
-),
-flagged AS (
-  SELECT user_id, vs[-1] AS last_value,
-         CASE WHEN vs[-1] > 200 AND n - 1 >= 5 THEN 3
-              WHEN vs[-1] > 50 AND n >= 2 AND vs[-1] - vs[-2] > 0 THEN 2
-              WHEN n - 1 = 0 THEN 1
-              ELSE 0 END AS flag
-  FROM agg
-),
-scored AS (
-  SELECT flag,
-         CASE WHEN flag >= 2
-              THEN 1.0 / (1.0 + exp(-(last_value - 100.0) / 30.0))
-              ELSE 0.0 END AS score
-  FROM flagged
-)
-SELECT flag, count(*) AS n, round(avg(score), 6) AS avg_score
-FROM scored WHERE score > 0.25
-GROUP BY flag
-"""
-
-
 # --------------------------------------------------------------------------
 # Winnowing document fingerprints (M7 rolling-hash fingerprinting)
 # --------------------------------------------------------------------------
@@ -794,6 +803,28 @@ GROUP BY flag
 _WIN_W = 4
 
 
+ORACLE_DOC_WINNOWING = f"""
+WITH tok AS (
+  SELECT doc_id, {tokens_sql('text')} AS toks FROM documents
+),
+sh AS (
+  SELECT doc_id, {word_shingles_sql('t.toks', 3)} AS sh FROM tok t
+),
+hs AS (
+  SELECT doc_id, list_transform(sh, x -> {hash64_sql('x')}) AS hs FROM sh
+),
+wins AS (
+  SELECT doc_id,
+         [ list_min(list_slice(hs, i, i + {_WIN_W - 1}))
+           for i in generate_series(1, greatest(len(hs) - {_WIN_W - 1}, 0)) ] AS fps
+  FROM hs
+)
+SELECT doc_id, unnest(list_distinct(fps)) AS fp
+FROM wins
+"""
+
+
+@query(oracle=ORACLE_DOC_WINNOWING)
 def q_doc_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing fingerprints (the rolling-hash document-fingerprint
     scheme): hash every positional 3-gram shingle, take the min hash of
@@ -827,51 +858,3 @@ def q_doc_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
         wins.select("doc_id", F.explode_outer(F.array_distinct("fps")).alias("fp"))
         .filter(F.col("fp").isNotNull())
     )
-
-
-ORACLE_DOC_WINNOWING = f"""
-WITH tok AS (
-  SELECT doc_id, {tokens_sql('text')} AS toks FROM documents
-),
-sh AS (
-  SELECT doc_id, {word_shingles_sql('t.toks', 3)} AS sh FROM tok t
-),
-hs AS (
-  SELECT doc_id, list_transform(sh, x -> {hash64_sql('x')}) AS hs FROM sh
-),
-wins AS (
-  SELECT doc_id,
-         [ list_min(list_slice(hs, i, i + {_WIN_W - 1}))
-           for i in generate_series(1, greatest(len(hs) - {_WIN_W - 1}, 0)) ] AS fps
-  FROM hs
-)
-SELECT doc_id, unnest(list_distinct(fps)) AS fp
-FROM wins
-"""
-
-
-QUERIES_EXT3: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "ann_ivf_topk": q_ann_ivf_topk,
-    "stream_session_windows": q_stream_session_windows,
-    "stream_static_join": q_stream_static_join,
-    "alert_rule_flags": q_alert_rule_flags,
-    "standardized_value": q_standardized_value,
-    "extreme_state_ratio": q_extreme_state_ratio,
-    "doc_winnowing": q_doc_winnowing,
-    "bpe_token_count": q_bpe_token_count,
-    "alert_pipeline": q_alert_pipeline,
-    "band_features": q_band_features,
-}
-
-ORACLES_EXT3: dict[str, str] = {
-    "ann_ivf_topk": ORACLE_ANN_IVF_TOPK,
-    "stream_session_windows": ORACLE_STREAM_SESSION_WINDOWS,
-    "stream_static_join": ORACLE_STREAM_STATIC_JOIN,
-    "alert_rule_flags": ORACLE_ALERT_RULE_FLAGS,
-    "standardized_value": ORACLE_STANDARDIZED_VALUE,
-    "extreme_state_ratio": ORACLE_EXTREME_STATE_RATIO,
-    "doc_winnowing": ORACLE_DOC_WINNOWING,
-    "bpe_token_count": _oracle_bpe_token_count(),
-    "alert_pipeline": ORACLE_ALERT_PIPELINE,
-    "band_features": _oracle_band_features(),
-}

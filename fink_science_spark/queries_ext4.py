@@ -1,4 +1,4 @@
-"""Query registry, wave 5: the remote-service crossmatch pipeline
+"""Queries, wave 5: the remote-service crossmatch pipeline
 (pluggable-transport cdsxmatch shape, Unknown + NULL sentinel variants),
 storage-layout operators (bucketed co-located joins, partition-pruned
 scans), the as-of join, skew remedies (salted join, two-phase distinct),
@@ -11,7 +11,6 @@ rows-only by design).
 from __future__ import annotations
 
 import os
-from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -20,6 +19,7 @@ from fink_science_spark.operators.remote import local_table_resolver, service_xm
 from fink_science_spark.queries import _events_us, _fan_out, _t
 
 from fink_science_spark.queries_ext2 import _SCRATCH
+from fink_science_spark.registry import query
 _XMATCH_RADIUS = 10.0
 
 
@@ -28,6 +28,28 @@ _XMATCH_RADIUS = 10.0
 # --------------------------------------------------------------------------
 
 
+ORACLE_REMOTE_XMATCH = f"""
+WITH cand AS (
+  SELECT c_custkey, s_suppkey::VARCHAR AS name,
+         abs(c_acctbal - s_acctbal) AS dist
+  FROM customer, supplier
+  WHERE abs(c_acctbal - s_acctbal) <= {_XMATCH_RADIUS}
+),
+best AS (
+  SELECT c_custkey, name, dist FROM (
+    SELECT *, row_number() OVER (PARTITION BY c_custkey
+                                 ORDER BY dist ASC, name ASC) AS rn
+    FROM cand
+  ) WHERE rn = 1
+)
+SELECT c.c_custkey,
+       coalesce(b.name, 'Unknown') AS xmatch,
+       round(b.dist, 6)            AS xmatch_dist
+FROM customer c LEFT JOIN best b USING (c_custkey)
+"""
+
+
+@query(oracle=ORACLE_REMOTE_XMATCH)
 def q_remote_xmatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full cdsxmatch pipeline (reference:
     ztf/xmatch/processor.py:124-195): batch positions through a transport,
@@ -63,32 +85,21 @@ def q_remote_xmatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_REMOTE_XMATCH = f"""
-WITH cand AS (
-  SELECT c_custkey, s_suppkey::VARCHAR AS name,
-         abs(c_acctbal - s_acctbal) AS dist
-  FROM customer, supplier
-  WHERE abs(c_acctbal - s_acctbal) <= {_XMATCH_RADIUS}
-),
-best AS (
-  SELECT c_custkey, name, dist FROM (
-    SELECT *, row_number() OVER (PARTITION BY c_custkey
-                                 ORDER BY dist ASC, name ASC) AS rn
-    FROM cand
-  ) WHERE rn = 1
-)
-SELECT c.c_custkey,
-       coalesce(b.name, 'Unknown') AS xmatch,
-       round(b.dist, 6)            AS xmatch_dist
-FROM customer c LEFT JOIN best b USING (c_custkey)
-"""
-
-
 # --------------------------------------------------------------------------
 # Bucketed co-located join (§4 partitioning: shuffle-free fact joins)
 # --------------------------------------------------------------------------
 
 
+ORACLE_BUCKETED_JOIN = """
+SELECT o_orderstatus,
+       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+       count(*) AS n_items
+FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+GROUP BY o_orderstatus
+"""
+
+
+@query(oracle=ORACLE_BUCKETED_JOIN, bench=False)
 def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucketed-table join: both fact tables written bucketed+sorted by
     the join key, then joined WITHOUT a shuffle (bucket pruning replaces
@@ -124,20 +135,19 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_BUCKETED_JOIN = """
-SELECT o_orderstatus,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-       count(*) AS n_items
-FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-GROUP BY o_orderstatus
-"""
-
-
 # --------------------------------------------------------------------------
 # Partition-pruned scan (§4 partition pruning)
 # --------------------------------------------------------------------------
 
 
+ORACLE_PARTITIONED_SCAN = """
+SELECT user_id, count(*) AS n, round(sum(value), 2) AS sum_value
+FROM events WHERE event_type = 'purchase'
+GROUP BY user_id
+"""
+
+
+@query(oracle=ORACLE_PARTITIONED_SCAN, bench=False)
 def q_partitioned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hive-style partitioned layout: events written partitionBy(event_type),
     read back with a partition filter — the scan touches ONE partition
@@ -153,19 +163,26 @@ def q_partitioned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_PARTITIONED_SCAN = """
-SELECT user_id, count(*) AS n, round(sum(value), 2) AS sum_value
-FROM events WHERE event_type = 'purchase'
-GROUP BY user_id
-"""
-
-
 # --------------------------------------------------------------------------
 # Catalog registry (§1.4) + remaining §2 surface: SQL-string filters,
 # map-typed columns, seeded sampling
 # --------------------------------------------------------------------------
 
 
+ORACLE_PROMO_REVENUE = """
+SELECT round(sum(CASE WHEN p_type = 'PROMO'
+                      THEN l_extendedprice * (1 - l_discount)
+                      ELSE 0.0 END), 2) AS promo_revenue,
+       round(sum(l_extendedprice * (1 - l_discount)), 2) AS total_revenue,
+       round(sum(CASE WHEN p_type = 'PROMO'
+                      THEN l_extendedprice * (1 - l_discount)
+                      ELSE 0.0 END)
+             / sum(l_extendedprice * (1 - l_discount)) * 100.0, 6) AS promo_pct
+FROM lineitem JOIN part ON l_partkey = p_partkey
+"""
+
+
+@query(oracle=ORACLE_PROMO_REVENUE)
 def q_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q14-shaped promo-revenue share through the CatalogRegistry: the
     part table registered once (cached), broadcast-joined onto lineitem —
@@ -193,19 +210,15 @@ def q_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_PROMO_REVENUE = """
-SELECT round(sum(CASE WHEN p_type = 'PROMO'
-                      THEN l_extendedprice * (1 - l_discount)
-                      ELSE 0.0 END), 2) AS promo_revenue,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS total_revenue,
-       round(sum(CASE WHEN p_type = 'PROMO'
-                      THEN l_extendedprice * (1 - l_discount)
-                      ELSE 0.0 END)
-             / sum(l_extendedprice * (1 - l_discount)) * 100.0, 6) AS promo_pct
-FROM lineitem JOIN part ON l_partkey = p_partkey
+ORACLE_SQL_STRING_FILTER = """
+SELECT user_id, count(*) AS n_gated
+FROM events
+WHERE sin(radians(value)) > 0.5 AND event_type LIKE '%ick%' AND value < 400
+GROUP BY user_id
 """
 
 
+@query(oracle=ORACLE_SQL_STRING_FILTER, bench=False)
 def q_sql_string_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """User-supplied SQL-string filter with spherical trig + LIKE — the
     anomaly-detection gating shape (reference:
@@ -218,14 +231,17 @@ def q_sql_string_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return gated.groupBy("user_id").agg(F.count("*").alias("n_gated"))
 
 
-ORACLE_SQL_STRING_FILTER = """
-SELECT user_id, count(*) AS n_gated
+ORACLE_MAP_OPS = """
+SELECT user_id,
+       count(*) FILTER (event_type = 'click')    AS n_click,
+       count(*) FILTER (event_type = 'purchase') AS n_purchase,
+       count(DISTINCT event_type)                AS n_types
 FROM events
-WHERE sin(radians(value)) > 0.5 AND event_type LIKE '%ick%' AND value < 400
 GROUP BY user_id
 """
 
 
+@query(oracle=ORACLE_MAP_OPS, bench=False)
 def q_map_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Map-typed columns (§1.3: the reference's UDFs return
     MapType(String, …) and consumers use getItem): per-user map of
@@ -248,16 +264,18 @@ def q_map_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_MAP_OPS = """
-SELECT user_id,
-       count(*) FILTER (event_type = 'click')    AS n_click,
-       count(*) FILTER (event_type = 'purchase') AS n_purchase,
-       count(DISTINCT event_type)                AS n_types
-FROM events
-GROUP BY user_id
+ORACLE_SALTED_TYPE_JOIN = """
+WITH th AS (
+  SELECT event_type, quantile_cont(value, 0.75) AS p75
+  FROM events GROUP BY event_type
+)
+SELECT e.event_type, e.value > th.p75 AS above, count(*) AS n
+FROM events e JOIN th USING (event_type)
+GROUP BY e.event_type, above
 """
 
 
+@query(oracle=ORACLE_SALTED_TYPE_JOIN, bench=False)
 def q_salted_type_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Salted shuffle join on a maximally skewed key: events joined to a
     per-type threshold table on event_type (a handful of distinct values —
@@ -285,17 +303,17 @@ def q_salted_type_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_SALTED_TYPE_JOIN = """
-WITH th AS (
-  SELECT event_type, quantile_cont(value, 0.75) AS p75
-  FROM events GROUP BY event_type
-)
-SELECT e.event_type, e.value > th.p75 AS above, count(*) AS n
-FROM events e JOIN th USING (event_type)
-GROUP BY e.event_type, above
+ORACLE_PIVOT_COUNTS = """
+SELECT user_id,
+       count(*) FILTER (event_type = 'click')    AS n_click,
+       count(*) FILTER (event_type = 'view')     AS n_view,
+       count(*) FILTER (event_type = 'purchase') AS n_purchase,
+       count(*) FILTER (event_type = 'error')    AS n_error
+FROM events GROUP BY user_id
 """
 
 
+@query(oracle=ORACLE_PIVOT_COUNTS, bench=False)
 def q_pivot_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot (long → wide): per-user event counts fanned into one column
     per event type — explicit pivot values so the output schema is
@@ -315,16 +333,24 @@ def q_pivot_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_PIVOT_COUNTS = """
-SELECT user_id,
-       count(*) FILTER (event_type = 'click')    AS n_click,
-       count(*) FILTER (event_type = 'view')     AS n_view,
-       count(*) FILTER (event_type = 'purchase') AS n_purchase,
-       count(*) FILTER (event_type = 'error')    AS n_error
-FROM events GROUP BY user_id
+ORACLE_RANKING_WINDOWS = """
+SELECT o_orderkey, o_orderpriority, round(o_totalprice, 2) AS price,
+       rn, rnk, drnk, quartile
+FROM (
+  SELECT o_orderkey, o_orderpriority, o_totalprice,
+         row_number() OVER w AS rn,
+         rank()       OVER w AS rnk,
+         dense_rank() OVER w AS drnk,
+         ntile(4)     OVER w AS quartile
+  FROM orders
+  WINDOW w AS (PARTITION BY o_orderpriority
+               ORDER BY o_totalprice DESC, o_orderkey ASC)
+)
+WHERE rn <= 5
 """
 
 
+@query(oracle=ORACLE_RANKING_WINDOWS, bench=False)
 def q_ranking_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ranking window functions (rank / dense_rank / ntile / cume-style
     percent): top-5 orders per priority by price with full rank columns —
@@ -347,23 +373,30 @@ def q_ranking_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ranked.filter(F.col("rn") <= 5)
 
 
-ORACLE_RANKING_WINDOWS = """
-SELECT o_orderkey, o_orderpriority, round(o_totalprice, 2) AS price,
-       rn, rnk, drnk, quartile
-FROM (
-  SELECT o_orderkey, o_orderpriority, o_totalprice,
-         row_number() OVER w AS rn,
-         rank()       OVER w AS rnk,
-         dense_rank() OVER w AS drnk,
-         ntile(4)     OVER w AS quartile
-  FROM orders
-  WINDOW w AS (PARTITION BY o_orderpriority
-               ORDER BY o_totalprice DESC, o_orderkey ASC)
+ORACLE_LOOKBACK_WITH_LIMITS = """
+WITH shaped AS (
+  SELECT user_id, event_type, epoch_us(ts) AS t,
+         CASE WHEN value >= 10.0 THEN value END AS meas,
+         CASE WHEN value < 10.0 THEN value END  AS lim
+  FROM events
+),
+agg AS (
+  SELECT user_id, event_type,
+         max_by(meas, CASE WHEN meas IS NOT NULL THEN t END) AS last_meas,
+         max(CASE WHEN meas IS NOT NULL THEN t END)          AS last_meas_ts,
+         max_by(lim, CASE WHEN lim IS NOT NULL THEN t END)   AS last_lim,
+         max(CASE WHEN lim IS NOT NULL THEN t END)           AS last_lim_ts
+  FROM shaped GROUP BY user_id, event_type
 )
-WHERE rn <= 5
+SELECT user_id, event_type,
+       round(last_meas, 6) AS last_meas,
+       round(CASE WHEN last_lim_ts > coalesce(last_meas_ts, -1)
+                  THEN last_lim END, 6) AS limit_since_meas
+FROM agg
 """
 
 
+@query(oracle=ORACLE_LOOKBACK_WITH_LIMITS, bench=False)
 def q_lookback_with_limits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The get_last_alert semantics (reference:
     ztf/fast_transient_rate/processor.py:33-115): walking back through a
@@ -409,29 +442,16 @@ def q_lookback_with_limits(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_LOOKBACK_WITH_LIMITS = """
-WITH shaped AS (
-  SELECT user_id, event_type, epoch_us(ts) AS t,
-         CASE WHEN value >= 10.0 THEN value END AS meas,
-         CASE WHEN value < 10.0 THEN value END  AS lim
-  FROM events
-),
-agg AS (
-  SELECT user_id, event_type,
-         max_by(meas, CASE WHEN meas IS NOT NULL THEN t END) AS last_meas,
-         max(CASE WHEN meas IS NOT NULL THEN t END)          AS last_meas_ts,
-         max_by(lim, CASE WHEN lim IS NOT NULL THEN t END)   AS last_lim,
-         max(CASE WHEN lim IS NOT NULL THEN t END)           AS last_lim_ts
-  FROM shaped GROUP BY user_id, event_type
-)
-SELECT user_id, event_type,
-       round(last_meas, 6) AS last_meas,
-       round(CASE WHEN last_lim_ts > coalesce(last_meas_ts, -1)
-                  THEN last_lim END, 6) AS limit_since_meas
-FROM agg
+ORACLE_ROLLUP_COUNTS = """
+SELECT coalesce(o_orderpriority, 'ALL') AS priority,
+       coalesce(o_orderstatus, 'ALL')   AS status,
+       count(*) AS n, round(sum(o_totalprice), 2) AS total
+FROM orders
+GROUP BY ROLLUP (o_orderpriority, o_orderstatus)
 """
 
 
+@query(oracle=ORACLE_ROLLUP_COUNTS, bench=False)
 def q_rollup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hierarchical rollup (order priority → status → grand total) — the
     multi-level reporting aggregation, with grouping-null indicators made
@@ -449,39 +469,6 @@ def q_rollup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
             "total",
         )
-    )
-
-
-ORACLE_ROLLUP_COUNTS = """
-SELECT coalesce(o_orderpriority, 'ALL') AS priority,
-       coalesce(o_orderstatus, 'ALL')   AS status,
-       count(*) AS n, round(sum(o_totalprice), 2) AS total
-FROM orders
-GROUP BY ROLLUP (o_orderpriority, o_orderstatus)
-"""
-
-
-def q_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image-matrix statistics over binary blobs (the cutout-stamp
-    analysis shape): doc text → 16-byte md5 blob → 4×4 pixel matrix →
-    mean / max / 2σ-clipped mean / center−edge contrast, via the
-    mapInPandas numpy kernel. The deterministic decode makes even the
-    sigma-clip exactly SQL-verifiable."""
-    from fink_science_spark.operators.multimodal import image_matrix_stats
-
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", F.unhex(F.md5("text")).alias("blob")
-    )
-    # fan out before the numpy kernel (ran in the ONE scan task); no-op
-    # at scale
-    docs = _fan_out(spark, sf_dir, "documents", docs, key="doc_id")
-    stats = image_matrix_stats(docs, "doc_id", "blob", width=4, height=4)
-    return stats.select(
-        "doc_id",
-        F.round("px_mean", 6).alias("px_mean"),
-        "px_max",
-        F.round("clipped_mean", 6).alias("clipped_mean"),
-        F.round("contrast", 6).alias("contrast"),
     )
 
 
@@ -511,6 +498,47 @@ FROM s
 """
 
 
+@query(oracle=ORACLE_IMAGE_STATS)
+def q_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Image-matrix statistics over binary blobs (the cutout-stamp
+    analysis shape): doc text → 16-byte md5 blob → 4×4 pixel matrix →
+    mean / max / 2σ-clipped mean / center−edge contrast, via the
+    mapInPandas numpy kernel. The deterministic decode makes even the
+    sigma-clip exactly SQL-verifiable."""
+    from fink_science_spark.operators.multimodal import image_matrix_stats
+
+    docs = _t(spark, sf_dir, "documents").select(
+        "doc_id", F.unhex(F.md5("text")).alias("blob")
+    )
+    # fan out before the numpy kernel (ran in the ONE scan task); no-op
+    # at scale
+    docs = _fan_out(spark, sf_dir, "documents", docs, key="doc_id")
+    stats = image_matrix_stats(docs, "doc_id", "blob", width=4, height=4)
+    return stats.select(
+        "doc_id",
+        F.round("px_mean", 6).alias("px_mean"),
+        "px_max",
+        F.round("clipped_mean", 6).alias("clipped_mean"),
+        F.round("contrast", 6).alias("contrast"),
+    )
+
+
+ORACLE_STREAM_FOREACHBATCH = """
+WITH e AS (
+  SELECT event_id, value,
+         json_extract_string(props, '$.k')::INT AS k,
+         CASE WHEN value > 100 THEN 'high'
+              WHEN value > 30 THEN 'mid'
+              ELSE 'low' END AS flag
+  FROM events
+)
+SELECT flag, count(*) AS n, round(avg(k), 6) AS avg_k,
+       round(sum(value), 2) AS sum_value
+FROM e GROUP BY flag
+"""
+
+
+@query(oracle=ORACLE_STREAM_FOREACHBATCH)
 def q_stream_foreachbatch_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """foreachBatch enrichment — the broker's execution mode (SURVEY §2.9:
     stateless per-micro-batch column appends applied inside a streaming
@@ -570,21 +598,14 @@ def q_stream_foreachbatch_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_STREAM_FOREACHBATCH = """
-WITH e AS (
-  SELECT event_id, value,
-         json_extract_string(props, '$.k')::INT AS k,
-         CASE WHEN value > 100 THEN 'high'
-              WHEN value > 30 THEN 'mid'
-              ELSE 'low' END AS flag
-  FROM events
-)
-SELECT flag, count(*) AS n, round(avg(k), 6) AS avg_k,
-       round(sum(value), 2) AS sum_value
-FROM e GROUP BY flag
+ORACLE_SKEW_SAFE_DISTINCT = """
+SELECT event_type, count(DISTINCT user_id) AS n_distinct_users
+FROM events
+GROUP BY event_type
 """
 
 
+@query(oracle=ORACLE_SKEW_SAFE_DISTINCT, bench=False)
 def q_skew_safe_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact distinct-count per LOW-cardinality (maximally skewed) key:
     event_type has only a handful of values, so a naive
@@ -600,13 +621,8 @@ def q_skew_safe_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_SKEW_SAFE_DISTINCT = """
-SELECT event_type, count(DISTINCT user_id) AS n_distinct_users
-FROM events
-GROUP BY event_type
-"""
-
-
+# HLL sketch is engine-specific — rows-only by design
+@query(oracle=None, bench=False)
 def q_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HyperLogLog++ distinct sketch (approx_count_distinct, rsd=0.01) —
     the sketch path for cardinality at 100 TB (constant memory per key,
@@ -618,6 +634,19 @@ def q_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLE_ASOF_CLICK = """
+WITH p AS (SELECT event_id, user_id, epoch_us(ts) AS t FROM events
+           WHERE event_type = 'purchase'),
+c AS (SELECT user_id, epoch_us(ts) AS t, value FROM events
+      WHERE event_type = 'click')
+SELECT p.event_id,
+       round(c.value, 6) AS last_click_value,
+       p.t - c.t         AS click_age_us
+FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND c.t <= p.t
+"""
+
+
+@query(oracle=ORACLE_ASOF_CLICK)
 def q_asof_click_before_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Backward as-of join: attach to each purchase the user's most recent
     click at or before it (value + age). Union-and-scan implementation —
@@ -644,18 +673,26 @@ def q_asof_click_before_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_ASOF_CLICK = """
-WITH p AS (SELECT event_id, user_id, epoch_us(ts) AS t FROM events
-           WHERE event_type = 'purchase'),
-c AS (SELECT user_id, epoch_us(ts) AS t, value FROM events
-      WHERE event_type = 'click')
-SELECT p.event_id,
-       round(c.value, 6) AS last_click_value,
-       p.t - c.t         AS click_age_us
-FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND c.t <= p.t
+ORACLE_REMOTE_XMATCH_NULLSEM = f"""
+WITH cand AS (
+  SELECT c_custkey, s_suppkey::VARCHAR AS name,
+         abs(c_acctbal - s_acctbal) AS dist
+  FROM customer, supplier
+  WHERE abs(c_acctbal - s_acctbal) <= {_XMATCH_RADIUS}
+),
+best AS (
+  SELECT c_custkey, name, dist FROM (
+    SELECT *, row_number() OVER (PARTITION BY c_custkey
+                                 ORDER BY dist ASC, name ASC) AS rn
+    FROM cand
+  ) WHERE rn = 1
+)
+SELECT c.c_custkey, b.name AS xmatch, round(b.dist, 6) AS xmatch_dist
+FROM customer c LEFT JOIN best b USING (c_custkey)
 """
 
 
+@query(oracle=ORACLE_REMOTE_XMATCH_NULLSEM, bench=False)
 def q_remote_xmatch_nullsem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Rubin null-semantics variant of the service crossmatch: same
     pipeline as remote_xmatch but unmatched rows keep NULL instead of the
@@ -686,25 +723,8 @@ def q_remote_xmatch_nullsem(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_REMOTE_XMATCH_NULLSEM = f"""
-WITH cand AS (
-  SELECT c_custkey, s_suppkey::VARCHAR AS name,
-         abs(c_acctbal - s_acctbal) AS dist
-  FROM customer, supplier
-  WHERE abs(c_acctbal - s_acctbal) <= {_XMATCH_RADIUS}
-),
-best AS (
-  SELECT c_custkey, name, dist FROM (
-    SELECT *, row_number() OVER (PARTITION BY c_custkey
-                                 ORDER BY dist ASC, name ASC) AS rn
-    FROM cand
-  ) WHERE rn = 1
-)
-SELECT c.c_custkey, b.name AS xmatch, round(b.dist, 6) AS xmatch_dist
-FROM customer c LEFT JOIN best b USING (c_custkey)
-"""
-
-
+# engine-specific seeded sampler — rows-only by design
+@query(oracle=None, bench=False)
 def q_sampled_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seeded Bernoulli sampling (§2.5: df.sample(frac, seed=0),
     ztf/ssoft/processor.py:812). Spark's sampler is engine-specific, so
@@ -716,46 +736,3 @@ def q_sampled_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(F.count("*").alias("n_sampled"))
     )
-
-
-QUERIES_EXT4: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "remote_xmatch": q_remote_xmatch,
-    "bucketed_join": q_bucketed_join,
-    "partitioned_scan": q_partitioned_scan,
-    "promo_revenue": q_promo_revenue,
-    "sql_string_filter": q_sql_string_filter,
-    "map_ops": q_map_ops,
-    "sampled_stats": q_sampled_stats,
-    "asof_click_before_purchase": q_asof_click_before_purchase,
-    "remote_xmatch_nullsem": q_remote_xmatch_nullsem,
-    "skew_safe_distinct": q_skew_safe_distinct,
-    "approx_distinct": q_approx_distinct,
-    "stream_foreachbatch_enrich": q_stream_foreachbatch_enrich,
-    "image_stats": q_image_stats,
-    "rollup_counts": q_rollup_counts,
-    "pivot_counts": q_pivot_counts,
-    "ranking_windows": q_ranking_windows,
-    "lookback_with_limits": q_lookback_with_limits,
-    "salted_type_join": q_salted_type_join,
-}
-
-ORACLES_EXT4: dict[str, str] = {
-    "remote_xmatch": ORACLE_REMOTE_XMATCH,
-    "bucketed_join": ORACLE_BUCKETED_JOIN,
-    "partitioned_scan": ORACLE_PARTITIONED_SCAN,
-    "promo_revenue": ORACLE_PROMO_REVENUE,
-    "sql_string_filter": ORACLE_SQL_STRING_FILTER,
-    "map_ops": ORACLE_MAP_OPS,
-    # sampled_stats: engine-specific seeded sampler — rows-only by design
-    "asof_click_before_purchase": ORACLE_ASOF_CLICK,
-    "remote_xmatch_nullsem": ORACLE_REMOTE_XMATCH_NULLSEM,
-    "skew_safe_distinct": ORACLE_SKEW_SAFE_DISTINCT,
-    # approx_distinct: HLL sketch is engine-specific — rows-only by design
-    "stream_foreachbatch_enrich": ORACLE_STREAM_FOREACHBATCH,
-    "image_stats": ORACLE_IMAGE_STATS,
-    "rollup_counts": ORACLE_ROLLUP_COUNTS,
-    "pivot_counts": ORACLE_PIVOT_COUNTS,
-    "ranking_windows": ORACLE_RANKING_WINDOWS,
-    "lookback_with_limits": ORACLE_LOOKBACK_WITH_LIMITS,
-    "salted_type_join": ORACLE_SALTED_TYPE_JOIN,
-}

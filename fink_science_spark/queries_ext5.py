@@ -1,4 +1,4 @@
-"""Query registry, wave 5 (round 2): the frozen-weight model-scoring
+"""Queries, wave 5 (round 2): the frozen-weight model-scoring
 pipeline (the reference's ML-UDF shape, numpy-only), the SSOFT HG
 phase-curve fit, and the scale-hardened variants the round-1 verdict
 called for — each with a bit-portable DuckDB oracle.
@@ -6,12 +6,11 @@ called for — each with a bit-portable DuckDB oracle.
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fink_science_spark.queries import _events_us, _fan_out, _t, _ts_event_col
+from fink_science_spark.registry import query
 
 # --------------------------------------------------------------------------
 # §2.8 model scoring: frozen-weight MLP, end-to-end (closes the one "no"
@@ -33,6 +32,31 @@ _MODEL_FEATURES_SQL = [
 _MODEL_MASK_SQL = "l_quantity >= 5.0 AND l_discount > 0.0"
 
 
+def _oracle_model_score() -> str:
+    from fink_science_spark.operators.models import mlp_score_sql
+
+    p = mlp_score_sql([f"x{k}" for k in range(1, 5)])
+    return f"""
+WITH f AS (
+  SELECT l_orderkey, l_linenumber,
+         {_MODEL_FEATURES_SQL[0]} AS x1,
+         {_MODEL_FEATURES_SQL[1]} AS x2,
+         {_MODEL_FEATURES_SQL[2]} AS x3,
+         {_MODEL_FEATURES_SQL[3]} AS x4,
+         ({_MODEL_MASK_SQL}) AS sel
+  FROM lineitem
+),
+p AS (
+  SELECT l_orderkey, l_linenumber,
+         CASE WHEN sel THEN round({p}, 6) ELSE 0.0 END AS score
+  FROM f
+)
+SELECT l_orderkey, l_linenumber, score, score > 0.5 AS is_candidate
+FROM p
+"""
+
+
+@query(oracle=_oracle_model_score)
 def q_model_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frozen-weight MLP scoring over lineitem: native selection cuts →
     codegen'd features → Arrow forward pass (executor-singleton weights)
@@ -74,30 +98,6 @@ def q_model_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_model_score() -> str:
-    from fink_science_spark.operators.models import mlp_score_sql
-
-    p = mlp_score_sql([f"x{k}" for k in range(1, 5)])
-    return f"""
-WITH f AS (
-  SELECT l_orderkey, l_linenumber,
-         {_MODEL_FEATURES_SQL[0]} AS x1,
-         {_MODEL_FEATURES_SQL[1]} AS x2,
-         {_MODEL_FEATURES_SQL[2]} AS x3,
-         {_MODEL_FEATURES_SQL[3]} AS x4,
-         ({_MODEL_MASK_SQL}) AS sel
-  FROM lineitem
-),
-p AS (
-  SELECT l_orderkey, l_linenumber,
-         CASE WHEN sel THEN round({p}, 6) ELSE 0.0 END AS score
-  FROM f
-)
-SELECT l_orderkey, l_linenumber, score, score > 0.5 AS is_candidate
-FROM p
-"""
-
-
 # --------------------------------------------------------------------------
 # §2.8 model scoring, tree-ensemble family: frozen decision forest
 # --------------------------------------------------------------------------
@@ -115,6 +115,31 @@ _FOREST_FEATURES_SQL = [
 _FOREST_MASK_SQL = "l_extendedprice > 2000.0 AND l_quantity >= 2.0"
 
 
+def _oracle_model_score_forest() -> str:
+    from fink_science_spark.operators.models import forest_score_sql
+
+    p = forest_score_sql([f"x{k}" for k in range(1, 5)])
+    return f"""
+WITH f AS (
+  SELECT l_orderkey, l_linenumber,
+         {_FOREST_FEATURES_SQL[0]} AS x1,
+         {_FOREST_FEATURES_SQL[1]} AS x2,
+         {_FOREST_FEATURES_SQL[2]} AS x3,
+         {_FOREST_FEATURES_SQL[3]} AS x4,
+         ({_FOREST_MASK_SQL}) AS sel
+  FROM lineitem
+),
+p AS (
+  SELECT l_orderkey, l_linenumber,
+         CASE WHEN sel THEN round({p}, 6) ELSE 0.0 END AS score
+  FROM f
+)
+SELECT l_orderkey, l_linenumber, score, score > 0.5 AS is_candidate
+FROM p
+"""
+
+
+@query(oracle=_oracle_model_score_forest)
 def q_model_score_forest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frozen decision-forest scoring over lineitem — the tree-ensemble
     kernel family (sklearn RF predict_proba = mean of leaf probabilities,
@@ -153,30 +178,6 @@ def q_model_score_forest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_model_score_forest() -> str:
-    from fink_science_spark.operators.models import forest_score_sql
-
-    p = forest_score_sql([f"x{k}" for k in range(1, 5)])
-    return f"""
-WITH f AS (
-  SELECT l_orderkey, l_linenumber,
-         {_FOREST_FEATURES_SQL[0]} AS x1,
-         {_FOREST_FEATURES_SQL[1]} AS x2,
-         {_FOREST_FEATURES_SQL[2]} AS x3,
-         {_FOREST_FEATURES_SQL[3]} AS x4,
-         ({_FOREST_MASK_SQL}) AS sel
-  FROM lineitem
-),
-p AS (
-  SELECT l_orderkey, l_linenumber,
-         CASE WHEN sel THEN round({p}, 6) ELSE 0.0 END AS score
-  FROM f
-)
-SELECT l_orderkey, l_linenumber, score, score > 0.5 AS is_candidate
-FROM p
-"""
-
-
 # --------------------------------------------------------------------------
 # §2.8 SSOFT phase-curve fit: closed-form HG per (object, band)
 # --------------------------------------------------------------------------
@@ -191,47 +192,6 @@ _HG_MIN_POINTS = 5
 
 def _alpha_deg_spark():
     return F.lit(3.0) + (F.col("event_id") % 2160) * (27.0 / 2160)
-
-
-def q_ssoft_hg_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SSOFT batch pipeline: aggregate per-(object, band) light curves,
-    then the closed-form HG phase-curve fit (the linear-least-squares form
-    of ztf/ssoft/processor.py:436-671 `estimate_sso_params` for the HG
-    model). One shuffle + one scalar Arrow kernel; see
-    operators/phase_curve.py for the algebra and the 100 TB story."""
-    from fink_science_spark.operators.phase_curve import (
-        hg_fit_per_group,
-        hg_phase_terms_sql,
-    )
-
-    alpha = F.radians(_alpha_deg_spark())
-    phi1_sql, phi2_sql = hg_phase_terms_sql("alpha")
-    # reduced magnitude on the true curve + perturbation, computed natively
-    ev = (
-        _events_us(spark, sf_dir)
-        .withColumn("alpha", alpha)
-        .withColumn(
-            "mred",
-            F.lit(_H_TRUE)
-            - 2.5
-            * F.log10(
-                F.lit(1.0 - _G_TRUE) * F.expr(phi1_sql)
-                + F.lit(_G_TRUE) * F.expr(phi2_sql)
-            )
-            + (F.col("value") - 245.0) / 1000.0,
-        )
-    )
-    fit = hg_fit_per_group(
-        ev, ["user_id", "event_type"], "alpha", "mred",
-        min_points=_HG_MIN_POINTS,
-    )
-    return fit.select(
-        "user_id",
-        "event_type",
-        "n",
-        F.round("h", 6).alias("h"),
-        F.round("g", 6).alias("g"),
-    )
 
 
 def _oracle_ssoft_hg_fit() -> str:
@@ -275,53 +235,53 @@ FROM ab
 """
 
 
-# --------------------------------------------------------------------------
-# §2.8 SSOFT phase-curve fit: three-parameter HG1G2 per (object, band)
-# --------------------------------------------------------------------------
-
-_G1_TRUE, _G2_TRUE = 0.2, 0.4
-
-
-def q_ssoft_hg1g2_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SSOFT HG1G2 pipeline: the three-parameter Muinonen system fitted
-    per (object, band) as closed-form 3×3 normal equations — the linear
-    form of the reference's sbpy HG1G2 fit (ztf/ssoft/processor.py:436-671).
-    Same one-shuffle + scalar-Arrow-kernel shape as the HG fit; the
-    differential oracle reproduces the Cramer solve in SQL from nine
-    sufficient statistics."""
+@query(oracle=_oracle_ssoft_hg_fit)
+def q_ssoft_hg_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SSOFT batch pipeline: aggregate per-(object, band) light curves,
+    then the closed-form HG phase-curve fit (the linear-least-squares form
+    of ztf/ssoft/processor.py:436-671 `estimate_sso_params` for the HG
+    model). One shuffle + one scalar Arrow kernel; see
+    operators/phase_curve.py for the algebra and the 100 TB story."""
     from fink_science_spark.operators.phase_curve import (
-        hg1g2_basis_sql,
-        hg1g2_fit_native,
+        hg_fit_per_group,
+        hg_phase_terms_sql,
     )
 
-    p1, p2, p3 = hg1g2_basis_sql("alpha")
+    alpha = F.radians(_alpha_deg_spark())
+    phi1_sql, phi2_sql = hg_phase_terms_sql("alpha")
+    # reduced magnitude on the true curve + perturbation, computed natively
     ev = (
         _events_us(spark, sf_dir)
-        .withColumn("alpha", F.radians(_alpha_deg_spark()))
+        .withColumn("alpha", alpha)
         .withColumn(
             "mred",
             F.lit(_H_TRUE)
             - 2.5
             * F.log10(
-                F.lit(_G1_TRUE) * F.expr(p1)
-                + F.lit(_G2_TRUE) * F.expr(p2)
-                + F.lit(1.0 - _G1_TRUE - _G2_TRUE) * F.expr(p3)
+                F.lit(1.0 - _G_TRUE) * F.expr(phi1_sql)
+                + F.lit(_G_TRUE) * F.expr(phi2_sql)
             )
             + (F.col("value") - 245.0) / 1000.0,
         )
     )
-    fit = hg1g2_fit_native(
+    fit = hg_fit_per_group(
         ev, ["user_id", "event_type"], "alpha", "mred",
-        min_points=_HG_MIN_POINTS, m0=_H_TRUE,
+        min_points=_HG_MIN_POINTS,
     )
     return fit.select(
         "user_id",
         "event_type",
         "n",
         F.round("h", 6).alias("h"),
-        F.round("g1", 6).alias("g1"),
-        F.round("g2", 6).alias("g2"),
+        F.round("g", 6).alias("g"),
     )
+
+
+# --------------------------------------------------------------------------
+# §2.8 SSOFT phase-curve fit: three-parameter HG1G2 per (object, band)
+# --------------------------------------------------------------------------
+
+_G1_TRUE, _G2_TRUE = 0.2, 0.4
 
 
 def _oracle_ssoft_hg1g2_fit() -> str:
@@ -399,11 +359,89 @@ FROM ab
 """
 
 
+@query(oracle=_oracle_ssoft_hg1g2_fit)
+def q_ssoft_hg1g2_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SSOFT HG1G2 pipeline: the three-parameter Muinonen system fitted
+    per (object, band) as closed-form 3×3 normal equations — the linear
+    form of the reference's sbpy HG1G2 fit (ztf/ssoft/processor.py:436-671).
+    Same one-shuffle + scalar-Arrow-kernel shape as the HG fit; the
+    differential oracle reproduces the Cramer solve in SQL from nine
+    sufficient statistics."""
+    from fink_science_spark.operators.phase_curve import (
+        hg1g2_basis_sql,
+        hg1g2_fit_native,
+    )
+
+    p1, p2, p3 = hg1g2_basis_sql("alpha")
+    ev = (
+        _events_us(spark, sf_dir)
+        .withColumn("alpha", F.radians(_alpha_deg_spark()))
+        .withColumn(
+            "mred",
+            F.lit(_H_TRUE)
+            - 2.5
+            * F.log10(
+                F.lit(_G1_TRUE) * F.expr(p1)
+                + F.lit(_G2_TRUE) * F.expr(p2)
+                + F.lit(1.0 - _G1_TRUE - _G2_TRUE) * F.expr(p3)
+            )
+            + (F.col("value") - 245.0) / 1000.0,
+        )
+    )
+    fit = hg1g2_fit_native(
+        ev, ["user_id", "event_type"], "alpha", "mred",
+        min_points=_HG_MIN_POINTS, m0=_H_TRUE,
+    )
+    return fit.select(
+        "user_id",
+        "event_type",
+        "n",
+        F.round("h", 6).alias("h"),
+        F.round("g1", 6).alias("g1"),
+        F.round("g2", 6).alias("g2"),
+    )
+
+
 # --------------------------------------------------------------------------
 # M7 dedup: incremental MinHash against a persisted band index
 # --------------------------------------------------------------------------
 
 
+def _oracle_dedup_incremental() -> str:
+    from fink_science_spark.functions.hashing import hash28_sql, minhash_sql_hashed
+    from fink_science_spark.queries_ext import (
+        _DOCS_TOK_CTE,
+        _MH_NUM,
+        _minhash_band_eq_sql,
+    )
+
+    return f"""
+WITH {_DOCS_TOK_CTE},
+hashed AS (
+  SELECT doc_id, shingles,
+         list_transform(shingles, x -> {hash28_sql('x')}) AS th
+  FROM sh WHERE len(shingles) > 0
+),
+sigs AS (
+  SELECT doc_id, shingles, {minhash_sql_hashed('th', _MH_NUM)} AS sig
+  FROM hashed
+),
+cand AS (
+  SELECT a.doc_id id_new, b.doc_id id_corpus, a.shingles sa, b.shingles sb
+  FROM sigs a JOIN sigs b
+    ON a.doc_id % 10 = 0 AND b.doc_id % 10 != 0
+   AND ({_minhash_band_eq_sql()})
+)
+SELECT id_new, id_corpus,
+       round(len(list_intersect(sa, sb)) * 1.0 /
+             (len(sa) + len(sb) - len(list_intersect(sa, sb))), 6) AS jaccard
+FROM cand
+WHERE len(list_intersect(sa, sb)) * 1.0 /
+      (len(sa) + len(sb) - len(list_intersect(sa, sb))) >= 0.5
+"""
+
+
+@query(oracle=_oracle_dedup_incremental)
 def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental near-dup detection — the streaming form of the dedup
     family: the corpus's LSH band index (doc_id % 10 != 0) is WRITTEN to
@@ -441,40 +479,6 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_dedup_incremental() -> str:
-    from fink_science_spark.functions.hashing import hash28_sql, minhash_sql_hashed
-    from fink_science_spark.queries_ext import (
-        _DOCS_TOK_CTE,
-        _MH_NUM,
-        _minhash_band_eq_sql,
-    )
-
-    return f"""
-WITH {_DOCS_TOK_CTE},
-hashed AS (
-  SELECT doc_id, shingles,
-         list_transform(shingles, x -> {hash28_sql('x')}) AS th
-  FROM sh WHERE len(shingles) > 0
-),
-sigs AS (
-  SELECT doc_id, shingles, {minhash_sql_hashed('th', _MH_NUM)} AS sig
-  FROM hashed
-),
-cand AS (
-  SELECT a.doc_id id_new, b.doc_id id_corpus, a.shingles sa, b.shingles sb
-  FROM sigs a JOIN sigs b
-    ON a.doc_id % 10 = 0 AND b.doc_id % 10 != 0
-   AND ({_minhash_band_eq_sql()})
-)
-SELECT id_new, id_corpus,
-       round(len(list_intersect(sa, sb)) * 1.0 /
-             (len(sa) + len(sb) - len(list_intersect(sa, sb))), 6) AS jaccard
-FROM cand
-WHERE len(list_intersect(sa, sb)) * 1.0 /
-      (len(sa) + len(sb) - len(list_intersect(sa, sb))) >= 0.5
-"""
-
-
 # --------------------------------------------------------------------------
 # §2.7 photometry conversions (the fink-utils algebra the processors use)
 # --------------------------------------------------------------------------
@@ -489,47 +493,6 @@ _PHOT_IN = {
     "sigmagnr": "0.03 + (user_id % 5) / 100.0",
     "ispos": "event_id % 3 != 0",
 }
-
-
-def q_photometry_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SNANA calibrated flux + DC (difference→apparent) photometry — the
-    conversion layer the reference imports from fink-utils in
-    ztf/kilonova/processor.py:149, ztf/standardized_flux/utils.py:36-38,
-    ztf/ad_features/processor.py:181 — as pure native column algebra
-    (pow/log10/sqrt in whole-stage codegen; negative DC flux → NULL
-    magnitude in both engines)."""
-    from fink_science_spark.functions.photometry import (
-        apparent_flux,
-        dc_mag,
-        mag2fluxcal_snana,
-    )
-
-    ev = _t(spark, sf_dir, "events").select(
-        "event_id",
-        *[F.expr(e).alias(k) for k, e in _PHOT_IN.items()],
-    )
-    flux, ferr = mag2fluxcal_snana(F.col("magpsf"), F.col("sigmapsf"))
-    dcf, dcs = apparent_flux(
-        F.col("magpsf"),
-        F.col("sigmapsf"),
-        F.col("magnr"),
-        F.col("sigmagnr"),
-        F.col("ispos"),
-    )
-    dmag, dsig = dc_mag(dcf, dcs)
-    # + 0.0 normalizes negative zero: a near-zero dc_flux rounds to -0.0
-    # in one engine and +0.0 in the other (equal by ==, but distinct as
-    # sort/hash strings in a value-comparison harness) — surfaced at sf0.1
-    z = F.lit(0.0)
-    return ev.select(
-        "event_id",
-        (F.round(flux, 6) + z).alias("fluxcal"),
-        (F.round(ferr, 6) + z).alias("fluxcal_err"),
-        (F.round(dcf, 6) + z).alias("dc_flux"),
-        (F.round(dcs, 6) + z).alias("dc_sigflux"),
-        (F.round(dmag, 6) + z).alias("dc_mag"),
-        (F.round(dsig, 6) + z).alias("dc_sigmag"),
-    )
 
 
 def _oracle_photometry_conversion() -> str:
@@ -573,11 +536,61 @@ FROM conv
 """
 
 
+@query(oracle=_oracle_photometry_conversion, scan_table="events")
+def q_photometry_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SNANA calibrated flux + DC (difference→apparent) photometry — the
+    conversion layer the reference imports from fink-utils in
+    ztf/kilonova/processor.py:149, ztf/standardized_flux/utils.py:36-38,
+    ztf/ad_features/processor.py:181 — as pure native column algebra
+    (pow/log10/sqrt in whole-stage codegen; negative DC flux → NULL
+    magnitude in both engines)."""
+    from fink_science_spark.functions.photometry import (
+        apparent_flux,
+        dc_mag,
+        mag2fluxcal_snana,
+    )
+
+    ev = _t(spark, sf_dir, "events").select(
+        "event_id",
+        *[F.expr(e).alias(k) for k, e in _PHOT_IN.items()],
+    )
+    flux, ferr = mag2fluxcal_snana(F.col("magpsf"), F.col("sigmapsf"))
+    dcf, dcs = apparent_flux(
+        F.col("magpsf"),
+        F.col("sigmapsf"),
+        F.col("magnr"),
+        F.col("sigmagnr"),
+        F.col("ispos"),
+    )
+    dmag, dsig = dc_mag(dcf, dcs)
+    # + 0.0 normalizes negative zero: a near-zero dc_flux rounds to -0.0
+    # in one engine and +0.0 in the other (equal by ==, but distinct as
+    # sort/hash strings in a value-comparison harness) — surfaced at sf0.1
+    z = F.lit(0.0)
+    return ev.select(
+        "event_id",
+        (F.round(flux, 6) + z).alias("fluxcal"),
+        (F.round(ferr, 6) + z).alias("fluxcal_err"),
+        (F.round(dcf, 6) + z).alias("dc_flux"),
+        (F.round(dcs, 6) + z).alias("dc_sigflux"),
+        (F.round(dmag, 6) + z).alias("dc_mag"),
+        (F.round(dsig, 6) + z).alias("dc_sigmag"),
+    )
+
+
 # --------------------------------------------------------------------------
 # §2.9 streaming dedup (exactly-once semantics over an at-least-once feed)
 # --------------------------------------------------------------------------
 
 
+ORACLE_STREAM_DEDUP = """
+SELECT event_type, count(*) AS n_events, round(sum(value), 6) AS total_value
+FROM events
+GROUP BY event_type
+"""
+
+
+@query(oracle=ORACLE_STREAM_DEDUP)
 def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming deduplication as a REAL Structured Streaming query: the
     event stream unioned with itself (an at-least-once delivery double),
@@ -619,13 +632,6 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         return run_to_memory(counts, "stream_dedup_q", spark)
 
 
-ORACLE_STREAM_DEDUP = """
-SELECT event_type, count(*) AS n_events, round(sum(value), 6) AS total_value
-FROM events
-GROUP BY event_type
-"""
-
-
 # --------------------------------------------------------------------------
 # M7 text hygiene: PII redaction + Gopher-style repetition metrics
 # --------------------------------------------------------------------------
@@ -656,6 +662,21 @@ _PII_PAYLOAD_SQL = (
 )
 
 
+def _oracle_pii_redact() -> str:
+    from fink_science_spark.functions.text import redact_pii_sql
+
+    red, counts = redact_pii_sql(_PII_PAYLOAD_SQL)
+    return f"""
+SELECT doc_id,
+       {counts['email']} AS n_email,
+       {counts['ip']} AS n_ip,
+       {counts['phone']} AS n_phone,
+       md5({red}) AS redacted_md5
+FROM documents
+"""
+
+
+@query(oracle=_oracle_pii_redact, scan_table="documents")
 def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII scrub over documents (training-data hygiene): sequential
     email → IPv4 → phone regexp redaction, per-kind match counts, and an
@@ -677,20 +698,28 @@ def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_pii_redact() -> str:
-    from fink_science_spark.functions.text import redact_pii_sql
+def _oracle_doc_repetition() -> str:
+    from fink_science_spark.functions.text import tokens_sql, word_shingles_sql
 
-    red, counts = redact_pii_sql(_PII_PAYLOAD_SQL)
     return f"""
+WITH t AS (SELECT doc_id, {tokens_sql('text')} AS toks FROM documents),
+b AS (
+  SELECT doc_id, toks, {word_shingles_sql('t.toks', 2)} AS bi FROM t
+)
 SELECT doc_id,
-       {counts['email']} AS n_email,
-       {counts['ip']} AS n_ip,
-       {counts['phone']} AS n_phone,
-       md5({red}) AS redacted_md5
-FROM documents
+       len(toks) AS n_tokens,
+       round(len(list_distinct(toks)) / len(toks), 6) AS uniq_ratio,
+       round(CASE WHEN len(bi) > 0
+                  THEN 1.0 - len(list_distinct(bi)) / len(bi)
+                  ELSE 0.0 END, 6) AS dup_bigram_ratio,
+       round(list_max([len(list_filter(toks, x -> x = d))
+                       for d in list_distinct(toks)]) / len(toks), 6)
+           AS top_token_ratio
+FROM b
 """
 
 
+@query(oracle=_oracle_doc_repetition, scan_table="documents")
 def q_doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition signals per document: token count,
     type-token ratio, duplicate-bigram fraction, top-token frequency
@@ -744,27 +773,6 @@ def q_doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_doc_repetition() -> str:
-    from fink_science_spark.functions.text import tokens_sql, word_shingles_sql
-
-    return f"""
-WITH t AS (SELECT doc_id, {tokens_sql('text')} AS toks FROM documents),
-b AS (
-  SELECT doc_id, toks, {word_shingles_sql('t.toks', 2)} AS bi FROM t
-)
-SELECT doc_id,
-       len(toks) AS n_tokens,
-       round(len(list_distinct(toks)) / len(toks), 6) AS uniq_ratio,
-       round(CASE WHEN len(bi) > 0
-                  THEN 1.0 - len(list_distinct(bi)) / len(bi)
-                  ELSE 0.0 END, 6) AS dup_bigram_ratio,
-       round(list_max([len(list_filter(toks, x -> x = d))
-                       for d in list_distinct(toks)]) / len(toks), 6)
-           AS top_token_ratio
-FROM b
-"""
-
-
 # --------------------------------------------------------------------------
 # M7 dedup: doc-frequency-capped exact Jaccard (the 100 TB default)
 # --------------------------------------------------------------------------
@@ -775,25 +783,6 @@ FROM b
 # signal); this is the documented DEFAULT at scale — the uncapped variant
 # exists for exactness on bounded corpora.
 _JACCARD_MAX_DOC_FREQ = 50
-
-
-def q_dedup_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact 3-gram Jaccard pairs with the doc-frequency cap ON (posting
-    lists longer than max_doc_freq dropped before pair expansion) — the
-    scale-default variant of dedup_ngram_jaccard. Set sizes |A|, |B| stay
-    the full distinct-shingle counts; only intersection counting skips
-    capped shingles, so the score is a (slightly conservative) lower
-    bound on true Jaccard."""
-    from fink_science_spark.operators.dedup import ngram_jaccard_pairs
-    from fink_science_spark.queries_ext import _doc_shingles
-
-    return ngram_jaccard_pairs(
-        _doc_shingles(spark, sf_dir),
-        "doc_id",
-        "shingles",
-        threshold=0.5,
-        max_doc_freq=_JACCARD_MAX_DOC_FREQ,
-    )
 
 
 def _oracle_dedup_ngram_jaccard_capped() -> str:
@@ -820,28 +809,21 @@ WHERE inter * 1.0 / (na + nb - inter) >= 0.5
 """
 
 
-QUERIES_EXT5: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "model_score": q_model_score,
-    "model_score_forest": q_model_score_forest,
-    "ssoft_hg_fit": q_ssoft_hg_fit,
-    "ssoft_hg1g2_fit": q_ssoft_hg1g2_fit,
-    "dedup_ngram_jaccard_capped": q_dedup_ngram_jaccard_capped,
-    "dedup_incremental": q_dedup_incremental,
-    "stream_dedup": q_stream_dedup,
-    "photometry_conversion": q_photometry_conversion,
-    "pii_redact": q_pii_redact,
-    "doc_repetition": q_doc_repetition,
-}
+@query(oracle=_oracle_dedup_ngram_jaccard_capped)
+def q_dedup_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact 3-gram Jaccard pairs with the doc-frequency cap ON (posting
+    lists longer than max_doc_freq dropped before pair expansion) — the
+    scale-default variant of dedup_ngram_jaccard. Set sizes |A|, |B| stay
+    the full distinct-shingle counts; only intersection counting skips
+    capped shingles, so the score is a (slightly conservative) lower
+    bound on true Jaccard."""
+    from fink_science_spark.operators.dedup import ngram_jaccard_pairs
+    from fink_science_spark.queries_ext import _doc_shingles
 
-ORACLES_EXT5: dict[str, str] = {
-    "model_score": _oracle_model_score(),
-    "model_score_forest": _oracle_model_score_forest(),
-    "ssoft_hg_fit": _oracle_ssoft_hg_fit(),
-    "ssoft_hg1g2_fit": _oracle_ssoft_hg1g2_fit(),
-    "dedup_ngram_jaccard_capped": _oracle_dedup_ngram_jaccard_capped(),
-    "dedup_incremental": _oracle_dedup_incremental(),
-    "stream_dedup": ORACLE_STREAM_DEDUP,
-    "photometry_conversion": _oracle_photometry_conversion(),
-    "pii_redact": _oracle_pii_redact(),
-    "doc_repetition": _oracle_doc_repetition(),
-}
+    return ngram_jaccard_pairs(
+        _doc_shingles(spark, sf_dir),
+        "doc_id",
+        "shingles",
+        threshold=0.5,
+        max_doc_freq=_JACCARD_MAX_DOC_FREQ,
+    )

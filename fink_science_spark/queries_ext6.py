@@ -1,4 +1,4 @@
-"""Query registry, wave 6 (round 2): the training-data curation stages a
+"""Queries, wave 6 (round 2): the training-data curation stages a
 100 TB LLM pipeline runs downstream of dedup/quality — benchmark
 decontamination, deterministic global shuffle + sharding, sequence
 packing into fixed token budgets, TF-IDF term ranking, and weighted
@@ -14,8 +14,6 @@ vocabulary-sized IDF table, a one-row corpus count).
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -27,6 +25,7 @@ from fink_science_spark.functions.text import (
     word_shingles_sql,
 )
 from fink_science_spark.queries import _events_us, _fan_out, _t
+from fink_science_spark.registry import query
 
 # --------------------------------------------------------------------------
 # Benchmark decontamination (n-gram overlap against an eval split)
@@ -37,6 +36,28 @@ _DECON_N = 4  # word n-gram size (13-gram in prod; 4 here so the tiny
 _DECON_MOD = 13  # docs with doc_id % 13 == 0 play the "benchmark suite"
 
 
+ORACLE_DECONTAMINATE = f"""
+WITH tok AS (
+  SELECT doc_id, {tokens_sql('text')} AS toks FROM documents
+),
+sh AS (
+  SELECT doc_id,
+         list_distinct({word_shingles_sql('t.toks', _DECON_N)}) AS shingles
+  FROM tok t
+),
+ex AS (
+  SELECT doc_id, {hash64_sql('g0')} AS h
+  FROM (SELECT doc_id, unnest(shingles) AS g0 FROM sh)
+),
+ev AS (SELECT DISTINCT h FROM ex WHERE doc_id % {_DECON_MOD} = 0)
+SELECT e.doc_id, count(*) AS n_overlap, count(*) >= 1 AS contaminated
+FROM ex e JOIN ev USING (h)
+WHERE e.doc_id % {_DECON_MOD} != 0
+GROUP BY e.doc_id
+"""
+
+
+@query(oracle=ORACLE_DECONTAMINATE)
 def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Training-set decontamination: flag training documents that share
     any word n-gram with the benchmark/eval split, with the count of
@@ -79,26 +100,6 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_DECONTAMINATE = f"""
-WITH tok AS (
-  SELECT doc_id, {tokens_sql('text')} AS toks FROM documents
-),
-sh AS (
-  SELECT doc_id,
-         list_distinct({word_shingles_sql('t.toks', _DECON_N)}) AS shingles
-  FROM tok t
-),
-ex AS (
-  SELECT doc_id, {hash64_sql('g0')} AS h
-  FROM (SELECT doc_id, unnest(shingles) AS g0 FROM sh)
-),
-ev AS (SELECT DISTINCT h FROM ex WHERE doc_id % {_DECON_MOD} = 0)
-SELECT e.doc_id, count(*) AS n_overlap, count(*) >= 1 AS contaminated
-FROM ex e JOIN ev USING (h)
-WHERE e.doc_id % {_DECON_MOD} != 0
-GROUP BY e.doc_id
-"""
-
 # --------------------------------------------------------------------------
 # Deterministic global shuffle + shard assignment
 # --------------------------------------------------------------------------
@@ -106,6 +107,20 @@ GROUP BY e.doc_id
 _N_SHARDS = 16
 
 
+ORACLE_TRAIN_SHARD_ASSIGN = f"""
+WITH keyed AS (
+  SELECT doc_id,
+         {hash64_sql('doc_id::VARCHAR', seed='shuffle')} AS k
+  FROM documents
+)
+SELECT doc_id, (k % {_N_SHARDS})::INT AS shard,
+       row_number() OVER (PARTITION BY (k % {_N_SHARDS})::INT
+                          ORDER BY k, doc_id) AS pos
+FROM keyed
+"""
+
+
+@query(oracle=ORACLE_TRAIN_SHARD_ASSIGN)
 def q_train_shard_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic global shuffle for training: every document gets a
     reproducible (shard, position) from a salted 60-bit hash of its id —
@@ -128,18 +143,6 @@ def q_train_shard_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_TRAIN_SHARD_ASSIGN = f"""
-WITH keyed AS (
-  SELECT doc_id,
-         {hash64_sql('doc_id::VARCHAR', seed='shuffle')} AS k
-  FROM documents
-)
-SELECT doc_id, (k % {_N_SHARDS})::INT AS shard,
-       row_number() OVER (PARTITION BY (k % {_N_SHARDS})::INT
-                          ORDER BY k, doc_id) AS pos
-FROM keyed
-"""
-
 # --------------------------------------------------------------------------
 # Sequence packing into fixed token budgets
 # --------------------------------------------------------------------------
@@ -149,6 +152,31 @@ _PACK_BUDGET = 256  # tokens per packed sequence (2048/4096 in prod;
 _PACK_SHARDS = 8
 
 
+ORACLE_SEQUENCE_PACKING = f"""
+WITH tok AS (
+  SELECT doc_id, len({tokens_sql('text')}) AS n_tokens,
+         ({hash64_sql('doc_id::VARCHAR', seed='pack')} % {_PACK_SHARDS})::INT AS shard
+  FROM documents
+),
+cum AS (
+  SELECT doc_id, shard, n_tokens,
+         sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
+                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+           AS c
+  FROM tok
+)
+SELECT doc_id, shard,
+       CAST(floor((c - n_tokens) / {_PACK_BUDGET}.0) AS BIGINT) AS bin_id,
+       n_tokens,
+       row_number() OVER (
+         PARTITION BY shard,
+                      CAST(floor((c - n_tokens) / {_PACK_BUDGET}.0) AS BIGINT)
+         ORDER BY doc_id) AS pos_in_bin
+FROM cum
+"""
+
+
+@query(oracle=ORACLE_SEQUENCE_PACKING)
 def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pack documents into fixed-token-budget training sequences:
     shard by hash, order within shard, running-cumsum of token counts,
@@ -187,29 +215,6 @@ def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_SEQUENCE_PACKING = f"""
-WITH tok AS (
-  SELECT doc_id, len({tokens_sql('text')}) AS n_tokens,
-         ({hash64_sql('doc_id::VARCHAR', seed='pack')} % {_PACK_SHARDS})::INT AS shard
-  FROM documents
-),
-cum AS (
-  SELECT doc_id, shard, n_tokens,
-         sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
-                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS c
-  FROM tok
-)
-SELECT doc_id, shard,
-       CAST(floor((c - n_tokens) / {_PACK_BUDGET}.0) AS BIGINT) AS bin_id,
-       n_tokens,
-       row_number() OVER (
-         PARTITION BY shard,
-                      CAST(floor((c - n_tokens) / {_PACK_BUDGET}.0) AS BIGINT)
-         ORDER BY doc_id) AS pos_in_bin
-FROM cum
-"""
-
 # --------------------------------------------------------------------------
 # TF-IDF top-k terms per document
 # --------------------------------------------------------------------------
@@ -217,6 +222,34 @@ FROM cum
 _TFIDF_K = 3
 
 
+ORACLE_TFIDF_TOPK = f"""
+WITH terms AS (
+  SELECT doc_id, unnest({tokens_sql('text')}) AS term FROM documents
+),
+tf AS (
+  SELECT doc_id, term, count(*) AS tf FROM terms GROUP BY 1, 2
+),
+dfreq AS (
+  SELECT term, count(*) AS df FROM tf GROUP BY 1
+),
+n AS (SELECT count(DISTINCT doc_id) AS n_docs FROM tf),
+scored AS (
+  SELECT tf.doc_id, tf.term, tf.tf,
+         tf.tf * (ln((n.n_docs + 1.0) / (dfreq.df + 1.0)) + 1.0) AS tfidf
+  FROM tf JOIN dfreq USING (term) CROSS JOIN n
+),
+ranked AS (
+  SELECT doc_id, term, tf, tfidf,
+         row_number() OVER (PARTITION BY doc_id
+                            ORDER BY tfidf DESC, term ASC) AS rank
+  FROM scored
+)
+SELECT doc_id, term, tf, round(tfidf, 6) AS tfidf, rank
+FROM ranked WHERE rank <= {_TFIDF_K}
+"""
+
+
+@query(oracle=ORACLE_TFIDF_TOPK)
 def q_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k TF-IDF terms per document (smoothed idf =
     ln((N+1)/(df+1)) + 1, the sklearn convention).
@@ -271,32 +304,6 @@ def q_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_TFIDF_TOPK = f"""
-WITH terms AS (
-  SELECT doc_id, unnest({tokens_sql('text')}) AS term FROM documents
-),
-tf AS (
-  SELECT doc_id, term, count(*) AS tf FROM terms GROUP BY 1, 2
-),
-dfreq AS (
-  SELECT term, count(*) AS df FROM tf GROUP BY 1
-),
-n AS (SELECT count(DISTINCT doc_id) AS n_docs FROM tf),
-scored AS (
-  SELECT tf.doc_id, tf.term, tf.tf,
-         tf.tf * (ln((n.n_docs + 1.0) / (dfreq.df + 1.0)) + 1.0) AS tfidf
-  FROM tf JOIN dfreq USING (term) CROSS JOIN n
-),
-ranked AS (
-  SELECT doc_id, term, tf, tfidf,
-         row_number() OVER (PARTITION BY doc_id
-                            ORDER BY tfidf DESC, term ASC) AS rank
-  FROM scored
-)
-SELECT doc_id, term, tf, round(tfidf, 6) AS tfidf, rank
-FROM ranked WHERE rank <= {_TFIDF_K}
-"""
-
 # --------------------------------------------------------------------------
 # Weighted domain-mixture sampling
 # --------------------------------------------------------------------------
@@ -327,6 +334,19 @@ def _mix_weight_sql() -> str:
 _U_DENOM = float(1 << 60)  # hash64 is uniform on [0, 2^60)
 
 
+ORACLE_DOMAIN_MIX_SAMPLE = f"""
+WITH draws AS (
+  SELECT doc_id, source, n_chars,
+         {_mix_weight_sql()} AS w,
+         round({hash64_sql('doc_id::VARCHAR', seed='mix')} / {_U_DENOM!r}, 9)
+           AS u
+  FROM documents
+)
+SELECT doc_id, source, n_chars, w, u FROM draws WHERE u < w
+"""
+
+
+@query(oracle=ORACLE_DOMAIN_MIX_SAMPLE, scan_table="documents")
 def q_domain_mix_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted per-source (domain) sampling toward a target mixture:
     keep a document iff its deterministic md5-uniform draw falls under
@@ -349,18 +369,6 @@ def q_domain_mix_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_DOMAIN_MIX_SAMPLE = f"""
-WITH draws AS (
-  SELECT doc_id, source, n_chars,
-         {_mix_weight_sql()} AS w,
-         round({hash64_sql('doc_id::VARCHAR', seed='mix')} / {_U_DENOM!r}, 9)
-           AS u
-  FROM documents
-)
-SELECT doc_id, source, n_chars, w, u FROM draws WHERE u < w
-"""
-
-
 # --------------------------------------------------------------------------
 # Cross-band color + per-band rate features (kilonova / transient_features
 # shape: ztf/kilonova/processor.py and ztf/transient_features compute
@@ -370,6 +378,44 @@ SELECT doc_id, source, n_chars, w, u FROM draws WHERE u < w
 _DAY_US_F = 86400000000.0
 
 
+ORACLE_COLOR_FEATURES = f"""
+WITH e AS (
+  SELECT user_id, event_type, event_id, epoch_us(ts) AS t, value
+  FROM events WHERE event_type IN ('view', 'click')
+),
+r AS (
+  SELECT *, row_number() OVER (PARTITION BY user_id, event_type
+                               ORDER BY t DESC, event_id DESC) AS rn
+  FROM e
+),
+g AS (
+  SELECT user_id,
+         max(CASE WHEN event_type = 'view'  AND rn = 1 THEN value END) AS view_last,
+         max(CASE WHEN event_type = 'view'  AND rn = 1 THEN t END)     AS view_ts,
+         max(CASE WHEN event_type = 'view'  AND rn = 2 THEN value END) AS view_prev,
+         max(CASE WHEN event_type = 'view'  AND rn = 2 THEN t END)     AS view_prev_ts,
+         max(CASE WHEN event_type = 'click' AND rn = 1 THEN value END) AS click_last,
+         max(CASE WHEN event_type = 'click' AND rn = 1 THEN t END)     AS click_ts
+  FROM r WHERE rn <= 2 GROUP BY user_id
+)
+SELECT user_id,
+       round(view_last, 6) AS view_last,
+       round(CASE WHEN view_prev IS NOT NULL AND view_ts != view_prev_ts
+                  THEN (view_last - view_prev)
+                       / ((view_ts - view_prev_ts) / {_DAY_US_F!r}) END, 6)
+         AS view_rate_per_day,
+       round(click_last, 6) AS click_last,
+       round(view_last - click_last, 6) AS color,
+       round(CASE WHEN view_ts != click_ts
+                  THEN (view_last - click_last)
+                       / ((view_ts - click_ts) / {_DAY_US_F!r}) END, 6)
+         AS color_rate_per_day
+FROM g
+WHERE view_last IS NOT NULL AND click_last IS NOT NULL
+"""
+
+
+@query(oracle=ORACLE_COLOR_FEATURES)
 def q_color_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-object cross-band features: the last measurement in each of
     two bands (event_type as the band axis), the within-band rate
@@ -430,48 +476,13 @@ def q_color_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_COLOR_FEATURES = f"""
-WITH e AS (
-  SELECT user_id, event_type, event_id, epoch_us(ts) AS t, value
-  FROM events WHERE event_type IN ('view', 'click')
-),
-r AS (
-  SELECT *, row_number() OVER (PARTITION BY user_id, event_type
-                               ORDER BY t DESC, event_id DESC) AS rn
-  FROM e
-),
-g AS (
-  SELECT user_id,
-         max(CASE WHEN event_type = 'view'  AND rn = 1 THEN value END) AS view_last,
-         max(CASE WHEN event_type = 'view'  AND rn = 1 THEN t END)     AS view_ts,
-         max(CASE WHEN event_type = 'view'  AND rn = 2 THEN value END) AS view_prev,
-         max(CASE WHEN event_type = 'view'  AND rn = 2 THEN t END)     AS view_prev_ts,
-         max(CASE WHEN event_type = 'click' AND rn = 1 THEN value END) AS click_last,
-         max(CASE WHEN event_type = 'click' AND rn = 1 THEN t END)     AS click_ts
-  FROM r WHERE rn <= 2 GROUP BY user_id
-)
-SELECT user_id,
-       round(view_last, 6) AS view_last,
-       round(CASE WHEN view_prev IS NOT NULL AND view_ts != view_prev_ts
-                  THEN (view_last - view_prev)
-                       / ((view_ts - view_prev_ts) / {_DAY_US_F!r}) END, 6)
-         AS view_rate_per_day,
-       round(click_last, 6) AS click_last,
-       round(view_last - click_last, 6) AS color,
-       round(CASE WHEN view_ts != click_ts
-                  THEN (view_last - click_last)
-                       / ((view_ts - click_ts) / {_DAY_US_F!r}) END, 6)
-         AS color_rate_per_day
-FROM g
-WHERE view_last IS NOT NULL AND click_last IS NOT NULL
-"""
-
-
 # --------------------------------------------------------------------------
 # Streaming sequence packing (stateful: running token offset per shard)
 # --------------------------------------------------------------------------
 
 
+# the batch packing SQL IS the streaming oracle (stream/batch parity)
+@query(oracle=ORACLE_SEQUENCE_PACKING)
 def q_stream_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequence packing as a STATEFUL streaming operator: each shard's
     running token offset (plus current bin and position) lives in
@@ -566,22 +577,6 @@ _SPAN_W = 10
 _SPAN_BASE = 1_000_000
 
 
-def q_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C4-style span dedup over the whole corpus: every repeated 10-word
-    span keeps only its first (doc_id, position) occurrence; docs are
-    reassembled from surviving spans. Two map-combinable hash aggs, no
-    join — see operators/dedup.span_dedup_docs for the skew story."""
-    from fink_science_spark.operators.dedup import span_dedup_docs
-
-    docs = _fan_out(
-        spark, sf_dir, "documents",
-        _t(spark, sf_dir, "documents").select("doc_id", "text"),
-        key="doc_id",
-    ).select("doc_id", tokens("text").alias("toks"))
-    out = span_dedup_docs(docs, "doc_id", "toks", span=_SPAN_W)
-    return out.select("doc_id", "n_kept", "dedup_text")
-
-
 ORACLE_DEDUP_SPANS = f"""
 WITH tok AS (
   SELECT doc_id, {tokens_sql('text')} AS toks FROM documents
@@ -609,11 +604,47 @@ GROUP BY code // {_SPAN_BASE}
 """
 
 
+@query(oracle=ORACLE_DEDUP_SPANS)
+def q_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """C4-style span dedup over the whole corpus: every repeated 10-word
+    span keeps only its first (doc_id, position) occurrence; docs are
+    reassembled from surviving spans. Two map-combinable hash aggs, no
+    join — see operators/dedup.span_dedup_docs for the skew story."""
+    from fink_science_spark.operators.dedup import span_dedup_docs
+
+    docs = _fan_out(
+        spark, sf_dir, "documents",
+        _t(spark, sf_dir, "documents").select("doc_id", "text"),
+        key="doc_id",
+    ).select("doc_id", tokens("text").alias("toks"))
+    out = span_dedup_docs(docs, "doc_id", "toks", span=_SPAN_W)
+    return out.select("doc_id", "n_kept", "dedup_text")
+
+
 # --------------------------------------------------------------------------
 # fastText-shaped hashed-n-gram quality classifier (corpus-wide scoring)
 # --------------------------------------------------------------------------
 
 
+def _oracle_quality_classifier() -> str:
+    from fink_science_spark.operators.models import ft_score_sql
+
+    toks = tokens_sql("text")
+    grams = f"(toks || {word_shingles_sql('toks', 2)})"
+    return f"""
+WITH tok AS (
+  SELECT doc_id, source, {toks} AS toks FROM documents
+),
+s AS (
+  SELECT doc_id, source,
+         round({ft_score_sql(grams)}, 6) AS quality_score
+  FROM tok
+)
+SELECT doc_id, source, quality_score, quality_score > 0.5 AS keep FROM s
+"""
+
+
+@query(oracle=_oracle_quality_classifier)
 def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet/GPT-3-style quality filtering: a frozen hashed-bigram linear
     classifier scored over every document — feature hashing into 64
@@ -635,24 +666,6 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn("keep", F.col("quality_score") > 0.5)
 
 
-def _oracle_quality_classifier() -> str:
-    from fink_science_spark.operators.models import ft_score_sql
-
-    toks = tokens_sql("text")
-    grams = f"(toks || {word_shingles_sql('toks', 2)})"
-    return f"""
-WITH tok AS (
-  SELECT doc_id, source, {toks} AS toks FROM documents
-),
-s AS (
-  SELECT doc_id, source,
-         round({ft_score_sql(grams)}, 6) AS quality_score
-  FROM tok
-)
-SELECT doc_id, source, quality_score, quality_score > 0.5 AS keep FROM s
-"""
-
-
 # --------------------------------------------------------------------------
 # URL/host-level curation (C4-style blocklist + host aggregation)
 # --------------------------------------------------------------------------
@@ -670,6 +683,25 @@ _BLOCKED_HOSTS = [
 _HOST_RE = "https://([^/]+)/"
 
 
+ORACLE_HOST_CURATION = f"""
+WITH u AS (
+  SELECT doc_id, source, length(text) AS n_chars,
+         'https://' || source || '.example-' || (doc_id % 3)
+         || '.org/p/' || doc_id AS url
+  FROM documents
+),
+h AS (
+  SELECT regexp_extract(url, '{_HOST_RE}', 1) AS host, n_chars FROM u
+)
+SELECT host, count(*) AS n_docs, sum(n_chars)::BIGINT AS total_chars,
+       round(avg(n_chars), 4) AS avg_chars
+FROM h
+WHERE host NOT IN ({", ".join(f"'{b}'" for b in _BLOCKED_HOSTS)})
+GROUP BY host
+"""
+
+
+@query(oracle=ORACLE_HOST_CURATION)
 def q_host_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Host-level curation: synthesize url → regexp host extraction →
     broadcast anti-join against a blocklist → per-host doc/char rollup.
@@ -701,29 +733,36 @@ def q_host_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_HOST_CURATION = f"""
-WITH u AS (
-  SELECT doc_id, source, length(text) AS n_chars,
-         'https://' || source || '.example-' || (doc_id % 3)
-         || '.org/p/' || doc_id AS url
-  FROM documents
-),
-h AS (
-  SELECT regexp_extract(url, '{_HOST_RE}', 1) AS host, n_chars FROM u
-)
-SELECT host, count(*) AS n_docs, sum(n_chars)::BIGINT AS total_chars,
-       round(avg(n_chars), 4) AS avg_chars
-FROM h
-WHERE host NOT IN ({", ".join(f"'{b}'" for b in _BLOCKED_HOSTS)})
-GROUP BY host
-"""
-
-
 # --------------------------------------------------------------------------
 # Corpus data-card rollup (per-source composition statistics)
 # --------------------------------------------------------------------------
 
 
+ORACLE_CORPUS_DATACARD = f"""
+WITH tok AS (
+  SELECT source, length(text) AS n_chars, {tokens_sql('text')} AS toks
+  FROM documents
+),
+d AS (
+  SELECT source, count(*) AS n_docs, sum(n_chars)::BIGINT AS total_chars,
+         round(quantile_cont(len(toks), 0.5), 4) AS p50_tokens,
+         round(quantile_cont(len(toks), 0.9), 4) AS p90_tokens
+  FROM tok GROUP BY source
+),
+t AS (
+  SELECT source, count(*) AS total_tokens,
+         count(DISTINCT w) AS distinct_tokens,
+         round(count(DISTINCT w) * 1.0 / count(*), 6) AS ttr
+  FROM (SELECT source, unnest(toks) AS w FROM tok)
+  GROUP BY source
+)
+SELECT d.source, n_docs, total_chars, p50_tokens, p90_tokens,
+       total_tokens, distinct_tokens, ttr
+FROM d JOIN t ON d.source = t.source
+"""
+
+
+@query(oracle=ORACLE_CORPUS_DATACARD)
 def q_corpus_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The per-source composition table a training run publishes with its
     data card: doc counts, char volume, token-count percentiles, and
@@ -762,35 +801,45 @@ def q_corpus_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_CORPUS_DATACARD = f"""
-WITH tok AS (
-  SELECT source, length(text) AS n_chars, {tokens_sql('text')} AS toks
-  FROM documents
-),
-d AS (
-  SELECT source, count(*) AS n_docs, sum(n_chars)::BIGINT AS total_chars,
-         round(quantile_cont(len(toks), 0.5), 4) AS p50_tokens,
-         round(quantile_cont(len(toks), 0.9), 4) AS p90_tokens
-  FROM tok GROUP BY source
-),
-t AS (
-  SELECT source, count(*) AS total_tokens,
-         count(DISTINCT w) AS distinct_tokens,
-         round(count(DISTINCT w) * 1.0 / count(*), 6) AS ttr
-  FROM (SELECT source, unnest(toks) AS w FROM tok)
-  GROUP BY source
-)
-SELECT d.source, n_docs, total_chars, p50_tokens, p90_tokens,
-       total_tokens, distinct_tokens, ttr
-FROM d JOIN t ON d.source = t.source
-"""
-
-
 # --------------------------------------------------------------------------
 # Embedding-table aggregates: per-label centroids + cohesion
 # --------------------------------------------------------------------------
 
 
+ORACLE_EMBEDDING_CENTROIDS = """
+WITH ex AS (
+  SELECT label, unnest(generate_series(1, len(embedding))) AS pos, embedding
+  FROM embeddings
+),
+c AS (
+  SELECT label, pos, avg(embedding[pos]) AS c FROM ex GROUP BY label, pos
+),
+cent AS (
+  SELECT label, list(c ORDER BY pos) AS cent FROM c GROUP BY label
+),
+m AS (
+  -- embedding elements cast to DOUBLE before multiplying: duckdb would
+  -- otherwise multiply in FLOAT while Spark's lambda promotes to double
+  SELECT e.label,
+         list_sum([e.embedding[i]::DOUBLE * t.cent[i]
+                   for i in generate_series(1, len(e.embedding))])
+         / (sqrt(list_sum([e.embedding[i]::DOUBLE * e.embedding[i]::DOUBLE
+                           for i in generate_series(1, len(e.embedding))]))
+            * sqrt(list_sum([t.cent[i] * t.cent[i]
+                             for i in generate_series(1, len(t.cent))])))
+           AS cos,
+         sqrt(list_sum([t.cent[i] * t.cent[i]
+                        for i in generate_series(1, len(t.cent))])) AS cn
+  FROM embeddings e JOIN cent t ON e.label = t.label
+)
+SELECT label, count(*) AS n_vecs,
+       round(any_value(cn), 5) AS centroid_norm,
+       round(avg(cos), 5) AS avg_cos
+FROM m GROUP BY label
+"""
+
+
+@query(oracle=ORACLE_EMBEDDING_CENTROIDS)
 def q_embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label embedding centroids and cluster cohesion: mean vector
     per label (posexplode → (label, dim) avg — partial aggregation
@@ -839,56 +888,9 @@ def q_embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_EMBEDDING_CENTROIDS = """
-WITH ex AS (
-  SELECT label, unnest(generate_series(1, len(embedding))) AS pos, embedding
-  FROM embeddings
-),
-c AS (
-  SELECT label, pos, avg(embedding[pos]) AS c FROM ex GROUP BY label, pos
-),
-cent AS (
-  SELECT label, list(c ORDER BY pos) AS cent FROM c GROUP BY label
-),
-m AS (
-  -- embedding elements cast to DOUBLE before multiplying: duckdb would
-  -- otherwise multiply in FLOAT while Spark's lambda promotes to double
-  SELECT e.label,
-         list_sum([e.embedding[i]::DOUBLE * t.cent[i]
-                   for i in generate_series(1, len(e.embedding))])
-         / (sqrt(list_sum([e.embedding[i]::DOUBLE * e.embedding[i]::DOUBLE
-                           for i in generate_series(1, len(e.embedding))]))
-            * sqrt(list_sum([t.cent[i] * t.cent[i]
-                             for i in generate_series(1, len(t.cent))])))
-           AS cos,
-         sqrt(list_sum([t.cent[i] * t.cent[i]
-                        for i in generate_series(1, len(t.cent))])) AS cn
-  FROM embeddings e JOIN cent t ON e.label = t.label
-)
-SELECT label, count(*) AS n_vecs,
-       round(any_value(cn), 5) AS centroid_norm,
-       round(avg(cos), 5) AS avg_cos
-FROM m GROUP BY label
-"""
-
-
 # --------------------------------------------------------------------------
 # Audio-shaped multimodal features (second modality on the codec registry)
 # --------------------------------------------------------------------------
-
-
-def q_audio_frame_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio feature extraction through the blob-codec plumbing: each
-    document's bytes stand in for an 8-bit PCM waveform; the pcm8 codec
-    (mapInPandas, Arrow-batch-bounded, blob never shuffled) emits
-    all-integer frame-energy features the oracle recomputes from ASCII
-    codes — the image-stamp pattern applied to a second modality."""
-    from fink_science_spark.operators.multimodal import extract_blob_features
-
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", F.col("text").cast("binary").alias("blob")
-    )
-    return extract_blob_features(docs, "doc_id", "blob", codec="pcm8")
 
 
 ORACLE_AUDIO_FRAME_ENERGY = """
@@ -913,11 +915,38 @@ FROM f
 """
 
 
+@query(oracle=ORACLE_AUDIO_FRAME_ENERGY)
+def q_audio_frame_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Audio feature extraction through the blob-codec plumbing: each
+    document's bytes stand in for an 8-bit PCM waveform; the pcm8 codec
+    (mapInPandas, Arrow-batch-bounded, blob never shuffled) emits
+    all-integer frame-energy features the oracle recomputes from ASCII
+    codes — the image-stamp pattern applied to a second modality."""
+    from fink_science_spark.operators.multimodal import extract_blob_features
+
+    docs = _t(spark, sf_dir, "documents").select(
+        "doc_id", F.col("text").cast("binary").alias("blob")
+    )
+    return extract_blob_features(docs, "doc_id", "blob", codec="pcm8")
+
+
 # --------------------------------------------------------------------------
 # Curated corpus: the end artifact (near-dup clusters → keep canonicals)
 # --------------------------------------------------------------------------
 
 
+def _oracle_curated_corpus() -> str:
+    from fink_science_spark.queries_ext import _oracle_dedup_clusters
+
+    return f"""
+WITH clusters AS ({_oracle_dedup_clusters()})
+SELECT doc_id, source, length(text) AS n_chars
+FROM documents
+WHERE doc_id NOT IN (SELECT doc_id FROM clusters WHERE doc_id != cluster)
+"""
+
+
+@query(oracle=_oracle_curated_corpus, slow_oracle=True)
 def q_curated_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The artifact a dedup pipeline actually ships: the corpus with
     every non-canonical near-duplicate removed. Composes the existing
@@ -952,22 +981,39 @@ def q_curated_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.join(F.broadcast(evict), "doc_id", "left_anti")
 
 
-def _oracle_curated_corpus() -> str:
-    from fink_science_spark.queries_ext import _oracle_dedup_clusters
-
-    return f"""
-WITH clusters AS ({_oracle_dedup_clusters()})
-SELECT doc_id, source, length(text) AS n_chars
-FROM documents
-WHERE doc_id NOT IN (SELECT doc_id FROM clusters WHERE doc_id != cluster)
-"""
-
-
 # --------------------------------------------------------------------------
 # SCD2 dimension history build (warehouse merge pattern)
 # --------------------------------------------------------------------------
 
 
+ORACLE_SCD2_HISTORY = """
+WITH feed AS (
+  SELECT user_id, event_id, epoch_us(ts) AS ts_us,
+         cast(floor(value / 100) AS BIGINT) AS attr
+  FROM events WHERE event_type = 'purchase'
+),
+ch AS (
+  SELECT *,
+         lag(attr) OVER (PARTITION BY user_id ORDER BY ts_us, event_id)
+           AS prev_attr
+  FROM feed
+),
+v AS (
+  SELECT user_id, event_id, attr, ts_us AS valid_from_us
+  FROM ch WHERE prev_attr IS NULL OR attr != prev_attr
+)
+SELECT user_id, attr, valid_from_us,
+       lead(valid_from_us) OVER (PARTITION BY user_id
+                                 ORDER BY valid_from_us, event_id)
+         AS valid_to_us,
+       lead(valid_from_us) OVER (PARTITION BY user_id
+                                 ORDER BY valid_from_us, event_id)
+         IS NULL AS is_current
+FROM v
+"""
+
+
+@query(oracle=ORACLE_SCD2_HISTORY)
 def q_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Slowly-changing-dimension type-2 build from a change feed: per
     user, the coarse attribute floor(value/100) observed at each purchase
@@ -1002,38 +1048,26 @@ def q_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_SCD2_HISTORY = """
-WITH feed AS (
-  SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-         cast(floor(value / 100) AS BIGINT) AS attr
-  FROM events WHERE event_type = 'purchase'
-),
-ch AS (
-  SELECT *,
-         lag(attr) OVER (PARTITION BY user_id ORDER BY ts_us, event_id)
-           AS prev_attr
-  FROM feed
-),
-v AS (
-  SELECT user_id, event_id, attr, ts_us AS valid_from_us
-  FROM ch WHERE prev_attr IS NULL OR attr != prev_attr
-)
-SELECT user_id, attr, valid_from_us,
-       lead(valid_from_us) OVER (PARTITION BY user_id
-                                 ORDER BY valid_from_us, event_id)
-         AS valid_to_us,
-       lead(valid_from_us) OVER (PARTITION BY user_id
-                                 ORDER BY valid_from_us, event_id)
-         IS NULL AS is_current
-FROM v
-"""
-
-
 # --------------------------------------------------------------------------
 # Stream-stream watermarked interval join (§2.9): view→click attribution
 # --------------------------------------------------------------------------
 
 
+ORACLE_STREAM_INTERVAL_JOIN = """
+SELECT v.user_id,
+       v.event_id AS view_event_id,
+       c.event_id AS click_event_id,
+       epoch_us(c.ts) - epoch_us(v.ts) AS lag_us
+FROM events v
+JOIN events c
+  ON v.user_id = c.user_id
+ AND c.ts >= v.ts
+ AND c.ts <= v.ts + INTERVAL 3 DAY
+WHERE v.event_type = 'view' AND c.event_type = 'click'
+"""
+
+
+@query(oracle=ORACLE_STREAM_INTERVAL_JOIN)
 def q_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream INNER join with watermarks and an event-time interval
     bound, as a REAL Structured Streaming query: every click a user makes
@@ -1103,20 +1137,6 @@ def q_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return result
 
 
-ORACLE_STREAM_INTERVAL_JOIN = """
-SELECT v.user_id,
-       v.event_id AS view_event_id,
-       c.event_id AS click_event_id,
-       epoch_us(c.ts) - epoch_us(v.ts) AS lag_us
-FROM events v
-JOIN events c
-  ON v.user_id = c.user_id
- AND c.ts >= v.ts
- AND c.ts <= v.ts + INTERVAL 3 DAY
-WHERE v.event_type = 'view' AND c.event_type = 'click'
-"""
-
-
 # --------------------------------------------------------------------------
 # Sliding-window document chunking: long documents → fixed-size training
 # chunks with overlap (the context-window preprocessing step between
@@ -1131,6 +1151,31 @@ _CHUNK_OVERLAP = 8  # tokens shared with the previous chunk
 _CHUNK_STRIDE = _CHUNK_SIZE - _CHUNK_OVERLAP
 
 
+ORACLE_DOC_CHUNKS = f"""
+WITH tok AS (
+  SELECT doc_id, {tokens_sql('text')} AS toks FROM documents
+),
+base AS (
+  SELECT doc_id, toks, len(toks) AS n,
+         (1 + CAST(floor(greatest(len(toks) - {_CHUNK_OVERLAP} - 1, 0)
+                         / {_CHUNK_STRIDE}) AS INT)) AS nc
+  FROM tok WHERE len(toks) >= 1
+)
+SELECT doc_id,
+       g.i AS chunk_id,
+       g.i * {_CHUNK_STRIDE} AS start_tok,
+       least({_CHUNK_SIZE}, n - g.i * {_CHUNK_STRIDE})::INT AS n_tok,
+       md5(array_to_string(
+           toks[g.i * {_CHUNK_STRIDE} + 1 :
+                g.i * {_CHUNK_STRIDE} + {_CHUNK_SIZE}], ' ')) AS chunk_md5
+FROM base,
+     (SELECT unnest(generate_series(
+          0, greatest((SELECT max(nc) FROM base) - 1, 0))) AS i) AS g
+WHERE g.i < nc
+"""
+
+
+@query(oracle=ORACLE_DOC_CHUNKS)
 def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row per (doc, chunk): chunk k covers tokens
     [k·stride, k·stride + size); the last chunk starts only if it adds
@@ -1177,69 +1222,3 @@ def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(chunk).alias("n_tok"),
         F.md5(F.array_join(chunk, " ")).alias("chunk_md5"),
     )
-
-
-ORACLE_DOC_CHUNKS = f"""
-WITH tok AS (
-  SELECT doc_id, {tokens_sql('text')} AS toks FROM documents
-),
-base AS (
-  SELECT doc_id, toks, len(toks) AS n,
-         (1 + CAST(floor(greatest(len(toks) - {_CHUNK_OVERLAP} - 1, 0)
-                         / {_CHUNK_STRIDE}) AS INT)) AS nc
-  FROM tok WHERE len(toks) >= 1
-)
-SELECT doc_id,
-       g.i AS chunk_id,
-       g.i * {_CHUNK_STRIDE} AS start_tok,
-       least({_CHUNK_SIZE}, n - g.i * {_CHUNK_STRIDE})::INT AS n_tok,
-       md5(array_to_string(
-           toks[g.i * {_CHUNK_STRIDE} + 1 :
-                g.i * {_CHUNK_STRIDE} + {_CHUNK_SIZE}], ' ')) AS chunk_md5
-FROM base,
-     (SELECT unnest(generate_series(
-          0, greatest((SELECT max(nc) FROM base) - 1, 0))) AS i) AS g
-WHERE g.i < nc
-"""
-
-
-QUERIES_EXT6: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "decontaminate": q_decontaminate,
-    "train_shard_assign": q_train_shard_assign,
-    "sequence_packing": q_sequence_packing,
-    "tfidf_topk": q_tfidf_topk,
-    "domain_mix_sample": q_domain_mix_sample,
-    "color_features": q_color_features,
-    "stream_sequence_packing": q_stream_sequence_packing,
-    "stream_interval_join": q_stream_interval_join,
-    "dedup_spans": q_dedup_spans,
-    "quality_classifier": q_quality_classifier,
-    "host_curation": q_host_curation,
-    "corpus_datacard": q_corpus_datacard,
-    "embedding_centroids": q_embedding_centroids,
-    "audio_frame_energy": q_audio_frame_energy,
-    "scd2_history": q_scd2_history,
-    "curated_corpus": q_curated_corpus,
-    "doc_chunks": q_doc_chunks,
-}
-
-ORACLES_EXT6: dict[str, str] = {
-    "decontaminate": ORACLE_DECONTAMINATE,
-    "train_shard_assign": ORACLE_TRAIN_SHARD_ASSIGN,
-    "sequence_packing": ORACLE_SEQUENCE_PACKING,
-    "tfidf_topk": ORACLE_TFIDF_TOPK,
-    "domain_mix_sample": ORACLE_DOMAIN_MIX_SAMPLE,
-    "color_features": ORACLE_COLOR_FEATURES,
-    # the batch packing SQL IS the streaming oracle (stream/batch parity)
-    "stream_sequence_packing": ORACLE_SEQUENCE_PACKING,
-    "stream_interval_join": ORACLE_STREAM_INTERVAL_JOIN,
-    "dedup_spans": ORACLE_DEDUP_SPANS,
-    "quality_classifier": _oracle_quality_classifier(),
-    "host_curation": ORACLE_HOST_CURATION,
-    "corpus_datacard": ORACLE_CORPUS_DATACARD,
-    "embedding_centroids": ORACLE_EMBEDDING_CENTROIDS,
-    "audio_frame_energy": ORACLE_AUDIO_FRAME_ENERGY,
-    "scd2_history": ORACLE_SCD2_HISTORY,
-    "curated_corpus": _oracle_curated_corpus(),
-    "doc_chunks": ORACLE_DOC_CHUNKS,
-}

@@ -1,4 +1,4 @@
-"""Query registry, wave 8: the last §2.8 kernel shapes still missing from
+"""Queries, wave 8: the last §2.8 kernel shapes still missing from
 the inventory — the payload-map crossmatch (`crossmatch_mangrove`), the
 two-band masked min-combine anomaly score (`anomaly_score`), and the
 hostless-detection statistical core (two-sample KS test + binned Fourier
@@ -6,8 +6,6 @@ power spectrum) — each Spark-first with a bit-portable DuckDB oracle.
 """
 
 from __future__ import annotations
-
-from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,6 +32,7 @@ from fink_science_spark.queries_ext2 import (
     _ra,
     _ra_sql,
 )
+from fink_science_spark.registry import query
 
 # --------------------------------------------------------------------------
 # crossmatch_mangrove: 1-NN sky join returning a catalog PAYLOAD MAP with
@@ -43,6 +42,34 @@ from fink_science_spark.queries_ext2 import (
 _MANGROVE_RADIUS = 10.0
 
 
+ORACLE_CROSSMATCH_MANGROVE = f"""
+WITH c AS (SELECT c_custkey,
+                  {_ra_sql('c_custkey', *_CUST_RA)} AS ra,
+                  {_dec_sql('c_custkey', *_CUST_DEC)} AS dec
+           FROM customer),
+s AS (SELECT s_suppkey, s_name, s_nationkey,
+             {_ra_sql('s_suppkey', *_SUPP_RA)} AS ra,
+             {_dec_sql('s_suppkey', *_SUPP_DEC)} AS dec
+      FROM supplier),
+ranked AS (
+  SELECT c_custkey, s_name, s_nationkey,
+         row_number() OVER (
+           PARTITION BY c_custkey
+           ORDER BY {_HAVERSINE_SQL.format(ra1='c.ra', dec1='c.dec',
+                                           ra2='s.ra', dec2='s.dec')} ASC,
+                    s_suppkey ASC) AS rn
+  FROM c, s
+  WHERE {_HAVERSINE_SQL.format(ra1='c.ra', dec1='c.dec',
+                               ra2='s.ra', dec2='s.dec')} <= {_MANGROVE_RADIUS}
+)
+SELECT c.c_custkey,
+       coalesce(r.s_name, 'None')                   AS galaxy_name,
+       coalesce(CAST(r.s_nationkey AS VARCHAR), 'None') AS host_nation
+FROM c LEFT JOIN (SELECT * FROM ranked WHERE rn = 1) r USING (c_custkey)
+"""
+
+
+@query(oracle=ORACLE_CROSSMATCH_MANGROVE)
 def q_crossmatch_mangrove(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The payload-dict crossmatch variant (reference:
     crossmatch_mangrove, ztf/xmatch/processor.py:601-690 — 1-NN within
@@ -94,33 +121,6 @@ def q_crossmatch_mangrove(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("__m").getItem("galaxy_name").alias("galaxy_name"),
         F.col("__m").getItem("host_nation").alias("host_nation"),
     )
-
-
-ORACLE_CROSSMATCH_MANGROVE = f"""
-WITH c AS (SELECT c_custkey,
-                  {_ra_sql('c_custkey', *_CUST_RA)} AS ra,
-                  {_dec_sql('c_custkey', *_CUST_DEC)} AS dec
-           FROM customer),
-s AS (SELECT s_suppkey, s_name, s_nationkey,
-             {_ra_sql('s_suppkey', *_SUPP_RA)} AS ra,
-             {_dec_sql('s_suppkey', *_SUPP_DEC)} AS dec
-      FROM supplier),
-ranked AS (
-  SELECT c_custkey, s_name, s_nationkey,
-         row_number() OVER (
-           PARTITION BY c_custkey
-           ORDER BY {_HAVERSINE_SQL.format(ra1='c.ra', dec1='c.dec',
-                                           ra2='s.ra', dec2='s.dec')} ASC,
-                    s_suppkey ASC) AS rn
-  FROM c, s
-  WHERE {_HAVERSINE_SQL.format(ra1='c.ra', dec1='c.dec',
-                               ra2='s.ra', dec2='s.dec')} <= {_MANGROVE_RADIUS}
-)
-SELECT c.c_custkey,
-       coalesce(r.s_name, 'None')                   AS galaxy_name,
-       coalesce(CAST(r.s_nationkey AS VARCHAR), 'None') AS host_nation
-FROM c LEFT JOIN (SELECT * FROM ranked WHERE rn = 1) r USING (c_custkey)
-"""
 
 
 # --------------------------------------------------------------------------
@@ -175,6 +175,37 @@ def _band_features_sql(tag: str) -> list[str]:
     ]
 
 
+def _oracle_anomaly_score() -> str:
+    sg = forest_score_sql(_band_features_sql("g"))
+    sr = forest_score_sql(_band_features_sql("r"))
+    k = _ANOM_MIN_POINTS
+    return f"""
+WITH b AS (
+  SELECT user_id,
+         count(*) FILTER (event_type = '{_BAND_G}')                    AS n_g,
+         sum(CAST(round(value * 100) AS BIGINT))
+             FILTER (event_type = '{_BAND_G}')                         AS s_g,
+         count(*) FILTER (event_type = '{_BAND_G}' AND value > 40.0)   AS a40_g,
+         count(*) FILTER (event_type = '{_BAND_G}' AND value > 25.0)   AS a25_g,
+         count(*) FILTER (event_type = '{_BAND_R}')                    AS n_r,
+         sum(CAST(round(value * 100) AS BIGINT))
+             FILTER (event_type = '{_BAND_R}')                         AS s_r,
+         count(*) FILTER (event_type = '{_BAND_R}' AND value > 40.0)   AS a40_r,
+         count(*) FILTER (event_type = '{_BAND_R}' AND value > 25.0)   AS a25_r
+  FROM events GROUP BY user_id
+)
+SELECT user_id,
+       n_g AS n_band_g,
+       n_r AS n_band_r,
+       round(CASE WHEN n_g >= {k} AND n_r >= {k} THEN least({sg}, {sr})
+                  WHEN n_g >= {k} THEN {sg}
+                  WHEN n_r >= {k} THEN {sr}
+                  ELSE 0.0 END, 6) AS anomaly_score
+FROM b
+"""
+
+
+@query(oracle=_oracle_anomaly_score)
 def q_anomaly_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-band anomaly score with masked min-combine (reference:
     anomaly_score, ztf/anomaly_detection/processor.py:92-133 — an
@@ -210,41 +241,25 @@ def q_anomaly_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_anomaly_score() -> str:
-    sg = forest_score_sql(_band_features_sql("g"))
-    sr = forest_score_sql(_band_features_sql("r"))
-    k = _ANOM_MIN_POINTS
-    return f"""
-WITH b AS (
-  SELECT user_id,
-         count(*) FILTER (event_type = '{_BAND_G}')                    AS n_g,
-         sum(CAST(round(value * 100) AS BIGINT))
-             FILTER (event_type = '{_BAND_G}')                         AS s_g,
-         count(*) FILTER (event_type = '{_BAND_G}' AND value > 40.0)   AS a40_g,
-         count(*) FILTER (event_type = '{_BAND_G}' AND value > 25.0)   AS a25_g,
-         count(*) FILTER (event_type = '{_BAND_R}')                    AS n_r,
-         sum(CAST(round(value * 100) AS BIGINT))
-             FILTER (event_type = '{_BAND_R}')                         AS s_r,
-         count(*) FILTER (event_type = '{_BAND_R}' AND value > 40.0)   AS a40_r,
-         count(*) FILTER (event_type = '{_BAND_R}' AND value > 25.0)   AS a25_r
-  FROM events GROUP BY user_id
-)
-SELECT user_id,
-       n_g AS n_band_g,
-       n_r AS n_band_r,
-       round(CASE WHEN n_g >= {k} AND n_r >= {k} THEN least({sg}, {sr})
-                  WHEN n_g >= {k} THEN {sg}
-                  WHEN n_r >= {k} THEN {sr}
-                  ELSE 0.0 END, 6) AS anomaly_score
-FROM b
-"""
-
-
 # --------------------------------------------------------------------------
 # ks_source_drift: per-language two-sample KS between source cohorts
 # --------------------------------------------------------------------------
 
 
+ORACLE_KS_SOURCE_DRIFT = (
+    "SELECT lang, n_a, n_b, round(ks_stat, 9) AS ks_stat FROM ("
+    + ks_two_sample_sql(
+        "documents",
+        group="lang",
+        value="n_chars",
+        in_a_sql="CAST(substr(source, 4) AS INT) % 2 = 0",
+        in_b_sql="CAST(substr(source, 4) AS INT) % 2 = 1",
+    )
+    + ")"
+)
+
+
+@query(oracle=ORACLE_KS_SOURCE_DRIFT)
 def q_ks_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-sample KS distribution drift per language: document-length
     distributions of the even-numbered source cohort vs the odd cohort
@@ -266,19 +281,6 @@ def q_ks_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_KS_SOURCE_DRIFT = (
-    "SELECT lang, n_a, n_b, round(ks_stat, 9) AS ks_stat FROM ("
-    + ks_two_sample_sql(
-        "documents",
-        group="lang",
-        value="n_chars",
-        in_a_sql="CAST(substr(source, 4) AS INT) % 2 = 0",
-        in_b_sql="CAST(substr(source, 4) AS INT) % 2 = 1",
-    )
-    + ")"
-)
-
-
 # --------------------------------------------------------------------------
 # power_spectrum: binned DFT power of per-user value histories
 # --------------------------------------------------------------------------
@@ -287,6 +289,35 @@ _N_FFT = 16
 _PS_MIN_POINTS = 8
 
 
+def _oracle_power_spectrum() -> str:
+    vs = f"v[1:{_N_FFT}]"
+    sum_abs = (
+        f"list_sum([abs({vs}[j]) for j in generate_series(1, len({vs}))])"
+    )
+    p = {k: dft_power_sql("v", k, _N_FFT) for k in range(1, 9)}
+    low = f"(({p[1]}) + ({p[2]})) / 2.0"
+    mid = f"(({p[3]}) + ({p[4]}) + ({p[5]})) / 3.0"
+    high = f"(({p[6]}) + ({p[7]}) + ({p[8]})) / 3.0"
+    return f"""
+WITH h AS (
+  SELECT user_id,
+         list(value ORDER BY epoch_us(ts) / 86400e6, value) AS v
+  FROM events GROUP BY user_id
+),
+n AS (
+  SELECT user_id, v, len(v) AS n_obs,
+         ({sum_abs}) * ({sum_abs}) AS norm
+  FROM h WHERE len(v) >= {_PS_MIN_POINTS}
+)
+SELECT user_id, n_obs,
+       round(({low}) / norm, 6)  AS p_low,
+       round(({mid}) / norm, 6)  AS p_mid,
+       round(({high}) / norm, 6) AS p_high
+FROM n
+"""
+
+
+@query(oracle=_oracle_power_spectrum)
 def q_power_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binned Fourier power spectrum of each user's time-ordered value
     history (reference: get_powerspectrum — FFT → |·|² → bin-mean —
@@ -346,46 +377,3 @@ def q_power_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(mid / norm, 6).alias("p_mid"),
         F.round(high / norm, 6).alias("p_high"),
     )
-
-
-def _oracle_power_spectrum() -> str:
-    vs = f"v[1:{_N_FFT}]"
-    sum_abs = (
-        f"list_sum([abs({vs}[j]) for j in generate_series(1, len({vs}))])"
-    )
-    p = {k: dft_power_sql("v", k, _N_FFT) for k in range(1, 9)}
-    low = f"(({p[1]}) + ({p[2]})) / 2.0"
-    mid = f"(({p[3]}) + ({p[4]}) + ({p[5]})) / 3.0"
-    high = f"(({p[6]}) + ({p[7]}) + ({p[8]})) / 3.0"
-    return f"""
-WITH h AS (
-  SELECT user_id,
-         list(value ORDER BY epoch_us(ts) / 86400e6, value) AS v
-  FROM events GROUP BY user_id
-),
-n AS (
-  SELECT user_id, v, len(v) AS n_obs,
-         ({sum_abs}) * ({sum_abs}) AS norm
-  FROM h WHERE len(v) >= {_PS_MIN_POINTS}
-)
-SELECT user_id, n_obs,
-       round(({low}) / norm, 6)  AS p_low,
-       round(({mid}) / norm, 6)  AS p_mid,
-       round(({high}) / norm, 6) AS p_high
-FROM n
-"""
-
-
-QUERIES_EXT7: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "crossmatch_mangrove": q_crossmatch_mangrove,
-    "anomaly_score": q_anomaly_score,
-    "ks_source_drift": q_ks_source_drift,
-    "power_spectrum": q_power_spectrum,
-}
-
-ORACLES_EXT7: dict[str, str] = {
-    "crossmatch_mangrove": ORACLE_CROSSMATCH_MANGROVE,
-    "anomaly_score": _oracle_anomaly_score(),
-    "ks_source_drift": ORACLE_KS_SOURCE_DRIFT,
-    "power_spectrum": _oracle_power_spectrum(),
-}

@@ -1,4 +1,4 @@
-"""Query registry, wave 9: the remaining §2.8 classifier-module shapes —
+"""Queries, wave 9: the remaining §2.8 classifier-module shapes —
 kilonova (PCA-projection features → forest, multi-condition veto mask),
 CATS (pad-to-fixed-length sequence → multi-class softmax array output),
 superluminous (sentinel −1 for vetoed rows), and the SSOFT spin-grid
@@ -6,8 +6,6 @@ period scan as a native sufficient-statistics aggregation.
 """
 
 from __future__ import annotations
-
-from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -22,6 +20,7 @@ from fink_science_spark.operators.period import (
     period_scan_sql,
 )
 from fink_science_spark.queries import _events_us, _t
+from fink_science_spark.registry import query
 
 # Days between the unix epoch and 2024-01-01 UTC: rebases event times so
 # trig arguments stay O(10²) (identical constant in both engines).
@@ -35,6 +34,25 @@ _T0_DAYS = 1704067200.0 / 86400.0
 _PERIODS = [2.0, 3.0, 5.0, 7.0, 10.0, 14.0, 21.0, 28.0]
 
 
+ORACLE_PERIOD_SCAN = f"""
+WITH best AS (
+{period_scan_sql(
+    "SELECT user_id, epoch_us(ts) / 86400e6 - " + repr(_T0_DAYS)
+    + " AS t_days, value / 512.0 AS y FROM events",
+    ["user_id"],
+    "t_days",
+    "y",
+    _PERIODS,
+    min_points=8,
+)}
+)
+SELECT user_id, period, n, round(amp, 6) AS amp,
+       round(level, 6) AS level, round(rss, 6) AS rss
+FROM best
+"""
+
+
+@query(oracle=ORACLE_PERIOD_SCAN)
 def q_period_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grid period search over per-user event histories: posexplode the
     candidate grid (×8 per-row fan-out, no join), ONE map-combinable hash
@@ -59,23 +77,6 @@ def q_period_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("rss", 6).alias("rss"),
     )
 
-
-ORACLE_PERIOD_SCAN = f"""
-WITH best AS (
-{period_scan_sql(
-    "SELECT user_id, epoch_us(ts) / 86400e6 - " + repr(_T0_DAYS)
-    + " AS t_days, value / 512.0 AS y FROM events",
-    ["user_id"],
-    "t_days",
-    "y",
-    _PERIODS,
-    min_points=8,
-)}
-)
-SELECT user_id, period, n, round(amp, 6) AS amp,
-       round(level, 6) AS level, round(rss, 6) AS rss
-FROM best
-"""
 
 # --------------------------------------------------------------------------
 # kn_score: kilonova-shaped module — veto mask (history depth per band +
@@ -104,6 +105,61 @@ _KN_GAINS = (32.0, 4.0, 0.5, 2.0)  # (cg1, cg2, cr1, cr2)
 _KN_SEGMENTS = ("BUILDING", "AUTOMOBILE", "MACHINERY")
 
 
+_KN_PREP_G = _kn_prep_sql("g_vals")
+
+
+_KN_PREP_R = _kn_prep_sql("r_vals")
+
+
+_KN_FOREST_SQL = forest_score_sql(
+    [
+        _kn_coef_sql("kg_s", "kg_m", "kg_sh", _KN_PCS["g"][0], _KN_GAINS[0]),
+        _kn_coef_sql("kg_s", "kg_m", "kg_sh", _KN_PCS["g"][1], _KN_GAINS[1]),
+        _kn_coef_sql("kr_s", "kr_m", "kr_sh", _KN_PCS["r"][0], _KN_GAINS[2]),
+        _kn_coef_sql("kr_s", "kr_m", "kr_sh", _KN_PCS["r"][1], _KN_GAINS[3]),
+    ]
+)
+
+
+ORACLE_KN_SCORE = f"""
+WITH curves AS (
+  SELECT user_id, event_type,
+         list(value ORDER BY epoch_us(ts), value) AS vals,
+         count(*) AS npts
+  FROM events
+  WHERE event_type IN ('click', 'purchase')
+  GROUP BY user_id, event_type
+),
+both_bands AS (
+  SELECT coalesce(g.user_id, r.user_id) AS user_id,
+         coalesce(g.npts, 0) AS n_g, coalesce(r.npts, 0) AS n_r,
+         g.vals AS g_vals, r.vals AS r_vals
+  FROM (SELECT * FROM curves WHERE event_type = 'click') g
+  FULL OUTER JOIN (SELECT * FROM curves WHERE event_type = 'purchase') r
+    ON g.user_id = r.user_id
+),
+with_seg AS (
+  SELECT b.*, c.c_mktsegment FROM both_bands b
+  LEFT JOIN customer c ON b.user_id = c.c_custkey
+),
+prepped AS (
+  SELECT user_id, n_g, n_r, c_mktsegment,
+         {_KN_PREP_G[0]} AS kg_s, {_KN_PREP_G[1]} AS kg_m,
+         {_KN_PREP_G[2]} AS kg_sh,
+         {_KN_PREP_R[0]} AS kr_s, {_KN_PREP_R[1]} AS kr_m,
+         {_KN_PREP_R[2]} AS kr_sh
+  FROM with_seg
+)
+SELECT user_id, n_g, n_r,
+       CASE WHEN n_g >= 2 AND n_r >= 2
+                 AND c_mktsegment IN ('BUILDING', 'AUTOMOBILE', 'MACHINERY')
+            THEN round({_KN_FOREST_SQL}, 6)
+            ELSE 0.0 END AS kn_score
+FROM prepped
+"""
+
+
+@query(oracle=ORACLE_KN_SCORE)
 def q_kn_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kilonova-module lifecycle, Spark-first: the veto mask (≥2 points in
     each band + broadcast catalog-type whitelist — the reference's
@@ -184,54 +240,6 @@ def q_kn_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_KN_PREP_G = _kn_prep_sql("g_vals")
-_KN_PREP_R = _kn_prep_sql("r_vals")
-_KN_FOREST_SQL = forest_score_sql(
-    [
-        _kn_coef_sql("kg_s", "kg_m", "kg_sh", _KN_PCS["g"][0], _KN_GAINS[0]),
-        _kn_coef_sql("kg_s", "kg_m", "kg_sh", _KN_PCS["g"][1], _KN_GAINS[1]),
-        _kn_coef_sql("kr_s", "kr_m", "kr_sh", _KN_PCS["r"][0], _KN_GAINS[2]),
-        _kn_coef_sql("kr_s", "kr_m", "kr_sh", _KN_PCS["r"][1], _KN_GAINS[3]),
-    ]
-)
-
-ORACLE_KN_SCORE = f"""
-WITH curves AS (
-  SELECT user_id, event_type,
-         list(value ORDER BY epoch_us(ts), value) AS vals,
-         count(*) AS npts
-  FROM events
-  WHERE event_type IN ('click', 'purchase')
-  GROUP BY user_id, event_type
-),
-both_bands AS (
-  SELECT coalesce(g.user_id, r.user_id) AS user_id,
-         coalesce(g.npts, 0) AS n_g, coalesce(r.npts, 0) AS n_r,
-         g.vals AS g_vals, r.vals AS r_vals
-  FROM (SELECT * FROM curves WHERE event_type = 'click') g
-  FULL OUTER JOIN (SELECT * FROM curves WHERE event_type = 'purchase') r
-    ON g.user_id = r.user_id
-),
-with_seg AS (
-  SELECT b.*, c.c_mktsegment FROM both_bands b
-  LEFT JOIN customer c ON b.user_id = c.c_custkey
-),
-prepped AS (
-  SELECT user_id, n_g, n_r, c_mktsegment,
-         {_KN_PREP_G[0]} AS kg_s, {_KN_PREP_G[1]} AS kg_m,
-         {_KN_PREP_G[2]} AS kg_sh,
-         {_KN_PREP_R[0]} AS kr_s, {_KN_PREP_R[1]} AS kr_m,
-         {_KN_PREP_R[2]} AS kr_sh
-  FROM with_seg
-)
-SELECT user_id, n_g, n_r,
-       CASE WHEN n_g >= 2 AND n_r >= 2
-                 AND c_mktsegment IN ('BUILDING', 'AUTOMOBILE', 'MACHINERY')
-            THEN round({_KN_FOREST_SQL}, 6)
-            ELSE 0.0 END AS kn_score
-FROM prepped
-"""
-
 # --------------------------------------------------------------------------
 # cats_broad_scores: CATS-shaped multi-class sequence classifier —
 # mask (<2 points → zero vector), pad-to-fixed-length with a −999
@@ -253,6 +261,72 @@ _CATS_W = [
 _CATS_B = [0.1, -0.1, 0.2, 0.0, -0.2]
 
 
+def _cats_logit_sql(c: int) -> str:
+    terms = " + ".join(
+        f"f{k + 1} * ({_CATS_W[c][k]!r})" for k in range(4)
+    )
+    return f"exp(({_CATS_B[c]!r}) + {terms})"
+
+
+_CATS_EXPS = ", ".join(
+    f"{_cats_logit_sql(c)} AS e{c}" for c in range(_CATS_CLASSES)
+)
+
+
+_CATS_DENOM = " + ".join(f"e{c}" for c in range(_CATS_CLASSES))
+
+
+_CATS_PROBS = ", ".join(
+    f"round(e{c} / ({_CATS_DENOM}), 6)" for c in range(_CATS_CLASSES)
+)
+
+
+ORACLE_CATS_BROAD_SCORES = f"""
+WITH grouped AS (
+  SELECT user_id, list(value ORDER BY epoch_us(ts), value) AS vals,
+         count(*) AS n
+  FROM events GROUP BY user_id
+),
+padded AS (
+  SELECT user_id, n,
+         least(n, {_CATS_K}) AS n_real,
+         list_resize(vals[1:{_CATS_K}], {_CATS_K}, {_CATS_PAD!r}) AS lc_padded,
+         vals[1:least(n, {_CATS_K})] AS real_vals
+  FROM grouped
+),
+normed AS (
+  SELECT user_id, n, n_real, lc_padded,
+         list_min(real_vals) AS vmin, list_max(real_vals) AS vmax,
+         list_transform(real_vals,
+            v -> CASE WHEN list_max(real_vals) > list_min(real_vals)
+                      THEN (v - list_min(real_vals))
+                           / (list_max(real_vals) - list_min(real_vals))
+                      ELSE 0.0 END) AS nrm
+  FROM padded
+),
+feats AS (
+  SELECT user_id, n, lc_padded, n_real,
+         list_sum(nrm) / CAST(n_real AS DOUBLE) AS f1,
+         CAST(n_real AS DOUBLE) / {float(_CATS_K)!r} AS f2,
+         nrm[1] AS f3,
+         nrm[n_real] AS f4
+  FROM normed
+),
+scored AS (
+  SELECT user_id, n, lc_padded, {_CATS_EXPS} FROM feats
+)
+SELECT user_id, n, lc_padded,
+       CASE WHEN n >= 2 THEN [{_CATS_PROBS}]
+            ELSE [0.0, 0.0, 0.0, 0.0, 0.0] END AS probs,
+       CASE WHEN n >= 2 THEN list_position(
+                [{_CATS_PROBS}],
+                list_max([{_CATS_PROBS}])) - 1
+            ELSE -1 END AS top_class
+FROM scored
+"""
+
+
+@query(oracle=ORACLE_CATS_BROAD_SCORES)
 def q_cats_broad_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CATS broad classification, Spark-first and UDF-free: the keras
     pad_sequences step (rubin/cats/processor.py:141-160) is
@@ -330,65 +404,6 @@ def q_cats_broad_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _cats_logit_sql(c: int) -> str:
-    terms = " + ".join(
-        f"f{k + 1} * ({_CATS_W[c][k]!r})" for k in range(4)
-    )
-    return f"exp(({_CATS_B[c]!r}) + {terms})"
-
-
-_CATS_EXPS = ", ".join(
-    f"{_cats_logit_sql(c)} AS e{c}" for c in range(_CATS_CLASSES)
-)
-_CATS_DENOM = " + ".join(f"e{c}" for c in range(_CATS_CLASSES))
-_CATS_PROBS = ", ".join(
-    f"round(e{c} / ({_CATS_DENOM}), 6)" for c in range(_CATS_CLASSES)
-)
-
-ORACLE_CATS_BROAD_SCORES = f"""
-WITH grouped AS (
-  SELECT user_id, list(value ORDER BY epoch_us(ts), value) AS vals,
-         count(*) AS n
-  FROM events GROUP BY user_id
-),
-padded AS (
-  SELECT user_id, n,
-         least(n, {_CATS_K}) AS n_real,
-         list_resize(vals[1:{_CATS_K}], {_CATS_K}, {_CATS_PAD!r}) AS lc_padded,
-         vals[1:least(n, {_CATS_K})] AS real_vals
-  FROM grouped
-),
-normed AS (
-  SELECT user_id, n, n_real, lc_padded,
-         list_min(real_vals) AS vmin, list_max(real_vals) AS vmax,
-         list_transform(real_vals,
-            v -> CASE WHEN list_max(real_vals) > list_min(real_vals)
-                      THEN (v - list_min(real_vals))
-                           / (list_max(real_vals) - list_min(real_vals))
-                      ELSE 0.0 END) AS nrm
-  FROM padded
-),
-feats AS (
-  SELECT user_id, n, lc_padded, n_real,
-         list_sum(nrm) / CAST(n_real AS DOUBLE) AS f1,
-         CAST(n_real AS DOUBLE) / {float(_CATS_K)!r} AS f2,
-         nrm[1] AS f3,
-         nrm[n_real] AS f4
-  FROM normed
-),
-scored AS (
-  SELECT user_id, n, lc_padded, {_CATS_EXPS} FROM feats
-)
-SELECT user_id, n, lc_padded,
-       CASE WHEN n >= 2 THEN [{_CATS_PROBS}]
-            ELSE [0.0, 0.0, 0.0, 0.0, 0.0] END AS probs,
-       CASE WHEN n >= 2 THEN list_position(
-                [{_CATS_PROBS}],
-                list_max([{_CATS_PROBS}])) - 1
-            ELSE -1 END AS top_class
-FROM scored
-"""
-
 # --------------------------------------------------------------------------
 # superluminous_sentinel: veto cascade with the −1 sentinel for rows that
 # are not eligible (not transient-like / too young / too few points),
@@ -398,6 +413,32 @@ FROM scored
 # --------------------------------------------------------------------------
 
 
+ORACLE_SUPERLUMINOUS = f"""
+WITH per_user AS (
+  SELECT user_id, count(*) AS n,
+         sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS n_err,
+         sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS n_buy,
+         avg(value) AS mean_value,
+         (max(epoch_us(ts)) - min(epoch_us(ts))) / 86400e6 AS age_days
+  FROM events GROUP BY user_id
+),
+feats AS (
+  SELECT user_id, n,
+         (n_err * 8 < n AND age_days >= 25.0 AND n >= 20) AS ok,
+         mean_value / 100.0 AS f1,
+         ln(1 + CAST(n AS DOUBLE)) AS f2,
+         CAST(n_buy AS DOUBLE) / CAST(n AS DOUBLE) AS f3,
+         age_days / 30.0 AS f4
+  FROM per_user
+)
+SELECT user_id, n,
+       CASE WHEN ok THEN round({mlp_score_sql(["f1", "f2", "f3", "f4"])}, 6)
+            ELSE -1.0 END AS proba
+FROM feats
+"""
+
+
+@query(oracle=ORACLE_SUPERLUMINOUS)
 def q_superluminous_sentinel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The sentinel-score module shape: every veto is a native aggregate
     condition (error-rate flag standing in for the transient_features
@@ -447,30 +488,6 @@ def q_superluminous_sentinel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_SUPERLUMINOUS = f"""
-WITH per_user AS (
-  SELECT user_id, count(*) AS n,
-         sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS n_err,
-         sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS n_buy,
-         avg(value) AS mean_value,
-         (max(epoch_us(ts)) - min(epoch_us(ts))) / 86400e6 AS age_days
-  FROM events GROUP BY user_id
-),
-feats AS (
-  SELECT user_id, n,
-         (n_err * 8 < n AND age_days >= 25.0 AND n >= 20) AS ok,
-         mean_value / 100.0 AS f1,
-         ln(1 + CAST(n AS DOUBLE)) AS f2,
-         CAST(n_buy AS DOUBLE) / CAST(n AS DOUBLE) AS f3,
-         age_days / 30.0 AS f4
-  FROM per_user
-)
-SELECT user_id, n,
-       CASE WHEN ok THEN round({mlp_score_sql(["f1", "f2", "f3", "f4"])}, 6)
-            ELSE -1.0 END AS proba
-FROM feats
-"""
-
 # --------------------------------------------------------------------------
 # alert_replay: the pure-Python Spark DataSource (batch row-group
 # partitions + stats pruning; streaming row-offset replay) — the
@@ -478,6 +495,15 @@ FROM feats
 # --------------------------------------------------------------------------
 
 
+ORACLE_REPLAY_SCAN = """
+SELECT event_type, count(*) AS n, round(sum(value), 2) AS sum_value,
+       min(event_id) AS min_event
+FROM events WHERE value > 100.0
+GROUP BY event_type
+"""
+
+
+@query(oracle=ORACLE_REPLAY_SCAN, bench=False, slow_oracle=True)
 def q_replay_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch read through the custom Python data source with a pushed
     predicate (pushFilters receives it; row groups are min/max-pruned and
@@ -508,14 +534,13 @@ def q_replay_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_REPLAY_SCAN = """
-SELECT event_type, count(*) AS n, round(sum(value), 2) AS sum_value,
-       min(event_id) AS min_event
-FROM events WHERE value > 100.0
-GROUP BY event_type
+ORACLE_STREAM_REPLAY_COUNTS = """
+SELECT event_type, count(*) AS n, round(sum(value), 2) AS sum_value
+FROM events GROUP BY event_type
 """
 
 
+@query(oracle=ORACLE_STREAM_REPLAY_COUNTS, bench=False)
 def q_stream_replay_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The replay source as a REAL streaming source: deterministic
     row-offset partitions, an aggregation over the replayed stream,
@@ -550,11 +575,6 @@ def q_stream_replay_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     return result
 
-
-ORACLE_STREAM_REPLAY_COUNTS = """
-SELECT event_type, count(*) AS n, round(sum(value), 2) AS sum_value
-FROM events GROUP BY event_type
-"""
 
 # Avro input containers are BUILD artifacts, not part of the measured
 # pipeline: encode once per process per path (the IVF-codebook memo
@@ -643,6 +663,14 @@ def _build_input_once(path: str, build) -> None:
     _AVRO_INPUT_BUILT.add(path)
 
 
+ORACLE_AVRO_SCAN = """
+SELECT lang, count(*) AS n_docs, sum(n_chars)::BIGINT AS total_chars,
+       min(doc_id) AS min_doc
+FROM documents GROUP BY lang
+"""
+
+
+@query(oracle=ORACLE_AVRO_SCAN)
 def q_avro_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The broker's actual wire format through the engine WITHOUT the
     spark-avro jar: the documents table is re-serialized as a deflate
@@ -699,13 +727,13 @@ def q_avro_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_AVRO_SCAN = """
-SELECT lang, count(*) AS n_docs, sum(n_chars)::BIGINT AS total_chars,
-       min(doc_id) AS min_doc
-FROM documents GROUP BY lang
+ORACLE_STREAM_AVRO_COUNTS = """
+SELECT source, count(*) AS n_docs, sum(n_chars)::BIGINT AS total_chars
+FROM documents GROUP BY source
 """
 
 
+@query(oracle=ORACLE_STREAM_AVRO_COUNTS, slow_oracle=True)
 def q_stream_avro_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The broker's streaming mode end-to-end without jars: an Avro
     container replayed as a REAL Structured Streaming source (block
@@ -764,12 +792,15 @@ def q_stream_avro_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return result
 
 
-ORACLE_STREAM_AVRO_COUNTS = """
-SELECT source, count(*) AS n_docs, sum(n_chars)::BIGINT AS total_chars
-FROM documents GROUP BY source
+ORACLE_FITS_CATALOG_JOIN = """
+SELECT n_name, count(*) AS n_customers,
+       round(sum(c_acctbal), 2) AS total_acctbal
+FROM customer JOIN nation ON c_nationkey = n_nationkey
+GROUP BY n_name
 """
 
 
+@query(oracle=ORACLE_FITS_CATALOG_JOIN)
 def q_fits_catalog_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native FITS catalog read without astropy: the nation dimension is
     serialized as a FITS BINTABLE (pure-Python writer standing in for an
@@ -812,14 +843,15 @@ def q_fits_catalog_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_FITS_CATALOG_JOIN = """
-SELECT n_name, count(*) AS n_customers,
-       round(sum(c_acctbal), 2) AS total_acctbal
-FROM customer JOIN nation ON c_nationkey = n_nationkey
-GROUP BY n_name
-"""
+def _oracle_stream_avro_alert_pipeline() -> str:
+    # the batch alert-enrichment oracle IS the streaming-Avro oracle:
+    # same logical result from the flat events table
+    from fink_science_spark.queries_ext2 import ORACLE_ALERT_ENRICHMENT
+
+    return ORACLE_ALERT_ENRICHMENT
 
 
+@query(oracle=_oracle_stream_avro_alert_pipeline, slow_oracle=True)
 def q_stream_avro_alert_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE reference production loop, end to end, jar-free: nested alert
     packets (candidate record + prv_candidates array of records — the
@@ -906,38 +938,3 @@ def q_stream_avro_alert_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-
-QUERIES_EXT8: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "period_scan": q_period_scan,
-    "kn_score": q_kn_score,
-    "cats_broad_scores": q_cats_broad_scores,
-    "superluminous_sentinel": q_superluminous_sentinel,
-    "replay_scan": q_replay_scan,
-    "stream_replay_counts": q_stream_replay_counts,
-    "avro_scan": q_avro_scan,
-    "stream_avro_counts": q_stream_avro_counts,
-    "fits_catalog_join": q_fits_catalog_join,
-    "stream_avro_alert_pipeline": q_stream_avro_alert_pipeline,
-}
-
-
-def _oracle_stream_avro_alert_pipeline() -> str:
-    # the batch alert-enrichment oracle IS the streaming-Avro oracle:
-    # same logical result from the flat events table
-    from fink_science_spark.queries_ext2 import ORACLE_ALERT_ENRICHMENT
-
-    return ORACLE_ALERT_ENRICHMENT
-
-
-ORACLES_EXT8: dict[str, str] = {
-    "period_scan": ORACLE_PERIOD_SCAN,
-    "kn_score": ORACLE_KN_SCORE,
-    "cats_broad_scores": ORACLE_CATS_BROAD_SCORES,
-    "superluminous_sentinel": ORACLE_SUPERLUMINOUS,
-    "replay_scan": ORACLE_REPLAY_SCAN,
-    "stream_replay_counts": ORACLE_STREAM_REPLAY_COUNTS,
-    "avro_scan": ORACLE_AVRO_SCAN,
-    "stream_avro_counts": ORACLE_STREAM_AVRO_COUNTS,
-    "fits_catalog_join": ORACLE_FITS_CATALOG_JOIN,
-    "stream_avro_alert_pipeline": _oracle_stream_avro_alert_pipeline(),
-}

@@ -1,4 +1,4 @@
-"""Query registry, wave 10.
+"""Queries, wave 10.
 
 The last §2.8 classifier-module shapes: microlensing (per-band DC-mag →
 per-band forest → both-bands-must-agree mean, ztf/microlensing/
@@ -18,8 +18,6 @@ pandas UDF, partition-aware UDTF).
 """
 
 from __future__ import annotations
-
-from typing import Callable
 
 import pandas as pd
 
@@ -46,6 +44,7 @@ from fink_science_spark.operators.spatial import (
     parent_pixel_sql,
 )
 from fink_science_spark.queries import _events_us, _fan_out, _t
+from fink_science_spark.registry import query
 
 # --------------------------------------------------------------------------
 # mulens_score: microlensing-module lifecycle.
@@ -111,6 +110,54 @@ def _mu_band_feats_sql(prefix: str) -> list[str]:
     ]
 
 
+def _oracle_mulens() -> str:
+    dc_flux, dc_sigflux = apparent_flux_sql(
+        _MU_MAGPSF, _MU_SIGMAPSF, _MU_MAGNR, _MU_SIGMAGNR, _MU_ISPOS
+    )
+    dcmag, _ = dc_mag_sql(dc_flux, dc_sigflux)
+    prob_g = forest_score_sql(_mu_band_feats_sql("g"))
+    prob_r = forest_score_sql(_mu_band_feats_sql("r"))
+
+    def band_aggs(band: str, prefix: str) -> str:
+        c = f"event_type = '{band}'"
+        return (
+            f"count(*) FILTER (WHERE {c}) AS n_{prefix}, "
+            f"sum(qv) FILTER (WHERE {c}) AS sum_{prefix}, "
+            f"sum(qv * qv) FILTER (WHERE {c}) AS sum2_{prefix}, "
+            f"min(qv) FILTER (WHERE {c}) AS min_{prefix}, "
+            f"max(qv) FILTER (WHERE {c}) AS max_{prefix}, "
+            f"avg(dcmag) FILTER (WHERE {c}) AS dcmag_{prefix}"
+        )
+
+    return f"""
+WITH phot AS (
+  SELECT user_id, event_type,
+         CAST(round(value * 100) AS BIGINT) AS qv,
+         {dcmag} AS dcmag
+  FROM events
+),
+g AS (
+  SELECT user_id, count(*) AS ndet,
+         {band_aggs(_MU_BANDS[0], "g")},
+         {band_aggs(_MU_BANDS[1], "r")}
+  FROM phot GROUP BY user_id
+)
+SELECT user_id, ndet, n_g, n_r,
+       round(dcmag_g, 6) AS dcmag_g, round(dcmag_r, 6) AS dcmag_r,
+       CASE WHEN ndet < {_MU_NDET_CAP}
+                 AND n_g + n_r >= {_MU_MIN_TOTAL}
+                 AND n_g >= {_MU_MIN_BAND} AND n_r >= {_MU_MIN_BAND}
+                 AND ({prob_g}) >= 0.5 AND ({prob_r}) >= 0.5
+            THEN round((({prob_g}) + ({prob_r})) / 2, 6)
+            ELSE 0.0 END AS mulens_score
+FROM g
+"""
+
+
+ORACLE_MULENS_SCORE = _oracle_mulens()
+
+
+@query(oracle=ORACLE_MULENS_SCORE)
 def q_mulens_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _events_us(spark, sf_dir)
     qv = F.round(F.col("value") * 100).cast("long")
@@ -167,52 +214,6 @@ def q_mulens_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_mulens() -> str:
-    dc_flux, dc_sigflux = apparent_flux_sql(
-        _MU_MAGPSF, _MU_SIGMAPSF, _MU_MAGNR, _MU_SIGMAGNR, _MU_ISPOS
-    )
-    dcmag, _ = dc_mag_sql(dc_flux, dc_sigflux)
-    prob_g = forest_score_sql(_mu_band_feats_sql("g"))
-    prob_r = forest_score_sql(_mu_band_feats_sql("r"))
-
-    def band_aggs(band: str, prefix: str) -> str:
-        c = f"event_type = '{band}'"
-        return (
-            f"count(*) FILTER (WHERE {c}) AS n_{prefix}, "
-            f"sum(qv) FILTER (WHERE {c}) AS sum_{prefix}, "
-            f"sum(qv * qv) FILTER (WHERE {c}) AS sum2_{prefix}, "
-            f"min(qv) FILTER (WHERE {c}) AS min_{prefix}, "
-            f"max(qv) FILTER (WHERE {c}) AS max_{prefix}, "
-            f"avg(dcmag) FILTER (WHERE {c}) AS dcmag_{prefix}"
-        )
-
-    return f"""
-WITH phot AS (
-  SELECT user_id, event_type,
-         CAST(round(value * 100) AS BIGINT) AS qv,
-         {dcmag} AS dcmag
-  FROM events
-),
-g AS (
-  SELECT user_id, count(*) AS ndet,
-         {band_aggs(_MU_BANDS[0], "g")},
-         {band_aggs(_MU_BANDS[1], "r")}
-  FROM phot GROUP BY user_id
-)
-SELECT user_id, ndet, n_g, n_r,
-       round(dcmag_g, 6) AS dcmag_g, round(dcmag_r, 6) AS dcmag_r,
-       CASE WHEN ndet < {_MU_NDET_CAP}
-                 AND n_g + n_r >= {_MU_MIN_TOTAL}
-                 AND n_g >= {_MU_MIN_BAND} AND n_r >= {_MU_MIN_BAND}
-                 AND ({prob_g}) >= 0.5 AND ({prob_r}) >= 0.5
-            THEN round((({prob_g}) + ({prob_r})) / 2, 6)
-            ELSE 0.0 END AS mulens_score
-FROM g
-"""
-
-
-ORACLE_MULENS_SCORE = _oracle_mulens()
-
 # --------------------------------------------------------------------------
 # orphan_score: orphan-GRB morphology classifier.
 #
@@ -247,6 +248,71 @@ _OR_Q = 4096.0
 _OR_COLOR_BANDS = ("click", "purchase")
 
 
+_OR_PROB_SQL = mlp_score_sql(
+    ["(incr * 2)", "(d33 * 2)", "(dt_peak / 4)", "(color * 4)"]
+)
+
+
+ORACLE_ORPHAN_SCORE = f"""
+WITH ev AS (
+  SELECT user_id, event_type, event_id, epoch_us(ts) AS ts_us,
+         CAST(round(({_OR_ZP!r} - 2.5 * log10(value)) * {_OR_Q!r}) AS BIGINT)
+           / {_OR_Q!r} AS mag
+  FROM events WHERE value > 0
+),
+rated AS (
+  SELECT user_id, event_type, event_id, ts_us, mag,
+         (ts_us - lag(ts_us) OVER w) / 86400e6 AS dt_days,
+         mag - lag(mag) OVER w AS dmag
+  FROM ev
+  WINDOW w AS (PARTITION BY user_id, event_type ORDER BY ts_us, event_id)
+),
+with_rate AS (
+  SELECT *, CASE WHEN dt_days > {_OR_DT_MIN!r} THEN dmag / dt_days END AS rate
+  FROM rated
+),
+aug AS (
+  SELECT *,
+         sum(CASE WHEN rate > 0 THEN 1 END)
+           OVER (PARTITION BY user_id, event_type ORDER BY ts_us, event_id
+                 ROWS UNBOUNDED PRECEDING) AS rn_pos,
+         sum(CASE WHEN rate > 0 THEN 1 END)
+           OVER (PARTITION BY user_id, event_type) AS cnt_pos
+  FROM with_rate
+),
+per_user AS (
+  SELECT user_id, count(*) AS n_valid,
+         coalesce(avg(CASE WHEN rate < 0 THEN rate END), 0.0) AS incr,
+         coalesce(avg(CASE WHEN rate > 0 AND cnt_pos >= 3
+                            AND rn_pos <= floor(cnt_pos / 3)
+                       THEN rate END), 0.0) AS d13,
+         coalesce(avg(CASE WHEN rate > 0 AND cnt_pos >= 3
+                            AND rn_pos > cnt_pos - floor(cnt_pos / 3)
+                       THEN rate END), 0.0) AS d33,
+         min(ts_us) AS t_first,
+         min(struct_pack(m := mag, t := ts_us)).t AS t_peak,
+         avg(CASE WHEN event_type = '{_OR_COLOR_BANDS[0]}' THEN mag END)
+           AS mag_a,
+         avg(CASE WHEN event_type = '{_OR_COLOR_BANDS[1]}' THEN mag END)
+           AS mag_b
+  FROM aug GROUP BY user_id
+),
+feats AS (
+  SELECT user_id, n_valid, incr, d13, d33,
+         (t_peak - t_first) / 86400e6 AS dt_peak,
+         coalesce(mag_a - mag_b, 0.0) AS color
+  FROM per_user
+)
+SELECT user_id, n_valid,
+       round(incr, 6) AS incr, round(d13, 6) AS d13, round(d33, 6) AS d33,
+       round(dt_peak, 6) AS dt_peak, round(color, 6) AS color,
+       CASE WHEN n_valid >= {_OR_MIN_PTS}
+            THEN round({_OR_PROB_SQL}, 6) ELSE 0.0 END AS orphan_prob
+FROM feats
+"""
+
+
+@query(oracle=ORACLE_ORPHAN_SCORE)
 def q_orphan_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _events_us(spark, sf_dir).filter(F.col("value") > 0)
     qmag = (
@@ -355,68 +421,6 @@ def q_orphan_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_OR_PROB_SQL = mlp_score_sql(
-    ["(incr * 2)", "(d33 * 2)", "(dt_peak / 4)", "(color * 4)"]
-)
-
-ORACLE_ORPHAN_SCORE = f"""
-WITH ev AS (
-  SELECT user_id, event_type, event_id, epoch_us(ts) AS ts_us,
-         CAST(round(({_OR_ZP!r} - 2.5 * log10(value)) * {_OR_Q!r}) AS BIGINT)
-           / {_OR_Q!r} AS mag
-  FROM events WHERE value > 0
-),
-rated AS (
-  SELECT user_id, event_type, event_id, ts_us, mag,
-         (ts_us - lag(ts_us) OVER w) / 86400e6 AS dt_days,
-         mag - lag(mag) OVER w AS dmag
-  FROM ev
-  WINDOW w AS (PARTITION BY user_id, event_type ORDER BY ts_us, event_id)
-),
-with_rate AS (
-  SELECT *, CASE WHEN dt_days > {_OR_DT_MIN!r} THEN dmag / dt_days END AS rate
-  FROM rated
-),
-aug AS (
-  SELECT *,
-         sum(CASE WHEN rate > 0 THEN 1 END)
-           OVER (PARTITION BY user_id, event_type ORDER BY ts_us, event_id
-                 ROWS UNBOUNDED PRECEDING) AS rn_pos,
-         sum(CASE WHEN rate > 0 THEN 1 END)
-           OVER (PARTITION BY user_id, event_type) AS cnt_pos
-  FROM with_rate
-),
-per_user AS (
-  SELECT user_id, count(*) AS n_valid,
-         coalesce(avg(CASE WHEN rate < 0 THEN rate END), 0.0) AS incr,
-         coalesce(avg(CASE WHEN rate > 0 AND cnt_pos >= 3
-                            AND rn_pos <= floor(cnt_pos / 3)
-                       THEN rate END), 0.0) AS d13,
-         coalesce(avg(CASE WHEN rate > 0 AND cnt_pos >= 3
-                            AND rn_pos > cnt_pos - floor(cnt_pos / 3)
-                       THEN rate END), 0.0) AS d33,
-         min(ts_us) AS t_first,
-         min(struct_pack(m := mag, t := ts_us)).t AS t_peak,
-         avg(CASE WHEN event_type = '{_OR_COLOR_BANDS[0]}' THEN mag END)
-           AS mag_a,
-         avg(CASE WHEN event_type = '{_OR_COLOR_BANDS[1]}' THEN mag END)
-           AS mag_b
-  FROM aug GROUP BY user_id
-),
-feats AS (
-  SELECT user_id, n_valid, incr, d13, d33,
-         (t_peak - t_first) / 86400e6 AS dt_peak,
-         coalesce(mag_a - mag_b, 0.0) AS color
-  FROM per_user
-)
-SELECT user_id, n_valid,
-       round(incr, 6) AS incr, round(d13, 6) AS d13, round(d33, 6) AS d33,
-       round(dt_peak, 6) AS dt_peak, round(color, 6) AS color,
-       CASE WHEN n_valid >= {_OR_MIN_PTS}
-            THEN round({_OR_PROB_SQL}, 6) ELSE 0.0 END AS orphan_prob
-FROM feats
-"""
-
 # --------------------------------------------------------------------------
 # sky_pixel_rollup: equal-area hierarchical pixel aggregation.
 #
@@ -438,6 +442,38 @@ _PIX_RA = (9301, 49297)
 _PIX_DEC = (7919, 104729)
 
 
+def _oracle_pixel() -> str:
+    ra = f"((o_orderkey * {_PIX_RA[0]} + {_PIX_RA[1]}) % {_PIX_M}) * (360.0 / {_PIX_M})"
+    dec = (
+        f"((o_orderkey * {_PIX_DEC[0]} + {_PIX_DEC[1]}) % {_PIX_M})"
+        f" * (180.0 / {_PIX_M}) - 90.0"
+    )
+    ix, iy, pix = equal_area_pixel_sql("ra", "dec", _PIX_NSIDE)
+    parent = parent_pixel_sql("ix", "iy", _PIX_NSIDE)
+    return f"""
+WITH sky AS (
+  SELECT o_totalprice, {ra} AS ra, {dec} AS dec FROM orders
+),
+pixed AS (
+  SELECT o_totalprice, CAST({ix} AS BIGINT) AS ix, CAST({iy} AS BIGINT) AS iy
+  FROM sky
+),
+fine AS (
+  SELECT ix, iy, iy * {2 * _PIX_NSIDE} + ix AS pix,
+         count(*) AS n, round(avg(o_totalprice), 2) AS avg_price
+  FROM pixed GROUP BY ix, iy
+)
+SELECT pix, CAST({parent} AS BIGINT) AS parent_pix, n, avg_price,
+       CAST(sum(n) OVER (PARTITION BY CAST({parent} AS BIGINT)) AS BIGINT)
+         AS parent_n
+FROM fine ORDER BY pix
+"""
+
+
+ORACLE_SKY_PIXEL_ROLLUP = _oracle_pixel()
+
+
+@query(oracle=ORACLE_SKY_PIXEL_ROLLUP)
 def q_sky_pixel_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -475,37 +511,6 @@ def q_sky_pixel_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "avg_price",
         F.sum("n").over(wp).alias("parent_n"),
     ).orderBy("pix")
-
-
-def _oracle_pixel() -> str:
-    ra = f"((o_orderkey * {_PIX_RA[0]} + {_PIX_RA[1]}) % {_PIX_M}) * (360.0 / {_PIX_M})"
-    dec = (
-        f"((o_orderkey * {_PIX_DEC[0]} + {_PIX_DEC[1]}) % {_PIX_M})"
-        f" * (180.0 / {_PIX_M}) - 90.0"
-    )
-    ix, iy, pix = equal_area_pixel_sql("ra", "dec", _PIX_NSIDE)
-    parent = parent_pixel_sql("ix", "iy", _PIX_NSIDE)
-    return f"""
-WITH sky AS (
-  SELECT o_totalprice, {ra} AS ra, {dec} AS dec FROM orders
-),
-pixed AS (
-  SELECT o_totalprice, CAST({ix} AS BIGINT) AS ix, CAST({iy} AS BIGINT) AS iy
-  FROM sky
-),
-fine AS (
-  SELECT ix, iy, iy * {2 * _PIX_NSIDE} + ix AS pix,
-         count(*) AS n, round(avg(o_totalprice), 2) AS avg_price
-  FROM pixed GROUP BY ix, iy
-)
-SELECT pix, CAST({parent} AS BIGINT) AS parent_pix, n, avg_price,
-       CAST(sum(n) OVER (PARTITION BY CAST({parent} AS BIGINT)) AS BIGINT)
-         AS parent_n
-FROM fine ORDER BY pix
-"""
-
-
-ORACLE_SKY_PIXEL_ROLLUP = _oracle_pixel()
 
 
 # --------------------------------------------------------------------------
@@ -550,6 +555,56 @@ _SNN_FLUX_GAIN = 1.0 / 256.0
 _SNN_DT_GAIN = 1.0 / 4.0
 
 
+def _oracle_snn() -> str:
+    from fink_science_spark.functions.photometry import mag2fluxcal_snana_sql
+    from fink_science_spark.operators.models import rnn_sql_ctes
+
+    steps = []
+    for t in range(1, _SNN_K + 1):
+        mag = f"(10.0 + coalesce(val_arr[{t}], 0.0) / 32.0)"
+        flux, _err = mag2fluxcal_snana_sql(mag, "0.0")
+        x = (
+            f"({_snn_norm_sql(flux, _SNN_NORM['FLUXCAL_g'])}"
+            f" * {_SNN_FLUX_GAIN!r})"
+        )
+        if t == 1:
+            dt_days = "0.0"
+        else:
+            prev = f"coalesce(ts_arr[{t - 1}], ts_arr[1])"
+            dt_days = (
+                f"((coalesce(ts_arr[{t}], {prev}) - {prev}) / 86400e6)"
+            )
+        d = (
+            f"({_snn_norm_sql(dt_days, _SNN_NORM['delta_time'])}"
+            f" * {_SNN_DT_GAIN!r})"
+        )
+        is_pad = f"{t} > n"
+        steps.append((x, d, is_pad))
+    ctes, last, prob = rnn_sql_ctes(steps, "aged")
+    return f"""
+WITH grouped AS (
+  SELECT user_id,
+         list(epoch_us(ts) ORDER BY epoch_us(ts), value) AS ts_arr,
+         list(value ORDER BY epoch_us(ts), value) AS val_arr,
+         count(*) AS n
+  FROM events GROUP BY user_id
+),
+aged AS (
+  SELECT *, (ts_arr[CAST(n AS INTEGER)] - ts_arr[1]) / 86400e6 AS age_days
+  FROM grouped
+),
+{ctes}
+SELECT user_id, n, round(age_days, 6) AS age_days,
+       CASE WHEN n >= {_SNN_MIN_PTS} AND age_days >= {_SNN_MIN_AGE_DAYS!r}
+            THEN round({prob}, 6) ELSE 0.0 END AS snn_ia
+FROM {last}
+"""
+
+
+ORACLE_SNN_IA_SCORE = _oracle_snn()
+
+
+@query(oracle=ORACLE_SNN_IA_SCORE)
 def q_snn_ia_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fink_science_spark.functions.photometry import mag2fluxcal_snana
     from fink_science_spark.operators.models import rnn_apply
@@ -603,54 +658,6 @@ def q_snn_ia_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_snn() -> str:
-    from fink_science_spark.functions.photometry import mag2fluxcal_snana_sql
-    from fink_science_spark.operators.models import rnn_sql_ctes
-
-    steps = []
-    for t in range(1, _SNN_K + 1):
-        mag = f"(10.0 + coalesce(val_arr[{t}], 0.0) / 32.0)"
-        flux, _err = mag2fluxcal_snana_sql(mag, "0.0")
-        x = (
-            f"({_snn_norm_sql(flux, _SNN_NORM['FLUXCAL_g'])}"
-            f" * {_SNN_FLUX_GAIN!r})"
-        )
-        if t == 1:
-            dt_days = "0.0"
-        else:
-            prev = f"coalesce(ts_arr[{t - 1}], ts_arr[1])"
-            dt_days = (
-                f"((coalesce(ts_arr[{t}], {prev}) - {prev}) / 86400e6)"
-            )
-        d = (
-            f"({_snn_norm_sql(dt_days, _SNN_NORM['delta_time'])}"
-            f" * {_SNN_DT_GAIN!r})"
-        )
-        is_pad = f"{t} > n"
-        steps.append((x, d, is_pad))
-    ctes, last, prob = rnn_sql_ctes(steps, "aged")
-    return f"""
-WITH grouped AS (
-  SELECT user_id,
-         list(epoch_us(ts) ORDER BY epoch_us(ts), value) AS ts_arr,
-         list(value ORDER BY epoch_us(ts), value) AS val_arr,
-         count(*) AS n
-  FROM events GROUP BY user_id
-),
-aged AS (
-  SELECT *, (ts_arr[CAST(n AS INTEGER)] - ts_arr[1]) / 86400e6 AS age_days
-  FROM grouped
-),
-{ctes}
-SELECT user_id, n, round(age_days, 6) AS age_days,
-       CASE WHEN n >= {_SNN_MIN_PTS} AND age_days >= {_SNN_MIN_AGE_DAYS!r}
-            THEN round({prob}, 6) ELSE 0.0 END AS snn_ia
-FROM {last}
-"""
-
-
-ORACLE_SNN_IA_SCORE = _oracle_snn()
-
 # --------------------------------------------------------------------------
 # ann_rerank: two-stage retrieval (retrieve -> rerank) — the standard
 # similarity-search shape a curation pipeline runs at scale: a cheap
@@ -684,6 +691,58 @@ def _rr_feats() -> list[str]:
     ]
 
 
+def _oracle_ann_rerank() -> str:
+    from fink_science_spark.operators.models import mlp_score_sql
+
+    return f"""
+WITH e AS (SELECT vec_id, embedding::DOUBLE[] v, label FROM embeddings),
+meta AS (
+  SELECT vec_id, label,
+         round(sqrt(list_inner_product(v, v)), 6) AS norm
+  FROM e
+),
+q AS (SELECT vec_id qid, v qv FROM e WHERE vec_id % 20 = 0),
+scored AS (
+  SELECT q.qid, c.vec_id cid,
+         round(list_inner_product(q.qv, c.v) /
+               sqrt(list_inner_product(q.qv, q.qv) *
+                    list_inner_product(c.v, c.v)), 9)
+             AS cosr
+  FROM q JOIN e c ON c.vec_id != q.qid
+),
+cand AS (
+  SELECT qid, cid, rank, round(cosr, 6) AS cos FROM (
+    SELECT qid, cid, cosr,
+           row_number() OVER (PARTITION BY qid
+                              ORDER BY cosr DESC, cid ASC) AS rank
+    FROM scored
+  ) r WHERE rank <= {_RR_K1}
+),
+joined AS (
+  SELECT cand.qid, cand.cid, cand.rank, cand.cos,
+         mq.label AS q_label, mq.norm AS q_norm,
+         mc.label AS c_label, mc.norm AS c_norm
+  FROM cand
+  JOIN meta mq ON cand.qid = mq.vec_id
+  JOIN meta mc ON cand.cid = mc.vec_id
+),
+rr AS (
+  SELECT *, {mlp_score_sql(_rr_feats())} AS rr_score FROM joined
+)
+SELECT qid, cid, rr_rank, cos, round(rr_score, 6) AS rerank_score
+FROM (
+  SELECT qid, cid, cos, rr_score,
+         row_number() OVER (PARTITION BY qid
+                            ORDER BY rr_score DESC, cid ASC) AS rr_rank
+  FROM rr
+) z WHERE rr_rank <= {_RR_K2}
+"""
+
+
+ORACLE_ANN_RERANK = _oracle_ann_rerank()
+
+
+@query(oracle=ORACLE_ANN_RERANK)
 def q_ann_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fink_science_spark.operators.models import mlp_score_sql
     from fink_science_spark.operators.similarity import cosine_topk_blocked
@@ -738,56 +797,6 @@ def q_ann_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_ann_rerank() -> str:
-    from fink_science_spark.operators.models import mlp_score_sql
-
-    return f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] v, label FROM embeddings),
-meta AS (
-  SELECT vec_id, label,
-         round(sqrt(list_inner_product(v, v)), 6) AS norm
-  FROM e
-),
-q AS (SELECT vec_id qid, v qv FROM e WHERE vec_id % 20 = 0),
-scored AS (
-  SELECT q.qid, c.vec_id cid,
-         round(list_inner_product(q.qv, c.v) /
-               sqrt(list_inner_product(q.qv, q.qv) *
-                    list_inner_product(c.v, c.v)), 9)
-             AS cosr
-  FROM q JOIN e c ON c.vec_id != q.qid
-),
-cand AS (
-  SELECT qid, cid, rank, round(cosr, 6) AS cos FROM (
-    SELECT qid, cid, cosr,
-           row_number() OVER (PARTITION BY qid
-                              ORDER BY cosr DESC, cid ASC) AS rank
-    FROM scored
-  ) r WHERE rank <= {_RR_K1}
-),
-joined AS (
-  SELECT cand.qid, cand.cid, cand.rank, cand.cos,
-         mq.label AS q_label, mq.norm AS q_norm,
-         mc.label AS c_label, mc.norm AS c_norm
-  FROM cand
-  JOIN meta mq ON cand.qid = mq.vec_id
-  JOIN meta mc ON cand.cid = mc.vec_id
-),
-rr AS (
-  SELECT *, {mlp_score_sql(_rr_feats())} AS rr_score FROM joined
-)
-SELECT qid, cid, rr_rank, cos, round(rr_score, 6) AS rerank_score
-FROM (
-  SELECT qid, cid, cos, rr_score,
-         row_number() OVER (PARTITION BY qid
-                            ORDER BY rr_score DESC, cid ASC) AS rr_rank
-  FROM rr
-) z WHERE rr_rank <= {_RR_K2}
-"""
-
-
-ORACLE_ANN_RERANK = _oracle_ann_rerank()
-
 # --------------------------------------------------------------------------
 # host_pagerank: host-authority ranking for corpus curation — the
 # CommonCrawl-style centrality signal (harmonic/PageRank over the host
@@ -829,6 +838,52 @@ def _pr_quant_sql(expr: str) -> str:
     return f"floor(({expr}) * {_PR_Q!r} + 0.5) / {_PR_Q!r}"
 
 
+def _oracle_pagerank() -> str:
+    base = (1.0 - _PR_DAMP) / _PR_N
+    rounds = []
+    prev = "r0"
+    for k in range(1, _PR_ROUNDS + 1):
+        rounds.append(f"""
+r{k} AS (
+  SELECT n.node,
+         {_pr_quant_sql(f"{base!r} + {_PR_DAMP!r} * coalesce(c.inflow, 0.0)")} AS r
+  FROM nodes n LEFT JOIN (
+    SELECT e.dst, sum(rk.r * e.p) AS inflow
+    FROM {prev} rk JOIN e ON rk.node = e.src
+    GROUP BY e.dst
+  ) c ON n.node = c.dst
+)""")
+        prev = f"r{k}"
+    return f"""
+WITH raw AS (
+  SELECT doc_id % {_PR_N} AS src,
+         (doc_id * {_PR_EDGE_A} + {_PR_EDGE_B}) % {_PR_N} AS dst
+  FROM documents
+),
+edges AS (
+  SELECT src, dst, count(*) AS w FROM raw WHERE src != dst GROUP BY src, dst
+),
+outdeg AS (SELECT src, sum(w) AS deg FROM edges GROUP BY src),
+e AS (
+  SELECT edges.src, dst,
+         {_pr_quant_sql(f"w / CAST(deg AS DOUBLE)")} AS p
+  FROM edges JOIN outdeg ON edges.src = outdeg.src
+),
+nodes AS (SELECT unnest(generate_series(0, {_PR_N - 1})) AS node),
+r0 AS (SELECT node, {_pr_quant_sql(f"1.0 / {_PR_N}")} AS r
+       FROM nodes),{",".join(rounds)}
+SELECT n.node, CAST(coalesce(d.deg, 0) AS BIGINT) AS out_weight,
+       round(rk.r, 6) AS rank
+FROM nodes n
+LEFT JOIN outdeg d ON n.node = d.src
+JOIN {prev} rk ON n.node = rk.node
+"""
+
+
+ORACLE_HOST_PAGERANK = _oracle_pagerank()
+
+
+@query(oracle=ORACLE_HOST_PAGERANK)
 def q_host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").select(
         (F.col("doc_id") % _PR_N).alias("src"),
@@ -878,50 +933,6 @@ def q_host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_pagerank() -> str:
-    base = (1.0 - _PR_DAMP) / _PR_N
-    rounds = []
-    prev = "r0"
-    for k in range(1, _PR_ROUNDS + 1):
-        rounds.append(f"""
-r{k} AS (
-  SELECT n.node,
-         {_pr_quant_sql(f"{base!r} + {_PR_DAMP!r} * coalesce(c.inflow, 0.0)")} AS r
-  FROM nodes n LEFT JOIN (
-    SELECT e.dst, sum(rk.r * e.p) AS inflow
-    FROM {prev} rk JOIN e ON rk.node = e.src
-    GROUP BY e.dst
-  ) c ON n.node = c.dst
-)""")
-        prev = f"r{k}"
-    return f"""
-WITH raw AS (
-  SELECT doc_id % {_PR_N} AS src,
-         (doc_id * {_PR_EDGE_A} + {_PR_EDGE_B}) % {_PR_N} AS dst
-  FROM documents
-),
-edges AS (
-  SELECT src, dst, count(*) AS w FROM raw WHERE src != dst GROUP BY src, dst
-),
-outdeg AS (SELECT src, sum(w) AS deg FROM edges GROUP BY src),
-e AS (
-  SELECT edges.src, dst,
-         {_pr_quant_sql(f"w / CAST(deg AS DOUBLE)")} AS p
-  FROM edges JOIN outdeg ON edges.src = outdeg.src
-),
-nodes AS (SELECT unnest(generate_series(0, {_PR_N - 1})) AS node),
-r0 AS (SELECT node, {_pr_quant_sql(f"1.0 / {_PR_N}")} AS r
-       FROM nodes),{",".join(rounds)}
-SELECT n.node, CAST(coalesce(d.deg, 0) AS BIGINT) AS out_weight,
-       round(rk.r, 6) AS rank
-FROM nodes n
-LEFT JOIN outdeg d ON n.node = d.src
-JOIN {prev} rk ON n.node = rk.node
-"""
-
-
-ORACLE_HOST_PAGERANK = _oracle_pagerank()
-
 # --------------------------------------------------------------------------
 # sky_pixel_multires: multi-resolution rollup in ONE pass — GROUPING SETS
 # over three pixel depths (nside 8/4/2) derived arithmetically from the
@@ -934,6 +945,32 @@ ORACLE_HOST_PAGERANK = _oracle_pagerank()
 _MR_NSIDES = (8, 4, 2)
 
 
+def _oracle_multires() -> str:
+    ra = f"((o_orderkey * {_PIX_RA[0]} + {_PIX_RA[1]}) % {_PIX_M}) * (360.0 / {_PIX_M})"
+    dec = (
+        f"((o_orderkey * {_PIX_DEC[0]} + {_PIX_DEC[1]}) % {_PIX_M})"
+        f" * (180.0 / {_PIX_M}) - 90.0"
+    )
+    cols = []
+    for ns in _MR_NSIDES:
+        _ix, _iy, pix = equal_area_pixel_sql("ra", "dec", ns)
+        cols.append(f"CAST({pix} AS BIGINT) AS pix{ns}")
+    sets = ", ".join(f"(pix{ns})" for ns in _MR_NSIDES)
+    names = ", ".join(f"pix{ns}" for ns in _MR_NSIDES)
+    return f"""
+WITH sky AS (
+  SELECT o_totalprice, {ra} AS ra, {dec} AS dec FROM orders
+),
+pts AS (SELECT o_totalprice, {", ".join(cols)} FROM sky)
+SELECT {names}, count(*) AS n, round(avg(o_totalprice), 2) AS avg_price
+FROM pts GROUP BY GROUPING SETS ({sets})
+"""
+
+
+ORACLE_SKY_PIXEL_MULTIRES = _oracle_multires()
+
+
+@query(oracle=ORACLE_SKY_PIXEL_MULTIRES)
 def q_sky_pixel_multires(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders").select(
         "o_totalprice",
@@ -961,30 +998,6 @@ def q_sky_pixel_multires(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_multires() -> str:
-    ra = f"((o_orderkey * {_PIX_RA[0]} + {_PIX_RA[1]}) % {_PIX_M}) * (360.0 / {_PIX_M})"
-    dec = (
-        f"((o_orderkey * {_PIX_DEC[0]} + {_PIX_DEC[1]}) % {_PIX_M})"
-        f" * (180.0 / {_PIX_M}) - 90.0"
-    )
-    cols = []
-    for ns in _MR_NSIDES:
-        _ix, _iy, pix = equal_area_pixel_sql("ra", "dec", ns)
-        cols.append(f"CAST({pix} AS BIGINT) AS pix{ns}")
-    sets = ", ".join(f"(pix{ns})" for ns in _MR_NSIDES)
-    names = ", ".join(f"pix{ns}" for ns in _MR_NSIDES)
-    return f"""
-WITH sky AS (
-  SELECT o_totalprice, {ra} AS ra, {dec} AS dec FROM orders
-),
-pts AS (SELECT o_totalprice, {", ".join(cols)} FROM sky)
-SELECT {names}, count(*) AS n, round(avg(o_totalprice), 2) AS avg_price
-FROM pts GROUP BY GROUPING SETS ({sets})
-"""
-
-
-ORACLE_SKY_PIXEL_MULTIRES = _oracle_multires()
-
 # --------------------------------------------------------------------------
 # zorder_cells: Morton-key computation for multi-column data layout —
 # the write-side lever that makes BOTH of two filter columns prunable at
@@ -999,6 +1012,22 @@ _Z_BITS = 8
 _Z_CELL = 4096  # 2^12 keys per coarse cell -> 64x64-key boxes
 
 
+def _oracle_zorder() -> str:
+    from fink_science_spark.functions.zorder import morton_key_sql
+
+    key = morton_key_sql("doc_id % 256", "n_chars % 256", _Z_BITS)
+    return f"""
+WITH keyed AS (SELECT {key} AS zkey FROM documents)
+SELECT CAST(floor(zkey / {_Z_CELL}) AS BIGINT) AS cell,
+       count(*) AS n, min(zkey) AS min_key, max(zkey) AS max_key
+FROM keyed GROUP BY cell
+"""
+
+
+ORACLE_ZORDER_CELLS = _oracle_zorder()
+
+
+@query(oracle=ORACLE_ZORDER_CELLS)
 def q_zorder_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fink_science_spark.functions.zorder import morton_key
 
@@ -1018,20 +1047,6 @@ def q_zorder_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_zorder() -> str:
-    from fink_science_spark.functions.zorder import morton_key_sql
-
-    key = morton_key_sql("doc_id % 256", "n_chars % 256", _Z_BITS)
-    return f"""
-WITH keyed AS (SELECT {key} AS zkey FROM documents)
-SELECT CAST(floor(zkey / {_Z_CELL}) AS BIGINT) AS cell,
-       count(*) AS n, min(zkey) AS min_key, max(zkey) AS max_key
-FROM keyed GROUP BY cell
-"""
-
-
-ORACLE_ZORDER_CELLS = _oracle_zorder()
-
 # --------------------------------------------------------------------------
 # incremental_agg: incremental aggregate maintenance via mergeable
 # partial states — the 100 TB refresh pattern: a stored rollup is never
@@ -1049,6 +1064,27 @@ ORACLE_ZORDER_CELLS = _oracle_zorder()
 _INC_SPLIT_MOD = 10  # event_id % 10 == 9 -> the "new batch" (~10%)
 
 
+ORACLE_INCREMENTAL_AGG = """
+WITH q AS (
+  SELECT user_id, event_type, CAST(round(value * 100) AS BIGINT) AS qv
+  FROM events
+),
+full_agg AS (
+  SELECT user_id, event_type, count(*) AS n,
+         sum(qv) AS s1, sum(qv * qv) AS s2, min(qv) AS mn, max(qv) AS mx
+  FROM q GROUP BY user_id, event_type
+)
+SELECT user_id, event_type, n,
+       round(CAST(s1 AS DOUBLE) / n / 100.0, 6) AS mean_value,
+       round(sqrt(greatest((CAST(s2 AS DOUBLE) / n
+                   - (CAST(s1 AS DOUBLE) / n) * (CAST(s1 AS DOUBLE) / n))
+                  / 10000.0, 0.0)), 6) AS std_value,
+       CAST(mx - mn AS DOUBLE) / 100.0 AS amplitude
+FROM full_agg
+"""
+
+
+@query(oracle=ORACLE_INCREMENTAL_AGG)
 def q_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _events_us(spark, sf_dir).select(
         "event_id",
@@ -1096,25 +1132,6 @@ def q_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
 
-
-ORACLE_INCREMENTAL_AGG = """
-WITH q AS (
-  SELECT user_id, event_type, CAST(round(value * 100) AS BIGINT) AS qv
-  FROM events
-),
-full_agg AS (
-  SELECT user_id, event_type, count(*) AS n,
-         sum(qv) AS s1, sum(qv * qv) AS s2, min(qv) AS mn, max(qv) AS mx
-  FROM q GROUP BY user_id, event_type
-)
-SELECT user_id, event_type, n,
-       round(CAST(s1 AS DOUBLE) / n / 100.0, 6) AS mean_value,
-       round(sqrt(greatest((CAST(s2 AS DOUBLE) / n
-                   - (CAST(s1 AS DOUBLE) / n) * (CAST(s1 AS DOUBLE) / n))
-                  / 10000.0, 0.0)), 6) AS std_value,
-       CAST(mx - mn AS DOUBLE) / 100.0 AS amplitude
-FROM full_agg
-"""
 
 # --------------------------------------------------------------------------
 # bpe_train: distributed BPE merge training — the tokenizer-construction
@@ -1241,15 +1258,6 @@ def _bpe_rounds(cur: DataFrame, extra: list):
     return cur, merges
 
 
-def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cur = _bpe_prepare(spark, sf_dir, [])
-    _final, merges = _bpe_rounds(cur, [])
-    out = merges[0]
-    for m in merges[1:]:
-        out = out.unionByName(m)
-    return out
-
-
 ORACLE_BPE_TRAIN = r"""
 WITH norm AS (
   SELECT regexp_replace(lower(substring(text, 1, 64)), '[^a-z]', '', 'g') AS s
@@ -1288,6 +1296,17 @@ SELECT CAST(round AS INT) AS round, pair, freq FROM (
 ) z
 """
 
+
+@query(oracle=ORACLE_BPE_TRAIN)
+def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
+    cur = _bpe_prepare(spark, sf_dir, [])
+    _final, merges = _bpe_rounds(cur, [])
+    out = merges[0]
+    for m in merges[1:]:
+        out = out.unionByName(m)
+    return out
+
+
 # --------------------------------------------------------------------------
 # evolved_scan: schema-evolution reads — the lakehouse reality that a
 # 100 TB table is written over years by pipeline versions with different
@@ -1300,6 +1319,23 @@ SELECT CAST(round AS INT) AS round, pair, freq FROM (
 # --------------------------------------------------------------------------
 
 
+ORACLE_EVOLVED_SCAN = """
+WITH v1 AS (
+  SELECT event_id, user_id, value, CAST(NULL AS INT) AS channel
+  FROM events WHERE event_id % 2 = 0
+),
+v2 AS (
+  SELECT event_id, user_id, value, CAST(event_id % 4 AS INT) AS channel
+  FROM events WHERE event_id % 2 = 1
+),
+merged AS (SELECT * FROM v1 UNION ALL SELECT * FROM v2)
+SELECT coalesce(channel, -1) AS channel, count(*) AS n,
+       round(sum(value), 2) AS sum_value
+FROM merged GROUP BY coalesce(channel, -1)
+"""
+
+
+@query(oracle=ORACLE_EVOLVED_SCAN)
 def q_evolved_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
 
@@ -1329,21 +1365,6 @@ def q_evolved_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_EVOLVED_SCAN = """
-WITH v1 AS (
-  SELECT event_id, user_id, value, CAST(NULL AS INT) AS channel
-  FROM events WHERE event_id % 2 = 0
-),
-v2 AS (
-  SELECT event_id, user_id, value, CAST(event_id % 4 AS INT) AS channel
-  FROM events WHERE event_id % 2 = 1
-),
-merged AS (SELECT * FROM v1 UNION ALL SELECT * FROM v2)
-SELECT coalesce(channel, -1) AS channel, count(*) AS n,
-       round(sum(value), 2) AS sum_value
-FROM merged GROUP BY coalesce(channel, -1)
-"""
-
 # --------------------------------------------------------------------------
 # stream_mv_maintenance: streaming materialized-view maintenance — the
 # warehouse pattern incremental_agg proves in batch, run as a REAL
@@ -1357,6 +1378,19 @@ FROM merged GROUP BY coalesce(channel, -1)
 # --------------------------------------------------------------------------
 
 
+ORACLE_STREAM_MV_MAINTENANCE = """
+WITH q AS (
+  SELECT user_id, event_type, CAST(round(value * 100) AS BIGINT) AS qv
+  FROM events
+)
+SELECT user_id, event_type, count(*) AS n,
+       round(CAST(sum(qv) AS DOUBLE) / count(*) / 100.0, 6) AS mean_value,
+       CAST(max(qv) - min(qv) AS DOUBLE) / 100.0 AS amplitude
+FROM q GROUP BY user_id, event_type
+"""
+
+
+@query(oracle=ORACLE_STREAM_MV_MAINTENANCE)
 def q_stream_mv_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
     import shutil as _shutil
@@ -1426,17 +1460,6 @@ def q_stream_mv_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_STREAM_MV_MAINTENANCE = """
-WITH q AS (
-  SELECT user_id, event_type, CAST(round(value * 100) AS BIGINT) AS qv
-  FROM events
-)
-SELECT user_id, event_type, count(*) AS n,
-       round(CAST(sum(qv) AS DOUBLE) / count(*) / 100.0, 6) AS mean_value,
-       CAST(max(qv) - min(qv) AS DOUBLE) / 100.0 AS amplitude
-FROM q GROUP BY user_id, event_type
-"""
-
 # --------------------------------------------------------------------------
 # trimmed_mean: the GROUPED_AGG pandas UDF surface — the one PySpark
 # Python-execution API the registry had not yet exercised (scalar
@@ -1451,6 +1474,24 @@ FROM q GROUP BY user_id, event_type
 # --------------------------------------------------------------------------
 
 
+ORACLE_TRIMMED_MEAN = """
+WITH ranked AS (
+  SELECT event_type, CAST(round(value * 100) AS BIGINT) AS qv,
+         row_number() OVER (PARTITION BY event_type ORDER BY value) AS rn,
+         count(*) OVER (PARTITION BY event_type) AS n
+  FROM events
+)
+SELECT event_type, max(n) AS n,
+       round(CAST(sum(qv) FILTER (WHERE rn > n // 10 AND rn <= n - n // 10)
+                  AS DOUBLE)
+             / count(*) FILTER (WHERE rn > n // 10 AND rn <= n - n // 10)
+             / 100.0, 6) AS trimmed_mean,
+       round(CAST(sum(qv) AS DOUBLE) / count(*) / 100.0, 6) AS plain_mean
+FROM ranked GROUP BY event_type
+"""
+
+
+@query(oracle=ORACLE_TRIMMED_MEAN)
 def q_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     # grouped-agg UDFs cannot mix with JVM aggregates in one agg() —
     # INVALID_PANDAS_UDF_PLACEMENT — so every output here is a pandas
@@ -1488,22 +1529,6 @@ def q_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_TRIMMED_MEAN = """
-WITH ranked AS (
-  SELECT event_type, CAST(round(value * 100) AS BIGINT) AS qv,
-         row_number() OVER (PARTITION BY event_type ORDER BY value) AS rn,
-         count(*) OVER (PARTITION BY event_type) AS n
-  FROM events
-)
-SELECT event_type, max(n) AS n,
-       round(CAST(sum(qv) FILTER (WHERE rn > n // 10 AND rn <= n - n // 10)
-                  AS DOUBLE)
-             / count(*) FILTER (WHERE rn > n // 10 AND rn <= n - n // 10)
-             / 100.0, 6) AS trimmed_mean,
-       round(CAST(sum(qv) AS DOUBLE) / count(*) / 100.0, 6) AS plain_mean
-FROM ranked GROUP BY event_type
-"""
-
 # --------------------------------------------------------------------------
 # udtf_sessions: the Python UDTF surface (Spark 3.5+/4 table functions)
 # with a PARTITION BY ... ORDER BY TABLE argument — the per-partition
@@ -1520,6 +1545,28 @@ FROM ranked GROUP BY event_type
 _SESS_GAP_US = 86400 * 1000000  # 1 day
 
 
+ORACLE_UDTF_SESSIONS = f"""
+WITH ev AS (SELECT user_id, epoch_us(ts) AS ts_us FROM events),
+d AS (
+  SELECT user_id, ts_us,
+         CASE WHEN ts_us - lag(ts_us) OVER w > {_SESS_GAP_US}
+              THEN 1 ELSE 0 END AS brk
+  FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY ts_us)
+),
+g AS (
+  SELECT user_id, ts_us,
+         1 + sum(brk) OVER (PARTITION BY user_id ORDER BY ts_us
+                            ROWS UNBOUNDED PRECEDING) AS session_id
+  FROM d
+)
+SELECT user_id, CAST(session_id AS INT) AS session_id,
+       CAST(count(*) AS INT) AS n,
+       min(ts_us) AS start_us, max(ts_us) AS end_us
+FROM g GROUP BY user_id, session_id
+"""
+
+
+@query(oracle=ORACLE_UDTF_SESSIONS)
 def q_udtf_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.functions import udtf
 
@@ -1567,26 +1614,6 @@ def q_udtf_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_UDTF_SESSIONS = f"""
-WITH ev AS (SELECT user_id, epoch_us(ts) AS ts_us FROM events),
-d AS (
-  SELECT user_id, ts_us,
-         CASE WHEN ts_us - lag(ts_us) OVER w > {_SESS_GAP_US}
-              THEN 1 ELSE 0 END AS brk
-  FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY ts_us)
-),
-g AS (
-  SELECT user_id, ts_us,
-         1 + sum(brk) OVER (PARTITION BY user_id ORDER BY ts_us
-                            ROWS UNBOUNDED PRECEDING) AS session_id
-  FROM d
-)
-SELECT user_id, CAST(session_id AS INT) AS session_id,
-       CAST(count(*) AS INT) AS n,
-       min(ts_us) AS start_us, max(ts_us) AS end_us
-FROM g GROUP BY user_id, session_id
-"""
-
 # --------------------------------------------------------------------------
 # variant_stats: the Spark 4 VARIANT path for open-schema columns —
 # parse_json into the binary semi-structured encoding, typed
@@ -1598,6 +1625,16 @@ FROM g GROUP BY user_id, session_id
 # --------------------------------------------------------------------------
 
 
+ORACLE_VARIANT_STATS = """
+SELECT event_type, count(*) AS n,
+       min(CAST(json_extract(props, '$.k') AS INT)) AS min_k,
+       max(CAST(json_extract(props, '$.k') AS INT)) AS max_k,
+       CAST(sum(CAST(json_extract(props, '$.k') AS INT)) AS BIGINT) AS sum_k
+FROM events GROUP BY event_type
+"""
+
+
+@query(oracle=ORACLE_VARIANT_STATS)
 def q_variant_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     k = F.expr("variant_get(parse_json(props), '$.k', 'int')")
@@ -1613,14 +1650,6 @@ def q_variant_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_VARIANT_STATS = """
-SELECT event_type, count(*) AS n,
-       min(CAST(json_extract(props, '$.k') AS INT)) AS min_k,
-       max(CAST(json_extract(props, '$.k') AS INT)) AS max_k,
-       CAST(sum(CAST(json_extract(props, '$.k') AS INT)) AS BIGINT) AS sum_k
-FROM events GROUP BY event_type
-"""
-
 # --------------------------------------------------------------------------
 # recursive_reach: recursive CTE (Spark 4 WITH RECURSIVE) — BFS distance
 # from host 0 over the corpus-derived link graph of host_pagerank. The
@@ -1632,24 +1661,6 @@ FROM events GROUP BY event_type
 # --------------------------------------------------------------------------
 
 _RR_MAX_HOPS = 10
-
-
-def q_recursive_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents").select(
-        (F.col("doc_id") % _PR_N).alias("src"),
-        ((F.col("doc_id") * _PR_EDGE_A + _PR_EDGE_B) % _PR_N).alias("dst"),
-    ).filter(F.col("src") != F.col("dst")).distinct()
-    docs.createOrReplaceTempView("__reach_edges")
-    return spark.sql(f"""
-        WITH RECURSIVE walk(node, dist) AS (
-          SELECT CAST(0 AS BIGINT), 0
-          UNION ALL
-          SELECT e.dst, w.dist + 1
-          FROM walk w JOIN __reach_edges e ON e.src = w.node
-          WHERE w.dist < {_RR_MAX_HOPS}
-        )
-        SELECT node, min(dist) AS hops FROM walk GROUP BY node
-    """)
 
 
 ORACLE_RECURSIVE_REACH = f"""
@@ -1669,6 +1680,26 @@ walk(node, dist) AS (
 SELECT node, min(dist) AS hops FROM walk GROUP BY node
 """
 
+
+@query(oracle=ORACLE_RECURSIVE_REACH)
+def q_recursive_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = _t(spark, sf_dir, "documents").select(
+        (F.col("doc_id") % _PR_N).alias("src"),
+        ((F.col("doc_id") * _PR_EDGE_A + _PR_EDGE_B) % _PR_N).alias("dst"),
+    ).filter(F.col("src") != F.col("dst")).distinct()
+    docs.createOrReplaceTempView("__reach_edges")
+    return spark.sql(f"""
+        WITH RECURSIVE walk(node, dist) AS (
+          SELECT CAST(0 AS BIGINT), 0
+          UNION ALL
+          SELECT e.dst, w.dist + 1
+          FROM walk w JOIN __reach_edges e ON e.src = w.node
+          WHERE w.dist < {_RR_MAX_HOPS}
+        )
+        SELECT node, min(dist) AS hops FROM walk GROUP BY node
+    """)
+
+
 # --------------------------------------------------------------------------
 # arrow_byte_profile: the mapInArrow surface — RecordBatch-level Python
 # with NO pandas materialization (pyarrow.compute kernels straight on
@@ -1680,6 +1711,17 @@ SELECT node, min(dist) AS hops FROM walk GROUP BY node
 # --------------------------------------------------------------------------
 
 
+ORACLE_ARROW_BYTE_PROFILE = """
+SELECT source, count(*) AS n_docs,
+       CAST(sum(strlen(text)) AS BIGINT) AS total_bytes,
+       CAST(sum(length(text)) AS BIGINT) AS total_chars,
+       CAST(sum(CASE WHEN strlen(text) > length(text) THEN 1 ELSE 0 END)
+            AS BIGINT) AS n_multibyte_docs
+FROM documents GROUP BY source
+"""
+
+
+@query(oracle=ORACLE_ARROW_BYTE_PROFILE)
 def q_arrow_byte_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow as pa
 
@@ -1711,15 +1753,6 @@ def q_arrow_byte_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_ARROW_BYTE_PROFILE = """
-SELECT source, count(*) AS n_docs,
-       CAST(sum(strlen(text)) AS BIGINT) AS total_bytes,
-       CAST(sum(length(text)) AS BIGINT) AS total_chars,
-       CAST(sum(CASE WHEN strlen(text) > length(text) THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_multibyte_docs
-FROM documents GROUP BY source
-"""
-
 # --------------------------------------------------------------------------
 # temporal_dim_join: point-in-time (temporal) dimension lookup — every
 # click event joined to the SCD2 dimension version valid AT its event
@@ -1732,33 +1765,6 @@ FROM documents GROUP BY source
 # small by construction (changes, not events), so the per-key probe is
 # a short scan; clicks before a user's first version fall out (inner).
 # --------------------------------------------------------------------------
-
-
-def q_temporal_dim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from fink_science_spark.queries_ext6 import q_scd2_history
-
-    dim = q_scd2_history(spark, sf_dir).select(
-        F.col("user_id").alias("d_user"),
-        "attr",
-        "valid_from_us",
-        F.coalesce("valid_to_us", F.lit(2**62)).alias("valid_to_us"),
-    )
-    clicks = (
-        _events_us(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select("event_id", "user_id", "ts_us")
-    )
-    joined = clicks.join(
-        dim,
-        (clicks.user_id == dim.d_user)
-        & (clicks.ts_us >= dim.valid_from_us)
-        & (clicks.ts_us < dim.valid_to_us),
-        "inner",
-    )
-    return joined.groupBy("attr").agg(
-        F.count("*").alias("n_clicks"),
-        F.count_distinct("user_id").alias("n_users"),
-    )
 
 
 ORACLE_TEMPORAL_DIM_JOIN = """
@@ -1795,6 +1801,35 @@ FROM clicks c JOIN dim d
 GROUP BY attr
 """
 
+
+@query(oracle=ORACLE_TEMPORAL_DIM_JOIN)
+def q_temporal_dim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from fink_science_spark.queries_ext6 import q_scd2_history
+
+    dim = q_scd2_history(spark, sf_dir).select(
+        F.col("user_id").alias("d_user"),
+        "attr",
+        "valid_from_us",
+        F.coalesce("valid_to_us", F.lit(2**62)).alias("valid_to_us"),
+    )
+    clicks = (
+        _events_us(spark, sf_dir)
+        .filter(F.col("event_type") == "click")
+        .select("event_id", "user_id", "ts_us")
+    )
+    joined = clicks.join(
+        dim,
+        (clicks.user_id == dim.d_user)
+        & (clicks.ts_us >= dim.valid_from_us)
+        & (clicks.ts_us < dim.valid_to_us),
+        "inner",
+    )
+    return joined.groupBy("attr").agg(
+        F.count("*").alias("n_clicks"),
+        F.count_distinct("user_id").alias("n_users"),
+    )
+
+
 # --------------------------------------------------------------------------
 # cube_counts: the CUBE aggregation (all 2^k grouping-set combinations +
 # grouping_id provenance) — completes the OLAP trio with rollup_counts
@@ -1803,6 +1838,16 @@ GROUP BY attr
 # --------------------------------------------------------------------------
 
 
+ORACLE_CUBE_COUNTS = """
+SELECT coalesce(o_orderpriority, 'ALL') AS priority,
+       coalesce(o_orderstatus, 'ALL') AS status,
+       count(*) AS n, round(sum(o_totalprice), 2) AS total
+FROM orders
+GROUP BY CUBE (o_orderpriority, o_orderstatus)
+"""
+
+
+@query(oracle=ORACLE_CUBE_COUNTS)
 def q_cube_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
     return (
@@ -1820,14 +1865,6 @@ def q_cube_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_CUBE_COUNTS = """
-SELECT coalesce(o_orderpriority, 'ALL') AS priority,
-       coalesce(o_orderstatus, 'ALL') AS status,
-       count(*) AS n, round(sum(o_totalprice), 2) AS total
-FROM orders
-GROUP BY CUBE (o_orderpriority, o_orderstatus)
-"""
-
 # --------------------------------------------------------------------------
 # unpivot_metrics: wide -> long melt (DataFrame.unpivot / SQL UNPIVOT) —
 # the inverse of pivot_counts, turning lineitem's four numeric measures
@@ -1836,6 +1873,20 @@ GROUP BY CUBE (o_orderpriority, o_orderstatus)
 # --------------------------------------------------------------------------
 
 
+ORACLE_UNPIVOT_METRICS = """
+SELECT metric, count(*) AS n,
+       round(min(value), 2) AS min_v, round(max(value), 2) AS max_v,
+       round(sum(value), 2) AS sum_v
+FROM (
+  UNPIVOT (SELECT l_quantity, l_extendedprice, l_discount, l_tax
+           FROM lineitem)
+  ON l_quantity, l_extendedprice, l_discount, l_tax
+  INTO NAME metric VALUE value
+) GROUP BY metric
+"""
+
+
+@query(oracle=ORACLE_UNPIVOT_METRICS)
 def q_unpivot_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem").select(
         "l_quantity", "l_extendedprice", "l_discount", "l_tax"
@@ -1854,18 +1905,6 @@ def q_unpivot_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_UNPIVOT_METRICS = """
-SELECT metric, count(*) AS n,
-       round(min(value), 2) AS min_v, round(max(value), 2) AS max_v,
-       round(sum(value), 2) AS sum_v
-FROM (
-  UNPIVOT (SELECT l_quantity, l_extendedprice, l_discount, l_tax
-           FROM lineitem)
-  ON l_quantity, l_extendedprice, l_discount, l_tax
-  INTO NAME metric VALUE value
-) GROUP BY metric
-"""
-
 # --------------------------------------------------------------------------
 # bpe_encode_stats: the trained-tokenizer artifact applied corpus-wide —
 # after the bpe_train merges, every document is ENCODED and the
@@ -1874,23 +1913,6 @@ FROM (
 # round machinery as bpe_train, with the source column carried through
 # the merge applications.
 # --------------------------------------------------------------------------
-
-
-def q_bpe_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cur = _bpe_prepare(spark, sf_dir, [F.col("source")])
-    final, _merges = _bpe_rounds(cur, [F.col("source")])
-    n_tokens = F.size(F.split(F.trim(F.col("seq")), " +"))
-    # chars = token characters only (spaces are encoding artifacts)
-    n_chars = F.length(F.regexp_replace(F.col("seq"), " ", ""))
-    enc = final.select("source", n_tokens.alias("n_tok"), n_chars.alias("n_ch"))
-    return enc.groupBy("source").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_tok").alias("total_tokens"),
-        F.sum("n_ch").alias("total_chars"),
-        F.round(
-            F.sum("n_tok").cast("double") / F.sum("n_ch").cast("double"), 6
-        ).alias("tokens_per_char"),
-    )
 
 
 def _oracle_bpe_encode() -> str:
@@ -1942,6 +1964,25 @@ FROM r{_BPE_ROUNDS} GROUP BY source
 
 ORACLE_BPE_ENCODE_STATS = _oracle_bpe_encode()
 
+
+@query(oracle=ORACLE_BPE_ENCODE_STATS)
+def q_bpe_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    cur = _bpe_prepare(spark, sf_dir, [F.col("source")])
+    final, _merges = _bpe_rounds(cur, [F.col("source")])
+    n_tokens = F.size(F.split(F.trim(F.col("seq")), " +"))
+    # chars = token characters only (spaces are encoding artifacts)
+    n_chars = F.length(F.regexp_replace(F.col("seq"), " ", ""))
+    enc = final.select("source", n_tokens.alias("n_tok"), n_chars.alias("n_ch"))
+    return enc.groupBy("source").agg(
+        F.count("*").alias("n_docs"),
+        F.sum("n_tok").alias("total_tokens"),
+        F.sum("n_ch").alias("total_chars"),
+        F.round(
+            F.sum("n_tok").cast("double") / F.sum("n_ch").cast("double"), 6
+        ).alias("tokens_per_char"),
+    )
+
+
 # --------------------------------------------------------------------------
 # knn_graph_stats: similarity-graph construction + degree profile — the
 # corpus-structure diagnostic (clustering feed, UMAP-style viz input,
@@ -1953,34 +1994,6 @@ ORACLE_BPE_ENCODE_STATS = _oracle_bpe_encode()
 # --------------------------------------------------------------------------
 
 _KG_THRESHOLD = 0.2
-
-
-def q_knn_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from fink_science_spark.operators.similarity import (
-        cosine_pairs_bucketed,
-        lsh_bucket_udf,
-    )
-    from fink_science_spark.queries_ext2 import _COS_BITS, _EMB_DIM
-
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    bucket = lsh_bucket_udf(_EMB_DIM, _COS_BITS)
-    pairs = cosine_pairs_bucketed(
-        emb, "vec_id", "v",
-        bucket_col=bucket(F.col("v")),
-        threshold=_KG_THRESHOLD,
-    )
-    ends = pairs.select(F.col("id_a").alias("node")).unionAll(
-        pairs.select(F.col("id_b").alias("node"))
-    )
-    deg = ends.groupBy("node").agg(F.count("*").alias("degree"))
-    all_deg = (
-        emb.select("vec_id")
-        .join(deg, emb.vec_id == deg.node, "left")
-        .select(F.coalesce("degree", F.lit(0)).alias("degree"))
-    )
-    return all_deg.groupBy("degree").agg(F.count("*").alias("n_nodes"))
 
 
 def _oracle_knn_graph() -> str:
@@ -2012,6 +2025,36 @@ FROM all_deg GROUP BY degree
 
 ORACLE_KNN_GRAPH_STATS = _oracle_knn_graph()
 
+
+@query(oracle=ORACLE_KNN_GRAPH_STATS)
+def q_knn_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from fink_science_spark.operators.similarity import (
+        cosine_pairs_bucketed,
+        lsh_bucket_udf,
+    )
+    from fink_science_spark.queries_ext2 import _COS_BITS, _EMB_DIM
+
+    emb = _t(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    )
+    bucket = lsh_bucket_udf(_EMB_DIM, _COS_BITS)
+    pairs = cosine_pairs_bucketed(
+        emb, "vec_id", "v",
+        bucket_col=bucket(F.col("v")),
+        threshold=_KG_THRESHOLD,
+    )
+    ends = pairs.select(F.col("id_a").alias("node")).unionAll(
+        pairs.select(F.col("id_b").alias("node"))
+    )
+    deg = ends.groupBy("node").agg(F.count("*").alias("degree"))
+    all_deg = (
+        emb.select("vec_id")
+        .join(deg, emb.vec_id == deg.node, "left")
+        .select(F.coalesce("degree", F.lit(0)).alias("degree"))
+    )
+    return all_deg.groupBy("degree").agg(F.count("*").alias("n_nodes"))
+
+
 # --------------------------------------------------------------------------
 # eval_split: deterministic stratified train/val/test assignment — the
 # split step every training pipeline runs before anything else. The
@@ -2025,30 +2068,6 @@ ORACLE_KNN_GRAPH_STATS = _oracle_knn_graph()
 
 _SPLIT_TRAIN = 0.8
 _SPLIT_VAL = 0.9  # (train, val]; rest = test
-
-
-def q_eval_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from fink_science_spark.functions.hashing import hash64
-    from fink_science_spark.queries_ext6 import _U_DENOM
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "source")
-    u = hash64(F.col("doc_id").cast("string"), seed="split") / F.lit(_U_DENOM)
-    split = (
-        F.when(u < _SPLIT_TRAIN, "train")
-        .when(u < _SPLIT_VAL, "val")
-        .otherwise("test")
-    )
-    assigned = docs.select("source", split.alias("split"))
-    wsrc = Window.partitionBy("source")
-    per = assigned.groupBy("source", "split").agg(F.count("*").alias("n"))
-    return per.select(
-        "source",
-        "split",
-        "n",
-        F.round(
-            F.col("n").cast("double") / F.sum("n").over(wsrc), 4
-        ).alias("share"),
-    )
 
 
 def _oracle_eval_split() -> str:
@@ -2076,56 +2095,30 @@ FROM per
 
 ORACLE_EVAL_SPLIT = _oracle_eval_split()
 
+
+@query(oracle=ORACLE_EVAL_SPLIT)
+def q_eval_split(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from fink_science_spark.functions.hashing import hash64
+    from fink_science_spark.queries_ext6 import _U_DENOM
+
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "source")
+    u = hash64(F.col("doc_id").cast("string"), seed="split") / F.lit(_U_DENOM)
+    split = (
+        F.when(u < _SPLIT_TRAIN, "train")
+        .when(u < _SPLIT_VAL, "val")
+        .otherwise("test")
+    )
+    assigned = docs.select("source", split.alias("split"))
+    wsrc = Window.partitionBy("source")
+    per = assigned.groupBy("source", "split").agg(F.count("*").alias("n"))
+    return per.select(
+        "source",
+        "split",
+        "n",
+        F.round(
+            F.col("n").cast("double") / F.sum("n").over(wsrc), 4
+        ).alias("share"),
+    )
+
+
 # --------------------------------------------------------------------------
-
-QUERIES_EXT9: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "mulens_score": q_mulens_score,
-    "orphan_score": q_orphan_score,
-    "sky_pixel_rollup": q_sky_pixel_rollup,
-    "snn_ia_score": q_snn_ia_score,
-    "ann_rerank": q_ann_rerank,
-    "host_pagerank": q_host_pagerank,
-    "sky_pixel_multires": q_sky_pixel_multires,
-    "zorder_cells": q_zorder_cells,
-    "incremental_agg": q_incremental_agg,
-    "bpe_train": q_bpe_train,
-    "evolved_scan": q_evolved_scan,
-    "stream_mv_maintenance": q_stream_mv_maintenance,
-    "trimmed_mean": q_trimmed_mean,
-    "udtf_sessions": q_udtf_sessions,
-    "variant_stats": q_variant_stats,
-    "recursive_reach": q_recursive_reach,
-    "arrow_byte_profile": q_arrow_byte_profile,
-    "temporal_dim_join": q_temporal_dim_join,
-    "cube_counts": q_cube_counts,
-    "unpivot_metrics": q_unpivot_metrics,
-    "bpe_encode_stats": q_bpe_encode_stats,
-    "knn_graph_stats": q_knn_graph_stats,
-    "eval_split": q_eval_split,
-}
-
-ORACLES_EXT9: dict[str, str] = {
-    "mulens_score": ORACLE_MULENS_SCORE,
-    "orphan_score": ORACLE_ORPHAN_SCORE,
-    "sky_pixel_rollup": ORACLE_SKY_PIXEL_ROLLUP,
-    "snn_ia_score": ORACLE_SNN_IA_SCORE,
-    "ann_rerank": ORACLE_ANN_RERANK,
-    "host_pagerank": ORACLE_HOST_PAGERANK,
-    "sky_pixel_multires": ORACLE_SKY_PIXEL_MULTIRES,
-    "zorder_cells": ORACLE_ZORDER_CELLS,
-    "incremental_agg": ORACLE_INCREMENTAL_AGG,
-    "bpe_train": ORACLE_BPE_TRAIN,
-    "evolved_scan": ORACLE_EVOLVED_SCAN,
-    "stream_mv_maintenance": ORACLE_STREAM_MV_MAINTENANCE,
-    "trimmed_mean": ORACLE_TRIMMED_MEAN,
-    "udtf_sessions": ORACLE_UDTF_SESSIONS,
-    "variant_stats": ORACLE_VARIANT_STATS,
-    "recursive_reach": ORACLE_RECURSIVE_REACH,
-    "arrow_byte_profile": ORACLE_ARROW_BYTE_PROFILE,
-    "temporal_dim_join": ORACLE_TEMPORAL_DIM_JOIN,
-    "cube_counts": ORACLE_CUBE_COUNTS,
-    "unpivot_metrics": ORACLE_UNPIVOT_METRICS,
-    "bpe_encode_stats": ORACLE_BPE_ENCODE_STATS,
-    "knn_graph_stats": ORACLE_KNN_GRAPH_STATS,
-    "eval_split": ORACLE_EVAL_SPLIT,
-}

@@ -329,7 +329,7 @@ def test_median_bracket_empty(spark, tmp_path):
 def test_wave14_queries_empty(spark, tmp_path):
     """Every wave-14 query must return an empty (or zero-count) frame on
     empty inputs — none of them may crash on a null stats row."""
-    import fink_science_spark.queries_ext13 as x
+    from fink_science_spark.registry import entries
 
     d = str(tmp_path / "w14_empty")
     schemas = {
@@ -347,7 +347,10 @@ def test_wave14_queries_empty(spark, tmp_path):
         spark.createDataFrame([], s).write.mode("overwrite").parquet(
             f"{d}/{t}.parquet"
         )
-    for name, q in x.QUERIES_EXT13.items():
+    wave14 = {name: e.builder for name, e in entries().items()
+              if e.builder.__module__ == "fink_science_spark.queries_ext13"}
+    assert len(wave14) == 12
+    for name, q in wave14.items():
         out = q(spark, d)
         if name == "fk_integrity_audit":
             # the audit reports one row per FK edge even on empty tables
@@ -428,9 +431,7 @@ def test_wave16_wave17_queries_empty(spark, tmp_path):
     crash on a null stats row, and the expected frame shape: empty for
     row-producing queries, a single all-null/zero row for the global
     scalar reductions."""
-    import fink_science_spark.queries_ext14 as w16
-    import fink_science_spark.queries_ext15 as w17
-    import fink_science_spark.queries_ext16 as w18
+    from fink_science_spark.registry import entries
 
     d = str(tmp_path / "w16_empty")
     schemas = {
@@ -458,11 +459,11 @@ def test_wave16_wave17_queries_empty(spark, tmp_path):
         )
     one_null_row = {"small_qty_revenue", "disjunctive_revenue",
                     "zipf_skew_fit"}
-    for name, q in {
-        **w16.QUERIES_EXT14,
-        **w17.QUERIES_EXT15,
-        **w18.QUERIES_EXT16,
-    }.items():
+    waves = {f"fink_science_spark.queries_ext{i}" for i in (14, 15, 16)}
+    wave16_18 = {name: e.builder for name, e in entries().items()
+                 if e.builder.__module__ in waves}
+    assert len(wave16_18) == 18
+    for name, q in wave16_18.items():
         out = q(spark, d)
         if name in one_null_row:
             rows = out.collect()

@@ -85,21 +85,6 @@ def test_no_exotic_types_in_any_oracle_result():
     )
 
 
-def test_bench_headline_names_resolve():
-    """Every bench.py HEADLINE entry must exist in the registry — the
-    bench loop silently skips unknown names, so a rename would quietly
-    drop the query from BENCH_r{N}.json instead of failing."""
-    import bench
-
-    registry = _registry()
-    missing = [n for n in bench.HEADLINE if n not in registry]
-    assert not missing, f"bench HEADLINE entries not in queries(): {missing}"
-    dupes = [n for n in set(bench.HEADLINE) if bench.HEADLINE.count(n) > 1]
-    assert not dupes, f"duplicate HEADLINE entries: {dupes}"
-    unscanned = [n for n in bench.SCAN_BOUND if n not in bench.HEADLINE]
-    assert not unscanned, f"SCAN_BOUND names outside HEADLINE: {unscanned}"
-
-
 def test_no_unbounded_topandas_in_query_modules():
     """Engine policy (round-4, finished round 6): no registered query's
     input construction calls .toPandas()/.collect() on a relation —

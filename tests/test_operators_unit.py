@@ -305,16 +305,15 @@ def test_trained_ivf_recall_vs_brute_force(spark, sf_smoke):
     """Trained IVF (hash init + 2 Lloyd rounds, nprobe=2 of 8 cells) must
     recall well above the 2/8 random-cell-coverage baseline against the
     exact brute-force top-3. Deterministic end to end."""
-    from fink_science_spark.queries_ext import QUERIES_EXT
-    from fink_science_spark.queries_ext3 import QUERIES_EXT3
+    from fink_science_spark.registry import entries
 
     ivf = {
         (r["qid"], r["cid"])
-        for r in QUERIES_EXT3["ann_ivf_topk"](spark, sf_smoke).collect()
+        for r in entries()["ann_ivf_topk"].builder(spark, sf_smoke).collect()
     }
     brute = {
         (r["qid"], r["cid"])
-        for r in QUERIES_EXT["ann_cosine_topk"](spark, sf_smoke).collect()
+        for r in entries()["ann_cosine_topk"].builder(spark, sf_smoke).collect()
         if r["rank"] <= 3
     }
     recall = len(ivf & brute) / len(brute)
@@ -447,6 +446,38 @@ def test_forest_forward_matches_scalar_walk():
         row = [v[i] for v in rng_vals]
         exp = sum(walk(tr, row) for tr in FOREST) / len(FOREST)
         assert got[i] == exp
+
+
+def test_minhash_sql_text_aggs_match_column_form(spark):
+    """The SQL-text MinHash aggregates equal the Column-built
+    ``min((a * __h + b) % p)`` and the plain Python definition on small
+    data, including the 28-bit hash extremes where ``a * h`` is largest."""
+    from fink_science_spark.functions.hashing import (
+        MINHASH_PRIME,
+        minhash_perm_coeffs,
+    )
+    from fink_science_spark.operators.dedup import _minhash_aggs
+
+    hmax = (1 << 28) - 1
+    rows = [(1, 0), (1, hmax), (1, 12345), (2, 7), (2, hmax - 1), (3, 99991)]
+    ex = spark.createDataFrame(rows, "__id long, __h long")
+    coeffs = minhash_perm_coeffs(8)
+    column_form = [
+        F.min((F.lit(a) * F.col("__h") + F.lit(b)) % F.lit(MINHASH_PRIME))
+        .alias(f"__m{i}")
+        for i, (a, b) in enumerate(coeffs)
+    ]
+    sql = ex.groupBy("__id").agg(*_minhash_aggs(len(coeffs)))
+    col = ex.groupBy("__id").agg(*column_form)
+    assert sql.schema == col.schema
+    got = sorted(tuple(r) for r in sql.collect())
+    assert got == sorted(tuple(r) for r in col.collect())
+    want = sorted(
+        (i, *[min((a * h + b) % MINHASH_PRIME for j, h in rows if j == i)
+              for a, b in coeffs])
+        for i in {j for j, _ in rows}
+    )
+    assert got == want
 
 
 def test_incremental_minhash_matches_batch_restriction(spark):

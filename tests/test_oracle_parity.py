@@ -9,6 +9,7 @@ import os
 import pytest
 
 from fink_science_spark.oracle import compare, duckdb_connection
+from fink_science_spark.registry import entries
 
 PARITY_SF = os.environ.get("SPARK_GRAFT_PARITY_SF", "/root/testdata/sf0.001")
 
@@ -21,25 +22,13 @@ def _registry():
 
 QUERIES, ORACLES = _registry()
 
-# Parity cases measured >10s at sf0.001 (2026-08-15, local[32]): the
-# long pole of the suite is a handful of streaming fixtures, iterative
-# replays, and O(n^2)-oracle comparisons. Tagged so the inner loop can
-# run `-m "not slow_oracle"` (~5 min) while CI / round gates run the
-# full sweep. Membership is a runtime-budget judgment, not a contract —
-# re-measure with --durations when the set drifts.
-SLOW_ORACLES = {
-    "triangle_count",
-    "stream_heavy_hitters",
-    "stream_avro_alert_pipeline",
-    "semantic_dedup",
-    "skyline_frontier",
-    "stream_avro_counts",
-    "mmr_diverse_topk",
-    "curated_corpus",
-    "dedup_clusters",
-    "stream_dedup_lsh",
-    "replay_scan",
-}
+# Parity cases measured >10s at sf0.001 (2026-08-15, local[32]) carry
+# ``@query(slow_oracle=True)``: the long pole of the suite is a handful of
+# streaming fixtures, iterative replays, and O(n^2)-oracle comparisons.
+# Tagged so the inner loop can run `-m "not slow_oracle"` (~5 min) while
+# CI / round gates run the full sweep. Membership is a runtime-budget
+# judgment, not a contract — re-measure with --durations when the set drifts.
+SLOW_ORACLES = {name for name, e in entries().items() if e.slow_oracle}
 
 
 def _params():

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import gzip
 import math
+import os
 
 import numpy as np
 import pytest
@@ -18,6 +19,11 @@ import pytest
 from pyspark.sql import functions as F
 
 ALERTS = "/root/reference/fink_science/data/alerts/alerts.parquet"
+
+# every test here reads the reference checkout's data directory
+pytestmark = pytest.mark.skipif(
+    not os.path.exists(ALERTS), reason="reference ZTF alert sample absent"
+)
 
 
 @pytest.fixture(scope="module")

@@ -240,10 +240,30 @@ def test_onnx_ensemble_matches_scalar_walk():
         assert abs(got[r] - want) < 1e-12
 
 
+def test_anomaly_feature_without_split_raises(monkeypatch):
+    """A swapped forest that never splits on a feature leaves that
+    feature's threshold span at ±inf; building the synthetic features
+    must fail naming the feature instead of emitting the SQL literal
+    infD, which no engine parses."""
+    from fink_science_spark import queries_ext17
+    from fink_science_spark.operators import sklearn_forest
+
+    split = [f for f in range(queries_ext17._ANOM_N_FEATS) if f != 3]
+    tree = {"feature": split + [-2], "threshold": [0.5] * len(split) + [-2.0]}
+    monkeypatch.setattr(
+        sklearn_forest, "load_checkpoint", lambda name: {"trees": [tree]}
+    )
+    msg = r"anomaly_forest_g: no tree splits on feature\(s\) \[3\]"
+    with pytest.raises(ValueError, match=msg):
+        queries_ext17._anom_feat_sql("g", "gsum", "gmax")
+    with pytest.raises(ValueError, match=msg):
+        queries_ext17._anom_feat_cols("g", "gsum", "gmax")
+
+
 def test_real_forest_queries_non_degenerate(spark, sf_smoke):
     """Constant outputs would vacuously pass hash parity — require
     spread in each real-model query's score column."""
-    from fink_science_spark.queries_ext17 import QUERIES_EXT17
+    from fink_science_spark.registry import entries
 
     for name, col in [
         ("mulens_real", "p_ml"),
@@ -258,7 +278,7 @@ def test_real_forest_queries_non_degenerate(spark, sf_smoke):
     ]:
         vals = [
             r[0]
-            for r in QUERIES_EXT17[name](spark, sf_smoke).select(col).collect()
+            for r in entries()[name].builder(spark, sf_smoke).select(col).collect()
         ]
         assert len(set(vals)) >= 3, f"{name}.{col} degenerate: {set(vals)}"
 

@@ -98,9 +98,9 @@ def test_t2_forward_sanity():
 
 
 def test_t2_query_spread(spark, sf_smoke):
-    from fink_science_spark.queries_ext17 import QUERIES_EXT17
+    from fink_science_spark.registry import entries
 
-    rows = QUERIES_EXT17["t2_real"](spark, sf_smoke).collect()
+    rows = entries()["t2_real"].builder(spark, sf_smoke).collect()
     assert len(rows) >= 1
     for r in rows:
         preds = r["preds"]
