@@ -353,24 +353,10 @@ def incremental_minhash_pairs(
     )
 
 
-def simhash_pairs(
-    df: DataFrame,
-    id_col: str,
-    tokens_col: str,
-    max_hamming: int = 8,
-    bits: int = 60,
-    chunks: int = 4,
-) -> DataFrame:
-    """Near-duplicate pairs whose SimHash Hamming distance ≤ ``max_hamming``.
-
-    Band trick: split the signature into ``chunks`` bit-ranges; any pair
-    within distance ≤ chunks-1 must agree on ≥1 chunk (pigeonhole), so the
-    candidate join is an equi-join per chunk, then an exact Hamming verify.
-    For max_hamming ≥ chunks the guarantee weakens to a recall/cost
-    trade-off exactly as in production SimHash systems — callers size
-    ``chunks`` = max_hamming+1 for exactness.
-    """
-    chunk_bits = bits // chunks
+def _simhash_signatures(ex: DataFrame, bits: int) -> DataFrame:
+    """(__id, __sim) SimHash signatures from the (__id, __h) rows of
+    :func:`_exploded_hashes`: bit j of ``__sim`` is set iff more than half
+    of the doc's token hashes have bit j set."""
     # signature via explode + codegen'd sum-aggregates: one md5 per token,
     # then majority votes as partial-aggregating SUMs — fully whole-stage-
     # codegen'd (interpreted per-bit HOF aggregates over the token array
@@ -387,7 +373,6 @@ def simhash_pairs(
     lanes_per_long = 4
     lane_width = 16
     n_groups = (bits + lanes_per_long - 1) // lanes_per_long
-    ex = _exploded_hashes(df, id_col, tokens_col, hash64)
     # the per-bit expression trees are built as SQL text, ONE F.expr per
     # aggregate / per signature: the Column-by-Column form issued ~6 py4j
     # round trips per bit (~400 per build at ~0.4 ms each — measured
@@ -431,7 +416,28 @@ def simhash_pairs(
     # no persist here: hamming_pairs consumes this exactly once (its
     # signature-collapse groupBy) and persists its own collapsed table,
     # which is what the chunk self-join sides actually share now
-    sig = votes.select("__id", F.when(guard.isNull(), sim).alias("__sim"))
+    return votes.select("__id", F.when(guard.isNull(), sim).alias("__sim"))
+
+
+def simhash_pairs(
+    df: DataFrame,
+    id_col: str,
+    tokens_col: str,
+    max_hamming: int = 8,
+    bits: int = 60,
+    chunks: int = 4,
+) -> DataFrame:
+    """Near-duplicate pairs whose SimHash Hamming distance ≤ ``max_hamming``.
+
+    Band trick: split the signature into ``chunks`` bit-ranges; any pair
+    within distance ≤ chunks-1 must agree on ≥1 chunk (pigeonhole), so the
+    candidate join is an equi-join per chunk, then an exact Hamming verify.
+    For max_hamming ≥ chunks the guarantee weakens to a recall/cost
+    trade-off exactly as in production SimHash systems — callers size
+    ``chunks`` = max_hamming+1 for exactness.
+    """
+    ex = _exploded_hashes(df, id_col, tokens_col, hash64)
+    sig = _simhash_signatures(ex, bits)
     return hamming_pairs(
         sig, "__id", "__sim", max_hamming=max_hamming, bits=bits, chunks=chunks
     )

@@ -123,12 +123,13 @@ def _stacked_trees(ckpt: dict) -> tuple:
     descent below runs ONE numpy op per level for the whole forest
     instead of per tree. Packing is fully vectorized (concatenate +
     scatter — a per-tree python loop measured ~0.75 s for the 1000-tree
-    mulens forest) and cached on the (ExecutorRegistry-cached)
-    checkpoint dict, so each worker pays it once. Padding slots carry
-    feature = -2 (leaf) and are never reached — descent stays inside
-    each tree's real node range."""
-    st = ckpt.get("_stacked")
-    if st is None:
+    mulens forest) and cached in its own ExecutorRegistry entry keyed by
+    the checkpoint object, so each worker pays it once and the shared
+    checkpoint dict is left as loaded. Padding slots carry feature = -2
+    (leaf) and are never reached — descent stays inside each tree's real
+    node range."""
+
+    def _build():
         trees = ckpt["trees"]
         tn = len(trees)
         lens = np.array([len(t["feature"]) for t in trees], dtype=np.int64)
@@ -152,9 +153,10 @@ def _stacked_trees(ckpt: dict) -> tuple:
              for t in trees]
         )
         vals[rows, cols] = vcat
-        st = (feat, thr, left, right, vals)
-        ckpt["_stacked"] = st
-    return st
+        # the entry keeps the checkpoint alive, so its id is not reused
+        return ckpt, (feat, thr, left, right, vals)
+
+    return ExecutorRegistry.get(f"sklearn_stacked_v1:{id(ckpt)}", _build)[1]
 
 
 # Row-count crossover for the across-trees descent: small Arrow batches

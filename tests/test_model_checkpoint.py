@@ -91,11 +91,14 @@ def test_perturbed_checkpoint_changes_scores(spark, tmp_path):
 def test_stacked_forest_descent_bit_identical_to_per_tree():
     """The across-trees vectorized descent (round-9 optimization) must
     route every row to the same leaf and fold the same values in the
-    same order as the per-tree reference loop."""
+    same order as the per-tree reference loop — for batches on either
+    side of ``_STACKED_MAX_ROWS``, so both dispatch branches are pinned."""
     import numpy as np
 
     from fink_science_spark.operators.sklearn_forest import (
+        _STACKED_MAX_ROWS,
         _tree_leaf_rows,
+        gbt_proba,
         load_checkpoint,
         onnx_ensemble_raw,
         rf_proba,
@@ -111,12 +114,52 @@ def test_stacked_forest_descent_bit_identical_to_per_tree():
     assert np.array_equal(onnx_ensemble_raw(X, ck), ref)
 
     ck = load_checkpoint("mulens_rf")
-    X = rng.rand(131, 47) * 2
-    ref = np.zeros((len(X), ck["trees"][0]["value"].shape[1]))
-    for t in ck["trees"]:
-        ref = ref + t["value"][_tree_leaf_rows(X, t)]
-    ref = ref / float(len(ck["trees"]))
-    assert np.array_equal(rf_proba(X, ck), ref)
+    for n in (131, _STACKED_MAX_ROWS, _STACKED_MAX_ROWS + 1):
+        X = rng.rand(n, 47) * 2
+        ref = np.zeros((len(X), ck["trees"][0]["value"].shape[1]))
+        for t in ck["trees"]:
+            ref = ref + t["value"][_tree_leaf_rows(X, t)]
+        ref = ref / float(len(ck["trees"]))
+        assert np.array_equal(rf_proba(X, ck), ref), n
 
     # empty batch stays well-shaped
     assert rf_proba(np.zeros((0, 47)), ck).shape == (0, 4)
+
+    ck = load_checkpoint("orphans_gbt")
+    lr = float(ck["learning_rate"])
+    for n in (131, _STACKED_MAX_ROWS, _STACKED_MAX_ROWS + 1):
+        X = rng.rand(n, 12) * 4 - 2
+        raw = np.full(len(X), float(ck["init_raw"]))
+        for t in ck["trees"]:
+            raw = raw + lr * t["value"][_tree_leaf_rows(X, t), 0]
+        ref = 1.0 / (1.0 + np.exp(-raw))
+        assert np.array_equal(gbt_proba(X, ck), ref), n
+
+
+def test_forest_kernels_leave_checkpoint_keys_unchanged():
+    """The stacked node tables are cached beside the shared checkpoint
+    dict, never written into it (the dict is the ExecutorRegistry's
+    loaded artifact, shared by every caller in the process). The keys
+    are compared with the artifact file's, so an earlier test's kernel
+    calls on the same cached dict cannot hide a write."""
+    import gzip
+    import json
+
+    import numpy as np
+
+    from fink_science_spark.operators.sklearn_forest import (
+        checkpoint_path,
+        gbt_proba,
+        load_checkpoint,
+        rf_proba,
+    )
+
+    for name, kernel, nfeat in (
+        ("mulens_rf", rf_proba, 47),
+        ("orphans_gbt", gbt_proba, 12),
+    ):
+        with gzip.open(checkpoint_path(name), "rt") as f:
+            keys = set(json.load(f))
+        ck = load_checkpoint(name)
+        kernel(np.zeros((3, nfeat)), ck)
+        assert set(ck) == keys, name

@@ -480,6 +480,34 @@ def test_minhash_sql_text_aggs_match_column_form(spark):
     assert got == want
 
 
+def test_simhash_sql_text_votes_match_plain_majority(spark):
+    """The packed 16-bit-lane vote SUMs of ``_simhash_signatures`` give the
+    plain per-bit majority vote: bit j is set iff more than half of the
+    doc's hashes have it (ties clear it), over 60 bits and over a width
+    that leaves the last packed group partly filled."""
+    from fink_science_spark.operators.dedup import _simhash_signatures
+
+    hmax = (1 << 60) - 1
+    rows = [
+        (1, 0), (1, hmax), (1, 0x0F0F0F0F0F0F0F0),  # 3 votes
+        (2, hmax), (2, 0),  # tie on every bit -> 0
+        (3, 0x123456789ABCDEF),  # single hash -> itself
+        (4, 5), (4, 7), (4, 13), (4, 1 << 59), (4, hmax - 1),
+    ]
+    ex = spark.createDataFrame(rows, "__id long, __h long")
+    for bits in (60, 13):
+        got = {r["__id"]: r["__sim"] for r in _simhash_signatures(ex, bits).collect()}
+        want = {}
+        for i in {j for j, _ in rows}:
+            hs = [h for j, h in rows if j == i]
+            want[i] = sum(
+                1 << b
+                for b in range(bits)
+                if 2 * sum((h >> b) & 1 for h in hs) > len(hs)
+            )
+        assert got == want, bits
+
+
 def test_incremental_minhash_matches_batch_restriction(spark):
     """Incremental pairs (new batch vs stored index) must equal the full
     batch LSH pair set restricted to cross-split pairs — the maintained
