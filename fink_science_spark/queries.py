@@ -95,13 +95,18 @@ def _table_bytes(sf_dir: str, name: str) -> int | None:
         return None  # non-local URI: size unknown, leave the scan alone
 
 
+# Input bytes per task of the small-input sizing rules: _fan_out's map
+# tasks and streaming.shell.state_partitions' state partitions.
+_BYTES_PER_TASK = 2 << 20
+
+
 def _fan_out(
     spark: SparkSession,
     sf_dir: str,
     name: str,
     df: DataFrame,
     key: str,
-    bytes_per_task: int = 2 << 20,
+    bytes_per_task: int = _BYTES_PER_TASK,
 ) -> DataFrame:
     """Spread heavy per-row work across the cluster when the SCAN cannot.
 

@@ -806,26 +806,22 @@ def q_stream_weekly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from fink_science_spark.streaming.shell import (
         run_to_memory,
-        scoped_shuffle_partitions,
+        state_partitions,
         windowed_counts,
     )
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = _os.path.join(sf_dir, "events.parquet")
     schema = spark.read.parquet(path).schema
-    with scoped_shuffle_partitions(spark, 8):
+    with state_partitions(spark, sf_dir, "events"):
         # file-stream sources require a directory: stream the sf_dir with a
         # glob pinned to the events table
         from fink_science_spark.streaming.shell import stream_table_load
 
         stream = stream_table_load(
-
             spark.readStream.schema(schema).format("parquet"),
-
             sf_dir,
-
             "events",
-
         )
         enriched = stream.withColumn(
             "ts_event", _ts_event_col(stream)

@@ -713,7 +713,7 @@ def q_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from fink_science_spark.streaming.shell import scoped_shuffle_partitions
+    from fink_science_spark.streaming.shell import state_partitions
 
     schema = _t(spark, sf_dir, "documents").schema
 
@@ -724,17 +724,13 @@ def q_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         state.update((n,))
         yield pd.DataFrame({"token": [key[0]], "cnt": [n]})
 
-    with scoped_shuffle_partitions(spark, 8):
+    with state_partitions(spark, sf_dir, "documents"):
         from fink_science_spark.streaming.shell import stream_table_load
 
         stream = stream_table_load(
-
             spark.readStream.schema(schema).format("parquet"),
-
             sf_dir,
-
             "documents",
-
         )
         toks = stream.select(
             F.explode(F.split("text", " ")).alias("token")
@@ -1838,7 +1834,6 @@ def q_stream_dedup_lsh(
     source_dir: str | None = None,
     max_files_per_trigger: int | None = None,
     n_map: int | None = None,
-    n_state_partitions: int | None = None,
 ) -> DataFrame:
     """Streaming MinHash-LSH near-dup pairs == batch dedup_minhash_lsh.
 
@@ -1975,15 +1970,13 @@ def q_stream_dedup_lsh(
         yield pd.DataFrame({"content_a": a_out, "content_b": b_out})
 
     schema = _t(spark, sf_dir, "documents").schema
-    # stateful-stage width: with bucket-level state there are only
-    # bands × _SDL_STATE_BUCKETS (= 256) physical groups and the
-    # per-partition cost is dominated by state-store instance overhead
-    # (commit files, provider setup), not Python work — a no-op stateful
-    # stream floors at ~1.5 s with 4 partitions vs ~1.9 s with 8 and
-    # 9-12 s with 32 at sf0.1. On a real cluster scale this with group
-    # count, not core count.
-    n_part = n_state_partitions if n_state_partitions is not None else 4
-    with scoped_shuffle_partitions(spark, n_part):
+    # stateful-stage width: the Python update over bands ×
+    # _SDL_STATE_BUCKETS (= 256) groups is CPU-bound, so 4 partitions beat
+    # state_partitions' 1 (sf0.1 on 4 vCPU, median of 5: 1.73 s vs
+    # 1.86 s). The 9-12 s once measured at 32 partitions was the readlink
+    # and chmod forks of the FileContext checkpoint manager (27 per
+    # partition in a one-batch run at sf0.01), not provider setup.
+    with scoped_shuffle_partitions(spark, 4):
         from fink_science_spark.streaming.shell import stream_table_load
 
         reader = spark.readStream.schema(schema).format("parquet")

@@ -232,22 +232,18 @@ def q_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     of Structured Streaming (SURVEY M6)."""
     from fink_science_spark.streaming.shell import (
         run_to_memory,
-        scoped_shuffle_partitions,
+        state_partitions,
     )
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = _t(spark, sf_dir, "events").schema
-    with scoped_shuffle_partitions(spark, 8):
+    with state_partitions(spark, sf_dir, "events"):
         from fink_science_spark.streaming.shell import stream_table_load
 
         stream = stream_table_load(
-
             spark.readStream.schema(schema).format("parquet"),
-
             sf_dir,
-
             "events",
-
         )
         enriched = stream.withColumn(
             "ts_event", _ts_event_col(stream)
@@ -284,22 +280,18 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregated per market segment (SURVEY §2.3 + M6)."""
     from fink_science_spark.streaming.shell import (
         run_to_memory,
-        scoped_shuffle_partitions,
+        state_partitions,
     )
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = _t(spark, sf_dir, "events").schema
-    with scoped_shuffle_partitions(spark, 8):
+    with state_partitions(spark, sf_dir, "events"):
         from fink_science_spark.streaming.shell import stream_table_load
 
         stream = stream_table_load(
-
             spark.readStream.schema(schema).format("parquet"),
-
             sf_dir,
-
             "events",
-
         )
         cust = F.broadcast(
             _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")

@@ -548,7 +548,7 @@ def q_stream_foreachbatch_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract."""
     import shutil
 
-    from fink_science_spark.streaming.shell import scoped_shuffle_partitions
+    from fink_science_spark.streaming.shell import state_partitions
 
     tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
     out_path = os.path.join(_SCRATCH, f"foreachbatch_{tag}")
@@ -571,17 +571,13 @@ def q_stream_foreachbatch_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     def process(batch_df: DataFrame, batch_id: int) -> None:
         enrich(batch_df).write.mode("append").parquet(out_path)
 
-    with scoped_shuffle_partitions(spark, 8):
+    with state_partitions(spark, sf_dir, "events"):
         from fink_science_spark.streaming.shell import stream_table_load
 
         stream = stream_table_load(
-
             spark.readStream.schema(schema).format("parquet"),
-
             sf_dir,
-
             "events",
-
         )
         q = (
             stream.writeStream.foreachBatch(process)

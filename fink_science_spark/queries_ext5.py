@@ -603,13 +603,13 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from fink_science_spark.streaming.shell import (
         run_to_memory,
-        scoped_shuffle_partitions,
+        state_partitions,
     )
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = _os.path.join(sf_dir, "events.parquet")
     schema = spark.read.parquet(path).schema
-    with scoped_shuffle_partitions(spark, 8):
+    with state_partitions(spark, sf_dir, "events"):
 
         def feed():
             from fink_science_spark.streaming.shell import stream_table_load

@@ -505,7 +505,7 @@ def q_stream_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from fink_science_spark.streaming.shell import scoped_shuffle_partitions
+    from fink_science_spark.streaming.shell import state_partitions
 
     schema = spark.read.parquet(_os.path.join(sf_dir, "documents.parquet")).schema
 
@@ -527,17 +527,13 @@ def q_stream_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
             out_rows, columns=["doc_id", "shard", "bin_id", "n_tokens", "pos_in_bin"]
         )
 
-    with scoped_shuffle_partitions(spark, 8):
+    with state_partitions(spark, sf_dir, "documents"):
         from fink_science_spark.streaming.shell import stream_table_load
 
         stream = stream_table_load(
-
             spark.readStream.schema(schema).format("parquet"),
-
             sf_dir,
-
             "documents",
-
         )
         enriched = stream.select(
             "doc_id",
@@ -1087,25 +1083,21 @@ def q_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fink_science_spark.streaming.shell import (
         interval_join_streams,
         run_to_memory,
-        scoped_shuffle_partitions,
+        state_partitions,
     )
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = spark.read.parquet(_os.path.join(sf_dir, "events.parquet")).schema
 
-    with scoped_shuffle_partitions(spark, 8):
+    with state_partitions(spark, sf_dir, "events"):
 
         def feed(etype: str) -> DataFrame:
             from fink_science_spark.streaming.shell import stream_table_load
 
             s = stream_table_load(
-
                 spark.readStream.schema(schema).format("parquet"),
-
                 sf_dir,
-
                 "events",
-
             )
             from fink_science_spark.queries import _ts_event_col
 

@@ -554,11 +554,11 @@ def q_stream_replay_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fink_science_spark.sources.replay import register_replay_source
     from fink_science_spark.streaming.shell import (
         run_to_memory,
-        scoped_shuffle_partitions,
+        state_partitions,
     )
 
     register_replay_source(spark)
-    with scoped_shuffle_partitions(spark, 8):
+    with state_partitions(spark, sf_dir, "events"):
         stream = (
             spark.readStream.format("alert_replay")
             .option("path", _os.path.join(sf_dir, "events.parquet"))
@@ -750,7 +750,7 @@ def q_stream_avro_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from fink_science_spark.streaming.shell import (
         run_to_memory,
-        scoped_shuffle_partitions,
+        state_partitions,
     )
 
     register_avro_source(spark)
@@ -775,7 +775,7 @@ def q_stream_avro_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     _build_input_once(path, _build)
-    with scoped_shuffle_partitions(spark, 8):
+    with state_partitions(spark, sf_dir, "documents"):
         stream = (
             spark.readStream.format("avro_replay")
             .option("path", path)
@@ -874,7 +874,7 @@ def q_stream_avro_alert_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from fink_science_spark.streaming.shell import (
         run_to_memory,
-        scoped_shuffle_partitions,
+        state_partitions,
     )
 
     register_avro_source(spark)
@@ -912,7 +912,7 @@ def q_stream_avro_alert_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _build_input_once(path, _build)
 
-    with scoped_shuffle_partitions(spark, 8):
+    with state_partitions(spark, sf_dir, "events"):
         stream = (
             spark.readStream.format("avro_replay")
             .option("path", path)

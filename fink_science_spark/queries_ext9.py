@@ -1396,7 +1396,7 @@ def q_stream_mv_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil as _shutil
 
     from fink_science_spark.queries_ext2 import _SCRATCH
-    from fink_science_spark.streaming.shell import scoped_shuffle_partitions
+    from fink_science_spark.streaming.shell import state_partitions
 
     tag = _os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
     src_path = _os.path.join(_SCRATCH, f"mv_src_{tag}")
@@ -1422,7 +1422,7 @@ def q_stream_mv_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         partial.write.mode("append").parquet(state_path)
 
-    with scoped_shuffle_partitions(spark, 8):
+    with state_partitions(spark, sf_dir, "events"):
         stream = (
             spark.readStream.schema(schema)
             .format("parquet")

@@ -32,19 +32,37 @@ from pyspark.sql import functions as F
 def scoped_shuffle_partitions(spark: SparkSession, n: int):
     """Temporarily pin spark.sql.shuffle.partitions (restored on exit).
 
-    Stateful streaming creates one state store per shuffle partition; a
-    batch-oriented session default (32+) means 32 store instances for a
-    handful of keys — pure overhead at test scale and the wrong unit of
-    parallelism for small keyed state. Streaming queries that run
-    blocking (availableNow → memory sink) scope the setting to their own
-    plan-and-run window. On a real cluster the same knob sizes state
-    parallelism to key cardinality, not to the batch shuffle width."""
+    Stateful streaming creates one state store per shuffle partition, and
+    the batch-sized session default (one per core) would give every
+    stream that many stores whatever its key count. Streaming queries
+    that run blocking (availableNow → memory sink) scope the setting to
+    their own plan-and-run window; stream queries size it with
+    :func:`state_partitions`."""
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+def state_partitions(spark: SparkSession, sf_dir: str, table: str):
+    """Scope the stateful shuffle of a stream over ``table`` to its input.
+
+    One partition per 2 MiB of the source table (``queries._fan_out``'s
+    byte rule), at least 1, at most ``defaultParallelism``; when the size
+    is unknown (non-local URI) the session's setting is left as it is.
+    Each state partition is a store with its own delta, checksum and
+    commit files per batch and a 4-thread checksum pool, so a fixed width
+    pays that for every partition even when a handful of keys fits one
+    (events are 0.2 MB at sf0.01 and 2 MB at sf0.1: one partition)."""
+    from fink_science_spark.queries import _BYTES_PER_TASK, _table_bytes
+
+    size = _table_bytes(sf_dir, table)
+    if size is None:
+        return contextlib.nullcontext()
+    par = spark.sparkContext.defaultParallelism
+    return scoped_shuffle_partitions(spark, min(par, size // _BYTES_PER_TASK + 1))
 
 
 def read_file_stream(

@@ -369,6 +369,17 @@ def test_stream_interval_join_across_batches(spark, multi_file_events):
     assert got.count() > 0
 
 
+def _split_events(spark, multi_file_events, staged):
+    """The events as 4 files under ``staged``; returns (events, names).
+    Range partitioning makes every file non-empty (hash partitioning can
+    emit empty part files, which would make a half-split vacuous)."""
+    ev = spark.read.parquet(multi_file_events)
+    ev.repartitionByRange(4, "event_id").write.parquet(staged)
+    files = sorted(f for f in os.listdir(staged) if f.endswith(".parquet"))
+    assert len(files) == 4
+    return ev, files
+
+
 def test_checkpoint_restart_exactly_once(spark, multi_file_events):
     """Stop/restart recovery: a file-source stream with a checkpoint is
     run over the first files, killed, more files appear, and the SAME
@@ -382,12 +393,7 @@ def test_checkpoint_restart_exactly_once(spark, multi_file_events):
     sink = os.path.join(base, "sink")
     staged = os.path.join(base, "staged")
     os.makedirs(src)
-    ev = spark.read.parquet(multi_file_events)
-    # range partitioning → every file non-empty (hash partitioning can
-    # emit empty part files, which would make a half-split vacuous)
-    ev.repartitionByRange(4, "event_id").write.parquet(staged)
-    files = sorted(f for f in os.listdir(staged) if f.endswith(".parquet"))
-    assert len(files) == 4
+    ev, files = _split_events(spark, multi_file_events, staged)
     half = len(files) // 2
     for f in files[:half]:
         shutil.copy(os.path.join(staged, f), os.path.join(src, f))
@@ -423,6 +429,158 @@ def test_checkpoint_restart_exactly_once(spark, multi_file_events):
     assert got.count() == ev.count()
     assert got.select("event_id").distinct().count() == ev.count()
     shutil.rmtree(base, ignore_errors=True)
+
+
+def _windowed_counts_run(spark, src, ckpt, name):
+    """windowed_counts over ``src`` one file per trigger, complete mode
+    into the memory table ``name``, checkpointed at ``ckpt``; returns the
+    query's summed numInputRows."""
+    from fink_science_spark.streaming.shell import state_partitions, windowed_counts
+
+    with state_partitions(spark, SF, "events"):
+        schema = spark.read.parquet(src).schema
+        stream = (
+            spark.readStream.schema(schema)
+            .format("parquet")
+            .option("maxFilesPerTrigger", "1")
+            .load(src)
+        )
+        counts = windowed_counts(
+            stream.withColumn("ts_event", _ts_event_col(stream)),
+            "ts_event", ["event_type"], window="7 days", watermark="1 day",
+        )
+        q = (
+            counts.writeStream.format("memory")
+            .queryName(name)
+            .outputMode("complete")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    return sum(p.numInputRows for p in q.recentProgress)
+
+
+def test_stateful_checkpoint_restart_exactly_once(spark, multi_file_events):
+    """Stateful stop/restart: windowed_counts runs over the first two
+    files with a checkpoint, stops, the other two files appear, and the
+    same checkpoint resumes. The restarted query must read back the
+    state deltas and checksum files of the first run: its complete-mode
+    result equals the batch aggregate of all four files, and it reads
+    only the two new files."""
+    base = os.path.join(SCRATCH, f"ckpt_stateful_{uuid.uuid4().hex[:8]}")
+    src = os.path.join(base, "src")
+    ckpt = os.path.join(base, "ckpt")
+    staged = os.path.join(base, "staged")
+    os.makedirs(src)
+    ev, files = _split_events(spark, multi_file_events, staged)
+    for f in files[:2]:
+        shutil.copy(os.path.join(staged, f), os.path.join(src, f))
+    first = f"restart_a_{uuid.uuid4().hex[:8]}"
+    n_first = _windowed_counts_run(spark, src, ckpt, first)
+    assert 0 < n_first < ev.count()
+
+    for f in files[2:]:
+        shutil.copy(os.path.join(staged, f), os.path.join(src, f))
+    second = f"restart_b_{uuid.uuid4().hex[:8]}"
+    n_second = _windowed_counts_run(spark, src, ckpt, second)
+    assert n_first + n_second == ev.count()
+
+    # the restart changes the summation order of the doubles: round at 6
+    rounded = F.round("sum_value", 6).alias("sum_value")
+    result = spark.table(second).select("window_start", "event_type", "n", rounded)
+    batch = (
+        ev.withColumn("ts_event", _ts_event_col(ev))
+        .groupBy(F.window("ts_event", "7 days").alias("w"), "event_type")
+        .agg(F.count("*").alias("n"), F.sum("value").alias("sum_value"))
+        .select(F.col("w.start").alias("window_start"), "event_type", "n", rounded)
+    )
+    diff = result.exceptAll(batch).count() + batch.exceptAll(result).count()
+    assert diff == 0
+    shutil.rmtree(base, ignore_errors=True)
+
+
+def test_checkpoint_files_same_under_both_file_managers(spark, multi_file_events):
+    """The session's FileSystem-based checkpoint manager writes the same
+    checkpoint files as Spark's default FileContext manager: the same
+    offsets, commits, state deltas, Hadoop .crc files and state checksum
+    files, so no integrity check is dropped with the forks."""
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    pkg = "org.apache.spark.sql.execution.streaming.checkpointing."
+    assert spark.conf.get(key) == pkg + "FileSystemBasedCheckpointFileManager"
+
+    base = os.path.join(SCRATCH, f"ckpt_managers_{uuid.uuid4().hex[:8]}")
+
+    def checkpoint_files(tag):
+        ckpt = os.path.join(base, tag)
+        _windowed_counts_run(
+            spark, multi_file_events, ckpt, f"mgr_{tag}_{uuid.uuid4().hex[:8]}"
+        )
+        return {
+            os.path.relpath(os.path.join(d, f), ckpt)
+            for d, _, fs in os.walk(ckpt)
+            for f in fs
+        }
+
+    session_files = checkpoint_files("session")
+    old = spark.conf.get(key)
+    spark.conf.set(key, pkg + "FileContextBasedCheckpointFileManager")
+    try:
+        default_files = checkpoint_files("filecontext")
+    finally:
+        spark.conf.set(key, old)
+    shutil.rmtree(base, ignore_errors=True)
+
+    assert session_files == default_files
+    names = {os.path.basename(f) for f in session_files}
+    # per state delta N: Hadoop's .N.delta.crc and Spark's N.delta.crc
+    deltas = {n for n in names if n.endswith(".delta")}
+    assert deltas, sorted(session_files)
+    assert {f".{n}.crc" for n in deltas} <= names
+    assert {f"{n}.crc" for n in deltas} <= names
+    offsets = {
+        os.path.basename(f) for f in session_files
+        if f.startswith("offsets" + os.sep) and not f.endswith(".crc")
+    }
+    assert offsets and {f".{n}.crc" for n in offsets} <= names
+
+
+def test_state_partitions_sized_to_source_bytes(spark, tmp_path):
+    from fink_science_spark.streaming.shell import state_partitions
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+
+    def inside(sf_dir, table="events"):
+        with state_partitions(spark, sf_dir, table):
+            return spark.conf.get(key)
+
+    # events are 0.2 MB at sf0.01 and 2 MB at sf0.1: one partition each
+    for sf in (os.path.join(os.path.dirname(SF), s) for s in ("sf0.01", "sf0.1")):
+        if os.path.exists(os.path.join(sf, "events.parquet")):
+            assert inside(sf) == "1", sf
+    assert spark.conf.get(key) == before
+
+    big = tmp_path / "events.parquet"
+    with open(big, "wb") as fh:
+        fh.truncate(1 << 40)  # sparse: a 1 TiB size, no blocks written
+    par = spark.sparkContext.defaultParallelism
+    assert inside(str(tmp_path)) == str(par)
+    assert spark.conf.get(key) == before
+
+    # unknown size (no local file): the session's setting stays in force
+    spark.conf.set(key, "7")
+    try:
+        assert inside(str(tmp_path / "absent")) == "7"
+        assert spark.conf.get(key) == "7"
+    finally:
+        spark.conf.set(key, before)
+
+    # restored on exit even when the body raises
+    with pytest.raises(RuntimeError):
+        with state_partitions(spark, str(tmp_path), "events"):
+            raise RuntimeError("boom")
+    assert spark.conf.get(key) == before
 
 
 def test_drop_duplicates_within_watermark_across_batches(spark, multi_file_events):
